@@ -52,19 +52,8 @@ object SparkEntry {
     val base = Paths.get(BenchMode.scratchDir,
       s"graft_${tag}_${Integer.toHexString(d.hashCode)}")
     Files.createDirectories(base)
-    val myPid = ProcessHandle.current().pid()
-    val ls = Files.list(base)
-    try ls.forEach { sub =>
-      val name = sub.getFileName.toString
-      if (name.startsWith("jvm")) {
-        val alive = name.stripPrefix("jvm").toLongOption.exists(pid =>
-          pid == myPid || ProcessHandle.of(pid)
-            .map[java.lang.Boolean](_.isAlive).orElse(java.lang.Boolean.FALSE)
-            .booleanValue())
-        if (!alive) deleteRecursively(sub)
-      }
-    } finally ls.close()
-    val p = base.resolve(s"jvm$myPid")
+    BenchMode.reapDeadJvms(base)
+    val p = base.resolve(s"jvm${ProcessHandle.current().pid()}")
     Files.createDirectories(p)
     p
   }
@@ -88,32 +77,11 @@ object SparkEntry {
     val base = Paths.get(BenchMode.scratchDir,
       s"graft_${tag}_${Integer.toHexString(d.hashCode)}")
     Files.createDirectories(base)
-    val myPid = ProcessHandle.current().pid()
-    val ls = Files.list(base)
-    try ls.forEach { sub =>
-      val name = sub.getFileName.toString
-      if (name.startsWith("jvm")) {
-        val alive = name.stripPrefix("jvm").toLongOption.exists(pid =>
-          pid == myPid || ProcessHandle.of(pid)
-            .map[java.lang.Boolean](_.isAlive).orElse(java.lang.Boolean.FALSE)
-            .booleanValue())
-        if (!alive) deleteRecursively(sub)
-      }
-    } finally ls.close()
-    val p = base.resolve(s"jvm$myPid")
-    deleteRecursively(p)
+    BenchMode.reapDeadJvms(base)
+    val p = base.resolve(s"jvm${ProcessHandle.current().pid()}")
+    BenchMode.deleteRecursively(p)
     Files.createDirectories(p)
     p.toString
-  }
-
-  private def deleteRecursively(root: java.nio.file.Path): Unit = {
-    import java.nio.file.{Files, Path}
-    if (Files.exists(root)) {
-      val walk = Files.walk(root)
-      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(p => { Files.deleteIfExists(p); () })
-      finally walk.close()
-    }
   }
 
   /** Normalize an events-shaped frame's `ts` to TimestampType. Current
@@ -2617,7 +2585,7 @@ object SparkEntry {
       // replayed with a fresh query/checkpoint
       val baseP = jvmStageBase(d, "streamsig")
       val base = baseP.toString
-      deleteRecursively(baseP.resolve("store"))
+      BenchMode.deleteRecursively(baseP.resolve("store"))
       graft.ops.StateStore.create(signals(v1), "doc_id", 16, s"$base/store")
       val changed = docs.where(col("doc_id") % 7 === 0 &&
           col("doc_id") % 11 =!= 0 && col("doc_id") % 13 =!= 0)
@@ -2628,7 +2596,7 @@ object SparkEntry {
         .select(col("doc_id"), lit("").as("text"), lit(true).as("del"))
       val updates = changed.unionByName(added).unionByName(removed)
       if (!java.nio.file.Files.exists(baseP.resolve("_src_done"))) {
-        deleteRecursively(baseP.resolve("src"))
+        BenchMode.deleteRecursively(baseP.resolve("src"))
         updates.repartition(3).write.mode("overwrite").parquet(s"$base/src")
         java.nio.file.Files.createFile(baseP.resolve("_src_done"))
       }
@@ -4141,7 +4109,7 @@ object SparkEntry {
                        // exercised at half the per-batch machinery cost
       val srcBase = jvmStageBase(d, "streampb")
       if (!java.nio.file.Files.exists(srcBase.resolve("_done"))) {
-        deleteRecursively(srcBase.resolve("src"))
+        BenchMode.deleteRecursively(srcBase.resolve("src"))
         deltas.repartition(nBatches).write.mode("overwrite")
           .parquet(srcBase.resolve("src").toString)
         java.nio.file.Files.createFile(srcBase.resolve("_done"))

@@ -48,6 +48,7 @@ object AnnIndex {
   def save(index: Ivf, dir: String): Unit = {
     val spark = index.assigned.sparkSession
     import spark.implicits._
+    IvfCore.clearRecord(spark, dir)
     index.centroids.toSeq
       .flatMap { case (cid, v) => v.zipWithIndex.map { case (x, i) => (cid, i, x) } }
       .toDF("cid", "dim", "x")
@@ -58,25 +59,20 @@ object AnnIndex {
     // of write tasks — faster save AND faster pruned probes later
     index.assigned.repartition(col("cell")).write.mode("overwrite")
       .partitionBy("cell").parquet(s"$dir/assigned")
+    IvfCore.writeRecord(spark, dir, "assigned", index.assigned.schema)
   }
 
-  /** Reload a saved index. Tombstoned vectors ([[deleteSaved]]) are
-    * filtered out with a broadcast anti-join at load — the assignment
-    * files themselves are never rewritten. */
+  /** Reload a saved index: one scan of the centroids; the assignment
+    * table is read with its recorded schema (inferred for an index saved
+    * without one). Tombstoned vectors ([[deleteSaved]]) are filtered out
+    * with a broadcast anti-join at load — the assignment files themselves
+    * are never rewritten. */
   def load(spark: SparkSession, dir: String): Ivf = {
-    val cents = spark.read.parquet(s"$dir/centroids")
-      .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
-      .groupBy(_._1).toArray.sortBy(_._1)
-      .map { case (cid, rows) => (cid, rows.sortBy(_._2).map(_._3).toSeq) }
-    val assigned0 = spark.read.parquet(s"$dir/assigned")
+    val cents = IvfCore.readQuantizers(spark, s"$dir/centroids", subspaced = false)
+      .getOrElse(-1, Array.empty[(Int, Seq[Double])])
+    val assigned = IvfCore.readTable(spark, dir, "assigned")
       .select(col("did"), col("dv"), col("cell").cast("int").as("cell"))
-    val delPath = new org.apache.hadoop.fs.Path(s"$dir/deleted")
-    val fs = delPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val assigned = if (fs.exists(delPath))
-      assigned0.join(broadcast(spark.read.parquet(s"$dir/deleted")),
-        Seq("did"), "left_anti")
-    else assigned0
-    Ivf(cents, assigned)
+    Ivf(cents, IvfCore.live(spark, dir, assigned))
   }
 
   /** Tombstone vectors in a SAVED index without rebuilding or rewriting
@@ -84,11 +80,8 @@ object AnnIndex {
     * [[load]] anti-joins away (broadcast — tombstone sets are tiny next
     * to the corpus). Reclaim the space with [[compactSaved]]; until then
     * deletes are O(|ids|) appends. */
-  def deleteSaved(spark: SparkSession, dir: String, ids: Seq[Long]): Unit = {
-    import spark.implicits._
-    ids.toDF("did").coalesce(1)
-      .write.mode("append").parquet(s"$dir/deleted")
-  }
+  def deleteSaved(spark: SparkSession, dir: String, ids: Seq[Long]): Unit =
+    IvfCore.deleteIds(spark, dir, ids)
 
   /** Compaction: physically rewrite the assignment table without the
     * tombstoned rows and clear the `deleted` relation — run when the
@@ -104,6 +97,7 @@ object AnnIndex {
     val delPath = new org.apache.hadoop.fs.Path(s"$dir/deleted")
     val fs = delPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(delPath)) fs.delete(delPath, true)
+    IvfCore.writeRecord(spark, dir, "assigned", live.assigned.schema)
   }
 
   /** Assign a new batch against the EXISTING quantizer — the ingest path.
@@ -118,12 +112,16 @@ object AnnIndex {
   /** Extend a SAVED index in place: assign the batch with the saved
     * centroids and APPEND the new rows to the partitioned assignment table —
     * only the touched cell partitions gain files; existing data is never
-    * rewritten. */
+    * rewritten. Batch ids take the index's stored id type (a lossless
+    * widening is cast; anything else fails before a file is written). */
   def appendSaved(spark: SparkSession, dir: String, newVecs: DataFrame,
-      idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
-    assign(load(spark, dir).centroids, newVecs, idCol, vecCol)
+      idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
+    val idx = load(spark, dir)
+    IvfCore.conformIds(assign(idx.centroids, newVecs, idCol, vecCol),
+        idx.assigned.schema("did").dataType, dir)
       .repartition(col("cell")) // one appended file per touched cell/task
       .write.mode("append").partitionBy("cell").parquet(s"$dir/assigned")
+  }
 
   private def assign(cents: Array[(Int, Seq[Double])], vecs: DataFrame,
       idCol: String, vecCol: String): DataFrame =
@@ -144,10 +142,7 @@ object AnnIndex {
     val q = queries.select(col(idCol).as("qid"),
         col(vecCol).cast("array<float>").as("qv"),
         explode(nearestCells(index.centroids, col(vecCol), nprobe)).as("cell"))
-    val cells = q.select("cell").distinct().collect().map(_.getInt(0))
-    val cand = index.assigned.where(col("cell").isin(cells.map(Integer.valueOf): _*))
-    val scored = broadcast(q).join(cand, Seq("cell"))
-      .where(col("qid") =!= col("did"))
+    val scored = IvfCore.probeJoin(q, index.assigned)
       .select(col("qid"), col("did"),
         Portable.round(Similarity.cosine(col("qv"), col("dv")), 4).as("sim"))
       // zero-norm corpus vectors score NaN, and Spark sorts NaN ABOVE every

@@ -444,13 +444,18 @@ object Bpe {
 
   /** Reload a saved tokenizer: `(mergeList in rank order, vocabulary in id
     * order)` — encode/decode with the loaded pair is bit-identical to the
-    * fresh one. */
+    * fresh one. Both relations' schemas are fixed by [[saveTokenizer]], so
+    * they are read with them (no footer-inference job) in ONE union scan,
+    * and the few thousand rows are ordered on the driver, not by a
+    * distributed sort. */
   def loadTokenizer(spark: org.apache.spark.sql.SparkSession, dir: String)
       : (Seq[(String, String)], Seq[(String, Int)]) = {
-    val ms = spark.read.parquet(s"$dir/merges").orderBy("rank")
-      .collect().map(r => (r.getString(1), r.getString(2))).toSeq
-    val voc = spark.read.parquet(s"$dir/vocab").orderBy("id")
-      .collect().map(r => (r.getString(0), r.getInt(1))).toSeq
-    (ms, voc)
+    val ms = spark.read.schema("rank INT, l STRING, r STRING").parquet(s"$dir/merges")
+      .select(lit(true), col("rank"), col("l"), col("r"))
+    val voc = spark.read.schema("token STRING, id INT").parquet(s"$dir/vocab")
+      .select(lit(false), col("id"), col("token"), lit(null).cast("string"))
+    val (mrows, vrows) = ms.union(voc).collect().partition(_.getBoolean(0))
+    (mrows.sortBy(_.getInt(1)).map(r => (r.getString(2), r.getString(3))).toSeq,
+      vrows.sortBy(_.getInt(1)).map(r => (r.getString(2), r.getInt(1))).toSeq)
   }
 }

@@ -190,35 +190,33 @@ object Pq {
 
   /** Reload codebooks written by [[saveCodebooks]]. */
   def loadCodebooks(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Codebooks = {
-    val raw = spark.read.parquet(dir)
-      .collect().map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getDouble(3)))
-    val books = raw.groupBy(_._1).toArray.sortBy(_._1).map { case (_, rows) =>
-      rows.groupBy(_._2).toArray.sortBy(_._1).map { case (cid, cs) =>
-        (cid, cs.sortBy(_._3).map(_._4).toSeq) }
-    }
+      dir: String): Codebooks =
+    codebooksOf(IvfCore.readQuantizers(spark, dir, subspaced = true))
+
+  /** Codebooks from decoded `s → (cid, centroid)*` subquantizers. */
+  private[ops] def codebooksOf(bySub: Map[Int, Array[(Int, Seq[Double])]]): Codebooks = {
+    val books = bySub.toArray.sortBy(_._1).map(_._2)
     Codebooks(books.length, books.head.head._2.length, books)
   }
 
-  /** Codebook literal for the query-side LUT: cbLit(s)(cid) = centroid. */
+  /** Codebook literal for the query-side LUT: cbLit(s)(cid) = centroid.
+    * One typedLit Literal, not m·ksub·dsub nested lit nodes that every
+    * analyzer/optimizer rule walks on each probe (see KMeans.centroidLit);
+    * same values, constant-folded identically. */
   private def cbLit(cb: Codebooks): Column =
-    array(cb.books.map { book =>
-      array(book.sortBy(_._1).map { case (_, c) =>
-        array(c.map(lit): _*)
-      }: _*)
-    }: _*)
+    typedLit(cb.books.toSeq.map(book => book.sortBy(_._1).map(_._2).toSeq))
 
-  /** The broadcastable query side: `(qid, qv, lut, qnorm)` — the per-query
-    * LUT `lut(s)(cid) = <q_s, centroid>` is computed once per query row;
-    * every candidate afterwards costs m lookups. */
+  /** The broadcastable query side: `(qid, qv, lut, qnorm, extra*)` — the
+    * per-query LUT `lut(s)(cid) = <q_s, centroid>` is computed once per
+    * query row; every candidate afterwards costs m lookups. */
   private[ops] def querySide(cb: Codebooks, queries: DataFrame,
-      idCol: String, vecCol: String): DataFrame =
-    queries.select(col(idCol).as("qid"),
+      idCol: String, vecCol: String, extra: Column*): DataFrame =
+    queries.select(Seq(col(idCol).as("qid"),
       col(vecCol).as("qv"),
       transform(cbLit(cb), (book, s) =>
         transform(book, c =>
           dot(slice(col(vecCol), s * lit(cb.dsub) + lit(1), lit(cb.dsub)), c))).as("lut"),
-      sqrt(dot(col(vecCol), col(vecCol))).as("qnorm"))
+      sqrt(dot(col(vecCol), col(vecCol))).as("qnorm")) ++ extra: _*)
 
   /** ADC cosine estimate from a joined (query-side × code) row. */
   private[ops] def adcSim: Column = {

@@ -104,6 +104,7 @@ object PqIndex {
   def save(idx: IvfPq, dir: String): Unit = {
     val spark = idx.codes.sparkSession
     import spark.implicits._
+    IvfCore.clearRecord(spark, dir)
     val coarseRows = idx.coarse.toSeq.flatMap { case (cid, v) =>
       v.zipWithIndex.map { case (x, i) => (-1, cid, i, x) } }
     val bookRows = idx.cb.books.zipWithIndex.toSeq.flatMap { case (book, s) =>
@@ -116,16 +117,20 @@ object PqIndex {
     // cell per write task, not the tasks × cells fan-out
     idx.codes.repartition(col("cell")).write.mode("overwrite")
       .partitionBy("cell").parquet(s"$dir/codes")
+    IvfCore.writeRecord(spark, dir, "codes", idx.codes.schema)
   }
 
   /** Extend a SAVED index in place: encode the batch with the saved
     * (immutable) quantizers and APPEND the code rows — only the touched
     * cell partitions gain files, nothing is re-read or rewritten (the
-    * [[AnnIndex.appendSaved]] ingest shape on the compressed relation). */
+    * [[AnnIndex.appendSaved]] ingest shape on the compressed relation).
+    * Batch ids take the index's stored id type (a lossless widening is
+    * cast; anything else fails before a file is written). */
   def appendSaved(spark: SparkSession, dir: String, newVecs: DataFrame,
       idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
     val idx = load(spark, dir)
-    encodeWithCell(idx.cb, idx.coarse, newVecs, idCol, vecCol)
+    IvfCore.conformIds(encodeWithCell(idx.cb, idx.coarse, newVecs, idCol, vecCol),
+        idx.codes.schema("did").dataType, dir)
       .repartition(col("cell")) // one appended file per touched cell/task
       .write.mode("append").partitionBy("cell").parquet(s"$dir/codes")
   }
@@ -133,43 +138,24 @@ object PqIndex {
   /** Tombstone vectors in a SAVED index: ids append to a `deleted`
     * relation that [[load]] anti-joins away (broadcast) — no code file is
     * rewritten; probes exclude the ids immediately. */
-  def deleteSaved(spark: SparkSession, dir: String, ids: Seq[Long]): Unit = {
-    import spark.implicits._
-    ids.toDF("did").coalesce(1)
-      .write.mode("append").parquet(s"$dir/deleted")
-  }
+  def deleteSaved(spark: SparkSession, dir: String, ids: Seq[Long]): Unit =
+    IvfCore.deleteIds(spark, dir, ids)
 
-  /** Reload a saved index. */
+  /** Reload a saved index: one scan of the quantizer relation; the code
+    * table is read with its recorded schema (inferred for an index saved
+    * without one), tombstones anti-joined away. */
   def load(spark: SparkSession, dir: String): IvfPq = {
     // explicit failure for the pre-r15 two-relation layout (coarse/ +
     // books/) instead of an opaque path-not-found (ADVICE r15)
-    val quantPath = new org.apache.hadoop.fs.Path(s"$dir/quant")
-    val qfs = quantPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!qfs.exists(quantPath) &&
-        qfs.exists(new org.apache.hadoop.fs.Path(s"$dir/coarse")))
+    if (!IvfCore.exists(spark, s"$dir/quant") && IvfCore.exists(spark, s"$dir/coarse"))
       throw new IllegalStateException(
         s"unsupported legacy IVF-PQ index layout at $dir (pre-r15 coarse/+" +
           "books/ relations); rebuild and re-save the index")
-    val quant = spark.read.parquet(s"$dir/quant")
-      .collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getDouble(3)))
-    def vecsOf(rows: Array[(Int, Int, Int, Double)]) =
-      rows.groupBy(_._2).toArray.sortBy(_._1)
-        .map { case (cid, rs) => (cid, rs.sortBy(_._3).map(_._4).toSeq) }
-    val coarse = vecsOf(quant.filter(_._1 == -1))
-    val books = quant.filter(_._1 >= 0).groupBy(_._1).toArray.sortBy(_._1)
-      .map { case (_, rs) => vecsOf(rs) }
-    val cb = Pq.Codebooks(books.length, books.head.head._2.length, books)
-    val codes0 = spark.read.parquet(s"$dir/codes")
+    val quant = IvfCore.readQuantizers(spark, s"$dir/quant", subspaced = true)
+    val codes = IvfCore.readTable(spark, dir, "codes")
       .select(col("did"), col("code"), col("est_norm"),
         col("cell").cast("int").as("cell"))
-    val delPath = new org.apache.hadoop.fs.Path(s"$dir/deleted")
-    val fs = delPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val codes = if (fs.exists(delPath))
-      codes0.join(broadcast(spark.read.parquet(s"$dir/deleted")),
-        Seq("did"), "left_anti")
-    else codes0
-    IvfPq(coarse, cb, codes)
+    IvfPq(quant(-1), Pq.codebooksOf(quant.removed(-1)), IvfCore.live(spark, dir, codes))
   }
 
   /** ADC top-k over the probed cells only: each query's `nprobe` nearest
@@ -181,17 +167,12 @@ object PqIndex {
       rerankWith: Option[DataFrame] = None, rerankFactor: Int = 4,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     // the probe cells ride WITH each query row (per-query candidate sets,
-    // the IVF semantic), duplicating only the droplet-sized query side
-    val q = Pq.querySide(idx.cb, queries, idCol, vecCol)
-      .join(queries.select(col(idCol).as("qid"),
-        explode(graft.lib.KMeans.nearestCentroids(idx.coarse, col(vecCol),
-          nprobe)).as("cell")), "qid")
-    val cells = q.select("cell").distinct().collect().map(_.getInt(0))
-    val cand = idx.codes.where(col("cell").isin(cells.map(Integer.valueOf): _*))
-    // hint at the JOIN site only — hinting `q` itself would leave a dead
-    // broadcast hint in the cell-resolution plan above (no join there)
-    val scored = broadcast(q).join(cand, Seq("cell"))
-      .where(col("qid") =!= col("did"))
+    // the IVF semantic): one select computes the LUT side and explodes the
+    // cells, duplicating only the droplet-sized query side
+    val q = Pq.querySide(idx.cb, queries, idCol, vecCol,
+      explode(graft.lib.KMeans.nearestCentroids(idx.coarse, col(vecCol),
+        nprobe)).as("cell"))
+    val scored = IvfCore.probeJoin(q, idx.codes)
       .select(col("qid"), col("qv"), col("did"), Pq.adcSim.as("sim"))
       .where(!isnan(col("sim")))
     Pq.rankAndRerank(scored, k, rerankWith, rerankFactor, idCol, vecCol)

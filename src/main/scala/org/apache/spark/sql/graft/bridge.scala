@@ -112,6 +112,21 @@ object bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** Collect a frame as the physical rows its plan produces and re-plan
+    * them as a local relation of the same schema (fresh attributes). The
+    * driver keeps only those compact rows — no external `Row` copy with
+    * boxed fields. Runs as one SQL execution, as `collect()` does. */
+  def collectLocal(df: org.apache.spark.sql.DataFrame)
+      : (Array[org.apache.spark.sql.catalyst.InternalRow], org.apache.spark.sql.DataFrame) = {
+    val qe = df.queryExecution
+    val rows = org.apache.spark.sql.execution.SQLExecution
+      .withNewExecutionId(qe, Some("collect"))(qe.executedPlan.executeCollect())
+    val attrs = org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(df.schema)
+    (rows, ofRows(df.sparkSession,
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation(attrs,
+        scala.collection.immutable.ArraySeq.unsafeWrapArray(rows))))
+  }
+
   def logicalPlan(df: org.apache.spark.sql.Dataset[_]): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.queryExecution.analyzed
 }

@@ -6,6 +6,7 @@ import org.scalatest.flatspec.AnyFlatSpec
 import org.scalatest.matchers.should.Matchers
 
 import graft.TestSpark
+import graft.testlib.JobCount.countJobs
 
 /** Persisted IVF index: save/load roundtrip reproduces the in-memory probe
   * bit-for-bit, and a loaded probe's scan is partition-pruned to the probed
@@ -143,6 +144,88 @@ class AnnIndexSpec extends AnyFlatSpec with Matchers {
       val got = AnnIndex.probe(loaded, c.where(col("vec_id") === 60L), k = 3, nprobe = 1)
         .select("did").collect().map(_.getLong(0))
       all(got.map(_ % 4)) shouldBe 0L
+    } finally {
+      val p = new org.apache.hadoop.fs.Path(dir)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    }
+  }
+
+  it should "append int ids into a bigint-id index as bigint, and refuse lossy id types" in {
+    val c = corpus()
+    val dir = java.nio.file.Files.createTempDirectory("graft_ann_types").toString
+    def assignedFiles() =
+      new java.io.File(s"$dir/assigned").listFiles().filter(_.isDirectory)
+        .flatMap(_.listFiles().filter(_.getName.endsWith(".parquet")))
+    try {
+      AnnIndex.save(AnnIndex.buildIvf(c.where(col("vec_id") < 60), nlist = 4, maxIter = 6), dir)
+      AnnIndex.appendSaved(spark, dir, c.where(col("vec_id") >= 60)
+        .select(col("vec_id").cast("int").as("vec_id"), col("embedding")))
+      assignedFiles().map(f => spark.read.parquet(f.getPath).schema("did").dataType)
+        .toSet shouldBe Set(org.apache.spark.sql.types.LongType)
+      AnnIndex.load(spark, dir).assigned.count() shouldBe 80L
+      // float/double ids could merge distinct bigint ids, and a string is
+      // no widening at all: both refuse before a file is written
+      val before = assignedFiles().map(_.getPath).toSet
+      for (t <- Seq("double", "float", "string")) {
+        val err = intercept[IllegalArgumentException](AnnIndex.appendSaved(spark, dir,
+          c.where(col("vec_id") < 4).select(col("vec_id").cast(t).as("vec_id"), col("embedding"))))
+        err.getMessage should include ("whose ids are BIGINT")
+      }
+      assignedFiles().map(_.getPath).toSet shouldBe before
+    } finally {
+      val p = new org.apache.hadoop.fs.Path(dir)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    }
+  }
+
+  "AnnIndex load + probe" should "stay within its job ceiling" in {
+    val c = corpus()
+    val idx = AnnIndex.buildIvf(c, nlist = 4, maxIter = 6)
+    val dir = java.nio.file.Files.createTempDirectory("graft_ann_jobs").toString
+    try {
+      AnnIndex.save(idx, dir)
+      AnnIndex.deleteSaved(spark, dir, Seq(5L))
+      val qs = c.where(col("vec_id") < 6)
+      def loadProbe() = AnnIndex.probe(AnnIndex.load(spark, dir), qs, k = 3, nprobe = 2)
+        .select("qid", "did").collect()
+      loadProbe() // warm call: plan/codegen caches out of the measurement
+      // load (also appendSaved's first step) = one centroid scan, known
+      // schemas, no footer inference — was 4;
+      // load + probe adds one query-side collect and the scoring jobs —
+      // was 11
+      val (_, loadJobs) = countJobs(AnnIndex.load(spark, dir))
+      loadJobs should be <= 1
+      val (_, jobs) = countJobs(loadProbe())
+      jobs should be <= 7
+    } finally {
+      val p = new org.apache.hadoop.fs.Path(dir)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    }
+  }
+
+  it should "load an index without a schema record by inference, probing the same rows" in {
+    val c = corpus()
+    val dir = java.nio.file.Files.createTempDirectory("graft_ann_legacy").toString
+    try {
+      AnnIndex.save(AnnIndex.buildIvf(c, nlist = 4, maxIter = 6), dir)
+      AnnIndex.deleteSaved(spark, dir, Seq(1L, 8L))
+      val qs = c.where(col("vec_id") < 6)
+      def res() = {
+        val loaded = AnnIndex.load(spark, dir)
+        (loaded.assigned.schema, AnnIndex.probe(loaded, qs, k = 3, nprobe = 2)
+          .select("qid", "did", "sim").collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq)
+      }
+      val (recordedSchema, recorded) = res()
+      new java.io.File(s"$dir/_schema.json").delete() shouldBe true
+      val (inferredSchema, inferred) = res()
+      inferredSchema shouldBe recordedSchema
+      inferred shouldBe recorded
+      recorded.map(_._2) should not contain 8L
+      // compaction of a record-less index writes the record again
+      AnnIndex.compactSaved(spark, dir)
+      new java.io.File(s"$dir/_schema.json").exists() shouldBe true
+      res()._2 shouldBe recorded
     } finally {
       val p = new org.apache.hadoop.fs.Path(dir)
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)

@@ -5,6 +5,7 @@ import org.scalatest.flatspec.AnyFlatSpec
 import org.scalatest.matchers.should.Matchers
 
 import graft.TestSpark
+import graft.testlib.JobCount.countJobs
 
 /** BPE trainer vs a textbook sequential Scala implementation: the merge
   * sequence (with lexicographic tie-break) must agree exactly. */
@@ -261,6 +262,10 @@ class BpeSpec extends AnyFlatSpec with Matchers {
       val (lms, lvoc) = Bpe.loadTokenizer(spark, dir)
       lms shouldBe ms
       lvoc shouldBe voc
+      // known schemas + driver-side ordering: one union scan (was 8 jobs:
+      // two footer inferences, two distributed sorts)
+      val (_, jobs) = countJobs(Bpe.loadTokenizer(spark, dir))
+      jobs should be <= 1
     } finally {
       val p = new org.apache.hadoop.fs.Path(dir)
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)

@@ -6,6 +6,7 @@ import org.scalatest.flatspec.AnyFlatSpec
 import org.scalatest.matchers.should.Matchers
 
 import graft.TestSpark
+import graft.testlib.JobCount.countJobs
 
 /** Persisted IVF-PQ: save/load round-trip bit-exactness, planning-time
   * cell pruning, and planted-near-copy retrieval through the probe. */
@@ -98,6 +99,92 @@ class PqIndexSpec extends AnyFlatSpec with Matchers {
       val pruned = PqIndex.load(spark, dir)
       pruned.codes.where(col("did").isin(5001L, 5005L)).count() shouldBe 0L
       pruned.codes.count() shouldBe loaded.codes.count() - 2
+    } finally {
+      val p = new org.apache.hadoop.fs.Path(dir)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    }
+  }
+
+  it should "load and probe within its job ceiling" in {
+    val idx = PqIndex.build(vecs, nlist = 4, m = 4, ksub = 8, maxIter = 5)
+    val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_jobs").toString
+    try {
+      PqIndex.save(idx, dir)
+      PqIndex.deleteSaved(spark, dir, Seq(7L))
+      val qs = vecs.where(col("vec_id") < 4)
+      def loadProbe() = PqIndex.probe(PqIndex.load(spark, dir), qs, k = 5, nprobe = 2)
+        .select("qid", "did").collect()
+      loadProbe() // warm call: plan/codegen caches out of the measurement
+      // load (also appendSaved's first step) = one quantizer scan, known
+      // schemas, no footer inference — was 4;
+      // load + probe adds one query-side collect and the scoring jobs —
+      // was 13
+      val (_, loadJobs) = countJobs(PqIndex.load(spark, dir))
+      loadJobs should be <= 1
+      val (_, jobs) = countJobs(loadProbe())
+      jobs should be <= 7
+    } finally {
+      val p = new org.apache.hadoop.fs.Path(dir)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    }
+  }
+
+  it should "load an index without a schema record by inference, probing the same rows" in {
+    val idx = PqIndex.build(vecs, nlist = 4, m = 4, ksub = 8, maxIter = 5)
+    val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_legacy").toString
+    try {
+      PqIndex.save(idx, dir)
+      PqIndex.deleteSaved(spark, dir, Seq(2L, 9L))
+      val qs = vecs.where(col("vec_id") < 4)
+      def res() = {
+        val loaded = PqIndex.load(spark, dir)
+        (loaded.codes.schema, PqIndex.probe(loaded, qs, k = 5, nprobe = 2)
+          .select("qid", "did", "sim").collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq)
+      }
+      val (recordedSchema, recorded) = res()
+      new java.io.File(s"$dir/_schema.json").delete() shouldBe true
+      val (inferredSchema, inferred) = res()
+      inferredSchema shouldBe recordedSchema
+      inferred shouldBe recorded
+      recorded.map(_._2) should not contain 2L
+    } finally {
+      val p = new org.apache.hadoop.fs.Path(dir)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    }
+  }
+
+  it should "append int ids into a bigint-id index as bigint, and refuse a narrowing" in {
+    val idx = PqIndex.build(vecs, nlist = 4, m = 4, ksub = 8, maxIter = 5)
+    val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_types").toString
+    def codeFileIdTypes() =
+      new java.io.File(s"$dir/codes").listFiles().filter(_.isDirectory)
+        .flatMap(_.listFiles().filter(_.getName.endsWith(".parquet")))
+        .map(f => spark.read.parquet(f.getPath).schema("did").dataType).toSet
+    try {
+      PqIndex.save(idx, dir)
+      val intBatch = vecs.where(col("vec_id") < 8)
+        .select((col("vec_id") + 5000L).cast("int").as("vec_id"), col("embedding"))
+      PqIndex.appendSaved(spark, dir, intBatch)
+      codeFileIdTypes() shouldBe Set(org.apache.spark.sql.types.LongType)
+      PqIndex.load(spark, dir).codes.where(col("did") >= 5000L).count() shouldBe 8L
+      // the same holds without a record: the inferred type is the stored one
+      new java.io.File(s"$dir/_schema.json").delete() shouldBe true
+      PqIndex.appendSaved(spark, dir, intBatch.select(
+        (col("vec_id") + 100).as("vec_id"), col("embedding")))
+      codeFileIdTypes() shouldBe Set(org.apache.spark.sql.types.LongType)
+      // an int-id index refuses bigint ids before writing anything
+      val intDir = s"$dir/int_ids"
+      PqIndex.save(PqIndex.IvfPq(idx.coarse, idx.cb,
+        idx.codes.withColumn("did", col("did").cast("int"))), intDir)
+      val before = new java.io.File(s"$intDir/codes").listFiles().flatMap(
+        d => Option(d.listFiles()).getOrElse(Array.empty)).map(_.getPath).toSet
+      val err = intercept[IllegalArgumentException](
+        PqIndex.appendSaved(spark, intDir, vecs.where(col("vec_id") < 4)))
+      err.getMessage should include ("ids of type BIGINT")
+      err.getMessage should include ("whose ids are INT")
+      new java.io.File(s"$intDir/codes").listFiles().flatMap(
+        d => Option(d.listFiles()).getOrElse(Array.empty)).map(_.getPath).toSet shouldBe before
     } finally {
       val p = new org.apache.hadoop.fs.Path(dir)
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)

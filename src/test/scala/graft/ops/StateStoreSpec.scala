@@ -8,6 +8,7 @@ import org.scalatest.flatspec.AnyFlatSpec
 import org.scalatest.matchers.should.Matchers
 
 import graft.TestSpark
+import graft.testlib.JobCount.countJobs
 
 /** Persisted keyed state: point updates merge correctly AND physically
   * touch only the buckets the delta's keys hash to — the at-rest analogue
@@ -153,19 +154,10 @@ class StateStoreSpec extends AnyFlatSpec with Matchers {
       "k", 16, dir)
     // warm call: plan/codegen caches out of the measurement
     StateStore.upsert(spark, dir, (1L to 30L).map(k => (k, 2.0)).toDF("k", "v"))
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        { jobs.incrementAndGet(); () }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
+    val (_, jobs) = countJobs {
       StateStore.upsert(spark, dir, (5L to 40L).map(k => (k, 3.0)).toDF("k", "v"))
-      // listener delivery is async — give the bus a moment before reading
-      Thread.sleep(500)
-      jobs.get() should be <= 6
-    } finally spark.sparkContext.removeSparkListener(l)
+    }
+    jobs should be <= 6
     StateStore.read(spark, dir).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toMap.apply(20L) shouldBe 3.0
   }
