@@ -32,8 +32,10 @@ object KMeans {
       lit(0.0), (s, x) => s + x)
 
   /** The `n` nearest centroid ids of `v`, ascending by (distance, cid) —
-    * the ONE quantizer-probe expression shared by ivfTopK and AnnIndex, so
-    * their cell assignments can never drift apart. */
+    * the ONE quantizer-probe expression: the IVF lifecycle
+    * ([[graft.ops.IvfCore]]) assigns rows to cells and picks probe cells
+    * with it for both index payloads, so assignment and probe can never
+    * drift apart. */
   private[graft] def nearestCentroids(cents: Array[(Int, Seq[Double])],
       v: Column, n: Int): Column =
     slice(array_sort(transform(centroidLit(cents), c =>

@@ -1,25 +1,35 @@
 package graft.ops
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType,
   ShortType, StructType}
 
-/** What the two persisted IVF indexes ([[AnnIndex]], [[PqIndex]]) share
-  * below their payloads: the schema record, known-schema reads of the
-  * relations they write, the long-form quantizer decoder, tombstones, and
-  * the probe's query-side resolution.
+/** The persisted IVF (inverted-file) index, written once for both payloads
+  * ([[AnnIndex]]: raw vectors, [[PqIndex]]: PQ codes): a coarse quantizer
+  * plus the corpus as a table PARTITIONED BY CELL, so a probe reads only
+  * its `nprobe` cells — a planning-time partition filter, no runtime trick.
+  *
+  * On disk, under the index directory:
+  *  - `quant` — every quantizer as ONE long-form relation `(s, cid, dim, x)`:
+  *    the coarse quantizer at `s = -1`, PQ subquantizer `s` at `s >= 0`;
+  *  - the cell-partitioned table (`assigned` or `codes`);
+  *  - `deleted` — tombstoned ids, anti-joined away at load;
+  *  - `_schema.json` — the table's schema, written last.
   *
   * Every read here is ONE planned scan. A `spark.read.parquet(dir)` with no
   * schema runs a footer-inference job first (≈100 ms of job floor for a
-  * droplet-sized relation), so relations whose schema the code fixes are
-  * read with that schema, and the one relation whose schema depends on the
-  * corpus (the cell-partitioned `assigned`/`codes` table: `did` takes the
-  * corpus id's type) is read with the schema recorded at save time.
-  * Indexes saved before the record existed fall back to inference. */
+  * droplet-sized relation), so `quant` and `deleted` are read with the
+  * schemas the code fixes, and the table (whose `did` takes the corpus id's
+  * type) with the schema recorded at save time. Indexes saved without the
+  * record fall back to inference. */
 private[ops] object IvfCore {
+
+  /** Quantizers by subspace: `-1` the coarse quantizer, `s >= 0` the PQ
+    * books; each a (cid, centroid) array in cid order. */
+  type Quantizers = Map[Int, Array[(Int, Seq[Double])]]
 
   /** The schema record: a JSON file beside the index relations, written
     * LAST by a save or compaction (and removed first by a save), so it only
@@ -27,28 +37,26 @@ private[ops] object IvfCore {
     * `{"version":1,"relations":{"<name>":<Spark StructType JSON>}}`. */
   private val RecordName = "_schema.json"
 
-  private val CentroidSchema = "cid INT, dim INT, x DOUBLE"
   private val QuantSchema = "s INT, cid INT, dim INT, x DOUBLE"
   private val DeletedSchema = "did BIGINT"
 
   private def fs(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  def exists(spark: SparkSession, path: String): Boolean = {
+  private def exists(spark: SparkSession, path: String): Boolean = {
     val p = new Path(path)
     fs(spark, p).exists(p)
   }
 
-  /** Drop the record before a save overwrites the relations it describes:
-    * a save that dies midway leaves no record, and readers infer. */
-  def clearRecord(spark: SparkSession, dir: String): Unit = {
-    val p = new Path(dir, RecordName)
-    fs(spark, p).delete(p, false)
+  private def remove(spark: SparkSession, path: String): Unit = {
+    val p = new Path(path)
+    val f = fs(spark, p)
+    if (f.exists(p)) f.delete(p, true)
     ()
   }
 
   /** Publish the record (temp file + rename: a reader never sees it torn). */
-  def writeRecord(spark: SparkSession, dir: String, name: String,
+  private def writeRecord(spark: SparkSession, dir: String, name: String,
       schema: StructType): Unit = {
     val tmp = new Path(dir, s".$RecordName.tmp")
     val dst = new Path(dir, RecordName)
@@ -63,7 +71,7 @@ private[ops] object IvfCore {
 
   /** The recorded schema of relation `name`, or None for an index saved
     * without a record. */
-  def recordedSchema(spark: SparkSession, dir: String,
+  private def recordedSchema(spark: SparkSession, dir: String,
       name: String): Option[StructType] = {
     val p = new Path(dir, RecordName)
     val f = fs(spark, p)
@@ -80,46 +88,27 @@ private[ops] object IvfCore {
     }
   }
 
-  /** The cell-partitioned table `dir/name`, read with its recorded schema
-    * (no inference job), or inferred when the index has no record. */
-  def readTable(spark: SparkSession, dir: String, name: String): DataFrame =
-    recordedSchema(spark, dir, name) match {
-      case Some(s) => spark.read.schema(s).parquet(s"$dir/$name")
-      case None => spark.read.parquet(s"$dir/$name")
-    }
+  /** Write quantizers as the long-form `(s, cid, dim, x)` relation at
+    * `path` — the one flattener for index and bare-codebook saves. */
+  def writeQuantizers(spark: SparkSession, quant: Quantizers, path: String): Unit = {
+    import spark.implicits._
+    quant.toSeq.sortBy(_._1).flatMap { case (s, book) =>
+      book.toSeq.flatMap { case (cid, v) =>
+        v.zipWithIndex.map { case (x, i) => (s, cid, i, x) } } }
+      .toDF("s", "cid", "dim", "x")
+      .coalesce(1) // droplet-sized relation: one file, one commit
+      .write.mode("overwrite").parquet(path)
+  }
 
-  /** Decode a long-form quantizer relation — `(s, cid, dim, x)` rows, or
-    * `(cid, dim, x)` for a single quantizer, keyed `s = -1` — into
-    * `s → (cid, centroid)*` in cid order, from one known-schema scan. */
-  def readQuantizers(spark: SparkSession, path: String,
-      subspaced: Boolean): Map[Int, Array[(Int, Seq[Double])]] = {
-    val rows =
-      if (subspaced) spark.read.schema(QuantSchema).parquet(path)
-      else spark.read.schema(CentroidSchema).parquet(path)
-        .select(lit(-1), col("cid"), col("dim"), col("x"))
-    rows.collect()
+  /** Decode the long-form quantizer relation at `path`, from one
+    * known-schema scan. */
+  def readQuantizers(spark: SparkSession, path: String): Quantizers =
+    spark.read.schema(QuantSchema).parquet(path).collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getDouble(3)))
       .groupBy(_._1).map { case (s, rs) =>
         s -> rs.groupBy(_._2).toArray.sortBy(_._1)
           .map { case (cid, cs) => (cid, cs.sortBy(_._3).map(_._4).toSeq) }
       }
-  }
-
-  /** Tombstone ids: append them to `dir/deleted`, which [[live]]
-    * anti-joins away — no data file is rewritten. */
-  def deleteIds(spark: SparkSession, dir: String, ids: Seq[Long]): Unit = {
-    import spark.implicits._
-    ids.toDF("did").coalesce(1)
-      .write.mode("append").parquet(s"$dir/deleted")
-  }
-
-  /** `table` without the tombstoned ids (a broadcast anti-join — tombstone
-    * sets are tiny next to the corpus). */
-  def live(spark: SparkSession, dir: String, table: DataFrame): DataFrame =
-    if (exists(spark, s"$dir/deleted"))
-      table.join(broadcast(spark.read.schema(DeletedSchema).parquet(s"$dir/deleted")),
-        Seq("did"), "left_anti")
-    else table
 
   /** Id types in widening order: a batch id type converts to a stored one
     * only when it comes earlier here (every such cast is lossless). */
@@ -129,7 +118,7 @@ private[ops] object IvfCore {
     * type passes, an integral widening (e.g. int → bigint) is cast,
     * anything else fails — one index never holds data files of two id
     * types, and no cast can merge two distinct ids. */
-  def conformIds(rows: DataFrame, stored: DataType, dir: String): DataFrame = {
+  private def conformIds(rows: DataFrame, stored: DataType, dir: String): DataFrame = {
     val t = rows.schema("did").dataType
     val (from, to) = (IdWidening.indexOf(t), IdWidening.indexOf(stored))
     if (t == stored) rows
@@ -139,18 +128,157 @@ private[ops] object IvfCore {
         s"are ${stored.sql}; cast the batch's id column to ${stored.sql}")
   }
 
-  /** The probe's front half, shared by both indexes. `side` has one row per
-    * (query, probe cell) — `qid`, `cell` and the query's scoring payload —
-    * and is collected ONCE, as the executors' compact rows: the probed
-    * cells are read off them (so the `table` scan carries them as
-    * planning-time `PartitionFilters`), and the scoring join broadcasts a
-    * local relation over the same rows, so the query side is never
-    * computed twice. Candidates exclude the query's own id. */
-  def probeJoin(side: DataFrame, table: DataFrame): DataFrame = {
+  /** The probe's query-side join. `side` has one row per (query, probe
+    * cell) — `qid`, `cell` and the query's scoring payload — and is
+    * collected ONCE, as the executors' compact rows: the probed cells are
+    * read off them (so the `table` scan carries them as planning-time
+    * `PartitionFilters`), and the scoring join broadcasts a local relation
+    * over the same rows, so the query side is never computed twice.
+    * Candidates exclude the query's own id. */
+  private def probeJoin(side: DataFrame, table: DataFrame): DataFrame = {
     val (rows, local) = bridge.collectLocal(side)
     val cellAt = side.schema.fieldIndex("cell")
     val cells = rows.map(_.getInt(cellAt)).distinct.sorted
     val cand = table.where(col("cell").isin(cells.map(Integer.valueOf): _*))
     broadcast(local).join(cand, Seq("cell")).where(col("qid") =!= col("did"))
+  }
+
+  /** One IVF index lifecycle — build-side assignment, save, load, append,
+    * tombstone, compaction, extension and the probe's front half — over a
+    * payload that supplies only its index type, its quantizers, its
+    * per-row encoding and (in its `probe`) its scoring.
+    *
+    * The quantizers are immutable once trained (retrain only on drift), so
+    * every write after `save` touches only the table: an append adds files
+    * to the touched cell partitions, a delete appends tombstones, and
+    * compaction is the one rewrite. */
+  abstract class Lifecycle {
+
+    /** The in-memory index: quantizers plus table rows `(did, payload…, cell)`. */
+    type Index
+
+    /** Name of the cell-partitioned table under the index directory. */
+    private[ops] val table: String
+
+    private[ops] def quantizers(idx: Index): Quantizers
+    private[ops] def rows(idx: Index): DataFrame
+    private[ops] def index(quant: Quantizers, rows: DataFrame): Index
+
+    /** The payload of table rows: from `(did, __v, cell)` — `__v` the raw
+      * vector — to `(did, payload…, cell)`. A per-row projection. */
+    protected def encode(quant: Quantizers, rows: DataFrame): DataFrame
+
+    /** Table rows for `vecs` under `quant`: ONE narrow pass computing the
+      * cell (the shared quantizer-probe expression,
+      * [[graft.lib.KMeans.nearestCentroids]], so trainer, assignment and
+      * probe can never drift) and the payload of each row. */
+    protected def assign(quant: Quantizers, vecs: DataFrame,
+        idCol: String, vecCol: String): DataFrame =
+      encode(quant, Par.spread(vecs).select(col(idCol).as("did"), col(vecCol).as("__v"),
+        graft.lib.KMeans.nearestCentroids(quant(-1), col(vecCol), 1)(0).as("cell")))
+
+    /** Persist: the quantizers as one `quant` relation, the table
+      * PARTITIONED BY CELL (every probe becomes a planning-time
+      * partition-pruned scan). Tombstones of an index previously saved in
+      * `dir` are dropped — they describe rows this save replaced. */
+    def save(idx: Index, dir: String): Unit = {
+      val spark = rows(idx).sparkSession
+      remove(spark, s"$dir/$RecordName")
+      writeQuantizers(spark, quantizers(idx), s"$dir/quant")
+      // clustered by cell: one file per (cell, writing task) instead of the
+      // tasks × cells fan-out, and AQE coalesces tiny relations to a couple
+      // of write tasks — faster save AND faster pruned probes later
+      rows(idx).repartition(col("cell")).write.mode("overwrite")
+        .partitionBy("cell").parquet(s"$dir/$table")
+      remove(spark, s"$dir/deleted")
+      writeRecord(spark, dir, table, rows(idx).schema)
+    }
+
+    /** Reload a saved index: one scan of `quant`; the table is read with its
+      * recorded schema (inferred for an index saved without one), and
+      * tombstoned ids ([[deleteSaved]]) are dropped with a broadcast
+      * anti-join — the table files themselves are never rewritten. */
+    def load(spark: SparkSession, dir: String): Index = {
+      if (!exists(spark, s"$dir/quant"))
+        throw new IllegalStateException(
+          s"no IVF index at $dir in the current layout (no quant/ relation; " +
+            "indexes saved with centroids/ or coarse/+books/ predate it); " +
+            "rebuild and re-save the index")
+      val quant = readQuantizers(spark, s"$dir/quant")
+      val t = (recordedSchema(spark, dir, table) match {
+        case Some(s) => spark.read.schema(s).parquet(s"$dir/$table")
+        case None => spark.read.parquet(s"$dir/$table")
+      }).withColumn("cell", col("cell").cast("int"))
+      val live =
+        if (exists(spark, s"$dir/deleted"))
+          t.join(broadcast(spark.read.schema(DeletedSchema).parquet(s"$dir/deleted")),
+            Seq("did"), "left_anti")
+        else t
+      index(quant, live)
+    }
+
+    /** Assign a new batch against the EXISTING quantizers — the ingest
+      * path. One narrow map over the batch; nothing of the corpus is
+      * re-read or re-assigned. */
+    def extend(idx: Index, newVecs: DataFrame,
+        idCol: String = "vec_id", vecCol: String = "embedding"): Index = {
+      val quant = quantizers(idx)
+      index(quant, rows(idx).unionByName(assign(quant, newVecs, idCol, vecCol)))
+    }
+
+    /** Extend a SAVED index in place: encode the batch with the saved
+      * quantizers and APPEND its rows to the table — only the touched cell
+      * partitions gain files; existing data is never rewritten. Batch ids
+      * take the index's stored id type (a lossless widening is cast;
+      * anything else fails before a file is written). */
+    def appendSaved(spark: SparkSession, dir: String, newVecs: DataFrame,
+        idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
+      val idx = load(spark, dir)
+      conformIds(assign(quantizers(idx), newVecs, idCol, vecCol),
+          rows(idx).schema("did").dataType, dir)
+        .repartition(col("cell")) // one appended file per touched cell/task
+        .write.mode("append").partitionBy("cell").parquet(s"$dir/$table")
+    }
+
+    /** Tombstone vectors in a SAVED index: the ids append to the `deleted`
+      * relation that [[load]] anti-joins away (broadcast — tombstone sets
+      * are tiny next to the corpus); no table file is rewritten, and probes
+      * exclude the ids immediately. Reclaim the space with [[compactSaved]]. */
+    def deleteSaved(spark: SparkSession, dir: String, ids: Seq[Long]): Unit = {
+      import spark.implicits._
+      ids.toDF("did").coalesce(1)
+        .write.mode("append").parquet(s"$dir/deleted")
+    }
+
+    /** Compaction: physically rewrite the table without the tombstoned rows
+      * and clear `deleted` — run when the tombstone set has grown enough
+      * that the per-probe anti-join (or the dead bytes on disk) is worth
+      * reclaiming. One read + one partitioned write of the LIVE rows; the
+      * quantizers are untouched. */
+    def compactSaved(spark: SparkSession, dir: String): Unit = {
+      val live = rows(load(spark, dir))
+      // localCheckpoint breaks the read-from/write-to path dependency
+      live.localCheckpoint(true).repartition(col("cell"))
+        .write.mode("overwrite")
+        .partitionBy("cell").parquet(s"$dir/$table")
+      remove(spark, s"$dir/deleted")
+      writeRecord(spark, dir, table, live.schema)
+    }
+
+    /** The probe's front half: each query's scoring columns `side` (`qid`
+      * first) exploded over its `nprobe` nearest cells — computed on the
+      * RAW query vector, the same arithmetic the assignment used — joined
+      * to the rows of the probed cells, and scored by `sim`; the result
+      * keeps the `keep` columns and `sim`. */
+    protected def scored(idx: Index, queries: DataFrame, nprobe: Int, vecCol: String,
+        side: Seq[Column], sim: Column, keep: String*): DataFrame = {
+      val q = queries.select(side :+ explode(graft.lib.KMeans.nearestCentroids(
+        quantizers(idx)(-1), col(vecCol), nprobe)).as("cell"): _*)
+      probeJoin(q, rows(idx)).select(keep.map(col) :+ sim.as("sim"): _*)
+        // zero-norm corpus vectors score NaN, and Spark sorts NaN ABOVE
+        // every real double under `desc` — drop them or they steal a top-k
+        // slot from a true neighbor for every query probing their cell
+        .where(!isnan(col("sim")))
+    }
   }
 }

@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   * reproduce exactly anywhere.
   *
   * Compositionality: codes are a relation keyed by vector id — partition
-  * them by an IVF cell ([[AnnIndex]]) for the classic IVF-PQ layout where a
+  * them by an IVF cell ([[PqIndex]]) for the classic IVF-PQ layout where a
   * probe reads only `nprobe` cells of an already-32×-smaller table.
   */
 object Pq {
@@ -171,30 +171,27 @@ object Pq {
       .select(col(idCol).as("did"), codeExpr(cb, col(vecCol)).as("code"))
       .withColumn("est_norm", estNormExpr(cb))
 
-  /** Persist trained codebooks as a tiny long-form parquet relation
-    * `(s, cid, dim, x)` — the layout [[PqIndex.save]] uses for its `books`
-    * subdirectory, exposed so a bare-PQ (no IVF) deployment can reuse one
-    * trained model across sessions. Doubles roundtrip parquet bit-exactly,
-    * so encode-after-reload is code-identical to encode-before-save. */
+  /** Persist trained codebooks as the long-form quantizer relation
+    * `(s, cid, dim, x)` at `dir` — the `quant` layout of a saved
+    * [[PqIndex]] without its coarse rows — so a bare-PQ (no IVF) deployment
+    * can reuse one trained model across sessions. Doubles roundtrip parquet
+    * bit-exactly, so encode-after-reload is code-identical to
+    * encode-before-save. */
   def saveCodebooks(spark: org.apache.spark.sql.SparkSession, cb: Codebooks,
-      dir: String): Unit = {
-    import spark.implicits._
-    cb.books.zipWithIndex.toSeq
-      .flatMap { case (book, s) =>
-        book.toSeq.flatMap { case (cid, v) =>
-          v.zipWithIndex.map { case (x, i) => (s, cid, i, x) } } }
-      .toDF("s", "cid", "dim", "x")
-      .coalesce(1) // droplet-sized relation: one file, one commit
-      .write.mode("overwrite").parquet(dir)
-  }
+      dir: String): Unit =
+    IvfCore.writeQuantizers(spark, quantizersOf(cb), dir)
 
   /** Reload codebooks written by [[saveCodebooks]]. */
   def loadCodebooks(spark: org.apache.spark.sql.SparkSession,
       dir: String): Codebooks =
-    codebooksOf(IvfCore.readQuantizers(spark, dir, subspaced = true))
+    codebooksOf(IvfCore.readQuantizers(spark, dir))
+
+  /** Codebooks as quantizers keyed by subspace `s >= 0`. */
+  private[ops] def quantizersOf(cb: Codebooks): IvfCore.Quantizers =
+    cb.books.indices.map(s => s -> cb.books(s)).toMap
 
   /** Codebooks from decoded `s → (cid, centroid)*` subquantizers. */
-  private[ops] def codebooksOf(bySub: Map[Int, Array[(Int, Seq[Double])]]): Codebooks = {
+  private[ops] def codebooksOf(bySub: IvfCore.Quantizers): Codebooks = {
     val books = bySub.toArray.sortBy(_._1).map(_._2)
     Codebooks(books.length, books.head.head._2.length, books)
   }
@@ -206,17 +203,16 @@ object Pq {
   private def cbLit(cb: Codebooks): Column =
     typedLit(cb.books.toSeq.map(book => book.sortBy(_._1).map(_._2).toSeq))
 
-  /** The broadcastable query side: `(qid, qv, lut, qnorm, extra*)` — the
-    * per-query LUT `lut(s)(cid) = <q_s, centroid>` is computed once per
+  /** The broadcastable query side's columns: `(qid, qv, lut, qnorm)` —
+    * the per-query LUT `lut(s)(cid) = <q_s, centroid>` is computed once per
     * query row; every candidate afterwards costs m lookups. */
-  private[ops] def querySide(cb: Codebooks, queries: DataFrame,
-      idCol: String, vecCol: String, extra: Column*): DataFrame =
-    queries.select(Seq(col(idCol).as("qid"),
+  private[ops] def querySide(cb: Codebooks, idCol: String, vecCol: String): Seq[Column] =
+    Seq(col(idCol).as("qid"),
       col(vecCol).as("qv"),
       transform(cbLit(cb), (book, s) =>
         transform(book, c =>
           dot(slice(col(vecCol), s * lit(cb.dsub) + lit(1), lit(cb.dsub)), c))).as("lut"),
-      sqrt(dot(col(vecCol), col(vecCol))).as("qnorm")) ++ extra: _*)
+      sqrt(dot(col(vecCol), col(vecCol))).as("qnorm"))
 
   /** ADC cosine estimate from a joined (query-side × code) row. */
   private[ops] def adcSim: Column = {
@@ -262,7 +258,7 @@ object Pq {
       rerankWith: Option[DataFrame] = None, rerankFactor: Int = 4,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     require(k > 0 && rerankFactor > 0, s"k=$k factor=$rerankFactor")
-    val q = broadcast(querySide(cb, queries, idCol, vecCol))
+    val q = broadcast(queries.select(querySide(cb, idCol, vecCol): _*))
     val scored = q.join(codes, col("qid") =!= col("did"))
       .select(col("qid"), col("qv"), col("did"), adcSim.as("sim"))
       .where(!isnan(col("sim"))) // zero-norm codes: NaN sorts first under desc

@@ -130,26 +130,12 @@ object Similarity {
   /** IVF (inverted-file) ANN: the corpus is coarse-quantized into `nlist`
     * kMeans cells; each query probes only its `nprobe` nearest cells —
     * an `nlist/nprobe`-fold scan reduction with recall controlled by nprobe.
-    * At 100 TB: train the quantizer on a sample, partition the corpus by
-    * cell once, and every query batch touches only the probed cells. */
+    * The unpersisted case of [[AnnIndex]]: build the index in memory and
+    * probe it once; at 100 TB save the index and probe the saved one, so
+    * every query batch touches only the probed cells. */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int = 3,
-      nlist: Int = 8, nprobe: Int = 2, maxIter: Int = 10): DataFrame = {
-    val cents = graft.lib.KMeans.centroids(corpus, nlist, maxIter)
-    // probe list per query: the nprobe nearest centroids — the SHARED
-    // quantizer-probe expression (struct sort on (distance, cid)), one
-    // definition with the trainer and the persisted AnnIndex
-    val q = broadcast(queries
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      .withColumn("cell",
-        explode(graft.lib.KMeans.nearestCentroids(cents, col("qv"), nprobe))))
-    // assign corpus rows to cells inline (same nearest-centroid expression)
-    val cAssigned = Par.spread(corpus).select(col("vec_id").as("did"), col("embedding").as("dv"),
-      graft.lib.KMeans.nearestCentroids(cents, col("dv"), 1)(0).as("cell"))
-    val scored = q.join(cAssigned, Seq("cell")).where(col("qid") =!= col("did"))
-      .select(col("qid"), col("did"), Portable.round(cosine(col("qv"), col("dv")), 4).as("sim"))
-      .where(!isnan(col("sim"))) // zero-norm vectors: NaN sorts FIRST under desc
-    rankTopK(scored, k)
-  }
+      nlist: Int = 8, nprobe: Int = 2, maxIter: Int = 10): DataFrame =
+    AnnIndex.probe(AnnIndex.buildIvf(corpus, nlist, maxIter), queries, k, nprobe)
 
   /** Coarse quantizer: bucket id from the sign bits of the first `bits`
     * dimensions (deterministic, engine-portable). */

@@ -6,6 +6,7 @@ import org.scalatest.flatspec.AnyFlatSpec
 import org.scalatest.matchers.should.Matchers
 
 import graft.TestSpark
+import graft.testlib.JobCount.countJobs
 
 /** Auto-cache scope: multiply-consumed bags must be computed ONCE. The
   * proof is an accumulator in the shared upstream stage — it counts how
@@ -59,15 +60,7 @@ class AutoCacheSpec extends AnyFlatSpec with Matchers {
   "deferred folds" should "fuse N folds of one bag into ONE Spark job, bit-identical results" in {
     import graft.api.alg._
     val (bag, acc) = countedBag(1000)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val _ = jobs.incrementAndGet()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val (_, c) = countJobs {
       val (s, n, m, t) = AutoCache.scope { sc =>
         val sum = sc.deferFold(bag)(Sum(Numeric[Long]))
         val cnt = sc.deferFold(bag)(Size)
@@ -81,31 +74,19 @@ class AutoCacheSpec extends AnyFlatSpec with Matchers {
       m.value shouldBe Some(999L)
       t.value shouldBe List(999L, 998L, 997L)
       acc.value shouldBe 1000L // one scan of the source
-      // listener events post asynchronously — wait for the count to settle
-      val deadline = System.nanoTime() + 5000000000L
-      while (jobs.get() == 0 && System.nanoTime() < deadline) Thread.sleep(20)
-      Thread.sleep(200)
-      jobs.get() shouldBe 1 // four folds, ONE job
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    c.jobs shouldBe 1 // four folds, ONE job
   }
 
   "plain named folds in a scope" should "auto-fuse: N folds of one bag, ONE job, bit-identical" in {
     val (bag, acc) = countedBag(1000)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val _ = jobs.incrementAndGet()
-      }
-    }
     // standalone (non-scope) twins computed FIRST, for bit-identity
     val expSum = bag.sum
     val expN = bag.size
     val expMin = bag.min
     val expMax = bag.max
     val accAfterTwins = acc.value // the 4 standalone scans above
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val (_, c) = countJobs {
       // the reference-natural spelling — no defer, no API opt-in: the
       // first fold runs one batch (Sum + speculative Size), `size` is a
       // memo hit; `min` opens the second batch (Min + Max + Size-hit),
@@ -123,11 +104,8 @@ class AutoCacheSpec extends AnyFlatSpec with Matchers {
       mn shouldBe expMin
       mx shouldBe expMax
       (acc.value - accAfterTwins) shouldBe 2000L // two scans (two batches), not four
-      val deadline = System.nanoTime() + 5000000000L
-      while (jobs.get() < 2 && System.nanoTime() < deadline) Thread.sleep(20)
-      Thread.sleep(200)
-      jobs.get() shouldBe 2
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    c.jobs shouldBe 2
   }
 
   "macro-hoisted uncorrelated folds" should "fuse into ONE foldAll batch inside a scope" in {
@@ -139,15 +117,7 @@ class AutoCacheSpec extends AnyFlatSpec with Matchers {
     val expMax = bag.max
     val expSize = bag.size
     val accTwins = acc.value
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val _ = jobs.incrementAndGet()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val (_, c) = countJobs {
       // three generator-independent folds of ONE bag hoist into driver vals;
       // inside a scope they must queue through deferNamed and run as ONE
       // foldAll job (collect-then-read), plus one job for the result read —
@@ -165,11 +135,8 @@ class AutoCacheSpec extends AnyFlatSpec with Matchers {
       expSum shouldBe (0L until 1000L).sum
       // one scan for all three folds (not three)
       (acc.value - accTwins) shouldBe 1000L
-      val deadline = System.nanoTime() + 5000000000L
-      while (jobs.get() < 2 && System.nanoTime() < deadline) Thread.sleep(20)
-      Thread.sleep(200)
-      jobs.get() shouldBe 2 // fused fold batch + the comprehension's collect
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    c.jobs shouldBe 2 // fused fold batch + the comprehension's collect
   }
 
   "plain folds" should "join a pending deferFold batch of the same bag" in {

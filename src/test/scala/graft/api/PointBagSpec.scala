@@ -1,6 +1,8 @@
 package graft.api
 
 import graft.TestSpark
+import graft.testlib.JobCount.countJobs
+import org.apache.spark.sql.SparkSession
 import org.scalatest.flatspec.AnyFlatSpec
 import org.scalatest.matchers.should.Matchers
 
@@ -9,7 +11,7 @@ import org.scalatest.matchers.should.Matchers
   * SCALE property (a point round runs tasks over ONLY the partitions owning
   * the touched keys) is machine-asserted via a stage listener. */
 class PointBagSpec extends AnyFlatSpec with Matchers {
-  private val spark = TestSpark.spark
+  private implicit val spark: SparkSession = TestSpark.spark
   import spark.implicits._
 
   private def freshBag(n: Int, parts: Int = 8, compactEvery: Int = 100) =
@@ -60,39 +62,15 @@ class PointBagSpec extends AnyFlatSpec with Matchers {
 
   it should "run point rounds over ONLY the touched partitions (task counts)" in {
     val pb = freshBag(200, parts = 8, compactEvery = 1000)
-    val tasks = new java.util.concurrent.atomic.AtomicInteger(0)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageSubmitted(
-          ss: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit = {
-        val _ = tasks.addAndGet(ss.stageInfo.numTasks)
-      }
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val _ = jobs.incrementAndGet()
-      }
-    }
-    def settle(expectJobs: Int): Unit = {
-      val deadline = System.nanoTime() + 5000000000L
-      while (jobs.get() < expectJobs && System.nanoTime() < deadline) Thread.sleep(20)
-      Thread.sleep(200)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      // Long keys hash to value.toInt for small values → pid = k % 8
-      pb.update(Seq((5L, 1.0)))((_, old, m) => Some(old.getOrElse(0.0) + m))
-      settle(1)
-      jobs.get() shouldBe 1   // the delta read; no compaction triggered
-      tasks.get() shouldBe 1  // ONE partition computed, not 8
-      tasks.set(0); jobs.set(0)
-      pb.multiget(Seq(3L, 11L)) // pids 3 and 11 % 8 = 3 → one partition
-      settle(1)
-      tasks.get() shouldBe 1
-      tasks.set(0); jobs.set(0)
-      pb.multiget(Seq(2L, 7L)) // two distinct partitions
-      settle(1)
-      tasks.get() shouldBe 2
-    } finally spark.sparkContext.removeSparkListener(listener)
+    // Long keys hash to value.toInt for small values → pid = k % 8
+    val (_, upd) = countJobs(
+      pb.update(Seq((5L, 1.0)))((_, old, m) => Some(old.getOrElse(0.0) + m)))
+    upd.jobs shouldBe 1   // the delta read; no compaction triggered
+    upd.tasks shouldBe 1  // ONE partition computed, not 8
+    // pids 3 and 11 % 8 = 3 → one partition
+    countJobs(pb.multiget(Seq(3L, 11L)))._2.tasks shouldBe 1
+    // two distinct partitions
+    countJobs(pb.multiget(Seq(2L, 7L)))._2.tasks shouldBe 2
   }
 
   it should "cut the pass-through chain at compactEvery and stay correct" in {
@@ -125,42 +103,19 @@ class PointBagSpec extends AnyFlatSpec with Matchers {
     (0L until 50L).foreach(k => got(k) shouldBe k.toDouble + 2.0)
     (50L until 200L).foreach(k => got(k) shouldBe k.toDouble)
     // point reads through the zipped chain still prune to touched partitions
-    val tasks = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageSubmitted(
-          ss: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit = {
-        val _ = tasks.addAndGet(ss.stageInfo.numTasks)
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      pb.multiget(Seq(3L, 11L)) // both pid 3: ONE pruned task
-      val deadline = System.nanoTime() + 5000000000L
-      while (tasks.get() == 0 && System.nanoTime() < deadline) Thread.sleep(20)
-      Thread.sleep(200)
-      tasks.get() shouldBe 1
-    } finally spark.sparkContext.removeSparkListener(listener)
+    // (both pid 3: ONE pruned task)
+    countJobs(pb.multiget(Seq(3L, 11L)))._2.tasks shouldBe 1
   }
 
   it should "skip the probe entirely with localThreshold < 0" in {
     val pb = freshBag(40, parts = 8, compactEvery = 1000)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val _ = jobs.incrementAndGet()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      // a tiny delta still takes the zip path when the caller opts out of
-      // the probe — no limit-collect job fires before the (lazy) round
+    // a tiny delta still takes the zip path when the caller opts out of
+    // the probe — no limit-collect job fires before the (lazy) round
+    val (_, n) = countJobs(
       pb.updateBag(DataBag.from(spark.createDataset(Seq((1L, 5.0)))),
-        localThreshold = -1)((_, o, m) => Some(o.getOrElse(0.0) + m))
-      Thread.sleep(300)
-      jobs.get() shouldBe 0 // round applied lazily, no probe job
-      pb.bag().collect().toMap.apply(1L) shouldBe 6.0
-    } finally spark.sparkContext.removeSparkListener(listener)
+        localThreshold = -1)((_, o, m) => Some(o.getOrElse(0.0) + m)))
+    n.jobs shouldBe 0 // round applied lazily, no probe job
+    pb.bag().collect().toMap.apply(1L) shouldBe 6.0
   }
 
   it should "route small deltas through the driver path and match update()" in {

@@ -7,6 +7,7 @@ import org.scalatest.matchers.should.Matchers
 import graft.TestSpark
 import graft.api.comprehensions.onSpark
 import graft.lib.dstat
+import graft.testlib.JobCount.countJobs
 
 /** r14: SCALAR-returning `@lib` defs splice like bag-returning ones — the
   * reference contract (`Lib.expand` inlines ANY annotated def,
@@ -64,28 +65,6 @@ class StatsPipelineSpec extends AnyFlatSpec with Matchers {
     out.collect().sorted shouldBe exp.sorted
   }
 
-  /** Runs `body` under a job-count listener; returns (jobCount, result).
-    * Listener events post asynchronously — waits for the count to reach
-    * `expectAtLeast` (or 5 s), then settles 200 ms before reading. */
-  private def countJobs[T](expectAtLeast: Int)(body: => T): (Int, T) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val _ = jobs.incrementAndGet()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val r = body
-      val deadline = System.nanoTime() + 5000000000L
-      while (jobs.get() < expectAtLeast && System.nanoTime() < deadline)
-        Thread.sleep(20)
-      Thread.sleep(200)
-      (jobs.get(), r)
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   it should "fuse the BARE z-score pipeline's first-pass moments into ONE job (two passes total)" in {
     // r15 (VERDICT task 1): the q253 gate's shape WITHOUT any manual
     // AutoCache.scope wrapper — the expansion self-establishes the fusion
@@ -96,14 +75,14 @@ class StatsPipelineSpec extends AnyFlatSpec with Matchers {
     // second, irreducible job.
     val seq = (1L to 400L).map(i => i * 31 % 1000)
     val cents = DataBag(seq)
-    val (n, out) = countJobs(2) {
+    val (out, n) = countJobs {
       onSpark {
         for { c <- cents }
           yield (c, ((c - dstat.meanL(cents)).toDouble /
             dstat.stddevL(cents) * 1000.0).floor.toLong)
       }
     }
-    n shouldBe 2 // pass 1: fused moments; pass 2: squared devs
+    n.jobs shouldBe 2 // pass 1: fused moments; pass 2: squared devs
     val mu = seq.sum / seq.size
     val vr = seq.map(c => (c - mu) * (c - mu)).sum / seq.size
     val sd = math.sqrt(vr.toDouble)
@@ -123,7 +102,7 @@ class StatsPipelineSpec extends AnyFlatSpec with Matchers {
     // siblings and re-run the moments.
     val seq = (1L to 300L).map(i => i * 17 % 500)
     val cents = DataBag(seq)
-    val (n, (out1, out2)) = countJobs(2) {
+    val ((out1, out2), n) = countJobs {
       AutoCache.scope { _ =>
         val a = onSpark {
           for { c <- cents }
@@ -136,7 +115,7 @@ class StatsPipelineSpec extends AnyFlatSpec with Matchers {
         (a, b)
       }
     }
-    n shouldBe 2 // fused moments + pipeline-1 squared devs; pipeline 2 all-memo
+    n.jobs shouldBe 2 // fused moments + pipeline-1 squared devs; pipeline 2 all-memo
     val mu = seq.sum / seq.size
     val vr = seq.map(c => (c - mu) * (c - mu)).sum / seq.size
     val sd = math.sqrt(vr.toDouble)
@@ -224,7 +203,7 @@ class StatsPipelineSpec extends AnyFlatSpec with Matchers {
     // contract (summarize.scala:22-67).
     val seq = (1L to 250L).map(i => i * 13 % 400)
     val xs = DataBag(seq)
-    val (n, out) = countJobs(1) {
+    val (out, n) = countJobs {
       onSpark {
         for { x <- xs }
           yield (x,
@@ -232,7 +211,7 @@ class StatsPipelineSpec extends AnyFlatSpec with Matchers {
             graft.lib.summarize(dstat.meanL _, dstat.sumL _)(xs)._2)
       }
     }
-    n shouldBe 1
+    n.jobs shouldBe 1
     val mu = seq.sum / seq.size
     out.collect().sorted shouldBe seq.map(x => (x, x - mu, seq.sum)).sorted
   }

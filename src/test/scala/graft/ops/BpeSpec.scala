@@ -264,8 +264,8 @@ class BpeSpec extends AnyFlatSpec with Matchers {
       lvoc shouldBe voc
       // known schemas + driver-side ordering: one union scan (was 8 jobs:
       // two footer inferences, two distributed sorts)
-      val (_, jobs) = countJobs(Bpe.loadTokenizer(spark, dir))
-      jobs should be <= 1
+      val (_, n) = countJobs(Bpe.loadTokenizer(spark, dir))
+      n.jobs should be <= 1
     } finally {
       val p = new org.apache.hadoop.fs.Path(dir)
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)

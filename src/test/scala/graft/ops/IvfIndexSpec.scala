@@ -1,0 +1,363 @@
+package graft.ops
+
+import java.io.File
+import java.nio.file.{Files, Path => JPath}
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
+import org.scalatest.flatspec.AnyFlatSpec
+import org.scalatest.matchers.should.Matchers
+
+import graft.TestSpark
+import graft.testlib.JobCount.countJobs
+
+/** The persisted IVF index lifecycle ([[IvfCore.Lifecycle]]), run once per
+  * payload: [[AnnIndexSpec]] (raw vectors) and [[PqIndexSpec]] (PQ codes)
+  * each supply a corpus of four tight clusters (cluster = id % 4), a build
+  * and a probe, plus the cases only their payload has.
+  *
+  * Shared cases: save/load round-trip, planning-time cell pruning, tombstones
+  * and compaction, append/extend equality, id widening and refusal, the
+  * record-less fallback, re-saving over tombstones, the legacy-layout
+  * refusal and the load/probe job ceilings. */
+abstract class IvfIndexSpec[L <: IvfCore.Lifecycle](name: String, val lc: L)
+    extends AnyFlatSpec with Matchers {
+
+  implicit lazy val spark: SparkSession = TestSpark.spark
+
+  /** Four tight clusters; cluster = id % 4. */
+  protected def corpus(): DataFrame
+  protected def build(c: DataFrame): lc.Index
+  protected def probe(idx: lc.Index, qs: DataFrame, k: Int, nprobe: Int): DataFrame
+  /** The relations a pre-`quant` save of this payload wrote its quantizers to. */
+  protected def legacyLayout: Seq[String]
+
+  private def withDir(prefix: String)(body: String => Unit): Unit = {
+    val dir = Files.createTempDirectory(prefix).toString
+    try body(dir)
+    finally {
+      val p = new org.apache.hadoop.fs.Path(dir)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    }
+  }
+
+  private def scoredHits(df: DataFrame): Seq[(Long, Long, Double)] =
+    df.select("qid", "did", "sim").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
+
+  private def pairs(df: DataFrame): Seq[(Long, Long)] =
+    df.select("qid", "did").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+
+  private def quantSeq(q: IvfCore.Quantizers) =
+    q.toSeq.sortBy(_._1).map { case (s, book) => (s, book.toSeq) }
+
+  private def tableFiles(dir: String): Array[File] =
+    new File(s"$dir/${lc.table}").listFiles().filter(_.isDirectory)
+      .flatMap(_.listFiles().filter(_.getName.endsWith(".parquet")))
+
+  /** Every file under `dir` with its modification time. */
+  private def snapshot(dir: String): Map[String, Long] = {
+    val walk = Files.walk(new File(dir).toPath)
+    try walk.filter(Files.isRegularFile(_)).toArray.map(_.asInstanceOf[JPath])
+      .map(p => p.toString -> p.toFile.lastModified()).toMap
+    finally walk.close()
+  }
+
+  s"$name save/load" should "reproduce the in-memory probe exactly" in {
+    val c = corpus()
+    val idx = build(c)
+    withDir("graft_ivf") { dir =>
+      lc.save(idx, dir)
+      val loaded = lc.load(spark, dir)
+      quantSeq(lc.quantizers(loaded)) shouldBe quantSeq(lc.quantizers(idx))
+      val qs = c.where(col("vec_id") < 6)
+      val direct = scoredHits(probe(idx, qs, 3, 2))
+      scoredHits(probe(loaded, qs, 3, 2)) shouldBe direct
+      direct.length shouldBe 18 // 6 queries x k=3
+    }
+  }
+
+  it should "partition-prune the loaded probe scan to the probed cells" in {
+    val c = corpus()
+    withDir("graft_ivf") { dir =>
+      lc.save(build(c), dir)
+      val loaded = lc.load(spark, dir)
+      // one query, nprobe=1 → exactly one probed cell of four
+      val probed = probe(loaded, c.where(col("vec_id") === 0L), 3, 1)
+      val plan = probed.queryExecution.executedPlan.toString
+      // the probe-cell set lands in the scan's PartitionFilters (a single
+      // cell folds the isin to an equality, several keep the IN)
+      plan should include regex ("""PartitionFilters: \[isnotnull\(cell#\d+\), \(?cell#\d+ (= |IN \()""")
+      // and it still finds vec 0's own tight cluster
+      val hits = probed.select("did").collect().map(_.getLong(0))
+      hits should not be empty
+      all(hits.map(_ % 4)) shouldBe 0L
+    }
+  }
+
+  s"$name.deleteSaved" should "tombstone vectors without rewriting assignments" in {
+    val c = corpus()
+    val idx = build(c)
+    withDir("graft_ivf_del") { dir =>
+      lc.save(idx, dir)
+      val before = snapshot(s"$dir/${lc.table}")
+      lc.deleteSaved(spark, dir, Seq(4L, 8L, 12L))
+      // the table files are untouched — deletion is an append-only op
+      snapshot(s"$dir/${lc.table}") shouldBe before
+      val loaded = lc.load(spark, dir)
+      lc.rows(loaded).count() shouldBe (c.count() - 3)
+      lc.rows(loaded).where(col("did").isin(4L, 8L, 12L)).count() shouldBe 0L
+      // probe equals the in-memory probe over the filtered table
+      val qs = c.where(col("vec_id") < 6)
+      pairs(probe(loaded, qs, 3, 2)) shouldBe pairs(probe(lc.index(lc.quantizers(idx),
+        lc.rows(idx).where(!col("did").isin(4L, 8L, 12L))), qs, 3, 2))
+      // deletes accumulate across calls
+      lc.deleteSaved(spark, dir, Seq(16L))
+      lc.rows(lc.load(spark, dir)).count() shouldBe (c.count() - 4)
+      // compaction physically drops the tombstoned rows and clears the
+      // deleted relation; the loaded view is unchanged
+      lc.compactSaved(spark, dir)
+      new File(s"$dir/deleted").exists() shouldBe false
+      spark.read.parquet(s"$dir/${lc.table}")
+        .where(col("did").isin(4L, 8L, 12L, 16L)).count() shouldBe 0L
+      lc.rows(lc.load(spark, dir)).count() shouldBe (c.count() - 4)
+    }
+  }
+
+  s"$name.save" should "not hide a re-saved id behind the replaced index's tombstones" in {
+    val c = corpus()
+    withDir("graft_ivf_resave") { dir =>
+      lc.save(build(c), dir)
+      lc.deleteSaved(spark, dir, Seq(9L))
+      lc.rows(lc.load(spark, dir)).where(col("did") === 9L).count() shouldBe 0L
+      // a fresh build holding id 9, saved into the same directory
+      lc.save(build(c), dir)
+      lc.rows(lc.load(spark, dir)).where(col("did") === 9L).count() shouldBe 1L
+      lc.rows(lc.load(spark, dir)).count() shouldBe c.count()
+    }
+  }
+
+  s"$name.extend / appendSaved" should "equal a probe over the in-memory extension" in {
+    val c = corpus()
+    val old = c.where(col("vec_id") < 60)
+    val batch = c.where(col("vec_id") >= 60)
+    val idx = build(old)
+    withDir("graft_ivf_ext") { dir =>
+      lc.save(idx, dir)
+      def dataFiles() = tableFiles(dir).map(f => f.getPath -> f.lastModified()).toMap
+      val before = dataFiles()
+      lc.appendSaved(spark, dir, batch)
+      // the data files already saved are untouched (same path, same
+      // mtime): an append only adds files to the touched cells
+      val after = dataFiles()
+      before.foreach { case (p, m) => after.get(p) shouldBe Some(m) }
+      val loaded = lc.load(spark, dir)
+      lc.rows(loaded).count() shouldBe c.count()
+      val qs = c.where(col("vec_id") < 6)
+      scoredHits(probe(loaded, qs, 3, 2)) shouldBe
+        scoredHits(probe(lc.extend(idx, batch), qs, 3, 2))
+      // batch vectors are findable: a batch vector queried against the
+      // extended index must surface its own tight cluster
+      val got = probe(loaded, c.where(col("vec_id") === 60L), 3, 1)
+        .select("did").collect().map(_.getLong(0))
+      all(got.map(_ % 4)) shouldBe 0L
+    }
+  }
+
+  it should "append int ids into a bigint-id index as bigint, and refuse lossy id types" in {
+    val c = corpus()
+    def idTypes(dir: String) =
+      tableFiles(dir).map(f => spark.read.parquet(f.getPath).schema("did").dataType).toSet
+    withDir("graft_ivf_types") { dir =>
+      lc.save(build(c.where(col("vec_id") < 60)), dir)
+      lc.appendSaved(spark, dir, c.where(col("vec_id") >= 60)
+        .select(col("vec_id").cast("int").as("vec_id"), col("embedding")))
+      idTypes(dir) shouldBe Set(LongType)
+      lc.rows(lc.load(spark, dir)).count() shouldBe c.count()
+      // float/double ids could merge distinct bigint ids, and a string is
+      // no widening at all: both refuse before a file is written
+      val before = tableFiles(dir).map(_.getPath).toSet
+      for (t <- Seq("double", "float", "string")) {
+        val err = intercept[IllegalArgumentException](lc.appendSaved(spark, dir,
+          c.where(col("vec_id") < 4).select(col("vec_id").cast(t).as("vec_id"), col("embedding"))))
+        err.getMessage should include ("whose ids are BIGINT")
+      }
+      tableFiles(dir).map(_.getPath).toSet shouldBe before
+      // the same holds without a record: the inferred type is the stored one
+      new File(s"$dir/_schema.json").delete() shouldBe true
+      lc.appendSaved(spark, dir, c.where(col("vec_id") < 8)
+        .select((col("vec_id") + 5000L).cast("int").as("vec_id"), col("embedding")))
+      idTypes(dir) shouldBe Set(LongType)
+      lc.rows(lc.load(spark, dir)).where(col("did") >= 5000L).count() shouldBe 8L
+      // an int-id index refuses bigint ids before writing anything
+      val intDir = s"$dir/int_ids"
+      val idx = build(c)
+      lc.save(lc.index(lc.quantizers(idx),
+        lc.rows(idx).withColumn("did", col("did").cast("int"))), intDir)
+      val intBefore = snapshot(intDir)
+      val err = intercept[IllegalArgumentException](
+        lc.appendSaved(spark, intDir, c.where(col("vec_id") < 4)))
+      err.getMessage should include ("ids of type BIGINT")
+      err.getMessage should include ("whose ids are INT")
+      snapshot(intDir) shouldBe intBefore
+    }
+  }
+
+  s"$name load + probe" should "stay within its job ceiling" in {
+    val c = corpus()
+    withDir("graft_ivf_jobs") { dir =>
+      lc.save(build(c), dir)
+      lc.deleteSaved(spark, dir, Seq(5L))
+      val qs = c.where(col("vec_id") < 6)
+      def loadProbe() = probe(lc.load(spark, dir), qs, 3, 2).select("qid", "did").collect()
+      loadProbe() // warm call: plan/codegen caches out of the measurement
+      // load (also appendSaved's first step) = one quantizer scan, known
+      // schemas, no footer inference — was 4;
+      // load + probe adds one query-side collect and the scoring jobs —
+      // was 11 (raw vectors) and 13 (PQ codes)
+      val (_, load) = countJobs(lc.load(spark, dir))
+      load.jobs should be <= 1
+      val (_, both) = countJobs(loadProbe())
+      both.jobs should be <= 7
+    }
+  }
+
+  it should "load an index without a schema record by inference, probing the same rows" in {
+    val c = corpus()
+    withDir("graft_ivf_legacy") { dir =>
+      lc.save(build(c), dir)
+      lc.deleteSaved(spark, dir, Seq(1L, 8L))
+      val qs = c.where(col("vec_id") < 6)
+      def res() = {
+        val loaded = lc.load(spark, dir)
+        (lc.rows(loaded).schema, scoredHits(probe(loaded, qs, 3, 2)))
+      }
+      val (recordedSchema, recorded) = res()
+      new File(s"$dir/_schema.json").delete() shouldBe true
+      val (inferredSchema, inferred) = res()
+      inferredSchema shouldBe recordedSchema
+      inferred shouldBe recorded
+      recorded.map(_._2) should not contain 8L
+      // compaction of a record-less index writes the record again
+      lc.compactSaved(spark, dir)
+      new File(s"$dir/_schema.json").exists() shouldBe true
+      res()._2 shouldBe recorded
+    }
+  }
+
+  s"$name.load" should s"refuse the legacy ${legacyLayout.mkString("+")} layout with the rebuild message, writing no file" in {
+    withDir("graft_ivf_old") { dir =>
+      lc.save(build(corpus()), dir)
+      // the old layout: the quantizers under their old relation names, no quant/
+      val quant = new File(s"$dir/quant").toPath
+      legacyLayout.foreach { rel =>
+        val to = new File(s"$dir/$rel").toPath
+        Files.createDirectory(to)
+        quant.toFile.listFiles().foreach(f => Files.copy(f.toPath, to.resolve(f.getName)))
+      }
+      quant.toFile.listFiles().foreach(_.delete())
+      Files.delete(quant)
+      val before = snapshot(dir)
+      val err = intercept[IllegalStateException](lc.load(spark, dir))
+      err.getMessage should include ("rebuild and re-save the index")
+      intercept[IllegalStateException](
+        lc.appendSaved(spark, dir, corpus().where(col("vec_id") < 4)))
+      snapshot(dir) shouldBe before
+    }
+  }
+}
+
+class AnnIndexSpec extends IvfIndexSpec[AnnIndex.type]("AnnIndex", AnnIndex) {
+  import spark.implicits._
+
+  // four tight clusters around orthogonal axes in R^4
+  protected def corpus(): DataFrame = {
+    val rnd = new scala.util.Random(42)
+    val base = Seq(
+      Seq(1f, 0f, 0f, 0f), Seq(0f, 1f, 0f, 0f),
+      Seq(0f, 0f, 1f, 0f), Seq(0f, 0f, 0f, 1f))
+    (0 until 80).map { i =>
+      val b = base(i % 4)
+      (i.toLong, b.map(x => x + rnd.nextFloat() * 0.05f))
+    }.toDF("vec_id", "embedding")
+  }
+  protected def build(c: DataFrame): AnnIndex.Ivf = AnnIndex.buildIvf(c, nlist = 4, maxIter = 6)
+  protected def probe(idx: AnnIndex.Ivf, qs: DataFrame, k: Int, nprobe: Int): DataFrame =
+    AnnIndex.probe(idx, qs, k = k, nprobe = nprobe)
+  protected def legacyLayout: Seq[String] = Seq("centroids")
+
+  "AnnIndex save/load" should "not let a zero-norm corpus vector (sim NaN) steal top-k slots" in {
+    val withZero = corpus().unionByName(
+      Seq((999L, Seq(0f, 0f, 0f, 0f))).toDF("vec_id", "embedding"))
+    val idx = build(withZero)
+    val hits = AnnIndex.probe(idx, withZero.where(col("vec_id") < 8), k = 3, nprobe = 4)
+      .select("did").collect().map(_.getLong(0))
+    hits should not contain 999L
+  }
+
+  "KMeans train-set cap" should "keep probe recall under sampled training" in {
+    val c = corpus()
+    // trainCap forces the deterministic id-hash sample (~half the corpus);
+    // ASSIGNMENT still covers all 80 vectors — the 100-TB contract: train
+    // on a bounded sample, assign everything
+    val idx = AnnIndex.buildIvf(c, nlist = 4, maxIter = 6, trainCap = 40)
+    idx.assigned.count() shouldBe 80
+    val qs = c.where(col("vec_id") < 8)
+    val got = AnnIndex.probe(idx, qs, k = 3, nprobe = 1)
+      .select("qid", "did").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val brute = Similarity.cosineTopK(c, qs, k = 3)
+      .select("qid", "did").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val recall = got.intersect(brute).size.toDouble / brute.size
+    recall should be >= 0.9
+    // deterministic: an identical second build trains on the same sample
+    val idx2 = AnnIndex.buildIvf(c, nlist = 4, maxIter = 6, trainCap = 40)
+    idx2.centroids.map(_._2) shouldBe idx.centroids.map(_._2)
+  }
+
+  "AnnIndex.probe" should "match brute force on tightly clustered data" in {
+    val c = corpus()
+    val idx = build(c)
+    val qs = c.where(col("vec_id") < 8)
+    val got = AnnIndex.probe(idx, qs, k = 3, nprobe = 1)
+      .select("qid", "did").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val brute = Similarity.cosineTopK(c, qs, k = 3)
+      .select("qid", "did").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    // clusters are well-separated: even nprobe=1 recalls everything
+    got shouldBe brute
+  }
+}
+
+class PqIndexSpec extends IvfIndexSpec[PqIndex.type]("PqIndex", PqIndex) {
+  import spark.implicits._
+
+  // 4 tight 16-dim clusters (id % 4), deterministic wobble
+  protected def corpus(): DataFrame = (0L until 96L).map { id =>
+    val c = (id % 4).toInt
+    val base = Array.tabulate(16)(j => if (j % 4 == c) 10.0f else 1.0f)
+    val wobble = Array.tabulate(16)(j => ((id * 17 + j * 5) % 11).toFloat / 23f)
+    (id, base.zip(wobble).map { case (b, w) => b + w }.toSeq)
+  }.toDF("vec_id", "embedding")
+  protected def build(c: DataFrame): PqIndex.IvfPq =
+    PqIndex.build(c, nlist = 4, m = 4, ksub = 8, maxIter = 5)
+  protected def probe(idx: PqIndex.IvfPq, qs: DataFrame, k: Int, nprobe: Int): DataFrame =
+    PqIndex.probe(idx, qs, k = k, nprobe = nprobe)
+  protected def legacyLayout: Seq[String] = Seq("coarse", "books")
+
+  "PqIndex" should "surface planted near-copies through ADC + rerank" in {
+    val vecs = corpus()
+    val copies = vecs.where(col("vec_id") < 4)
+      .select((col("vec_id") + 1000L).as("vec_id"),
+        transform(col("embedding"), x => x + lit(0.003f)).as("embedding"))
+    val c = vecs.unionByName(copies)
+    val idx = build(c)
+    val qs = vecs.where(col("vec_id") < 4)
+    val got = PqIndex.probe(idx, qs, k = 3, nprobe = 2,
+        rerankWith = Some(c), rerankFactor = 4)
+      .select("qid", "did").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    (0L until 4L).foreach { q =>
+      assert(got.contains((q, q + 1000L)), s"planted copy of $q not found")
+    }
+  }
+}

@@ -6,6 +6,7 @@ import org.scalatest.flatspec.AnyFlatSpec
 import org.scalatest.matchers.should.Matchers
 
 import graft.TestSpark
+import graft.testlib.JobCount.countJobs
 
 /** Model-based quality filter: bounded features, separable end-to-end
   * train→score→filter, and training determinism. */
@@ -85,35 +86,23 @@ class QualitySpec extends AnyFlatSpec with Matchers {
   }
 
   it should "probe the local path in ONE data job (no dedicated count)" in {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val _ = jobs.incrementAndGet()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val model = Quality.train(docs, labels, "doc_id", "text", iters = 20)
-      Thread.sleep(300) // listener bus drains asynchronously
-      val defaultJobs = jobs.get()
-      // the limit-probe collect IS the training collect: the labels-side
-      // broadcast build plus executeTake's incremental partition sweep
-      // (at most two rounds here) — ONE data pass total, where a
-      // dedicated count() added a second full pass
-      defaultJobs should be <= 3
-      // a caller-supplied exact size hint must not add any job either, and
-      // trains the identical model
-      jobs.set(0)
-      val hinted = Quality.train(docs, labels, "doc_id", "text", iters = 20,
-        sizeHint = docs.count())
-      Thread.sleep(300)
-      // the caller's count() plus the hint path's single full collect —
-      // loose bound, the hard claim is the model identity below
-      jobs.get() should be <= (defaultJobs + 2)
-      hinted._1.toSeq shouldBe model._1.toSeq
-      hinted._2 shouldBe model._2
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (model, default) = countJobs(
+      Quality.train(docs, labels, "doc_id", "text", iters = 20))
+    // the limit-probe collect IS the training collect: the labels-side
+    // broadcast build plus executeTake's incremental partition sweep
+    // (at most two rounds here) — ONE data pass total, where a
+    // dedicated count() added a second full pass
+    default.jobs should be <= 3
+    // a caller-supplied exact size hint must not add any job either, and
+    // trains the identical model
+    val (hinted, withHint) = countJobs(
+      Quality.train(docs, labels, "doc_id", "text", iters = 20,
+        sizeHint = docs.count()))
+    // the caller's count() plus the hint path's single full collect —
+    // loose bound, the hard claim is the model identity below
+    withHint.jobs should be <= (default.jobs + 2)
+    hinted._1.toSeq shouldBe model._1.toSeq
+    hinted._2 shouldBe model._2
   }
 
   it should "fall back to distributed GD when the probe exceeds the threshold" in {

@@ -154,10 +154,10 @@ class StateStoreSpec extends AnyFlatSpec with Matchers {
       "k", 16, dir)
     // warm call: plan/codegen caches out of the measurement
     StateStore.upsert(spark, dir, (1L to 30L).map(k => (k, 2.0)).toDF("k", "v"))
-    val (_, jobs) = countJobs {
+    val (_, n) = countJobs {
       StateStore.upsert(spark, dir, (5L to 40L).map(k => (k, 3.0)).toDF("k", "v"))
     }
-    jobs should be <= 6
+    n.jobs should be <= 6
     StateStore.read(spark, dir).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toMap.apply(20L) shouldBe 3.0
   }

@@ -9,23 +9,32 @@ package org.apache.spark {
 package graft.testlib {
 
   import org.apache.spark.GraftTestListenerBus
-  import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+  import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+    SparkListenerStageSubmitted}
   import org.apache.spark.sql.SparkSession
 
-  /** Job-count assertions for specs: one listener helper instead of a
-    * hand-rolled `SparkListener` per spec. */
+  /** Job- and task-count assertions for specs: one listener helper instead
+    * of a hand-rolled `SparkListener` per spec. */
   object JobCount {
 
-    /** Run `body` and return its result with the number of Spark jobs
-      * started while it ran. The bus is drained before the listener is
-      * added (earlier jobs' events never leak in) and again before it is
-      * read (no sleep-and-hope on asynchronous delivery). */
-    def countJobs[A](body: => A)(implicit spark: SparkSession): (A, Int) = {
+    /** What a measured body started: Spark jobs, and the tasks of the
+      * stages it submitted (a partition-pruned read runs fewer). */
+    final case class Counts(jobs: Int, tasks: Int)
+
+    /** Run `body` and return its result with the jobs and tasks started
+      * while it ran. The bus is drained before the listener is added
+      * (earlier jobs' events never leak in) and again before it is read
+      * (no sleep-and-hope on asynchronous delivery). */
+    def countJobs[A](body: => A)(implicit spark: SparkSession): (A, Counts) = {
       val sc = spark.sparkContext
       val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val tasks = new java.util.concurrent.atomic.AtomicInteger
       val l = new SparkListener {
         override def onJobStart(js: SparkListenerJobStart): Unit = {
           jobs.incrementAndGet(); ()
+        }
+        override def onStageSubmitted(ss: SparkListenerStageSubmitted): Unit = {
+          tasks.addAndGet(ss.stageInfo.numTasks); ()
         }
       }
       GraftTestListenerBus.drain(sc)
@@ -33,7 +42,7 @@ package graft.testlib {
       try {
         val out = body
         GraftTestListenerBus.drain(sc)
-        (out, jobs.get())
+        (out, Counts(jobs.get(), tasks.get()))
       } finally sc.removeSparkListener(l)
     }
   }
