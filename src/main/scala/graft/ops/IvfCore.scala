@@ -4,8 +4,6 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.bridge
-import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType,
-  ShortType, StructType}
 
 /** The persisted IVF (inverted-file) index, written once for both payloads
   * ([[AnnIndex]]: raw vectors, [[PqIndex]]: PQ codes): a coarse quantizer
@@ -17,28 +15,31 @@ import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType,
   *    the coarse quantizer at `s = -1`, PQ subquantizer `s` at `s >= 0`;
   *  - the cell-partitioned table (`assigned` or `codes`);
   *  - `deleted` — tombstoned ids, anti-joined away at load;
-  *  - `_schema.json` — the table's schema, written last.
+  *  - `_schema.json` — the index's [[Record]]: its build id and the
+  *    table's schema, published last.
   *
-  * Every read here is ONE planned scan. A `spark.read.parquet(dir)` with no
-  * schema runs a footer-inference job first (≈100 ms of job floor for a
-  * droplet-sized relation), so `quant` and `deleted` are read with the
-  * schemas the code fixes, and the table (whose `did` takes the corpus id's
-  * type) with the schema recorded at save time. Indexes saved without the
-  * record fall back to inference. */
+  * Every read here is at most ONE planned scan, and a load right after a
+  * save costs no Spark job. A `spark.read.parquet(dir)` with no schema runs
+  * a footer-inference job first (≈100 ms of job floor for a droplet-sized
+  * relation), so `deleted` is read with the schema the code fixes and the
+  * table (whose `did` takes the corpus id's type) with the recorded one.
+  * The quantizers never change after a save, so `quant` is scanned only
+  * when the driver does not already hold them for the recorded build:
+  * [[Lifecycle.save]] writes them through to a per-directory cache, and a
+  * re-save by any process publishes a new build that misses it. Indexes
+  * saved without a record fall back to inference and a `quant` scan. */
 private[ops] object IvfCore {
 
   /** Quantizers by subspace: `-1` the coarse quantizer, `s >= 0` the PQ
     * books; each a (cid, centroid) array in cid order. */
   type Quantizers = Map[Int, Array[(Int, Seq[Double])]]
 
-  /** The schema record: a JSON file beside the index relations, written
-    * LAST by a save or compaction (and removed first by a save), so it only
-    * ever describes relations that are fully written. Layout:
-    * `{"version":1,"relations":{"<name>":<Spark StructType JSON>}}`. */
-  private val RecordName = "_schema.json"
-
   private val QuantSchema = "s INT, cid INT, dim INT, x DOUBLE"
   private val DeletedSchema = "did BIGINT"
+
+  /** The quantizers of each directory's last saved or loaded build:
+    * dir → (build id, quantizers), at most one entry per directory. */
+  private val quantCache = new java.util.concurrent.ConcurrentHashMap[String, (String, Quantizers)]()
 
   private def fs(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -55,36 +56,15 @@ private[ops] object IvfCore {
     ()
   }
 
-  /** Publish the record (temp file + rename: a reader never sees it torn). */
-  private def writeRecord(spark: SparkSession, dir: String, name: String,
-      schema: StructType): Unit = {
-    val tmp = new Path(dir, s".$RecordName.tmp")
-    val dst = new Path(dir, RecordName)
-    val f = fs(spark, dst)
-    val out = f.create(tmp, true)
-    try out.write(s"""{"version":1,"relations":{"$name":${schema.json}}}""".getBytes("UTF-8"))
-    finally out.close()
-    f.delete(dst, false)
-    if (!f.rename(tmp, dst))
-      throw new java.io.IOException(s"could not publish the schema record $dst")
-  }
-
-  /** The recorded schema of relation `name`, or None for an index saved
-    * without a record. */
-  private def recordedSchema(spark: SparkSession, dir: String,
-      name: String): Option[StructType] = {
-    val p = new Path(dir, RecordName)
-    val f = fs(spark, p)
-    if (!f.exists(p)) None
+  /** The quantizers of build `build` of the index at `dir`: from the cache
+    * when it holds that build, else one scan of `quant`. */
+  private def quantizersOf(spark: SparkSession, dir: String, build: String): Quantizers = {
+    val hit = quantCache.get(dir)
+    if (hit != null && hit._1 == build) hit._2
     else {
-      val in = f.open(p)
-      val text = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-      import org.json4s._
-      import org.json4s.jackson.JsonMethods.{compact, parse, render}
-      parse(text) \ "relations" \ name match {
-        case JNothing => None
-        case s => Some(DataType.fromJson(compact(render(s))).asInstanceOf[StructType])
-      }
+      val quant = readQuantizers(spark, s"$dir/quant")
+      quantCache.put(dir, (build, quant))
+      quant
     }
   }
 
@@ -109,24 +89,6 @@ private[ops] object IvfCore {
         s -> rs.groupBy(_._2).toArray.sortBy(_._1)
           .map { case (cid, cs) => (cid, cs.sortBy(_._3).map(_._4).toSeq) }
       }
-
-  /** Id types in widening order: a batch id type converts to a stored one
-    * only when it comes earlier here (every such cast is lossless). */
-  private val IdWidening: Seq[DataType] = Seq(ByteType, ShortType, IntegerType, LongType)
-
-  /** The batch `rows` with `did` in the index's stored id type: the same
-    * type passes, an integral widening (e.g. int → bigint) is cast,
-    * anything else fails — one index never holds data files of two id
-    * types, and no cast can merge two distinct ids. */
-  private def conformIds(rows: DataFrame, stored: DataType, dir: String): DataFrame = {
-    val t = rows.schema("did").dataType
-    val (from, to) = (IdWidening.indexOf(t), IdWidening.indexOf(stored))
-    if (t == stored) rows
-    else if (from >= 0 && from < to) rows.withColumn("did", col("did").cast(stored))
-    else throw new IllegalArgumentException(
-      s"cannot append ids of type ${t.sql} to the index at $dir, whose ids " +
-        s"are ${stored.sql}; cast the batch's id column to ${stored.sql}")
-  }
 
   /** The probe's query-side join. `side` has one row per (query, probe
     * cell) — `qid`, `cell` and the query's scoring payload — and is
@@ -168,14 +130,19 @@ private[ops] object IvfCore {
       * vector — to `(did, payload…, cell)`. A per-row projection. */
     protected def encode(quant: Quantizers, rows: DataFrame): DataFrame
 
+    /** `(did, __v, cell)` for `vecs` under `quant`: the cell is the shared
+      * quantizer-probe expression ([[graft.lib.KMeans.nearestCentroids]]),
+      * so trainer, assignment and probe can never drift. */
+    private def cells(quant: Quantizers, vecs: DataFrame,
+        idCol: String, vecCol: String): DataFrame =
+      vecs.select(col(idCol).as("did"), col(vecCol).as("__v"),
+        graft.lib.KMeans.nearestCentroids(quant(-1), col(vecCol), 1)(0).as("cell"))
+
     /** Table rows for `vecs` under `quant`: ONE narrow pass computing the
-      * cell (the shared quantizer-probe expression,
-      * [[graft.lib.KMeans.nearestCentroids]], so trainer, assignment and
-      * probe can never drift) and the payload of each row. */
+      * cell and the payload of each row. */
     protected def assign(quant: Quantizers, vecs: DataFrame,
         idCol: String, vecCol: String): DataFrame =
-      encode(quant, Par.spread(vecs).select(col(idCol).as("did"), col(vecCol).as("__v"),
-        graft.lib.KMeans.nearestCentroids(quant(-1), col(vecCol), 1)(0).as("cell")))
+      encode(quant, cells(quant, Par.spread(vecs), idCol, vecCol))
 
     /** Persist: the quantizers as one `quant` relation, the table
       * PARTITIONED BY CELL (every probe becomes a planning-time
@@ -183,19 +150,25 @@ private[ops] object IvfCore {
       * `dir` are dropped — they describe rows this save replaced. */
     def save(idx: Index, dir: String): Unit = {
       val spark = rows(idx).sparkSession
-      remove(spark, s"$dir/$RecordName")
-      writeQuantizers(spark, quantizers(idx), s"$dir/quant")
+      val quant = quantizers(idx)
+      Record.remove(spark, dir)
+      writeQuantizers(spark, quant, s"$dir/quant")
       // clustered by cell: one file per (cell, writing task) instead of the
       // tasks × cells fan-out, and AQE coalesces tiny relations to a couple
       // of write tasks — faster save AND faster pruned probes later
       rows(idx).repartition(col("cell")).write.mode("overwrite")
         .partitionBy("cell").parquet(s"$dir/$table")
       remove(spark, s"$dir/deleted")
-      writeRecord(spark, dir, table, rows(idx).schema)
+      val rec = Record.fresh(rows(idx).schema)
+      Record.publish(spark, dir, rec)
+      // write-through, in the cid order a `quant` scan decodes
+      quantCache.put(dir, (rec.build, quant.map { case (s, book) => s -> book.sortBy(_._1) }))
     }
 
-    /** Reload a saved index: one scan of `quant`; the table is read with its
-      * recorded schema (inferred for an index saved without one), and
+    /** Reload a saved index: the quantizers of the recorded build (a scan
+      * of `quant` only when the driver does not hold them), the table read
+      * with its recorded schema (an index saved without a record: a `quant`
+      * scan and schema inference), and
       * tombstoned ids ([[deleteSaved]]) are dropped with a broadcast
       * anti-join — the table files themselves are never rewritten. */
     def load(spark: SparkSession, dir: String): Index = {
@@ -204,11 +177,13 @@ private[ops] object IvfCore {
           s"no IVF index at $dir in the current layout (no quant/ relation; " +
             "indexes saved with centroids/ or coarse/+books/ predate it); " +
             "rebuild and re-save the index")
-      val quant = readQuantizers(spark, s"$dir/quant")
-      val t = (recordedSchema(spark, dir, table) match {
-        case Some(s) => spark.read.schema(s).parquet(s"$dir/$table")
-        case None => spark.read.parquet(s"$dir/$table")
-      }).withColumn("cell", col("cell").cast("int"))
+      val (quant, t0) = Record.read(spark, dir) match {
+        case Some(r) =>
+          (quantizersOf(spark, dir, r.build), spark.read.schema(r.schema).parquet(s"$dir/$table"))
+        case None =>
+          (readQuantizers(spark, s"$dir/quant"), spark.read.parquet(s"$dir/$table"))
+      }
+      val t = t0.withColumn("cell", col("cell").cast("int"))
       val live =
         if (exists(spark, s"$dir/deleted"))
           t.join(broadcast(spark.read.schema(DeletedSchema).parquet(s"$dir/deleted")),
@@ -234,9 +209,13 @@ private[ops] object IvfCore {
     def appendSaved(spark: SparkSession, dir: String, newVecs: DataFrame,
         idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
       val idx = load(spark, dir)
-      conformIds(assign(quantizers(idx), newVecs, idCol, vecCol),
-          rows(idx).schema("did").dataType, dir)
-        .repartition(col("cell")) // one appended file per touched cell/task
+      val quant = quantizers(idx)
+      // ONE shuffle: each row moves to its cell's write task (one appended
+      // file per touched cell/task) and is encoded there, in parallel
+      // across the cells — no spreading shuffle ahead of the encode
+      Record.conform(encode(quant, cells(quant, newVecs, idCol, vecCol)
+            .repartition(col("cell"))), "did",
+          rows(idx).schema("did").dataType, "ids", s"the index at $dir")
         .write.mode("append").partitionBy("cell").parquet(s"$dir/$table")
     }
 
@@ -254,15 +233,17 @@ private[ops] object IvfCore {
       * and clear `deleted` — run when the tombstone set has grown enough
       * that the per-probe anti-join (or the dead bytes on disk) is worth
       * reclaiming. One read + one partitioned write of the LIVE rows; the
-      * quantizers are untouched. */
+      * quantizers are untouched, so the record keeps its build. */
     def compactSaved(spark: SparkSession, dir: String): Unit = {
+      val rec = Record.read(spark, dir)
       val live = rows(load(spark, dir))
       // localCheckpoint breaks the read-from/write-to path dependency
       live.localCheckpoint(true).repartition(col("cell"))
         .write.mode("overwrite")
         .partitionBy("cell").parquet(s"$dir/$table")
       remove(spark, s"$dir/deleted")
-      writeRecord(spark, dir, table, live.schema)
+      Record.publish(spark, dir,
+        rec.fold(Record.fresh(live.schema))(_.copy(schema = live.schema)))
     }
 
     /** The probe's front half: each query's scoring columns `side` (`qid`

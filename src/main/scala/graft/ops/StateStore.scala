@@ -1,7 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.bridge
+import org.apache.spark.sql.types.{IntegerType, StructType}
 
 /** Persisted keyed state with IndexedRDD-class point updates.
   *
@@ -14,7 +18,8 @@ import org.apache.spark.sql.functions._
   * half at the RDD tier). This store closes the AT-REST half of the gap:
   * state persists Hive-partitioned by a stable key bucket, and a point
   * update
-  *   1. resolves the delta's bucket set (≤ |delta| ints, driver-side),
+  *   1. resolves the delta's bucket set and keys on the driver (the tiny
+  *      delta is collected once — no job at all for a local one),
   *   2. reads ONLY those bucket partitions — a planning-time
   *      `PartitionFilters` prune, no runtime trick,
   *   3. merges upserts/deletes relationally, and
@@ -27,10 +32,16 @@ import org.apache.spark.sql.functions._
   * Contract: the state relation is UNIQUE per key, and so is each delta
   * (one decision per key per update). Lookups get the same pruning: a
   * point read opens only the buckets that can hold the probed keys.
+  *
+  * On disk, under the store path: `data/bucket=<b>/` and the store's
+  * [[Record]] — key column, `nBuckets`, the data schema and the build id —
+  * published last by [[create]]. Every read and update opens the record
+  * (a file open, no Spark job) and scans with its schema, so a store
+  * re-created under the same path by any process is seen at once.
   */
 object StateStore {
 
-  /** Store metadata, persisted beside the data (one-row parquet). */
+  /** Store metadata, from the store's record. */
   case class Meta(keyCol: String, nBuckets: Int)
 
   /** Stable bucket of a key — engine-portable (first 8 md5 hex chars mod
@@ -39,27 +50,43 @@ object StateStore {
     pmod(conv(substring(md5(key.cast("string")), 1, 8), 16, 10).cast("long"),
       lit(nBuckets.toLong)).cast("int")
 
-  /** The spec hook: executed-plan string of the most recent pruned state
-    * read ([[upsert]] / [[lookup]]) — proves the scan carried a
-    * planning-time partition filter over the touched buckets only. */
-  @volatile private[graft] var lastPrunedPlan: String = ""
+  /** The most recent pruned state read ([[upsert]] / [[lookup]]). */
+  @volatile private var lastPruned: Option[DataFrame] = None
 
-  /** Store meta is IMMUTABLE for a store's lifetime (only [[create]]
-    * replaces it), yet [[upsert]]/[[lookup]] re-read the droplet-sized
-    * meta relation on every call — two jobs (footer + collect) per point
-    * update, the largest fixed cost of a streaming maintenance batch.
-    * Cache per path, written through by [[create]] (r16, guide §2.4).
-    * In-JVM only: a store replaced by ANOTHER process under the same path
-    * is re-read on the next fresh JVM, same as any metastore cache. */
-  private val metaCache = new java.util.concurrent.ConcurrentHashMap[String, Meta]()
+  /** The spec hook: executed-plan string of the most recent pruned state
+    * read — proves the scan carried a planning-time partition filter over
+    * the touched buckets only. Planned when asked, not on every read. */
+  private[graft] def lastPrunedPlan: String =
+    lastPruned.fold("")(_.queryExecution.executedPlan.toString)
+
+  private def fs(spark: SparkSession, p: Path) =
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** The store's record; a store written before the record existed (a
+    * `meta/` relation and no record) is refused. */
+  private def record(spark: SparkSession, path: String): Record =
+    Record.read(spark, path).getOrElse {
+      val legacy = new Path(s"$path/meta")
+      throw new IllegalStateException(
+        if (fs(spark, legacy).exists(legacy))
+          s"the StateStore at $path predates the store record (a meta/ relation " +
+            "and no record); re-create the store with StateStore.create"
+        else s"no StateStore at $path")
+    }
+
+  private def metaOf(r: Record): Meta =
+    Meta(r.params("key_col"), r.params("n_buckets").toInt)
+
+  /** The schema of the data files' scan: the recorded columns + `bucket`. */
+  private def scanSchema(r: Record): StructType = r.schema.add("bucket", IntegerType)
 
   /** Materialize a new store at `path`: data Hive-partitioned by bucket,
-    * plus the meta relation. Overwrites any existing store. */
+    * then the record. Overwrites any existing store. */
   def create(state: DataFrame, keyCol: String, nBuckets: Int, path: String): Unit = {
     require(nBuckets >= 1 && nBuckets <= 65536,
       s"nBuckets must be in [1, 65536]: $nBuckets")
     val spark = state.sparkSession
-    import spark.implicits._
+    Record.remove(spark, path)
     // cluster by bucket before the partitioned write: without it every
     // input task writes a file into EVERY bucket it sees (tasks × buckets
     // files — the small-files explosion that slows every later pruned
@@ -68,52 +95,37 @@ object StateStore {
     state.withColumn("bucket", bucketOf(col(keyCol), nBuckets))
       .repartition(col("bucket"))
       .write.mode("overwrite").partitionBy("bucket").parquet(s"$path/data")
-    Seq((keyCol, nBuckets)).toDF("key_col", "n_buckets")
-      .write.mode("overwrite").parquet(s"$path/meta")
-    metaCache.put(path, Meta(keyCol, nBuckets))
-    ()
+    fs(spark, new Path(path)).delete(new Path(s"$path/meta"), true)
+    Record.publish(spark, path, Record.fresh(state.schema,
+      Map("key_col" -> keyCol, "n_buckets" -> nBuckets.toString)))
   }
 
-  def meta(spark: SparkSession, path: String): Meta = {
-    val cached = metaCache.get(path)
-    if (cached != null) cached
-    else {
-      val r = spark.read.parquet(s"$path/meta").collect().head
-      val m = Meta(r.getString(0), r.getInt(1))
-      metaCache.put(path, m)
-      m
-    }
-  }
+  def meta(spark: SparkSession, path: String): Meta = metaOf(record(spark, path))
 
   /** The full state (no pruning), bucket column dropped. */
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/data").drop("bucket")
+    spark.read.schema(scanSchema(record(spark, path))).parquet(s"$path/data")
+      .drop("bucket")
 
   /** The touched-bucket read: lists and scans ONLY the named bucket
     * directories (basePath keeps `bucket` a partition column), so BOTH
     * the driver-side file listing and the executor-side scan are
     * O(touched), independent of how many buckets the store has grown to —
     * a plain `.where(bucket IN ...)` over the store root would still
-    * prune the SCAN but pay an O(nBuckets) listing first. Returns None
-    * when none of the buckets exist yet (a delta of pure inserts into
-    * virgin buckets). */
-  private def prunedBuckets(spark: SparkSession, path: String,
+    * prune the SCAN but pay an O(nBuckets) listing first. The recorded
+    * schema spares the footer-inference job. Returns None when none of the
+    * buckets exist yet (a delta of pure inserts into virgin buckets). */
+  private def prunedBuckets(spark: SparkSession, path: String, r: Record,
       buckets: Seq[Int]): Option[DataFrame] = {
-    val root = new org.apache.hadoop.fs.Path(s"$path/data")
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val f = fs(spark, new Path(path))
     val dirs = buckets.sorted.map(b => s"$path/data/bucket=$b")
-      .filter(d => fs.exists(new org.apache.hadoop.fs.Path(d)))
+      .filter(d => f.exists(new Path(d)))
     if (dirs.isEmpty) None
     else {
-      // NOTE (r16): supplying the delta's schema here to skip footer
-      // inference breaks type reconciliation — a delta may carry a NARROWER
-      // type than the on-disk state (int delta over a long state column),
-      // which inference + unionByName coercion handle; the inference job
-      // stays (caught by the DriveDemo upsert drive).
-      val pruned = spark.read.option("basePath", s"$path/data")
+      val pruned = spark.read.schema(scanSchema(r)).option("basePath", s"$path/data")
         .parquet(dirs: _*)
         .where(col("bucket").isin(buckets.map(Integer.valueOf): _*))
-      lastPrunedPlan = pruned.queryExecution.executedPlan.toString
+      lastPruned = Some(pruned)
       Some(pruned)
     }
   }
@@ -124,13 +136,14 @@ object StateStore {
     * writer used, so the directory set is exact. */
   def lookup(spark: SparkSession, path: String, keys: Seq[Any]): DataFrame = {
     require(keys.nonEmpty, "lookup needs at least one key")
-    val m = meta(spark, path)
+    val r = record(spark, path)
+    val m = metaOf(r)
     val buckets = keys.map(k => bucketOfLocal(k.toString, m.nBuckets)).distinct
-    prunedBuckets(spark, path, buckets) match {
+    prunedBuckets(spark, path, r, buckets) match {
       case Some(df) =>
         df.where(col(m.keyCol).cast("string").isin(keys.map(_.toString): _*))
           .drop("bucket")
-      case None => read(spark, path).where(lit(false))
+      case None => spark.createDataFrame(java.util.Collections.emptyList[Row](), r.schema)
     }
   }
 
@@ -142,73 +155,79 @@ object StateStore {
     (java.lang.Long.parseLong(hex, 16) % nBuckets).toInt
   }
 
-  /** Point update: apply `delta` (same schema as the state, keyed by the
+  /** Point update: apply `delta` (the state's columns, keyed by the
     * store's key column, plus an optional boolean `deleteCol` marking
     * tombstones) touching only the buckets the delta's keys hash to.
     * Non-tombstone delta rows REPLACE the key's state row (or insert it);
-    * tombstones remove the key. The delta's bucket set is resolved from
-    * the delta itself (tiny by contract — this is the POINT-update path;
-    * bulk rewrites should rebuild with [[create]]). */
+    * tombstones remove the key. Delta columns take the recorded types (an
+    * integral widening is cast, anything else refused before a file is
+    * written). The delta is collected to the driver once (tiny by
+    * contract — this is the POINT-update path; bulk rewrites should rebuild
+    * with [[create]]), and its rows give the touched buckets and the
+    * replaced keys. */
   def upsert(spark: SparkSession, path: String, delta: DataFrame,
       deleteCol: Option[String] = None): Unit = {
-    val m = meta(spark, path)
-    // persist, not an eager localCheckpoint: the bucket-set probe below is
-    // the FIRST action over the delta, so it materializes the cache as a
-    // side effect — the separate materializing job the eager checkpoint
-    // paid per update (one job per micro-batch in the streaming
-    // maintenance paths) is gone; the write job then reads the cached
-    // delta (r16, guide §2.4: two jobs per point update, probe + write)
-    val dd = delta.withColumn("bucket", bucketOf(col(m.keyCol), m.nBuckets))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val buckets = dd.select("bucket").distinct()
-        .collect().map(_.getInt(0)).toSeq
-      if (buckets.isEmpty) return
+    val r = record(spark, path)
+    val m = metaOf(r)
+    val at = s"the store at $path"
+    val extra = delta.columns.toSet -- r.schema.fieldNames -- deleteCol
+    require(extra.isEmpty, s"cannot upsert columns ${extra.mkString(", ")} into $at")
+    val typed = r.schema.fields.foldLeft(delta)((d, f) =>
+      Record.conform(d, f.name, f.dataType, s"`${f.name}` values", at))
+    // ONE collect (no job for a local delta, one scan for a micro-batch):
+    // buckets and keys are read off the rows, and the merged write below
+    // unions a local relation over the same rows — no distinct probe, no
+    // delta cache and no anti-join build
+    val (rows, local) = bridge.collectLocal(typed.select(
+      (r.schema.fieldNames.toSeq.map(col) ++
+        deleteCol.map(c => coalesce(col(c), lit(false)).as(c)) :+
+        bucketOf(col(m.keyCol), m.nBuckets).as("bucket")): _*))
+    if (rows.isEmpty) return
+    val (keyAt, bucketAt) = (r.schema.fieldIndex(m.keyCol), local.schema.fieldIndex("bucket"))
+    require(!rows.exists(_.isNullAt(keyAt)), s"null `${m.keyCol}` in the delta for $at")
+    val buckets = rows.map(_.getInt(bucketAt)).distinct.toSeq
+    val keyType = r.schema(keyAt).dataType
+    val keys = rows.map(_.get(keyAt, keyType)).distinct
+      .map(k => bridge.column(Literal(k, keyType))).toSeq
 
-      val upserts = deleteCol match {
-        case Some(c) => dd.where(!coalesce(col(c), lit(false))).drop(c)
-        case None    => dd
-      }
-      val merged0 = prunedBuckets(spark, path, buckets) match {
-        case Some(pruned) =>
-          pruned.join(dd.select(col(m.keyCol)).distinct(), Seq(m.keyCol), "left_anti")
-            .select(upserts.columns.map(col).toSeq: _*)
-            .unionByName(upserts)
-        case None => upserts // pure inserts into buckets that don't exist yet
-      }
-      // ONE job: the merged touched buckets write to a TEMP dir (reading the
-      // OLD bucket files — no read-your-own-write, so no materializing
-      // checkpoint job), clustered by bucket so each touched bucket gets one
-      // file per write task (store file population stays O(buckets), not
-      // O(buckets × batches)). The driver then swaps the touched bucket
-      // DIRECTORIES in: a touched bucket absent from the temp output had
-      // every key tombstoned and is simply deleted — which retires the
-      // extra "which buckets still have rows" job the previous
-      // dynamic-partition-overwrite design needed. Per-bucket dir swap has
-      // the same non-atomicity across buckets the dynamic overwrite had.
-      val root = s"$path/data"
-      val tmp = s"$path/.upsert_tmp_${java.util.UUID.randomUUID().toString.take(8)}"
-      // the merged write's shape is fully known up front: |touched buckets|
-      // output partitions (explicit — no reliance on AQE coalescing, and no
-      // shuffle.partitions-many empty tasks at production partition counts)
-      // and a build side whose size the delta cache already pins, so AQE's
-      // per-stage re-planning only adds scheduler round-trips here — 6 jobs
-      // for one tiny write, measured by ProfileUpsertJobs (the
-      // KMeans/ML.gd small-identical-query treatment; r16, guide §1.2)
-      val prevAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      try merged0.repartition(buckets.size, col("bucket")).write.mode("overwrite")
-        .partitionBy("bucket").parquet(tmp)
-      finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      buckets.foreach { b =>
-        val src = new org.apache.hadoop.fs.Path(s"$tmp/bucket=$b")
-        val dst = new org.apache.hadoop.fs.Path(s"$root/bucket=$b")
-        if (fs.exists(dst)) fs.delete(dst, true)
-        if (fs.exists(src)) { fs.rename(src, dst); () }
-      }
-      fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-    } finally dd.unpersist(false)
+    val upserts = deleteCol match {
+      case Some(c) => local.where(!col(c)).drop(c)
+      case None    => local
+    }
+    val merged = prunedBuckets(spark, path, r, buckets) match {
+      case Some(pruned) => pruned.where(!col(m.keyCol).isin(keys: _*)).unionByName(upserts)
+      case None => upserts // pure inserts into buckets that don't exist yet
+    }
+    // ONE job: the merged touched buckets write to a TEMP dir (reading the
+    // OLD bucket files — no read-your-own-write, so no materializing
+    // checkpoint job), clustered by bucket so each touched bucket gets one
+    // file per write task (store file population stays O(buckets), not
+    // O(buckets × batches)). The driver then swaps the touched bucket
+    // DIRECTORIES in: a touched bucket absent from the temp output had
+    // every key tombstoned and is simply deleted — which retires the
+    // extra "which buckets still have rows" job the previous
+    // dynamic-partition-overwrite design needed. Per-bucket dir swap has
+    // the same non-atomicity across buckets the dynamic overwrite had.
+    val root = s"$path/data"
+    val tmp = s"$path/.upsert_tmp_${java.util.UUID.randomUUID().toString.take(8)}"
+    // the merged write's shape is fully known up front: |touched buckets|
+    // output partitions (explicit — no reliance on AQE coalescing, and no
+    // shuffle.partitions-many empty tasks at production partition counts),
+    // so AQE's per-stage re-planning only adds scheduler round-trips here
+    // (the KMeans/ML.gd small-identical-query treatment; r16, guide §1.2)
+    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try merged.repartition(buckets.size, col("bucket")).write.mode("overwrite")
+      .partitionBy("bucket").parquet(tmp)
+    finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+    val f = fs(spark, new Path(root))
+    buckets.foreach { b =>
+      val src = new Path(s"$tmp/bucket=$b")
+      val dst = new Path(s"$root/bucket=$b")
+      if (f.exists(dst)) f.delete(dst, true)
+      if (f.exists(src)) { f.rename(src, dst); () }
+    }
+    f.delete(new Path(tmp), true)
+    ()
   }
 }

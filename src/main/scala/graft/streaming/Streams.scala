@@ -525,8 +525,6 @@ object Streams {
     * unique-key delta contract StateStore.upsert itself carries). */
   def streamSignalMaintenance(stream: DataFrame, storePath: String,
       deleteCol: String)(signals: DataFrame => DataFrame): Unit = {
-    // store meta is immutable for the store's lifetime — read it ONCE
-    // before the stream starts instead of one meta-parquet job per batch
     val keyCol = graft.ops.StateStore.meta(stream.sparkSession, storePath).keyCol
     val q = stream.writeStream
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
@@ -534,10 +532,10 @@ object Streams {
         // static relation over this trigger's files, reused by the two
         // branches below (a double scan of a micro-batch is cheaper than
         // the materializing job), and an empty batch short-circuits inside
-        // upsert's bucket probe — per batch the whole maintenance costs
-        // exactly upsert's two jobs: the bucket-set probe (which also
-        // populates the delta cache) and the merged write (r16; the
-        // separate delta-checkpoint job is gone — see StateStore.upsert)
+        // upsert after its one collect — per batch the whole maintenance
+        // costs upsert's two jobs: the collect of the scored batch (its
+        // rows give the touched buckets and replaced keys) and the merged
+        // write (see StateStore.upsert)
         locally {
           val df = batch.toDF()
           val spark = batch.sparkSession

@@ -11,6 +11,10 @@ object bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** Type equality up to nullability (`DataType.sameType`). */
+  def sameType(a: org.apache.spark.sql.types.DataType,
+      b: org.apache.spark.sql.types.DataType): Boolean = a.sameType(b)
+
   /** Eagerly convert a Column to a catalyst Expression. The lazy
     * `ColumnNodeExpression` wrapper `expression` returns holds a
     * non-serializable ColumnNode — fine inside normal planning (the analyzer

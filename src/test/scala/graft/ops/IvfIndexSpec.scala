@@ -1,7 +1,7 @@
 package graft.ops
 
 import java.io.File
-import java.nio.file.{Files, Path => JPath}
+import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -10,6 +10,7 @@ import org.scalatest.flatspec.AnyFlatSpec
 import org.scalatest.matchers.should.Matchers
 
 import graft.TestSpark
+import graft.testlib.Dirs
 import graft.testlib.JobCount.countJobs
 
 /** The persisted IVF index lifecycle ([[IvfCore.Lifecycle]]), run once per
@@ -20,7 +21,8 @@ import graft.testlib.JobCount.countJobs
   * Shared cases: save/load round-trip, planning-time cell pruning, tombstones
   * and compaction, append/extend equality, id widening and refusal, the
   * record-less fallback, re-saving over tombstones, the legacy-layout
-  * refusal and the load/probe job ceilings. */
+  * refusal, the load/probe job ceilings and a build re-published in place
+  * by another process. */
 abstract class IvfIndexSpec[L <: IvfCore.Lifecycle](name: String, val lc: L)
     extends AnyFlatSpec with Matchers {
 
@@ -56,14 +58,6 @@ abstract class IvfIndexSpec[L <: IvfCore.Lifecycle](name: String, val lc: L)
   private def tableFiles(dir: String): Array[File] =
     new File(s"$dir/${lc.table}").listFiles().filter(_.isDirectory)
       .flatMap(_.listFiles().filter(_.getName.endsWith(".parquet")))
-
-  /** Every file under `dir` with its modification time. */
-  private def snapshot(dir: String): Map[String, Long] = {
-    val walk = Files.walk(new File(dir).toPath)
-    try walk.filter(Files.isRegularFile(_)).toArray.map(_.asInstanceOf[JPath])
-      .map(p => p.toString -> p.toFile.lastModified()).toMap
-    finally walk.close()
-  }
 
   s"$name save/load" should "reproduce the in-memory probe exactly" in {
     val c = corpus()
@@ -102,10 +96,10 @@ abstract class IvfIndexSpec[L <: IvfCore.Lifecycle](name: String, val lc: L)
     val idx = build(c)
     withDir("graft_ivf_del") { dir =>
       lc.save(idx, dir)
-      val before = snapshot(s"$dir/${lc.table}")
+      val before = Dirs.snapshot(s"$dir/${lc.table}")
       lc.deleteSaved(spark, dir, Seq(4L, 8L, 12L))
       // the table files are untouched — deletion is an append-only op
-      snapshot(s"$dir/${lc.table}") shouldBe before
+      Dirs.snapshot(s"$dir/${lc.table}") shouldBe before
       val loaded = lc.load(spark, dir)
       lc.rows(loaded).count() shouldBe (c.count() - 3)
       lc.rows(loaded).where(col("did").isin(4L, 8L, 12L)).count() shouldBe 0L
@@ -148,7 +142,9 @@ abstract class IvfIndexSpec[L <: IvfCore.Lifecycle](name: String, val lc: L)
       lc.save(idx, dir)
       def dataFiles() = tableFiles(dir).map(f => f.getPath -> f.lastModified()).toMap
       val before = dataFiles()
-      lc.appendSaved(spark, dir, batch)
+      // one shuffle to the cells' write tasks and the write itself (the
+      // quantizers come from the driver's cache of this build)
+      countJobs(lc.appendSaved(spark, dir, batch))._2.jobs should be <= 2
       // the data files already saved are untouched (same path, same
       // mtime): an append only adds files to the touched cells
       val after = dataFiles()
@@ -196,12 +192,12 @@ abstract class IvfIndexSpec[L <: IvfCore.Lifecycle](name: String, val lc: L)
       val idx = build(c)
       lc.save(lc.index(lc.quantizers(idx),
         lc.rows(idx).withColumn("did", col("did").cast("int"))), intDir)
-      val intBefore = snapshot(intDir)
+      val intBefore = Dirs.snapshot(intDir)
       val err = intercept[IllegalArgumentException](
         lc.appendSaved(spark, intDir, c.where(col("vec_id") < 4)))
       err.getMessage should include ("ids of type BIGINT")
       err.getMessage should include ("whose ids are INT")
-      snapshot(intDir) shouldBe intBefore
+      Dirs.snapshot(intDir) shouldBe intBefore
     }
   }
 
@@ -209,18 +205,41 @@ abstract class IvfIndexSpec[L <: IvfCore.Lifecycle](name: String, val lc: L)
     val c = corpus()
     withDir("graft_ivf_jobs") { dir =>
       lc.save(build(c), dir)
+      // right after a save the driver holds the recorded build's
+      // quantizers, and the table and tombstones are read with known
+      // schemas: a load is file opens and listings, no job — was 1 (the
+      // quantizer scan), and 4 before the schema record
+      countJobs(lc.load(spark, dir))._2.jobs shouldBe 0
       lc.deleteSaved(spark, dir, Seq(5L))
       val qs = c.where(col("vec_id") < 6)
       def loadProbe() = probe(lc.load(spark, dir), qs, 3, 2).select("qid", "did").collect()
       loadProbe() // warm call: plan/codegen caches out of the measurement
-      // load (also appendSaved's first step) = one quantizer scan, known
-      // schemas, no footer inference — was 4;
       // load + probe adds one query-side collect and the scoring jobs —
-      // was 11 (raw vectors) and 13 (PQ codes)
-      val (_, load) = countJobs(lc.load(spark, dir))
-      load.jobs should be <= 1
+      // was 7, and 11 (raw vectors) and 13 (PQ codes) before that
       val (_, both) = countJobs(loadProbe())
-      both.jobs should be <= 7
+      both.jobs should be <= 6
+      // compaction keeps the build, so the quantizers stay held
+      lc.compactSaved(spark, dir)
+      countJobs(lc.load(spark, dir))._2.jobs shouldBe 0
+    }
+  }
+
+  s"$name.load" should "return the quantizers of a build another process re-published in place" in {
+    val c = corpus()
+    val (first, second) = (build(c), build(c.where(col("vec_id") >= 40)))
+    quantSeq(lc.quantizers(second)) should not be quantSeq(lc.quantizers(first))
+    withDir("graft_ivf_rebuilt") { dir =>
+      lc.save(first, dir)
+      quantSeq(lc.quantizers(lc.load(spark, dir))) shouldBe quantSeq(lc.quantizers(first))
+      // another process saves a new build over the index: new quantizers,
+      // table and record, under a new build id
+      withDir("graft_ivf_other") { other =>
+        lc.save(second, other)
+        Dirs.replaceContents(other, dir)
+      }
+      val loaded = lc.load(spark, dir)
+      quantSeq(lc.quantizers(loaded)) shouldBe quantSeq(lc.quantizers(second))
+      lc.rows(loaded).count() shouldBe c.where(col("vec_id") >= 40).count()
     }
   }
 
@@ -259,12 +278,12 @@ abstract class IvfIndexSpec[L <: IvfCore.Lifecycle](name: String, val lc: L)
       }
       quant.toFile.listFiles().foreach(_.delete())
       Files.delete(quant)
-      val before = snapshot(dir)
+      val before = Dirs.snapshot(dir)
       val err = intercept[IllegalStateException](lc.load(spark, dir))
       err.getMessage should include ("rebuild and re-save the index")
       intercept[IllegalStateException](
         lc.appendSaved(spark, dir, corpus().where(col("vec_id") < 4)))
-      snapshot(dir) shouldBe before
+      Dirs.snapshot(dir) shouldBe before
     }
   }
 }

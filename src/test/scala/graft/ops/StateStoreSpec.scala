@@ -4,10 +4,12 @@ import java.io.File
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 import org.scalatest.flatspec.AnyFlatSpec
 import org.scalatest.matchers.should.Matchers
 
 import graft.TestSpark
+import graft.testlib.Dirs
 import graft.testlib.JobCount.countJobs
 
 /** Persisted keyed state: point updates merge correctly AND physically
@@ -141,14 +143,13 @@ class StateStoreSpec extends AnyFlatSpec with Matchers {
     got(40L) shouldBe 0.0
   }
 
-  it should "run a warm point update in at most 6 jobs" in {
-    // r16 job budget per upsert (the per-micro-batch floor of the streaming
-    // maintenance paths): bucket probe (also materializes the delta cache)
-    // + state footer inference (kept — it reconciles delta/state types)
-    // + broadcast build futures + ONE pinned-partitioning write. The meta
-    // re-read (2 jobs), the eager delta checkpoint (1), and AQE's
-    // per-stage jobs are gone — was 11 jobs before r16 (measured:
-    // ProfileUpsertJobs).
+  it should "run a warm point update in at most 1 job" in {
+    // the per-micro-batch floor of the streaming maintenance paths: the
+    // record is a file open, the scan uses its schema (no footer
+    // inference), a local delta is read on the driver without a job, and
+    // its rows give the touched buckets and replaced keys (no bucket
+    // probe, no delta cache, no anti-join build) — what remains is the ONE
+    // pinned-partitioning write. Was 6 jobs, and 11 before that.
     val dir = tmp()
     StateStore.create((1L to 500L).map(k => (k, k * 1.0)).toDF("k", "v"),
       "k", 16, dir)
@@ -157,8 +158,84 @@ class StateStoreSpec extends AnyFlatSpec with Matchers {
     val (_, n) = countJobs {
       StateStore.upsert(spark, dir, (5L to 40L).map(k => (k, 3.0)).toDF("k", "v"))
     }
-    n.jobs should be <= 6
+    n.jobs should be <= 1
     StateStore.read(spark, dir).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toMap.apply(20L) shouldBe 3.0
+  }
+
+  it should "run a warm point lookup in at most 1 job" in {
+    val dir = tmp()
+    StateStore.create((1L to 500L).map(k => (k, k * 2.0)).toDF("k", "v"),
+      "k", 16, dir)
+    StateStore.lookup(spark, dir, Seq(1L, 2L)).collect() // warm call
+    // the record is a file open and the scan carries its schema: the
+    // collect is the only job
+    val (got, n) = countJobs(StateStore.lookup(spark, dir, Seq(7L, 300L)).collect())
+    n.jobs should be <= 1
+    got.map(r => (r.getLong(0), r.getDouble(1))).toSet shouldBe Set((7L, 14.0), (300L, 600.0))
+  }
+
+  it should "see a store re-created by another process under the same path" in {
+    // the same rows at 4 and at 16 buckets; then A's files are replaced by
+    // B's as another process re-creating the store would leave them — the
+    // next lookup must hash by B's 16 buckets, not a remembered 4
+    val (a, b) = (tmp(), tmp())
+    val rows = (1L to 200L).map(k => (k, k * 3.0)).toDF("k", "v")
+    StateStore.create(rows, "k", 4, a)
+    StateStore.lookup(spark, a, Seq(1L)).collect()
+    StateStore.create(rows, "k", 16, b)
+    Dirs.replaceContents(b, a)
+    StateStore.meta(spark, a) shouldBe StateStore.Meta("k", 16)
+    val probed = 1L to 40L
+    StateStore.lookup(spark, a, probed).collect()
+      .map(r => (r.getLong(0), r.getDouble(1))).toSet shouldBe
+      probed.map(k => (k, k * 3.0)).toSet
+  }
+
+  it should "write a narrower-typed pure-insert delta in the stored key type, and refuse a lossy one" in {
+    val dir = tmp()
+    StateStore.create(Seq((1L, 1.0)).toDF("k", "v"), "k", 16, dir)
+    // int keys whose buckets hold no data yet: nothing on disk to merge with
+    val fresh = (2 to 60).filter(k =>
+      StateStore.bucketOfLocal(k.toString, 16) != StateStore.bucketOfLocal("1", 16)).take(5)
+    StateStore.upsert(spark, dir, fresh.map(k => (k, k * 1.0)).toDF("k", "v"))
+    val files = new File(s"$dir/data").listFiles().filter(_.isDirectory)
+      .flatMap(_.listFiles().filter(_.getName.endsWith(".parquet")))
+    files.length should be > 1
+    files.map(f => spark.read.parquet(f.getPath).schema("k").dataType).toSet shouldBe
+      Set(LongType)
+    val expected = (1L, 1.0) +: fresh.map(k => (k.toLong, k * 1.0))
+    StateStore.read(spark, dir).collect()
+      .map(r => (r.getLong(0), r.getDouble(1))).toSet shouldBe expected.toSet
+    StateStore.lookup(spark, dir, fresh.map(_.toLong)).collect()
+      .map(r => (r.getLong(0), r.getDouble(1))).toSet shouldBe expected.tail.toSet
+    // a double key could merge distinct bigint keys: refused, nothing written
+    val before = Dirs.snapshot(dir)
+    val err = intercept[IllegalArgumentException](StateStore.upsert(spark, dir,
+      Seq((500.0, 5.0)).toDF("k", "v")))
+    err.getMessage should include ("whose `k` values are BIGINT")
+    // a null key hashes to no bucket: refused, nothing written
+    intercept[IllegalArgumentException](StateStore.upsert(spark, dir,
+      Seq((Option.empty[Long], 5.0)).toDF("k", "v")))
+    Dirs.snapshot(dir) shouldBe before
+  }
+
+  it should "refuse a store of the meta/-only layout with the re-create message, writing no file" in {
+    val dir = tmp()
+    StateStore.create((1L to 20L).map(k => (k, k * 1.0)).toDF("k", "v"), "k", 4, dir)
+    // the layout before the store record: a one-row meta relation, no record
+    new File(s"$dir/_schema.json").delete() shouldBe true
+    Seq(("k", 4)).toDF("key_col", "n_buckets").write.parquet(s"$dir/meta")
+    val before = Dirs.snapshot(dir)
+    val err = intercept[IllegalStateException](StateStore.upsert(spark, dir,
+      Seq((3L, 9.0)).toDF("k", "v")))
+    err.getMessage should include ("re-create the store")
+    intercept[IllegalStateException](StateStore.lookup(spark, dir, Seq(3L)))
+    intercept[IllegalStateException](StateStore.read(spark, dir))
+    Dirs.snapshot(dir) shouldBe before
+    // re-creating the store replaces the old layout
+    StateStore.create((1L to 20L).map(k => (k, k * 1.0)).toDF("k", "v"), "k", 4, dir)
+    new File(s"$dir/meta").exists() shouldBe false
+    StateStore.lookup(spark, dir, Seq(3L)).collect().map(_.getDouble(1)) shouldBe Array(3.0)
   }
 }

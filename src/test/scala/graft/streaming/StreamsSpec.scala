@@ -335,4 +335,37 @@ class StreamsSpec extends AnyFlatSpec with Matchers {
       .foldLeft(init.toMap) { case (st, (k, m)) => st.updated(k, st.getOrElse(k, 0L) + m) }
     got shouldBe exp
   }
+
+  "streamSignalMaintenance" should "leave the store equal to a plain replay of one-file micro-batches, at 2 jobs each" in {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.col
+    import graft.ops.StateStore
+    import graft.testlib.JobCount.countJobs
+    val base = java.nio.file.Files.createTempDirectory("graft_streamsig").toString
+    def signals(df: DataFrame): DataFrame =
+      df.select(col("doc_id"), org.apache.spark.sql.functions.length(col("text")).cast("long").as("n_chars"))
+    val docs = (1L to 30L).map(d => (d, "x" * d.toInt))
+    StateStore.create(signals(docs.toDF("doc_id", "text")), "doc_id", 8, s"$base/store")
+    val replay = scala.collection.mutable.Map(docs.map { case (d, t) => d -> t.length.toLong }: _*)
+    // edits, drops and new documents; batch 2 edits a doc batch 1 edited,
+    // drops one batch 1 added and re-adds one batch 1 dropped
+    val batches = Seq(
+      Seq((3L, "abc", false), (4L, "", true), (9L, "", true), (40L, "new doc", false)),
+      Seq((3L, "abcdef", false), (40L, "", true), (4L, "back", false), (41L, "y", false)))
+    val jobs = batches.zipWithIndex.map { case (rows, i) =>
+      val src = s"$base/src$i"
+      rows.toDF("doc_id", "text", "del").coalesce(1).write.parquet(src)
+      val stream = spark.readStream.schema("doc_id LONG, text STRING, del BOOLEAN")
+        .option("maxFilesPerTrigger", "1").parquet(src)
+      val (_, n) = countJobs(
+        Streams.streamSignalMaintenance(stream, s"$base/store", "del")(signals))
+      rows.foreach { case (d, t, drop) => if (drop) replay.remove(d) else replay(d) = t.length.toLong }
+      n.jobs
+    }
+    StateStore.read(spark, s"$base/store").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toMap shouldBe replay.toMap
+    // per one-file micro-batch: the collect of the scored batch and the
+    // merged write (the second run is warm)
+    jobs(1) should be <= 2
+  }
 }
