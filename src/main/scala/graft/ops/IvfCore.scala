@@ -39,7 +39,8 @@ private[ops] object IvfCore {
 
   /** The quantizers of each directory's last saved or loaded build:
     * dir → (build id, quantizers), at most one entry per directory. */
-  private val quantCache = new java.util.concurrent.ConcurrentHashMap[String, (String, Quantizers)]()
+  private val quantCache =
+    new java.util.concurrent.ConcurrentHashMap[String, (String, Quantizers)]()
 
   private def fs(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)

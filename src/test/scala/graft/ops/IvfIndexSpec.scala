@@ -224,25 +224,6 @@ abstract class IvfIndexSpec[L <: IvfCore.Lifecycle](name: String, val lc: L)
     }
   }
 
-  s"$name.load" should "return the quantizers of a build another process re-published in place" in {
-    val c = corpus()
-    val (first, second) = (build(c), build(c.where(col("vec_id") >= 40)))
-    quantSeq(lc.quantizers(second)) should not be quantSeq(lc.quantizers(first))
-    withDir("graft_ivf_rebuilt") { dir =>
-      lc.save(first, dir)
-      quantSeq(lc.quantizers(lc.load(spark, dir))) shouldBe quantSeq(lc.quantizers(first))
-      // another process saves a new build over the index: new quantizers,
-      // table and record, under a new build id
-      withDir("graft_ivf_other") { other =>
-        lc.save(second, other)
-        Dirs.replaceContents(other, dir)
-      }
-      val loaded = lc.load(spark, dir)
-      quantSeq(lc.quantizers(loaded)) shouldBe quantSeq(lc.quantizers(second))
-      lc.rows(loaded).count() shouldBe c.where(col("vec_id") >= 40).count()
-    }
-  }
-
   it should "load an index without a schema record by inference, probing the same rows" in {
     val c = corpus()
     withDir("graft_ivf_legacy") { dir =>
@@ -263,6 +244,25 @@ abstract class IvfIndexSpec[L <: IvfCore.Lifecycle](name: String, val lc: L)
       lc.compactSaved(spark, dir)
       new File(s"$dir/_schema.json").exists() shouldBe true
       res()._2 shouldBe recorded
+    }
+  }
+
+  s"$name.load" should "return the quantizers of a build another process re-published in place" in {
+    val c = corpus()
+    val (first, second) = (build(c), build(c.where(col("vec_id") >= 40)))
+    quantSeq(lc.quantizers(second)) should not be quantSeq(lc.quantizers(first))
+    withDir("graft_ivf_rebuilt") { dir =>
+      lc.save(first, dir)
+      quantSeq(lc.quantizers(lc.load(spark, dir))) shouldBe quantSeq(lc.quantizers(first))
+      // another process saves a new build over the index: new quantizers,
+      // table and record, under a new build id
+      withDir("graft_ivf_other") { other =>
+        lc.save(second, other)
+        Dirs.replaceContents(other, dir)
+      }
+      val loaded = lc.load(spark, dir)
+      quantSeq(lc.quantizers(loaded)) shouldBe quantSeq(lc.quantizers(second))
+      lc.rows(loaded).count() shouldBe c.where(col("vec_id") >= 40).count()
     }
   }
 

@@ -242,7 +242,7 @@ class StreamsSpec extends AnyFlatSpec with Matchers {
     val in = java.nio.file.Files.createTempDirectory("graft_eo_in").toString
     val out = java.nio.file.Files.createTempDirectory("graft_eo_out").toString
     val cp = java.nio.file.Files.createTempDirectory("graft_eo_cp").toString
-    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.functions.{col, length => strLength}
     // drop FLAT files into the watched dir (a nested df.write directory
     // would hide the part files from the file-stream source's glob)
     def drop(name: String, rows: Seq[(Long, String)]): Unit = {
@@ -338,12 +338,12 @@ class StreamsSpec extends AnyFlatSpec with Matchers {
 
   "streamSignalMaintenance" should "leave the store equal to a plain replay of one-file micro-batches, at 2 jobs each" in {
     import org.apache.spark.sql.DataFrame
-    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.functions.{col, length => strLength}
     import graft.ops.StateStore
     import graft.testlib.JobCount.countJobs
     val base = java.nio.file.Files.createTempDirectory("graft_streamsig").toString
     def signals(df: DataFrame): DataFrame =
-      df.select(col("doc_id"), org.apache.spark.sql.functions.length(col("text")).cast("long").as("n_chars"))
+      df.select(col("doc_id"), strLength(col("text")).cast("long").as("n_chars"))
     val docs = (1L to 30L).map(d => (d, "x" * d.toInt))
     StateStore.create(signals(docs.toDF("doc_id", "text")), "doc_id", 8, s"$base/store")
     val replay = scala.collection.mutable.Map(docs.map { case (d, t) => d -> t.length.toLong }: _*)
@@ -359,7 +359,8 @@ class StreamsSpec extends AnyFlatSpec with Matchers {
         .option("maxFilesPerTrigger", "1").parquet(src)
       val (_, n) = countJobs(
         Streams.streamSignalMaintenance(stream, s"$base/store", "del")(signals))
-      rows.foreach { case (d, t, drop) => if (drop) replay.remove(d) else replay(d) = t.length.toLong }
+      rows.foreach { case (d, t, drop) =>
+        if (drop) replay.remove(d) else replay(d) = t.length.toLong }
       n.jobs
     }
     StateStore.read(spark, s"$base/store").collect()
