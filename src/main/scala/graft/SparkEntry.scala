@@ -35,8 +35,34 @@ case class LineQtyRow(l_orderkey: Long, l_quantity: Double)
   */
 object SparkEntry {
 
-  private def tbl(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+  /** Per session and table path: the (name, length, mtime) of every file a
+    * listing found, and the schema a read of exactly those files inferred. */
+  private val schemas = new java.util.WeakHashMap[SparkSession,
+    java.util.Map[String, (Seq[(String, Long, Long)], org.apache.spark.sql.types.StructType)]]
+
+  /** Read one table, inferring its schema once per session and file set:
+    * a warm read lists the directory (one FS call, no job) and, when the
+    * listing equals the one the memo was inferred from, reads with the
+    * memoized schema instead of running a footer-inference job. A changed
+    * listing or one holding a sub-directory (partitioned layout) reads as
+    * a plain `parquet` call. */
+  private[graft] def tbl(s: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val files = scala.util.Try {
+      val p = new org.apache.hadoop.fs.Path(path)
+      p.getFileSystem(s.sparkContext.hadoopConfiguration).listStatus(p).toSeq
+    }.toOption.filterNot(_.exists(_.isDirectory))
+      .map(_.map(f => (f.getPath.getName, f.getLen, f.getModificationTime)).sortBy(_._1))
+    val memo = schemas.synchronized(schemas.computeIfAbsent(s,
+      _ => new java.util.concurrent.ConcurrentHashMap()))
+    Option(memo.get(path)).filter(m => files.contains(m._1)) match {
+      case Some((_, schema)) => s.read.schema(schema).parquet(path)
+      case None =>
+        val df = s.read.parquet(path)
+        files.foreach(f => memo.put(path, (f, df.schema)))
+        df
+    }
+  }
 
   /** One BOUNDED per-(sf dir, tag, live JVM) staging base — same shape and
     * dead-JVM reaping as [[gateWorkspace]] but NOT cleared on re-entry:

@@ -208,7 +208,10 @@ object Unigram {
       .write.mode("overwrite").parquet(s"$dir/pieces")
   }
 
+  /** The saved schema is fixed, so the read skips footer inference, and
+    * the pieces are ordered on the driver: one scan, no sort job. */
   def load(spark: SparkSession, dir: String): Model =
-    Model(spark.read.parquet(s"$dir/pieces").orderBy("id")
-      .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSeq)
+    Model(spark.read.schema("piece STRING, id INT, logp_micros BIGINT")
+      .parquet(s"$dir/pieces").collect()
+      .map(r => (r.getString(0), r.getInt(1), r.getLong(2))).sortBy(_._2).toSeq)
 }

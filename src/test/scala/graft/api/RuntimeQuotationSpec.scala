@@ -7,7 +7,7 @@ import org.scalatest.matchers.should.Matchers
 import graft.TestSpark
 
 /** Runtime quotation: a pipeline assembled as SOURCE TEXT compiles in-JVM
-  * (toolbox), the comprehension macro expands during that compilation, and
+  * (nsc), the comprehension macro expands during that compilation, and
   * the resulting closure runs on the live session with the same plan and
   * values as build-time-compiled code. */
 class RuntimeQuotationSpec extends AnyFlatSpec with Matchers {
@@ -176,7 +176,8 @@ class RuntimeQuotationSpec extends AnyFlatSpec with Matchers {
   }
 
   it should "skip the compiler on identical re-submission (source-hash cache)" in {
-    val src = "(n: Long) => n + " + System.nanoTime() + "L" // unique source
+    val tag = System.nanoTime()
+    val src = s"(n$tag: Long) => n$tag + 40L" // unique shape
     val before = RuntimeQuotation.compilations.get()
     val f1 = RuntimeQuotation.compile[Long => Long](src)
     RuntimeQuotation.compilations.get() shouldBe (before + 1)
@@ -188,9 +189,141 @@ class RuntimeQuotationSpec extends AnyFlatSpec with Matchers {
     RuntimeQuotation.compilations.get() shouldBe (before + 1)
     hitMs should be < 500.0
     f1(1L) shouldBe f2(1L)
-    // distinct source is a distinct cache entry
-    RuntimeQuotation.compile[Long]("41L + 1L") shouldBe 42L
+    // a literal-only edit reuses the compiled shape with the edited value
+    RuntimeQuotation.compile[Long => Long](s"(n$tag: Long) => n$tag + 41L").apply(1L) shouldBe 42L
+    RuntimeQuotation.compilations.get() shouldBe (before + 1)
+    // a structural edit is a distinct cache entry: exactly one compile
+    RuntimeQuotation.compile[Long => Long](s"(n$tag: Long) => n$tag - 41L").apply(1L) shouldBe -40L
     RuntimeQuotation.compilations.get() shouldBe (before + 2)
+  }
+
+  it should "lift negative and MinValue literals as one literal each" in {
+    val tag = System.nanoTime()
+    def prog(a: String, b: String, c: Int, d: Int) =
+      s"($a, $b, Int.MinValue + $c, - $d, Long.MinValue) // neg $tag"
+    val before = RuntimeQuotation.compilations.get()
+    RuntimeQuotation.compile[(Int, Long, Int, Int, Long)](
+      prog("-2147483648", "-9223372036854775808L", 1, 5)) shouldBe
+      ((Int.MinValue, Long.MinValue, Int.MinValue + 1, -5, Long.MinValue))
+    RuntimeQuotation.compile[(Int, Long, Int, Int, Long)](prog("-5", "-7L", 2, 6)) shouldBe
+      ((-5, -7L, Int.MinValue + 2, -6, Long.MinValue))
+    RuntimeQuotation.compile[(Int, Long, Int, Int, Long)](
+      prog("2147483647", "9223372036854775807L", 3, 9)) shouldBe
+      ((Int.MaxValue, Long.MaxValue, Int.MinValue + 3, -9, Long.MinValue))
+    RuntimeQuotation.compilations.get() shouldBe (before + 1)
+  }
+
+  it should "leave literals in case patterns and final val right-hand sides in the text" in {
+    val tag = System.nanoTime()
+    // `b: Byte = Lim` type-checks only while Lim stays a constant, and a
+    // lifted pattern literal would become a variable pattern
+    def prog(k: Int, pat: Int, lim: Int) = s"""{
+      object K { final val Lim = $lim; val b: Byte = Lim }
+      Seq(1, 2, 3, $k).map { case $pat => -1; case K.Lim => -2; case x => x * 10 + K.b }
+    } // patterns $tag"""
+    def exp(k: Int, pat: Int, lim: Int) = Seq(1, 2, 3, k).map { x =>
+      if (x == pat) -1 else if (x == lim) -2 else x * 10 + lim
+    }
+    val before = RuntimeQuotation.compilations.get()
+    RuntimeQuotation.compile[Seq[Int]](prog(7, 3, 2)) shouldBe exp(7, 3, 2)
+    RuntimeQuotation.compilations.get() shouldBe (before + 1)
+    RuntimeQuotation.compile[Seq[Int]](prog(8, 3, 2)) shouldBe exp(8, 3, 2)
+    RuntimeQuotation.compilations.get() shouldBe (before + 1)
+    RuntimeQuotation.compile[Seq[Int]](prog(8, 1, 2)) shouldBe exp(8, 1, 2)
+    RuntimeQuotation.compilations.get() shouldBe (before + 2)
+    RuntimeQuotation.compile[Seq[Int]](prog(8, 1, 3)) shouldBe exp(8, 1, 3)
+    RuntimeQuotation.compilations.get() shouldBe (before + 3)
+  }
+
+  it should "compile a shape that needs its literal constant verbatim" in {
+    val tag = System.nanoTime()
+    def prog(v: Int) = s"{ val b: Byte = $v; b + 1 } // narrowing $tag"
+    val before = RuntimeQuotation.compilations.get()
+    // the lifted shape fails (an Int local does not narrow to Byte), so
+    // the verbatim text compiles
+    RuntimeQuotation.compile[Int](prog(3)) shouldBe 4
+    RuntimeQuotation.compilations.get() shouldBe (before + 2)
+    // recorded as not liftable: a literal edit compiles verbatim once
+    RuntimeQuotation.compile[Int](prog(5)) shouldBe 6
+    RuntimeQuotation.compilations.get() shouldBe (before + 3)
+    RuntimeQuotation.compile[Int](prog(5)) shouldBe 6
+    RuntimeQuotation.compilations.get() shouldBe (before + 3)
+  }
+
+  it should "stay usable after a compile error" in {
+    val tag = System.nanoTime()
+    val typeErr = intercept[RuntimeQuotationError] {
+      RuntimeQuotation.compile[Int](s"""{ val x: Int = "no"; x } // $tag""")
+    }
+    typeErr.getMessage should include("type mismatch")
+    intercept[RuntimeQuotationError] {
+      RuntimeQuotation.compile[Int](s"((( // $tag")
+    }
+    RuntimeQuotation.compile[Int](s"{ val x: Int = 6; x * 7 } // $tag") shouldBe 42
+  }
+
+  it should "run five literal edits of a join-filter program from one compile" in {
+    val tag = System.nanoTime()
+    def prog(t: Int) = s"""
+      (s0: org.apache.spark.sql.SparkSession) => {
+        implicit val spark: org.apache.spark.sql.SparkSession = s0
+        import spark.implicits._
+        import graft.api._
+        import graft.api.comprehensions.onSpark
+        // join-filter $tag
+        val orders = DataBag((1L to 60L).map(i => graft.OrderRow(i, i % 9L, i * 10.5)))
+        val custs = DataBag((0L to 8L).map(c => graft.CustRow(c, "c" + c, c * 100.0)))
+        onSpark {
+          for {
+            o <- orders
+            cu <- custs
+            if o.o_custkey == cu.c_custkey
+            if cu.c_acctbal > $t.0
+          } yield (o.o_orderkey, cu.c_name, math.floor(o.o_totalprice * 100.0).toLong)
+        }.ds.toDF("k", "n", "p")
+      }"""
+    // expression and plan ids, lambda class numbers and object addresses differ
+    // per submission; the literal itself is the only other difference
+    def norm(plan: String, t: Int) = plan.replaceAll("#\\d+", "#")
+      .replaceAll("Lambda\\$\\d+", "Lambda").replaceAll("plan_id=\\d+", "plan_id").replaceAll("@[0-9a-f]+|0x[0-9a-f]+", "@")
+      .replace(s"$t.0", "T")
+    val before = RuntimeQuotation.compilations.get()
+    val plans = Seq(150, 250, 350, 450, 550).map { t =>
+      val out = RuntimeQuotation.compile[SparkSession => DataFrame](prog(t)).apply(spark)
+      val got = out.collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).sorted
+      val exp = (for {
+        i <- 1L to 60L; c <- 0L to 8L
+        if i % 9L == c && c * 100.0 > t
+      } yield (i, "c" + c, math.floor(i * 10.5 * 100.0).toLong)).sorted
+      got shouldBe exp.toArray
+      norm(out.queryExecution.executedPlan.toString, t)
+    }
+    RuntimeQuotation.compilations.get() shouldBe (before + 1)
+    plans.distinct should have size 1
+    plans.head should not include regex("(?i)cartesian")
+  }
+
+  it should "remove its class directory when the JVM exits" in {
+    import scala.jdk.CollectionConverters._
+    val tmp = java.nio.file.Files.createTempDirectory("graft_rtq_exit")
+    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.asScala.filterNot(a => a.startsWith("-Xmx") ||
+        a.startsWith("-Djava.io.tmpdir") || a.startsWith("-agentlib"))
+    val cmd = Seq(s"${System.getProperty("java.home")}/bin/java") ++ jvmArgs ++
+      Seq("-Xmx768m", s"-Djava.io.tmpdir=$tmp", "-cp", System.getProperty("java.class.path"),
+        "graft.api.RuntimeQuotationExitProbe")
+    val proc = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
+    val out = scala.io.Source.fromInputStream(proc.getInputStream).getLines().toList
+    proc.waitFor() shouldBe 0
+    out should contain("42")
+    val jar = java.nio.file.Paths.get(out.find(_.endsWith(".jar")).get)
+    jar.startsWith(tmp) shouldBe true
+    java.nio.file.Files.exists(jar.getParent.getParent) shouldBe false
+    val left = java.nio.file.Files.list(tmp)
+    try left.iterator.asScala.map(_.getFileName.toString)
+      .filter(_.startsWith("graft_rtq_classes")).toList shouldBe empty
+    finally left.close()
+    graft.BenchMode.deleteRecursively(tmp)
   }
 
   it should "consume cross-file @lib defs (incl. GENERIC) from runtime-submitted source" in {
@@ -258,5 +391,17 @@ class RuntimeQuotationSpec extends AnyFlatSpec with Matchers {
       RuntimeQuotation.compile[SparkSession => DataFrame](bad)
     }
     e.getMessage should include("depends on an earlier generator variable")
+  }
+}
+
+/** Quotes one snippet on a fresh session, prints the result and the jar it
+  * shipped, and exits — the JVM whose exit the class-dir spec watches. */
+object RuntimeQuotationExitProbe {
+  def main(args: Array[String]): Unit = {
+    val spark = SparkSession.builder().master("local[1]")
+      .config("spark.ui.enabled", "false").getOrCreate()
+    println(RuntimeQuotation.compile[Long]("40L + 2L")(spark))
+    println(RuntimeQuotation.lastJar.get)
+    spark.stop()
   }
 }

@@ -5,6 +5,7 @@ import org.scalatest.flatspec.AnyFlatSpec
 import org.scalatest.matchers.should.Matchers
 
 import graft.TestSpark
+import graft.testlib.JobCount.countJobs
 
 /** Unigram-LM tokenizer: Viterbi optimality against brute-force
   * enumeration, roundtrip/coverage, frequent-word compression, and
@@ -93,7 +94,11 @@ class UnigramSpec extends AnyFlatSpec with Matchers {
     val dir = java.nio.file.Files.createTempDirectory("graft_unigram").toString
     try {
       Unigram.save(spark, dir, model)
-      Unigram.load(spark, dir).pieces shouldBe model.pieces
+      // fixed schema + driver-side ordering: one scan (was footer
+      // inference plus a distributed sort)
+      val (loaded, n) = countJobs(Unigram.load(spark, dir))
+      loaded.pieces shouldBe model.pieces
+      n.jobs should be <= 1
     } finally {
       val p = new org.apache.hadoop.fs.Path(dir)
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)

@@ -1,0 +1,81 @@
+#!/usr/bin/env bash
+# A/B the benchmark of this checkout against another commit.
+#
+#   tools/perfbench_ab.sh <ref> <workload> <seed>...
+#
+# Exports <ref> with `git archive` into a temp dir and runs
+# `perfbench/run.py` on it and on this checkout, one pair per seed, in
+# alternating order (ref first on odd pairs, this checkout first on even
+# ones), with the run length BENCHMARK.json sets. Then prints, per
+# end-to-end metric, each side's median and quartiles, the parent's IQR
+# (distance between its quartiles), the median ratio and the number of
+# pairs the change won (ties count for neither side), and the failed calls
+# per run. A gain holds when the change wins at least 9 of 10 pairs and
+# the medians differ by more than the parent's IQR.
+#
+# Every run's JSON line is kept in $AB_OUT (default: a file in the temp
+# dir, printed at the end and removed with it unless AB_OUT is set).
+set -euo pipefail
+cd "$(dirname "$0")/.."
+REF="${1:?usage: tools/perfbench_ab.sh <ref> <workload> <seed>...}"
+WL="${2:?usage: tools/perfbench_ab.sh <ref> <workload> <seed>...}"
+shift 2
+[ $# -gt 0 ] || { echo "perfbench_ab: give at least one seed" >&2; exit 2; }
+RUN_S=$(python3 -c 'import json; print(json.load(open("BENCHMARK.json"))["run_seconds"])')
+BASE=$(mktemp -d "${TMPDIR:-/tmp}/perfbench_ab.XXXXXX")
+trap 'rm -rf "$BASE"' EXIT
+git archive "$REF" | tar -x -C "$BASE"
+OUT="${AB_OUT:-$BASE/runs.jsonl}"
+: > "$OUT"
+
+pair=0
+for seed in "$@"; do
+  pair=$((pair + 1))
+  if (( pair % 2 == 1 )); then order="ref cur"; else order="cur ref"; fi
+  for side in $order; do
+    if [ "$side" = ref ]; then dir="$BASE"; else dir="$(pwd)"; fi
+    line=$(cd "$dir" && python3 perfbench/run.py --workload "$WL" --seed "$seed" \
+      --seconds "$RUN_S" --trace 0 | tail -n 1)
+    echo "{\"side\": \"$side\", \"seed\": $seed, \"run\": $line}" >> "$OUT"
+    echo "[ab] pair $pair seed $seed $side done" >&2
+  done
+done
+
+python3 - "$OUT" "$REF" "$WL" <<'EOF'
+import json, statistics, sys
+
+path, ref, wl = sys.argv[1:]
+runs = [json.loads(l) for l in open(path) if l.strip()]
+bench = json.load(open("BENCHMARK.json"))
+seeds = sorted({r["seed"] for r in runs})
+by = {(r["side"], r["seed"]): r["run"] for r in runs}
+
+
+def quartiles(xs):
+    if len(xs) < 2:
+        return xs[0], xs[0], xs[0]
+    q1, q2, q3 = statistics.quantiles(xs, n=4, method="inclusive")
+    return q1, q2, q3
+
+
+print(f"workload {wl}: {ref} (parent) vs this checkout, {len(seeds)} pairs, seeds {seeds}")
+for m in bench["end_to_end"]:
+    name, lower = m["name"], m["better"] == "lower"
+    pairs = [(by[("ref", s)]["metrics"][name]["value"], by[("cur", s)]["metrics"][name]["value"])
+             for s in seeds if ("ref", s) in by and ("cur", s) in by]
+    if not pairs:
+        continue
+    a = [p for p, _ in pairs]
+    b = [c for _, c in pairs]
+    qa, qb = quartiles(a), quartiles(b)
+    wins = sum(1 for p, c in pairs if (c < p if lower else c > p))
+    gap = abs(qa[1] - qb[1])
+    iqr = qa[2] - qa[0]
+    print(f"  {name:20s} parent {qa[1]:10.2f} ({qa[0]:.2f}-{qa[2]:.2f})  "
+          f"change {qb[1]:10.2f} ({qb[0]:.2f}-{qb[2]:.2f})  "
+          f"parent/change {qa[1] / qb[1] if qb[1] else float('nan'):.3f}  "
+          f"wins {wins}/{len(pairs)}  gap {gap:.2f} {'>' if gap > iqr else '<='} parent IQR {iqr:.2f}")
+failed = {side: [by[(side, s)]["failed"] for s in seeds if (side, s) in by] for side in ("ref", "cur")}
+print(f"  failed per run: parent {failed['ref']}  change {failed['cur']}")
+EOF
+[ -n "${AB_OUT:-}" ] || cat "$OUT"
