@@ -64,9 +64,9 @@ object SparkEntry {
     }
   }
 
-  /** One BOUNDED per-(sf dir, tag, live JVM) staging base — same shape and
-    * dead-JVM reaping as [[gateWorkspace]] but NOT cleared on re-entry:
-    * gates stage IMMUTABLE derived source files once per JVM behind `_done`
+  /** One BOUNDED per-(sf dir, tag, live JVM) staging base — subdirs of
+    * DEAD JVMs are reaped here, so the population stays bounded by the
+    * number of live graft JVMs — NOT cleared on re-entry: gates stage IMMUTABLE derived source files once per JVM behind `_done`
     * markers inside it (streaming inputs replayed by every rep). This
     * replaces the former cross-boot `_done` markers keyed on the source
     * table's (size, mtime) (VERDICT r15 item 5): nothing is reused across
@@ -84,29 +84,22 @@ object SparkEntry {
     p
   }
 
-  /** One BOUNDED workspace per (sf dir, gate tag, live JVM), cleared at
-    * entry: a gate leaves at most one copy of its artifacts per sf per
-    * LIVE JVM instead of one per execution (per-execution temp dirs
-    * accumulated thousands across rounds). The per-JVM subdir keeps two
-    * concurrently running JVMs (bench + correctness) from racing one
-    * JVM's entry-time clear against the other's lazy reads; subdirs of
-    * DEAD JVMs are reaped here, so the population stays bounded by the
-    * number of live graft JVMs. Clearing THIS JVM's previous artifacts is
-    * safe — the driver consumes each gate's result before invoking the
-    * next execution. */
+  /** One BOUNDED workspace per (sf dir, gate tag, live JVM): the
+    * [[jvmStageBase]], cleared at entry. A gate leaves at most one copy of
+    * its artifacts per sf per LIVE JVM instead of one per execution
+    * (per-execution temp dirs accumulated thousands across rounds). The
+    * per-JVM subdir keeps two concurrently running JVMs (bench +
+    * correctness) from racing one JVM's entry-time clear against the
+    * other's lazy reads. Clearing THIS JVM's previous artifacts is safe —
+    * the driver consumes each gate's result before invoking the next
+    * execution. Persisted-artifact scratch follows the session scratch
+    * placement (BenchMode.scratchDir: tmpfs default, SPARK_GRAFT_LOCAL_DIR
+    * override) — still a real filesystem, so every save→load/append/delete
+    * contract is exercised unchanged. */
   private def gateWorkspace(d: String, tag: String): String = {
-    import java.nio.file.{Files, Paths}
-    // persisted-artifact scratch follows the session scratch placement
-    // (BenchMode.scratchDir: tmpfs default, SPARK_GRAFT_LOCAL_DIR override)
-    // — still a real filesystem, so every save→load/append/delete contract
-    // is exercised unchanged; r15, guide §6
-    val base = Paths.get(BenchMode.scratchDir,
-      s"graft_${tag}_${Integer.toHexString(d.hashCode)}")
-    Files.createDirectories(base)
-    BenchMode.reapDeadJvms(base)
-    val p = base.resolve(s"jvm${ProcessHandle.current().pid()}")
+    val p = jvmStageBase(d, tag)
     BenchMode.deleteRecursively(p)
-    Files.createDirectories(p)
+    java.nio.file.Files.createDirectories(p)
     p.toString
   }
 

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Distributed BPE (byte-pair-encoding) vocabulary training.
@@ -429,32 +429,36 @@ object Bpe {
       .toDF("doc_id", "pos", "ids")
   }
 
-  /** Persist a trained tokenizer: the ordered merge table and the id
-    * vocabulary, as two plain parquet relations — the artifact a training
-    * run ships alongside its data (rank order and ids are explicit columns,
-    * so the load is layout-independent). */
+  /** The one relation of a saved tokenizer: merges `(true, rank, l, r)`
+    * and vocabulary `(false, id, token, null)`. */
+  private val TokenizerSchema =
+    org.apache.spark.sql.types.StructType.fromDDL("merge BOOLEAN, i INT, a STRING, b STRING")
+
+  /** Persist a trained tokenizer as a new [[Record]] build under `dir`:
+    * ONE relation, `tokenizer`, in one write job (rank order and ids are
+    * explicit columns, so the load is layout-independent); the previous
+    * build is reaped after the record is published, so a failed save
+    * leaves it readable. One writer per directory at a time. */
   def saveTokenizer(spark: org.apache.spark.sql.SparkSession, dir: String,
       mergeList: Seq[(String, String)], vocabulary: Seq[(String, Int)]): Unit = {
-    import spark.implicits._
-    mergeList.zipWithIndex.map { case ((l, r), i) => (i, l, r) }
-      .toDF("rank", "l", "r").write.mode("overwrite").parquet(s"$dir/merges")
-    vocabulary.toDF("token", "id")
-      .write.mode("overwrite").parquet(s"$dir/vocab")
+    val rows = mergeList.zipWithIndex.map { case ((l, r), i) => Row(true, i, l, r) } ++
+      vocabulary.map { case (t, id) => Row(false, id, t, null) }
+    Record.commit(spark, dir, TokenizerSchema) { build =>
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), TokenizerSchema)
+        .coalesce(1) // droplet-sized relation: one file, one commit
+        .write.parquet(s"$build/tokenizer")
+    }
+    ()
   }
 
   /** Reload a saved tokenizer: `(mergeList in rank order, vocabulary in id
-    * order)` — encode/decode with the loaded pair is bit-identical to the
-    * fresh one. Both relations' schemas are fixed by [[saveTokenizer]], so
-    * they are read with them (no footer-inference job) in ONE union scan,
-    * and the few thousand rows are ordered on the driver, not by a
-    * distributed sort. */
+    * order)`, bit-identical to the saved pair. ONE scan with the recorded
+    * schema; the rows are ordered on the driver, not by a distributed sort. */
   def loadTokenizer(spark: org.apache.spark.sql.SparkSession, dir: String)
       : (Seq[(String, String)], Seq[(String, Int)]) = {
-    val ms = spark.read.schema("rank INT, l STRING, r STRING").parquet(s"$dir/merges")
-      .select(lit(true), col("rank"), col("l"), col("r"))
-    val voc = spark.read.schema("token STRING, id INT").parquet(s"$dir/vocab")
-      .select(lit(false), col("id"), col("token"), lit(null).cast("string"))
-    val (mrows, vrows) = ms.union(voc).collect().partition(_.getBoolean(0))
+    val r = Record.open(spark, dir, "re-save the tokenizer with Bpe.saveTokenizer")
+    val (mrows, vrows) = spark.read.schema(r.schema).parquet(s"${r.dir(dir)}/tokenizer")
+      .collect().partition(_.getBoolean(0))
     (mrows.sortBy(_.getInt(1)).map(r => (r.getString(2), r.getString(3))).toSeq,
       vrows.sortBy(_.getInt(1)).map(r => (r.getString(2), r.getInt(1))).toSeq)
   }

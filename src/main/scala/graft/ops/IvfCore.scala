@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.bridge
@@ -10,24 +10,26 @@ import org.apache.spark.sql.graft.bridge
   * plus the corpus as a table PARTITIONED BY CELL, so a probe reads only
   * its `nprobe` cells — a planning-time partition filter, no runtime trick.
   *
-  * On disk, under the index directory:
+  * On disk, under the index directory: the index's [[Record]] (its build
+  * id and the table's schema) and the build directory it names, holding
   *  - `quant` — every quantizer as ONE long-form relation `(s, cid, dim, x)`:
   *    the coarse quantizer at `s = -1`, PQ subquantizer `s` at `s >= 0`;
   *  - the cell-partitioned table (`assigned` or `codes`);
-  *  - `deleted` — tombstoned ids, anti-joined away at load;
-  *  - `_schema.json` — the index's [[Record]]: its build id and the
-  *    table's schema, published last.
+  *  - `deleted` — tombstoned ids, anti-joined away at load.
+  * A save (and a compaction, which is a save of the loaded index) commits
+  * a new build and reaps the old one, so a failed save leaves the previous
+  * index readable; appends and tombstones add files inside the published
+  * build (one writer per index at a time).
   *
   * Every read here is at most ONE planned scan, and a load right after a
   * save costs no Spark job. A `spark.read.parquet(dir)` with no schema runs
   * a footer-inference job first (≈100 ms of job floor for a droplet-sized
   * relation), so `deleted` is read with the schema the code fixes and the
   * table (whose `did` takes the corpus id's type) with the recorded one.
-  * The quantizers never change after a save, so `quant` is scanned only
+  * The quantizers never change within a build, so `quant` is scanned only
   * when the driver does not already hold them for the recorded build:
   * [[Lifecycle.save]] writes them through to a per-directory cache, and a
-  * re-save by any process publishes a new build that misses it. Indexes
-  * saved without a record fall back to inference and a `quant` scan. */
+  * re-save by any process publishes a new build that misses it. */
 private[ops] object IvfCore {
 
   /** Quantizers by subspace: `-1` the coarse quantizer, `s >= 0` the PQ
@@ -42,29 +44,19 @@ private[ops] object IvfCore {
   private val quantCache =
     new java.util.concurrent.ConcurrentHashMap[String, (String, Quantizers)]()
 
-  private def fs(spark: SparkSession, p: Path): FileSystem =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   private def exists(spark: SparkSession, path: String): Boolean = {
     val p = new Path(path)
-    fs(spark, p).exists(p)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
-  private def remove(spark: SparkSession, path: String): Unit = {
-    val p = new Path(path)
-    val f = fs(spark, p)
-    if (f.exists(p)) f.delete(p, true)
-    ()
-  }
-
-  /** The quantizers of build `build` of the index at `dir`: from the cache
+  /** The quantizers of the build `r` of the index at `dir`: from the cache
     * when it holds that build, else one scan of `quant`. */
-  private def quantizersOf(spark: SparkSession, dir: String, build: String): Quantizers = {
+  private def quantizersOf(spark: SparkSession, dir: String, r: Record): Quantizers = {
     val hit = quantCache.get(dir)
-    if (hit != null && hit._1 == build) hit._2
+    if (hit != null && hit._1 == r.build) hit._2
     else {
-      val quant = readQuantizers(spark, s"$dir/quant")
-      quantCache.put(dir, (build, quant))
+      val quant = readQuantizers(spark, s"${r.dir(dir)}/quant")
+      quantCache.put(dir, (r.build, quant))
       quant
     }
   }
@@ -120,7 +112,7 @@ private[ops] object IvfCore {
     /** The in-memory index: quantizers plus table rows `(did, payload…, cell)`. */
     type Index
 
-    /** Name of the cell-partitioned table under the index directory. */
+    /** Name of the cell-partitioned table in the index's build directory. */
     private[ops] val table: String
 
     private[ops] def quantizers(idx: Index): Quantizers
@@ -145,53 +137,49 @@ private[ops] object IvfCore {
         idCol: String, vecCol: String): DataFrame =
       encode(quant, cells(quant, Par.spread(vecs), idCol, vecCol))
 
-    /** Persist: the quantizers as one `quant` relation, the table
-      * PARTITIONED BY CELL (every probe becomes a planning-time
-      * partition-pruned scan). Tombstones of an index previously saved in
-      * `dir` are dropped — they describe rows this save replaced. */
+    /** Persist as a new build: the quantizers as one `quant` relation, the
+      * table PARTITIONED BY CELL (every probe becomes a planning-time
+      * partition-pruned scan). The build of an index previously saved in
+      * `dir`, tombstones included, is reaped once the new one is published. */
     def save(idx: Index, dir: String): Unit = {
       val spark = rows(idx).sparkSession
       val quant = quantizers(idx)
-      Record.remove(spark, dir)
-      writeQuantizers(spark, quant, s"$dir/quant")
-      // clustered by cell: one file per (cell, writing task) instead of the
-      // tasks × cells fan-out, and AQE coalesces tiny relations to a couple
-      // of write tasks — faster save AND faster pruned probes later
-      rows(idx).repartition(col("cell")).write.mode("overwrite")
-        .partitionBy("cell").parquet(s"$dir/$table")
-      remove(spark, s"$dir/deleted")
-      val rec = Record.fresh(rows(idx).schema)
-      Record.publish(spark, dir, rec)
+      val rec = Record.commit(spark, dir, rows(idx).schema) { build =>
+        writeQuantizers(spark, quant, s"$build/quant")
+        // clustered by cell: one file per (cell, writing task) instead of
+        // the tasks × cells fan-out, and AQE coalesces tiny relations to a
+        // couple of write tasks — faster save AND faster pruned probes later
+        rows(idx).repartition(col("cell")).write
+          .partitionBy("cell").parquet(s"$build/$table")
+      }
       // write-through, in the cid order a `quant` scan decodes
       quantCache.put(dir, (rec.build, quant.map { case (s, book) => s -> book.sortBy(_._1) }))
     }
 
-    /** Reload a saved index: the quantizers of the recorded build (a scan
-      * of `quant` only when the driver does not hold them), the table read
-      * with its recorded schema (an index saved without a record: a `quant`
-      * scan and schema inference), and
-      * tombstoned ids ([[deleteSaved]]) are dropped with a broadcast
-      * anti-join — the table files themselves are never rewritten. */
-    def load(spark: SparkSession, dir: String): Index = {
-      if (!exists(spark, s"$dir/quant"))
-        throw new IllegalStateException(
-          s"no IVF index at $dir in the current layout (no quant/ relation; " +
-            "indexes saved with centroids/ or coarse/+books/ predate it); " +
-            "rebuild and re-save the index")
-      val (quant, t0) = Record.read(spark, dir) match {
-        case Some(r) =>
-          (quantizersOf(spark, dir, r.build), spark.read.schema(r.schema).parquet(s"$dir/$table"))
-        case None =>
-          (readQuantizers(spark, s"$dir/quant"), spark.read.parquet(s"$dir/$table"))
-      }
-      val t = t0.withColumn("cell", col("cell").cast("int"))
+    private def record(spark: SparkSession, dir: String): Record =
+      Record.open(spark, dir, "rebuild and re-save the index with " +
+        s"${getClass.getSimpleName.stripSuffix("$")}.save")
+
+    /** The published build directory of the index at `dir` and the index
+      * it holds: the quantizers of the recorded build (a scan of `quant`
+      * only when the driver does not hold them), the table read with its
+      * recorded schema, and tombstoned ids ([[deleteSaved]]) dropped with a
+      * broadcast anti-join — the table files themselves are never
+      * rewritten. */
+    private def opened(spark: SparkSession, dir: String): (String, Index) = {
+      val r = record(spark, dir)
+      val build = r.dir(dir)
+      val t = spark.read.schema(r.schema).parquet(s"$build/$table")
       val live =
-        if (exists(spark, s"$dir/deleted"))
-          t.join(broadcast(spark.read.schema(DeletedSchema).parquet(s"$dir/deleted")),
+        if (exists(spark, s"$build/deleted"))
+          t.join(broadcast(spark.read.schema(DeletedSchema).parquet(s"$build/deleted")),
             Seq("did"), "left_anti")
         else t
-      index(quant, live)
+      (build, index(quantizersOf(spark, dir, r), live))
     }
+
+    /** Reload a saved index: its quantizers and its live rows. */
+    def load(spark: SparkSession, dir: String): Index = opened(spark, dir)._2
 
     /** Assign a new batch against the EXISTING quantizers — the ingest
       * path. One narrow map over the batch; nothing of the corpus is
@@ -209,7 +197,7 @@ private[ops] object IvfCore {
       * anything else fails before a file is written). */
     def appendSaved(spark: SparkSession, dir: String, newVecs: DataFrame,
         idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-      val idx = load(spark, dir)
+      val (build, idx) = opened(spark, dir)
       val quant = quantizers(idx)
       // ONE shuffle: each row moves to its cell's write task (one appended
       // file per touched cell/task) and is encoded there, in parallel
@@ -217,35 +205,26 @@ private[ops] object IvfCore {
       Record.conform(encode(quant, cells(quant, newVecs, idCol, vecCol)
             .repartition(col("cell"))), "did",
           rows(idx).schema("did").dataType, "ids", s"the index at $dir")
-        .write.mode("append").partitionBy("cell").parquet(s"$dir/$table")
+        .write.mode("append").partitionBy("cell").parquet(s"$build/$table")
     }
 
-    /** Tombstone vectors in a SAVED index: the ids append to the `deleted`
-      * relation that [[load]] anti-joins away (broadcast — tombstone sets
-      * are tiny next to the corpus); no table file is rewritten, and probes
-      * exclude the ids immediately. Reclaim the space with [[compactSaved]]. */
+    /** Tombstone vectors in a SAVED index: the ids append to the build's
+      * `deleted` relation that [[load]] anti-joins away (broadcast —
+      * tombstone sets are tiny next to the corpus); no table file is
+      * rewritten, and probes exclude the ids immediately. Reclaim the space
+      * with [[compactSaved]]. */
     def deleteSaved(spark: SparkSession, dir: String, ids: Seq[Long]): Unit = {
       import spark.implicits._
       ids.toDF("did").coalesce(1)
-        .write.mode("append").parquet(s"$dir/deleted")
+        .write.mode("append").parquet(s"${record(spark, dir).dir(dir)}/deleted")
     }
 
-    /** Compaction: physically rewrite the table without the tombstoned rows
-      * and clear `deleted` — run when the tombstone set has grown enough
-      * that the per-probe anti-join (or the dead bytes on disk) is worth
-      * reclaiming. One read + one partitioned write of the LIVE rows; the
-      * quantizers are untouched, so the record keeps its build. */
-    def compactSaved(spark: SparkSession, dir: String): Unit = {
-      val rec = Record.read(spark, dir)
-      val live = rows(load(spark, dir))
-      // localCheckpoint breaks the read-from/write-to path dependency
-      live.localCheckpoint(true).repartition(col("cell"))
-        .write.mode("overwrite")
-        .partitionBy("cell").parquet(s"$dir/$table")
-      remove(spark, s"$dir/deleted")
-      Record.publish(spark, dir,
-        rec.fold(Record.fresh(live.schema))(_.copy(schema = live.schema)))
-    }
+    /** Compaction: the live rows (tombstones anti-joined away) saved as a
+      * new build — run when the tombstone set has grown enough that the
+      * per-probe anti-join (or the dead bytes on disk) is worth reclaiming.
+      * The new build is written beside the one it reads, and the held
+      * quantizers are written through, so the next load runs no job. */
+    def compactSaved(spark: SparkSession, dir: String): Unit = save(load(spark, dir), dir)
 
     /** The probe's front half: each query's scoring columns `side` (`qid`
       * first) exploded over its `nprobe` nearest cells — computed on the

@@ -8,33 +8,52 @@ import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType,
   ShortType, StructType}
 
 /** The published record of a persisted store ([[StateStore]], the IVF
-  * indexes of [[IvfCore]]): one small JSON file that a save writes LAST
-  * (temp file + rename, so a reader never sees it torn) and every read
-  * opens first — store metadata is a file open on the driver, never a
-  * listing, a footer-inference job or a scan.
-  *
-  * It names the `build` (a fresh id per save; a rewrite of the same data,
-  * such as a compaction, carries it forward), the schema of the store's
-  * data relation and the store's parameters. Driver caches of immutable
-  * store parts key on the build: a re-save by any process publishes a new
-  * one. Layout:
-  * `{"version":2,"build":"<id>","schema":<StructType JSON>,"params":{"<k>":"<v>"}}`. */
+  * indexes of [[IvfCore]], the [[Bpe]] tokenizer) and the one way they all
+  * commit. Under the store directory `<dir>`:
+  *  - `build-<id>/` holds the relations one save wrote (a fresh id per save);
+  *  - `_schema.json`, the record, names the build, the main relation's
+  *    schema and the store's params:
+  *    `{"version":3,"build":"<id>","schema":<StructType JSON>,"params":{...}}`.
+  * [[commit]] fills a fresh build directory, publishes the record by temp
+  * file + rename (never seen torn), then reaps every OTHER `build-` entry;
+  * nothing else under `<dir>` is touched. A save that fails before the
+  * rename leaves the previous record and build readable, and the next
+  * commit reaps its partial build. Every read opens the record first (a
+  * file open, never a listing or a job) and works inside its build; driver
+  * caches of immutable store parts key on the build id. One writer per
+  * store at a time. [[open]] refuses a directory without a version-3
+  * record (never saved, or an older layout), naming the save to re-run. */
 private[ops] final case class Record(build: String, schema: StructType,
-    params: Map[String, String])
+    params: Map[String, String]) {
+
+  /** This build's directory under the store directory `dir`. */
+  def dir(store: String): String = s"$store/${Record.Prefix}$build"
+}
 
 private[ops] object Record {
 
   val FileName = "_schema.json"
-  private val Version = 2
-
-  /** A record for a new build. */
-  def fresh(schema: StructType, params: Map[String, String] = Map.empty): Record =
-    Record(java.util.UUID.randomUUID().toString, schema, params)
+  private val Prefix = "build-"
+  private val Version = 3
 
   private def fs(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  def publish(spark: SparkSession, dir: String, rec: Record): Unit = {
+  /** Commit a new build of the store at `dir`: `write` fills the fresh
+    * build directory it is given. Returns the published record. */
+  def commit(spark: SparkSession, dir: String, schema: StructType,
+      params: Map[String, String] = Map.empty)(write: String => Unit): Record = {
+    val rec = Record(java.util.UUID.randomUUID().toString, schema, params)
+    write(rec.dir(dir))
+    publish(spark, dir, rec)
+    val f = fs(spark, new Path(dir))
+    f.listStatus(new Path(dir)).map(_.getPath)
+      .filter(p => p.getName.startsWith(Prefix) && p.getName != Prefix + rec.build)
+      .foreach(f.delete(_, true))
+    rec
+  }
+
+  private def publish(spark: SparkSession, dir: String, rec: Record): Unit = {
     import org.json4s._
     import org.json4s.jackson.JsonMethods.{compact, parse, render}
     val json = JObject(
@@ -48,36 +67,31 @@ private[ops] object Record {
     val out = f.create(tmp, true)
     try out.write(compact(render(json)).getBytes("UTF-8"))
     finally out.close()
-    f.delete(dst, false)
-    if (!f.rename(tmp, dst))
+    // a POSIX rename replaces the old record atomically; a file system whose
+    // rename refuses an existing target gets the delete first
+    if (!f.rename(tmp, dst) && !(f.delete(dst, false) && f.rename(tmp, dst)))
       throw new java.io.IOException(s"could not publish the store record $dst")
   }
 
-  /** The record of the store at `dir`, or None when there is none (never
-    * published, removed by a save in progress, or of an older layout). */
-  def read(spark: SparkSession, dir: String): Option[Record] = {
+  /** The record of the store at `dir`; anything else is refused, with
+    * `redo`, the save that writes the current layout. */
+  def open(spark: SparkSession, dir: String, redo: String): Record = {
     val p = new Path(dir, FileName)
+    def refuse = new IllegalStateException(s"no store at $dir in the current layout " +
+      s"(a version-$Version $FileName naming its build); $redo")
     val text =
       try {
         val in = fs(spark, p).open(p)
         try new String(in.readAllBytes(), "UTF-8") finally in.close()
-      } catch { case _: java.io.FileNotFoundException => return None }
+      } catch { case _: java.io.FileNotFoundException => throw refuse }
     import org.json4s._
     import org.json4s.jackson.JsonMethods.{compact, parse, render}
     val j = parse(text)
-    if (j \ "version" != JInt(Version)) None
-    else Some(Record((j \ "build").values.toString,
+    if (j \ "version" != JInt(Version)) throw refuse
+    Record((j \ "build").values.toString,
       DataType.fromJson(compact(render(j \ "schema"))).asInstanceOf[StructType],
       (j \ "params").values.asInstanceOf[Map[String, Any]]
-        .map { case (k, v) => k -> v.toString }))
-  }
-
-  /** Unpublish: a save removes the record first, so a crash part-way
-    * leaves a store without one rather than a record over torn data. */
-  def remove(spark: SparkSession, dir: String): Unit = {
-    val p = new Path(dir, FileName)
-    fs(spark, p).delete(p, false)
-    ()
+        .map { case (k, v) => k -> v.toString })
   }
 
   /** Integral types in widening order: a batch type converts to a stored

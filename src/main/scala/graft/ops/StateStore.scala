@@ -33,11 +33,12 @@ import org.apache.spark.sql.types.{IntegerType, StructType}
   * (one decision per key per update). Lookups get the same pruning: a
   * point read opens only the buckets that can hold the probed keys.
   *
-  * On disk, under the store path: `data/bucket=<b>/` and the store's
-  * [[Record]] — key column, `nBuckets`, the data schema and the build id —
-  * published last by [[create]]. Every read and update opens the record
-  * (a file open, no Spark job) and scans with its schema, so a store
-  * re-created under the same path by any process is seen at once.
+  * On disk: the store's [[Record]] (key column, `nBuckets`, data schema)
+  * and its build directory, holding `data/bucket=<b>/`. [[create]]
+  * commits a new build (a failed re-create leaves the old store readable);
+  * [[upsert]] swaps buckets inside the published build; one writer at a
+  * time. Every read and update opens the record (a file open, no job) and
+  * scans with its schema, so a re-created store is seen at once.
   */
 object StateStore {
 
@@ -62,17 +63,10 @@ object StateStore {
   private def fs(spark: SparkSession, p: Path) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** The store's record; a store written before the record existed (a
-    * `meta/` relation and no record) is refused. */
   private def record(spark: SparkSession, path: String): Record =
-    Record.read(spark, path).getOrElse {
-      val legacy = new Path(s"$path/meta")
-      throw new IllegalStateException(
-        if (fs(spark, legacy).exists(legacy))
-          s"the StateStore at $path predates the store record (a meta/ relation " +
-            "and no record); re-create the store with StateStore.create"
-        else s"no StateStore at $path")
-    }
+    Record.open(spark, path, "re-create the store with StateStore.create")
+
+  private def dataOf(r: Record, path: String): String = s"${r.dir(path)}/data"
 
   private def metaOf(r: Record): Meta =
     Meta(r.params("key_col"), r.params("n_buckets").toInt)
@@ -80,32 +74,32 @@ object StateStore {
   /** The schema of the data files' scan: the recorded columns + `bucket`. */
   private def scanSchema(r: Record): StructType = r.schema.add("bucket", IntegerType)
 
-  /** Materialize a new store at `path`: data Hive-partitioned by bucket,
-    * then the record. Overwrites any existing store. */
+  /** Materialize a new store at `path`: data Hive-partitioned by bucket
+    * in a new build, then the record. Replaces any existing store. */
   def create(state: DataFrame, keyCol: String, nBuckets: Int, path: String): Unit = {
     require(nBuckets >= 1 && nBuckets <= 65536,
       s"nBuckets must be in [1, 65536]: $nBuckets")
-    val spark = state.sparkSession
-    Record.remove(spark, path)
-    // cluster by bucket before the partitioned write: without it every
-    // input task writes a file into EVERY bucket it sees (tasks × buckets
-    // files — the small-files explosion that slows every later pruned
-    // read); clustered, each bucket gets one file per writing task and
-    // AQE coalesces the tiny case to a handful of tasks
-    state.withColumn("bucket", bucketOf(col(keyCol), nBuckets))
-      .repartition(col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(s"$path/data")
-    fs(spark, new Path(path)).delete(new Path(s"$path/meta"), true)
-    Record.publish(spark, path, Record.fresh(state.schema,
-      Map("key_col" -> keyCol, "n_buckets" -> nBuckets.toString)))
+    Record.commit(state.sparkSession, path, state.schema,
+        Map("key_col" -> keyCol, "n_buckets" -> nBuckets.toString)) { build =>
+      // cluster by bucket before the partitioned write: without it every
+      // input task writes a file into EVERY bucket it sees (tasks × buckets
+      // files — the small-files explosion that slows every later pruned
+      // read); clustered, each bucket gets one file per writing task and
+      // AQE coalesces the tiny case to a handful of tasks
+      state.withColumn("bucket", bucketOf(col(keyCol), nBuckets))
+        .repartition(col("bucket"))
+        .write.partitionBy("bucket").parquet(s"$build/data")
+    }
+    ()
   }
 
   def meta(spark: SparkSession, path: String): Meta = metaOf(record(spark, path))
 
   /** The full state (no pruning), bucket column dropped. */
-  def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.schema(scanSchema(record(spark, path))).parquet(s"$path/data")
-      .drop("bucket")
+  def read(spark: SparkSession, path: String): DataFrame = {
+    val r = record(spark, path)
+    spark.read.schema(scanSchema(r)).parquet(dataOf(r, path)).drop("bucket")
+  }
 
   /** The touched-bucket read: lists and scans ONLY the named bucket
     * directories (basePath keeps `bucket` a partition column), so BOTH
@@ -118,11 +112,12 @@ object StateStore {
   private def prunedBuckets(spark: SparkSession, path: String, r: Record,
       buckets: Seq[Int]): Option[DataFrame] = {
     val f = fs(spark, new Path(path))
-    val dirs = buckets.sorted.map(b => s"$path/data/bucket=$b")
+    val root = dataOf(r, path)
+    val dirs = buckets.sorted.map(b => s"$root/bucket=$b")
       .filter(d => f.exists(new Path(d)))
     if (dirs.isEmpty) None
     else {
-      val pruned = spark.read.schema(scanSchema(r)).option("basePath", s"$path/data")
+      val pruned = spark.read.schema(scanSchema(r)).option("basePath", root)
         .parquet(dirs: _*)
         .where(col("bucket").isin(buckets.map(Integer.valueOf): _*))
       lastPruned = Some(pruned)
@@ -207,9 +202,10 @@ object StateStore {
     // every key tombstoned and is simply deleted — which retires the
     // extra "which buckets still have rows" job the previous
     // dynamic-partition-overwrite design needed. Per-bucket dir swap has
-    // the same non-atomicity across buckets the dynamic overwrite had.
-    val root = s"$path/data"
-    val tmp = s"$path/.upsert_tmp_${java.util.UUID.randomUUID().toString.take(8)}"
+    // the same non-atomicity across buckets the dynamic overwrite had; its
+    // temp dir lives in the build, so a re-create reaps a crash's leftovers.
+    val root = dataOf(r, path)
+    val tmp = s"${r.dir(path)}/.upsert_tmp_${java.util.UUID.randomUUID().toString.take(8)}"
     // the merged write's shape is fully known up front: |touched buckets|
     // output partitions (explicit — no reliance on AQE coalescing, and no
     // shuffle.partitions-many empty tasks at production partition counts),

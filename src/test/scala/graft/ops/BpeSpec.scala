@@ -255,7 +255,8 @@ class BpeSpec extends AnyFlatSpec with Matchers {
       .toDF("doc_id", "text")
     val (m, _) = Bpe.trainLocal(docs, numMerges = 6)
     val ms = m.orderBy("rank").collect().map(r => (r.getString(1), r.getString(2))).toSeq
-    val voc = Bpe.vocab(Bpe.corpusChars(docs), ms)
+    val chars = Bpe.corpusChars(docs)
+    val voc = Bpe.vocab(chars, ms)
     val dir = java.nio.file.Files.createTempDirectory("graft_tok_spec").toString
     try {
       Bpe.saveTokenizer(spark, dir, ms, voc)
@@ -266,6 +267,15 @@ class BpeSpec extends AnyFlatSpec with Matchers {
       // two footer inferences, two distributed sorts)
       val (_, n) = countJobs(Bpe.loadTokenizer(spark, dir))
       n.jobs should be <= 1
+      // one relation, one write job (was 2: one per relation)
+      val (_, saved) = countJobs(Bpe.saveTokenizer(spark, dir, ms, voc))
+      saved.jobs should be <= 1
+      // a shorter tokenizer saved over this one loads exactly
+      ms.length shouldBe 6
+      val ms3 = ms.take(3)
+      val voc3 = Bpe.vocab(chars, ms3)
+      Bpe.saveTokenizer(spark, dir, ms3, voc3)
+      Bpe.loadTokenizer(spark, dir) shouldBe ((ms3, voc3))
     } finally {
       val p = new org.apache.hadoop.fs.Path(dir)
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)

@@ -20,9 +20,9 @@ import graft.testlib.JobCount.countJobs
   *
   * Shared cases: save/load round-trip, planning-time cell pruning, tombstones
   * and compaction, append/extend equality, id widening and refusal, the
-  * record-less fallback, re-saving over tombstones, the legacy-layout
-  * refusal, the load/probe job ceilings and a build re-published in place
-  * by another process. */
+  * refusal of record-less and legacy layouts, re-saving over tombstones, a
+  * re-save that fails mid-write, the load/probe job ceilings and a build
+  * re-published in place by another process. */
 abstract class IvfIndexSpec[L <: IvfCore.Lifecycle](name: String, val lc: L)
     extends AnyFlatSpec with Matchers {
 
@@ -55,8 +55,15 @@ abstract class IvfIndexSpec[L <: IvfCore.Lifecycle](name: String, val lc: L)
   private def quantSeq(q: IvfCore.Quantizers) =
     q.toSeq.sortBy(_._1).map { case (s, book) => (s, book.toSeq) }
 
+  /** Each row's id, cell and a hash of the whole row. */
+  private def rowHashes(idx: lc.Index): Seq[(Long, Int, Long)] = {
+    val t = lc.rows(idx)
+    t.select(col("did"), col("cell"), xxhash64(t.columns.map(col): _*)).collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sorted.toSeq
+  }
+
   private def tableFiles(dir: String): Array[File] =
-    new File(s"$dir/${lc.table}").listFiles().filter(_.isDirectory)
+    new File(s"${Dirs.build(dir)}/${lc.table}").listFiles().filter(_.isDirectory)
       .flatMap(_.listFiles().filter(_.getName.endsWith(".parquet")))
 
   s"$name save/load" should "reproduce the in-memory probe exactly" in {
@@ -96,10 +103,10 @@ abstract class IvfIndexSpec[L <: IvfCore.Lifecycle](name: String, val lc: L)
     val idx = build(c)
     withDir("graft_ivf_del") { dir =>
       lc.save(idx, dir)
-      val before = Dirs.snapshot(s"$dir/${lc.table}")
+      val before = Dirs.snapshot(s"${Dirs.build(dir)}/${lc.table}")
       lc.deleteSaved(spark, dir, Seq(4L, 8L, 12L))
       // the table files are untouched — deletion is an append-only op
-      Dirs.snapshot(s"$dir/${lc.table}") shouldBe before
+      Dirs.snapshot(s"${Dirs.build(dir)}/${lc.table}") shouldBe before
       val loaded = lc.load(spark, dir)
       lc.rows(loaded).count() shouldBe (c.count() - 3)
       lc.rows(loaded).where(col("did").isin(4L, 8L, 12L)).count() shouldBe 0L
@@ -113,8 +120,8 @@ abstract class IvfIndexSpec[L <: IvfCore.Lifecycle](name: String, val lc: L)
       // compaction physically drops the tombstoned rows and clears the
       // deleted relation; the loaded view is unchanged
       lc.compactSaved(spark, dir)
-      new File(s"$dir/deleted").exists() shouldBe false
-      spark.read.parquet(s"$dir/${lc.table}")
+      new File(s"${Dirs.build(dir)}/deleted").exists() shouldBe false
+      spark.read.parquet(s"${Dirs.build(dir)}/${lc.table}")
         .where(col("did").isin(4L, 8L, 12L, 16L)).count() shouldBe 0L
       lc.rows(lc.load(spark, dir)).count() shouldBe (c.count() - 4)
     }
@@ -130,6 +137,30 @@ abstract class IvfIndexSpec[L <: IvfCore.Lifecycle](name: String, val lc: L)
       lc.save(build(c), dir)
       lc.rows(lc.load(spark, dir)).where(col("did") === 9L).count() shouldBe 1L
       lc.rows(lc.load(spark, dir)).count() shouldBe c.count()
+    }
+  }
+
+  it should "leave the saved index readable when a re-save fails mid-write" in {
+    val c = corpus()
+    val (first, second) = (build(c), build(c.where(col("vec_id") >= 40)))
+    withDir("graft_ivf_fault") { dir =>
+      lc.save(first, dir)
+      val saved = rowHashes(lc.load(spark, dir))
+      // rows that throw on one id part-way through the table write
+      val boom = udf((id: Long) =>
+        if (id == 41L) throw new IllegalStateException("injected write fault") else id)
+      intercept[Exception](lc.save(lc.index(lc.quantizers(second),
+        lc.rows(second).withColumn("did", boom(col("did")))), dir))
+      val loaded = lc.load(spark, dir)
+      quantSeq(lc.quantizers(loaded)) shouldBe quantSeq(lc.quantizers(first))
+      quantSeq(IvfCore.readQuantizers(spark, s"${Dirs.build(dir)}/quant")) shouldBe
+        quantSeq(lc.quantizers(first))
+      rowHashes(loaded) shouldBe saved
+      // the next successful commit reaps the abandoned build with the old one
+      lc.save(second, dir)
+      Dirs.entries(dir) shouldBe Set("_schema.json", new File(Dirs.build(dir)).getName)
+      quantSeq(lc.quantizers(lc.load(spark, dir))) shouldBe quantSeq(lc.quantizers(second))
+      rowHashes(lc.load(spark, dir)) shouldBe rowHashes(second)
     }
   }
 
@@ -181,12 +212,13 @@ abstract class IvfIndexSpec[L <: IvfCore.Lifecycle](name: String, val lc: L)
         err.getMessage should include ("whose ids are BIGINT")
       }
       tableFiles(dir).map(_.getPath).toSet shouldBe before
-      // the same holds without a record: the inferred type is the stored one
+      // without a record the index is refused before a file is written
       new File(s"$dir/_schema.json").delete() shouldBe true
-      lc.appendSaved(spark, dir, c.where(col("vec_id") < 8)
-        .select((col("vec_id") + 5000L).cast("int").as("vec_id"), col("embedding")))
-      idTypes(dir) shouldBe Set(LongType)
-      lc.rows(lc.load(spark, dir)).where(col("did") >= 5000L).count() shouldBe 8L
+      val noRecord = Dirs.snapshot(dir)
+      intercept[IllegalStateException](lc.appendSaved(spark, dir, c.where(col("vec_id") < 8)
+          .select((col("vec_id") + 5000L).cast("int").as("vec_id"), col("embedding"))))
+        .getMessage should include ("rebuild and re-save the index")
+      Dirs.snapshot(dir) shouldBe noRecord
       // an int-id index refuses bigint ids before writing anything
       val intDir = s"$dir/int_ids"
       val idx = build(c)
@@ -218,32 +250,37 @@ abstract class IvfIndexSpec[L <: IvfCore.Lifecycle](name: String, val lc: L)
       // was 7, and 11 (raw vectors) and 13 (PQ codes) before that
       val (_, both) = countJobs(loadProbe())
       both.jobs should be <= 6
-      // compaction keeps the build, so the quantizers stay held
+      // compaction writes the held quantizers through to its new build
       lc.compactSaved(spark, dir)
       countJobs(lc.load(spark, dir))._2.jobs shouldBe 0
     }
   }
 
-  it should "load an index without a schema record by inference, probing the same rows" in {
+  it should "refuse an index without a current record, writing no file" in {
     val c = corpus()
-    withDir("graft_ivf_legacy") { dir =>
+    withDir("graft_ivf_norecord") { dir =>
       lc.save(build(c), dir)
       lc.deleteSaved(spark, dir, Seq(1L, 8L))
-      val qs = c.where(col("vec_id") < 6)
-      def res() = {
-        val loaded = lc.load(spark, dir)
-        (lc.rows(loaded).schema, scoredHits(probe(loaded, qs, 3, 2)))
+      val record = new File(s"$dir/_schema.json").toPath
+      def refused(): Unit = {
+        val before = Dirs.snapshot(dir)
+        val batch = c.where(col("vec_id") < 4)
+        for (op <- Seq[() => Any](() => lc.load(spark, dir),
+            () => lc.appendSaved(spark, dir, batch), () => lc.deleteSaved(spark, dir, Seq(2L)),
+            () => lc.compactSaved(spark, dir)))
+          intercept[IllegalStateException](op()).getMessage should include
+            (s"rebuild and re-save the index with $name.save")
+        Dirs.snapshot(dir) shouldBe before
       }
-      val (recordedSchema, recorded) = res()
-      new File(s"$dir/_schema.json").delete() shouldBe true
-      val (inferredSchema, inferred) = res()
-      inferredSchema shouldBe recordedSchema
-      inferred shouldBe recorded
-      recorded.map(_._2) should not contain 8L
-      // compaction of a record-less index writes the record again
-      lc.compactSaved(spark, dir)
-      new File(s"$dir/_schema.json").exists() shouldBe true
-      res()._2 shouldBe recorded
+      // a record of the previous version, which named no build directory
+      // (its stale checksum file goes, as a plain rewrite leaves none)
+      Files.delete(new File(s"$dir/._schema.json.crc").toPath)
+      Files.writeString(record, new String(Files.readAllBytes(record), "UTF-8")
+        .replace("\"version\":3", "\"version\":2"))
+      refused()
+      // and no record at all
+      Files.delete(record)
+      refused()
     }
   }
 
@@ -269,8 +306,11 @@ abstract class IvfIndexSpec[L <: IvfCore.Lifecycle](name: String, val lc: L)
   s"$name.load" should s"refuse the legacy ${legacyLayout.mkString("+")} layout with the rebuild message, writing no file" in {
     withDir("graft_ivf_old") { dir =>
       lc.save(build(corpus()), dir)
-      // the old layout: the quantizers under their old relation names, no quant/
-      val quant = new File(s"$dir/quant").toPath
+      // the old layout: the table and the quantizers, under their old
+      // relation names, directly in the index directory; no record
+      val b = new File(Dirs.build(dir))
+      Files.move(new File(b, lc.table).toPath, new File(s"$dir/${lc.table}").toPath)
+      val quant = new File(b, "quant").toPath
       legacyLayout.foreach { rel =>
         val to = new File(s"$dir/$rel").toPath
         Files.createDirectory(to)
@@ -278,6 +318,8 @@ abstract class IvfIndexSpec[L <: IvfCore.Lifecycle](name: String, val lc: L)
       }
       quant.toFile.listFiles().foreach(_.delete())
       Files.delete(quant)
+      Files.delete(b.toPath)
+      Files.delete(new File(s"$dir/_schema.json").toPath)
       val before = Dirs.snapshot(dir)
       val err = intercept[IllegalStateException](lc.load(spark, dir))
       err.getMessage should include ("rebuild and re-save the index")

@@ -66,7 +66,7 @@ class StateStoreSpec extends AnyFlatSpec with Matchers {
 
   // (bucket dir) -> (file name -> length), data files only
   private def snapshot(dir: String): Map[String, Map[String, Long]] =
-    new File(s"$dir/data").listFiles().filter(_.isDirectory)
+    new File(s"${Dirs.build(dir)}/data").listFiles().filter(_.isDirectory)
       .map(b => b.getName -> b.listFiles()
         .filter(f => f.isFile && !f.getName.startsWith(".") && !f.getName.startsWith("_"))
         .map(f => f.getName -> f.lastModified()).toMap)
@@ -112,7 +112,7 @@ class StateStoreSpec extends AnyFlatSpec with Matchers {
     StateStore.upsert(spark, dir,
       Seq((17L, 0.0, true)).toDF("k", "v", "del"), Some("del"))
     val b = StateStore.bucketOfLocal("17", 16)
-    new File(s"$dir/data/bucket=$b").exists() shouldBe false
+    new File(s"${Dirs.build(dir)}/data/bucket=$b").exists() shouldBe false
     // a mixed delta that empties one bucket but writes another
     val dir2 = tmp()
     StateStore.create((1L to 40L).map(k => (k, k * 1.0)).toDF("k", "v"),
@@ -199,7 +199,7 @@ class StateStoreSpec extends AnyFlatSpec with Matchers {
     val fresh = (2 to 60).filter(k =>
       StateStore.bucketOfLocal(k.toString, 16) != StateStore.bucketOfLocal("1", 16)).take(5)
     StateStore.upsert(spark, dir, fresh.map(k => (k, k * 1.0)).toDF("k", "v"))
-    val files = new File(s"$dir/data").listFiles().filter(_.isDirectory)
+    val files = new File(s"${Dirs.build(dir)}/data").listFiles().filter(_.isDirectory)
       .flatMap(_.listFiles().filter(_.getName.endsWith(".parquet")))
     files.length should be > 1
     files.map(f => spark.read.parquet(f.getPath).schema("k").dataType).toSet shouldBe
@@ -235,7 +235,26 @@ class StateStoreSpec extends AnyFlatSpec with Matchers {
     Dirs.snapshot(dir) shouldBe before
     // re-creating the store replaces the old layout
     StateStore.create((1L to 20L).map(k => (k, k * 1.0)).toDF("k", "v"), "k", 4, dir)
-    new File(s"$dir/meta").exists() shouldBe false
     StateStore.lookup(spark, dir, Seq(3L)).collect().map(_.getDouble(1)) shouldBe Array(3.0)
+  }
+
+  it should "keep the live store when a re-create fails mid-write, and one build after the next" in {
+    val dir = tmp()
+    val rows = (1L to 100L).map(k => (k, k * 1.0)).toDF("k", "v")
+    StateStore.create(rows, "k", 8, dir)
+    // a state frame whose write throws part-way: the new build is
+    // abandoned before its record is published
+    val boom = udf((k: Long, v: Double) =>
+      if (k == 50L) throw new IllegalStateException("injected write fault") else v)
+    intercept[Exception](StateStore.create(
+      rows.withColumn("v", boom(col("k"), -col("v"))), "k", 8, dir))
+    StateStore.read(spark, dir).collect()
+      .map(r => (r.getLong(0), r.getDouble(1))).toSet shouldBe
+      (1L to 100L).map(k => (k, k * 1.0)).toSet
+    StateStore.lookup(spark, dir, Seq(50L)).collect().map(_.getDouble(1)) shouldBe Array(50.0)
+    // the next successful commit reaps the abandoned build with the old one
+    StateStore.create(rows.where(col("k") <= 10L), "k", 8, dir)
+    Dirs.entries(dir) shouldBe Set("_schema.json", new File(Dirs.build(dir)).getName)
+    StateStore.read(spark, dir).count() shouldBe 10L
   }
 }

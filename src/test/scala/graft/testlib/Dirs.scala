@@ -5,6 +5,19 @@ import java.nio.file.{Files, Path, Paths}
 /** Directory helpers for specs of persisted stores. */
 object Dirs {
 
+  /** The build directory the store at `dir` has published: `build-<id>`,
+    * the id read from the store's `_schema.json` record. */
+  def build(dir: String): String = {
+    import org.json4s.jackson.JsonMethods.parse
+    val rec = parse(new String(Files.readAllBytes(Paths.get(dir, "_schema.json")), "UTF-8"))
+    s"$dir/build-${(rec \ "build").values}"
+  }
+
+  /** The entries directly under `dir`, hidden (`.`-prefixed) ones left out. */
+  def entries(dir: String): Set[String] =
+    Option(new java.io.File(dir).list()).fold(Set.empty[String])(_.toSet)
+      .filterNot(_.startsWith("."))
+
   /** Every regular file under `dir` with its modification time. */
   def snapshot(dir: String): Map[String, Long] = {
     val walk = Files.walk(Paths.get(dir))

@@ -11,10 +11,14 @@
 # (distance between its quartiles), the median ratio and the number of
 # pairs the change won (ties count for neither side), and the failed calls
 # per run. A gain holds when the change wins at least 9 of 10 pairs and
-# the medians differ by more than the parent's IQR.
+# the medians differ by more than the parent's IQR. Below that, per call
+# name, each side's median over the runs of the run's median latency, read
+# from `result.call_ms_by_name` of the artifact each run leaves under
+# `.bench_build/results/` (every call of the run, warm-up pass included).
 #
-# Every run's JSON line is kept in $AB_OUT (default: a file in the temp
-# dir, printed at the end and removed with it unless AB_OUT is set).
+# Every run's JSON line, with its per-name medians, is kept in $AB_OUT
+# (default: a file in the temp dir, printed at the end and removed with it
+# unless AB_OUT is set).
 set -euo pipefail
 cd "$(dirname "$0")/.."
 REF="${1:?usage: tools/perfbench_ab.sh <ref> <workload> <seed>...}"
@@ -36,7 +40,11 @@ for seed in "$@"; do
     if [ "$side" = ref ]; then dir="$BASE"; else dir="$(pwd)"; fi
     line=$(cd "$dir" && python3 perfbench/run.py --workload "$WL" --seed "$seed" \
       --seconds "$RUN_S" --trace 0 | tail -n 1)
-    echo "{\"side\": \"$side\", \"seed\": $seed, \"run\": $line}" >> "$OUT"
+    art=$(ls -t "$dir"/.bench_build/results/"$WL"-seed"$seed"-trace0-*.json | head -n 1)
+    by_name=$(python3 -c 'import json, statistics, sys
+calls = json.load(open(sys.argv[1]))["result"]["call_ms_by_name"]
+print(json.dumps({k: statistics.median(v) for k, v in calls.items()}))' "$art")
+    echo "{\"side\": \"$side\", \"seed\": $seed, \"run\": $line, \"call_ms_by_name\": $by_name}" >> "$OUT"
     echo "[ab] pair $pair seed $seed $side done" >&2
   done
 done
@@ -49,6 +57,7 @@ runs = [json.loads(l) for l in open(path) if l.strip()]
 bench = json.load(open("BENCHMARK.json"))
 seeds = sorted({r["seed"] for r in runs})
 by = {(r["side"], r["seed"]): r["run"] for r in runs}
+by_name = {(r["side"], r["seed"]): r["call_ms_by_name"] for r in runs}
 
 
 def quartiles(xs):
@@ -75,6 +84,15 @@ for m in bench["end_to_end"]:
           f"change {qb[1]:10.2f} ({qb[0]:.2f}-{qb[2]:.2f})  "
           f"parent/change {qa[1] / qb[1] if qb[1] else float('nan'):.3f}  "
           f"wins {wins}/{len(pairs)}  gap {gap:.2f} {'>' if gap > iqr else '<='} parent IQR {iqr:.2f}")
+print("  per call name, median of the runs' medians (ms):")
+for name in sorted({n for v in by_name.values() for n in v}):
+    sides = [[by_name[(side, s)][name] for s in seeds if name in by_name.get((side, s), {})]
+             for side in ("ref", "cur")]
+    if not all(sides):
+        continue
+    (pa, pm, pb), (ca, cm, cb) = quartiles(sides[0]), quartiles(sides[1])
+    print(f"    {name:28s} parent {pm:9.1f} ({pa:.1f}-{pb:.1f})  change {cm:9.1f} ({ca:.1f}-{cb:.1f})  "
+          f"parent/change {pm / cm if cm else float('nan'):.3f}")
 failed = {side: [by[(side, s)]["failed"] for s in seeds if (side, s) in by] for side in ("ref", "cur")}
 print(f"  failed per run: parent {failed['ref']}  change {failed['cur']}")
 EOF
