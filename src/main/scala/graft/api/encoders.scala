@@ -23,7 +23,7 @@ import scala.reflect.ClassTag
   * storage representation stays a queryable native column at 100 TB.
   *
   * Scope: top-level element encoders (`DataBag[Char]`, `Dataset[MyEnum.Value]`)
-  * and explicit composition via [[tuple]]/`Encoders.tuple`. Reflection-derived
+  * and explicit composition via [[tuple]] (`Encoders.tuple` fails on `Char`). Reflection-derived
   * case-class encoders still cannot see these (Spark derives those from
   * TypeTags before implicit search) — use a tuple or map the field to
   * Int/String at the boundary.
@@ -94,13 +94,21 @@ object encoders extends Serializable {
       AgnosticEncoders.StringEncoder,
       () => new EnumCodec(e).asInstanceOf[Codec[e.Value, String]]))
 
+  /** [[charEncoder]] as a tuple field, which Spark rebuilds from the agnostic
+    * encoder: the boxed class tag, as the primitive one fails to compile. */
+  private def field[A](e: Encoder[A]): Encoder[A] =
+    if (e ne charEncoder) e
+    else ExpressionEncoder(AgnosticEncoders.TransformingEncoder[Char, Int](
+      ClassTag(classOf[java.lang.Character]).asInstanceOf[ClassTag[Char]],
+      AgnosticEncoders.PrimitiveIntEncoder, () => new CharCodec)).asInstanceOf[Encoder[A]]
+
   /** Explicit tuple composition for encoders from this object (Spark's
     * implicit product derivation is TypeTag-based and cannot pick these up).
     */
   def tuple[A, B](implicit ea: Encoder[A], eb: Encoder[B]): Encoder[(A, B)] =
-    Encoders.tuple(ea, eb)
+    Encoders.tuple(field(ea), field(eb))
 
   def tuple[A, B, C](implicit
       ea: Encoder[A], eb: Encoder[B], ec: Encoder[C]): Encoder[(A, B, C)] =
-    Encoders.tuple(ea, eb, ec)
+    Encoders.tuple(field(ea), field(eb), field(ec))
 }

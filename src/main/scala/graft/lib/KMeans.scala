@@ -2,6 +2,7 @@ package graft.lib
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.bridge
 
 /** Lloyd's kMeans over an `array<float>` embedding column (reference
   * emma-lib ml/clustering/kMeans.scala:26-93 — loops over iterations,
@@ -160,15 +161,12 @@ object KMeans {
       .zipWithIndex
       .map { case (r, i) => (i, r.getSeq[Double](1)) }
 
-    // identical tiny shuffles every round — AQE re-planning per action is
-    // pure overhead here (same rationale as ML.gd, measured there at ~40%)
-    val sess = vectors.sparkSession
-    val prevAqe = sess.conf.get("spark.sql.adaptive.enabled", "true")
-    sess.conf.set("spark.sql.adaptive.enabled", "false")
+    // AQE off for the loop only, on a per-call clone (`bridge.isolated`)
+    val loopPts = bridge.isolated(pts, bridge.aqeOff)
     var iter = 0
     var moved = true
-    try while (iter < maxIter && moved) {
-      val assigned = pts.select(col("v"),
+    while (iter < maxIter && moved) {
+      val assigned = loopPts.select(col("v"),
         nearestExpr(centroidLit(cents), col("v")).as("cluster"))
       // new centroids: mean per (cluster, dim) — ONE shuffled aggregation per
       // iteration; the k·dim result rows assemble into vectors on the driver
@@ -193,7 +191,7 @@ object KMeans {
       }
       cents = merged
       iter += 1
-    } finally sess.conf.set("spark.sql.adaptive.enabled", prevAqe)
+    }
     pts.unpersist()
     cents
   }

@@ -2,6 +2,7 @@ package graft.lib
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.bridge
 
 /** ML algorithms from the reference's `@emma.lib` layer, re-expressed
   * Spark-first (reference emma-lib ml/classification/naiveBayes.scala,
@@ -157,33 +158,25 @@ object ML {
     var w = new Array[Double](dim)
     var b = 0.0
     val losses = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val cached = data.persist()
-    // AQE re-plans every action; for a loop of identical tiny aggregates
-    // over cached data that is pure per-iteration overhead (measured ~40%
-    // of solver wall-clock), with nothing to adapt — switch it off for the
-    // loop and restore the caller's setting after.
-    val sess = data.sparkSession
-    val prevAqe = sess.conf.get("spark.sql.adaptive.enabled", "true")
-    sess.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      var i = 0
-      while (i < iters) {
-        val rate = lr / math.sqrt(i + 1.0)
-        val batch = if (batchFraction >= 1.0) cached
-          else cached.sample(withReplacement = false, batchFraction, seed + i)
-        val (grad, gb, loss) = gradientPass(batch, w, b, lossFn)
-        var reg = 0.0
-        var j = 0
-        while (j < dim) {
-          reg += w(j) * w(j)
-          w(j) -= rate * (grad(j) + l2 * w(j))
-          j += 1
-        }
-        b -= rate * gb
-        losses += loss + l2 / 2.0 * reg
-        i += 1
+    // AQE off for the loop only, on a per-call clone (`bridge.isolated`)
+    val cached = bridge.isolated(data, bridge.aqeOff).persist()
+    var i = 0
+    while (i < iters) {
+      val rate = lr / math.sqrt(i + 1.0)
+      val batch = if (batchFraction >= 1.0) cached
+        else cached.sample(withReplacement = false, batchFraction, seed + i)
+      val (grad, gb, loss) = gradientPass(batch, w, b, lossFn)
+      var reg = 0.0
+      var j = 0
+      while (j < dim) {
+        reg += w(j) * w(j)
+        w(j) -= rate * (grad(j) + l2 * w(j))
+        j += 1
       }
-    } finally sess.conf.set("spark.sql.adaptive.enabled", prevAqe)
+      b -= rate * gb
+      losses += loss + l2 / 2.0 * reg
+      i += 1
+    }
     cached.unpersist()
     (w, b, losses.toSeq)
   }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.bridge
 
 /** Product quantization (PQ) for the vector store — the MEMORY/IO scale
   * path for embedding search: each d-dim vector compresses to `m` small
@@ -97,11 +98,8 @@ object Pq {
     var books: Array[Array[(Int, Seq[Double])]] = Array.tabulate(m)(s =>
       seed.zipWithIndex.map { case (v, i) =>
         (i, v.slice(s * dsub, s * dsub + dsub)) })
-    // identical tiny shuffles every round — AQE re-planning is pure
-    // overhead (the KMeans.centroids rationale)
-    val sess = corpus.sparkSession
-    val prevAqe = sess.conf.get("spark.sql.adaptive.enabled", "true")
-    sess.conf.set("spark.sql.adaptive.enabled", "false")
+    // AQE off for the loop only, on a per-call clone (`bridge.isolated`)
+    val loopPts = bridge.isolated(pts, bridge.aqeOff)
     var iter = 0
     var moved = true
     try while (iter < maxIter && moved) {
@@ -111,7 +109,7 @@ object Pq {
           graft.lib.KMeans.nearestCentroids(books(s), sub, 1)(0).as("cluster"),
           sub.as("sv"))
       }: _*)
-      val upd = pts.select(explode(perSub).as("e"))
+      val upd = loopPts.select(explode(perSub).as("e"))
         .select(col("e.s").as("s"), col("e.cluster").as("cluster"),
           posexplode(col("e.sv")))
         .groupBy("s", "cluster", "pos").agg(avg("col").as("mn"))
@@ -130,10 +128,7 @@ object Pq {
       }
       books = merged
       iter += 1
-    } finally {
-      sess.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      pts.unpersist() // exception-safe: a failed iteration must not pin the cache
-    }
+    } finally pts.unpersist() // exception-safe: a failed iteration must not pin the cache
     Codebooks(m, dsub, books)
   }
 

@@ -43,26 +43,17 @@ object Prefilter {
     // runtime-bloom-filter caps (Math.min against maxNumItems = 4M /
     // maxNumBits = 64Mi by default — verified in the 4.1.2 bytecode);
     // at the 100-TB sizes this op exists for, the clamp would quietly
-    // blow the fpp contract to ~50%. Raise the caps to cover the request
-    // for the duration of the build job, then restore.
-    val conf = keys.sparkSession.conf
-    val itemsKey = "spark.sql.optimizer.runtime.bloomFilter.maxNumItems"
-    val bitsKey = "spark.sql.optimizer.runtime.bloomFilter.maxNumBits"
-    val prevItems = conf.get(itemsKey, "4000000")
-    val prevBits = conf.get(bitsKey, "67108864")
+    // blow the fpp contract to ~50%, so the build runs with caps equal to
+    // the request, on a per-call clone (`bridge.isolated`).
+    val caps = Map(
+      "spark.sql.optimizer.runtime.bloomFilter.maxNumItems" -> expectedItems.toString,
+      "spark.sql.optimizer.runtime.bloomFilter.maxNumBits" -> numBits.toString)
     // one aggregation job; the serialized filter (numBits/8 bytes) comes
     // back as a scalar and is re-embedded as a LITERAL in every probe —
     // the driver holds the sketch, never data
-    val bin =
-      try {
-        conf.set(itemsKey, math.max(prevItems.toLong, expectedItems).toString)
-        conf.set(bitsKey, math.max(prevBits.toLong, numBits).toString)
-        keys.select(bridge.column(agg.toAggregateExpression()).as("bf"))
-          .head().getAs[Array[Byte]](0)
-      } finally {
-        conf.set(itemsKey, prevItems)
-        conf.set(bitsKey, prevBits)
-      }
+    val bin = bridge.isolated(keys, caps)
+      .select(bridge.column(agg.toAggregateExpression()).as("bf"))
+      .head().getAs[Array[Byte]](0)
     (c: Column) => bridge.column(
       BloomFilterMightContain(Literal.create(bin, BinaryType),
         bridge.eagerExpression(xxhash64(c))))

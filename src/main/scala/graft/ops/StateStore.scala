@@ -206,22 +206,18 @@ object StateStore {
     // temp dir lives in the build, so a re-create reaps a crash's leftovers.
     val root = dataOf(r, path)
     val tmp = s"${r.dir(path)}/.upsert_tmp_${java.util.UUID.randomUUID().toString.take(8)}"
-    // the merged write's shape is fully known up front: |touched buckets|
-    // output partitions (explicit — no reliance on AQE coalescing, and no
-    // shuffle.partitions-many empty tasks at production partition counts),
-    // so AQE's per-stage re-planning only adds scheduler round-trips here
-    // (the KMeans/ML.gd small-identical-query treatment; r16, guide §1.2)
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try merged.repartition(buckets.size, col("bucket")).write.mode("overwrite")
+    // AQE off for this write only, on a per-call clone (`bridge.isolated`)
+    bridge.isolated(merged, bridge.aqeOff)
+      .repartition(buckets.size, col("bucket")).write.mode("overwrite")
       .partitionBy("bucket").parquet(tmp)
-    finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
     val f = fs(spark, new Path(root))
     buckets.foreach { b =>
       val src = new Path(s"$tmp/bucket=$b")
       val dst = new Path(s"$root/bucket=$b")
       if (f.exists(dst)) f.delete(dst, true)
-      if (f.exists(src)) { f.rename(src, dst); () }
+      if (f.exists(src) && !f.rename(src, dst)) // the temp dir keeps the rows
+        throw new java.io.IOException(
+          s"could not move bucket $b of the store at $path to $dst; its rows are kept in $tmp")
     }
     f.delete(new Path(tmp), true)
     ()

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.StructType
 
@@ -243,50 +244,29 @@ object Streams {
     // per stateful operator PER MICRO-BATCH; for bounded drains the batch
     // session's partition count is usually oversized — `statePartitions`
     // right-sizes it for this query. `appendConf` comma-appends to
-    // comma-list confs (e.g. optimizer.excludedRules). Both are pinned by
-    // the query's conf CLONE at start, so the whole set→start→restore
-    // happens inside one locked window — concurrent drains on the session
-    // can neither observe each other's overrides nor corrupt the restore.
+    // comma-list confs (e.g. optimizer.excludedRules).
     val sess = agg.sparkSession
-    val q = startConfLock.synchronized {
-      val overrides: Map[String, String] =
-        statePartitions.map(p =>
-          "spark.sql.shuffle.partitions" -> p.toString).toMap ++
-        appendConf.map { case (k, v) =>
-          k -> (sess.conf.getOption(k).filter(_.nonEmpty)
-            .map(_ + ",").getOrElse("") + v)
-        }
-      val prev = overrides.keys.map(k => k -> sess.conf.getOption(k)).toMap
-      overrides.foreach { case (k, v) => sess.conf.set(k, v) }
-      try {
-        agg.writeStream
-          .outputMode(mode)
-          .format("memory")
-          .queryName(queryName)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      } finally prev.foreach {
-        case (k, Some(v)) => sess.conf.set(k, v)
-        case (k, None) => sess.conf.unset(k)
-      }
+    val overrides = statePartitions.map("spark.sql.shuffle.partitions" -> _.toString).toMap ++
+      appendConf.map { case (k, v) =>
+        k -> (sess.conf.getOption(k).filter(_.nonEmpty).map(_ + ",").getOrElse("") + v) }
+    // the drain runs on a per-call clone carrying them (`bridge.isolated`)
+    val drain = bridge.isolated(agg, overrides)
+    val clone = drain.sparkSession
+    bridge.withCallerStreamListeners(sess, clone) {
+      drain.writeStream
+        .outputMode(mode)
+        .format("memory")
+        .queryName(queryName)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+        .awaitTermination()
+      // table() binds the sink's relation at analysis, so the clone's view
+      // can go at once; the result is rebound to the caller's session
+      val out = clone.table(queryName)
+      clone.catalog.dropTempView(queryName)
+      bridge.ofRows(sess, bridge.logicalPlan(out))
     }
-    q.awaitTermination()
-    lastQueryProgress = q.recentProgress.toSeq.map(_.json)
-    if (sys.props.contains("graft.stream.explain")) q.explain()
-    // table() binds the plan to the sink's relation during analysis, so the
-    // temp view can be dropped immediately — otherwise every invocation pins
-    // its full result in the catalog for the session's lifetime
-    val out = agg.sparkSession.table(queryName)
-    agg.sparkSession.catalog.dropTempView(queryName)
-    out
   }
-
-  /** Per-batch progress (json) of the last [[runToCompletion]] drain —
-    * profiling/spec hook for the micro-batch durationMs breakdown. */
-  private[graft] var lastQueryProgress: Seq[String] = Seq.empty
-
-  /** Serializes the conf-override window of [[runToCompletion]] starts. */
-  private val startConfLock = new Object
 
   /** Incrementally maintain a per-key LATEST-row table over a stream — the
     * `foreachBatch` + MERGE production pattern (a serving table fed by a
@@ -438,11 +418,7 @@ object Streams {
     // interpreted (higher-order functions don't codegen), inside the single
     // source task (measured: 2.3 s of the 4 s batch at sf0.1). The query's
     // own length guard already excludes empty shingle sets, so the inferred
-    // filter is pure waste — exclude the rule for this drain only, through
-    // runToCompletion's locked set→start→restore window (the streaming
-    // query clones the session conf at start; the session value is restored
-    // before start returns, so concurrent/later batch queries are never
-    // affected).
+    // filter is pure waste — exclude the rule for this drain only.
     val drained = runToCompletion(inter, queryName,
       statePartitions = statePartitions,
       appendConf = Map("spark.sql.optimizer.excludedRules" ->

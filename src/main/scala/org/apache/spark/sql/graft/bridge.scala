@@ -3,6 +3,8 @@ package org.apache.spark.sql.graft
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryListenerBus
+import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Bridge into `private[sql]` Column↔Expression conversion — the standard
   * technique for libraries that add native Catalyst expressions (the public
@@ -107,6 +109,46 @@ object bridge {
     val attrs = org.apache.spark.sql.catalyst.types.DataTypeUtils
       .toAttributes(aq.analyzed.schema)
     ofRows(spark, org.apache.spark.sql.execution.LogicalRDD(attrs, merged)(spark))
+  }
+
+  /** `df` rebound to a fresh clone of its session with `overrides` set on
+    * the clone only, so no other query on the caller's session sees them.
+    * The clone shares the CacheManager and copies the caller's conf, temp
+    * views and query listeners as they are now: one per call, never kept. */
+  def isolated(df: org.apache.spark.sql.Dataset[_],
+      overrides: Map[String, String]): org.apache.spark.sql.DataFrame = {
+    val clone = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .cloneSession()
+    overrides.foreach { case (k, v) => clone.conf.set(k, v) }
+    ofRows(clone, df.queryExecution.analyzed)
+  }
+
+  /** AQE off: each shuffle runs in its action's job, not in a map-stage job. */
+  val aqeOff: Map[String, String] = Map("spark.sql.adaptive.enabled" -> "false")
+
+  /** Run `body`, which drains streaming queries on `clone` (an [[isolated]]
+    * session of `caller`), with the caller's streaming listeners attached.
+    * On return they have seen every event of those queries, and the
+    * clone's listener bus is off the SparkContext's bus. */
+  def withCallerStreamListeners[A](caller: org.apache.spark.sql.SparkSession,
+      clone: org.apache.spark.sql.SparkSession)(body: => A): A = {
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val ended = new java.util.concurrent.Semaphore(0)
+    // added last: the caller's listeners have handled an event before it does
+    val marker = new StreamingQueryListener {
+      def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = started.incrementAndGet()
+      def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+      def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ended.release()
+    }
+    (caller.streams.listListeners() :+ marker).foreach(clone.streams.addListener)
+    try body
+    finally {
+      clone.streams.active.foreach(_.stop())
+      ended.tryAcquire(started.get, 60, java.util.concurrent.TimeUnit.SECONDS)
+      val bus = clone.sparkContext.listenerBus
+      bus.findListenersByClass[StreamingQueryListenerBus]()
+        .filter(_.listeners.contains(marker)).foreach(bus.removeListener)
+    }
   }
 
   /** Build a DataFrame from a custom LogicalPlan (entry point for custom

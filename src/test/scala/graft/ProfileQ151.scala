@@ -25,7 +25,6 @@ object ProfileQ151 {
 
     // warm-up
     spark.read.parquet(s"$sf/nation.parquet").count()
-    sys.props("graft.stream.explain") = "1"
 
     // stage-level visibility into the drain
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
@@ -41,6 +40,14 @@ object ProfileQ151 {
             f"inRec=${tm.inputMetrics.recordsRead}%7d  ${i.name.take(60)}")
         }
       }
+    })
+
+    // per-batch progress of the drain, which reaches this session's listeners
+    spark.streams.addListener(new org.apache.spark.sql.streaming.StreamingQueryListener {
+      import org.apache.spark.sql.streaming.StreamingQueryListener._
+      def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      def onQueryProgress(e: QueryProgressEvent): Unit = println("  progress: " + e.progress.json)
+      def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
     })
 
     for (rep <- 1 to 3) {
@@ -59,7 +66,6 @@ object ProfileQ151 {
           stream, corpusSh, idx, minJaccard = 0.2,
           queryName = s"prof151_${System.nanoTime}"))
       time("result count")(println("  pairs=" + out.count()))
-      graft.streaming.Streams.lastQueryProgress.foreach(j => println("  progress: " + j))
     }
     spark.stop()
   }

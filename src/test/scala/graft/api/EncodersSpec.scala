@@ -29,7 +29,20 @@ class EncodersSpec extends AnyFlatSpec with Matchers {
     ds.repartition(5).collect().sorted shouldBe chars.sorted
   }
 
-  it should "support typed DataBag ops and Catalyst aggregation on the INT column" in {
+  /** Run `body` on a new session with no interpreted fallback, neither for
+    * whole-stage code nor for the encoders' projections, so generated code
+    * that fails to compile fails the spec. */
+  private def codegenOnly[A](body: SparkSession => A): A = {
+    val s = TestSpark.spark.newSession()
+    s.conf.set("spark.sql.codegen.fallback", "false")
+    s.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
+    val prev = SparkSession.getActiveSession
+    SparkSession.setActiveSession(s) // projections read the active session's conf
+    try body(s)
+    finally prev.fold(SparkSession.clearActiveSession())(SparkSession.setActiveSession)
+  }
+
+  it should "support typed DataBag ops and Catalyst aggregation on the INT column" in codegenOnly { implicit spark =>
     import encoders.charEncoder
     val bag = DataBag("abracadabra".toSeq)
     val counts = bag.ds.toDF("code")
@@ -40,7 +53,7 @@ class EncodersSpec extends AnyFlatSpec with Matchers {
       "abracadabra".toUpperCase.toSeq.sorted
   }
 
-  it should "compose into tuples and options" in {
+  it should "compose into tuples and options" in codegenOnly { spark =>
     import encoders.{charEncoder, charOptionEncoder}
     import spark.implicits.newIntEncoder
     val pairs = Seq(('a', 1), ('b', 2), ('ÿ', 3))

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.bridge
 import org.scalatest.flatspec.AnyFlatSpec
 import org.scalatest.matchers.should.Matchers
 
@@ -18,14 +19,12 @@ class BucketingSpec extends AnyFlatSpec with Matchers {
     Bucketing.writeBucketed(facts, "b_facts", "k", 8)
     Bucketing.writeBucketed(dims, "b_dims", "k", 8)
 
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ
-      val joined = Bucketing.bucketedJoin(spark, "b_facts", "b_dims", "k")
-      val plan = joined.queryExecution.executedPlan.toString
-      plan should include("SortMergeJoin")
-      plan should not include "Exchange"
-      joined.count() shouldBe 1000
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    // force SMJ, on a per-call session clone
+    val joined = bridge.isolated(Bucketing.bucketedJoin(spark, "b_facts", "b_dims", "k"),
+      Map("spark.sql.autoBroadcastJoinThreshold" -> "-1"))
+    val plan = joined.queryExecution.executedPlan.toString
+    plan should include("SortMergeJoin")
+    plan should not include "Exchange"
+    joined.count() shouldBe 1000
   }
 }

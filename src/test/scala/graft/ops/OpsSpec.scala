@@ -538,15 +538,14 @@ class OpsSpec extends AnyFlatSpec with Matchers {
     // maxNumItems (4M) / maxNumBits (64Mi) — at 8M actual keys a clamped
     // filter's false-positive rate degrades toward ~50%, silently voiding
     // the fpp contract; bloomOf must raise the caps for the build job
-    val itemsKey = "spark.sql.optimizer.runtime.bloomFilter.maxNumItems"
-    val bitsKey = "spark.sql.optimizer.runtime.bloomFilter.maxNumBits"
-    val prevItems = spark.conf.get(itemsKey, "4000000")
-    val prevBits = spark.conf.get(bitsKey, "67108864")
+    val caps = Seq("spark.sql.optimizer.runtime.bloomFilter.maxNumItems",
+      "spark.sql.optimizer.runtime.bloomFilter.maxNumBits")
+    val before = caps.map(spark.conf.getOption)
     val keys = spark.range(0, 8000000).toDF("sk")
     val probe = Prefilter.bloomOf(keys, col("sk"), expectedItems = 8000000L, fpp = 0.01)
-    // ...and restore them afterwards
-    spark.conf.get(itemsKey, "4000000") shouldBe prevItems
-    spark.conf.get(bitsKey, "67108864") shouldBe prevBits
+    // ...on its own session clone: the caller's caps never change (a
+    // reader running during the build: SessionIsolationSpec)
+    caps.map(spark.conf.getOption) shouldBe before
     val nonMembers = spark.range(8000000, 8005000).toDF("k")
     val fps = nonMembers.where(probe(col("k"))).count()
     fps.toDouble / 5000 should be < 0.05 // requested 0.01; clamped would be ~0.5

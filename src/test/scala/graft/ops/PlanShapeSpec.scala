@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.bridge
 import org.scalatest.flatspec.AnyFlatSpec
 import org.scalatest.matchers.should.Matchers
 
@@ -24,28 +25,19 @@ class PlanShapeSpec extends AnyFlatSpec with Matchers {
   implicit lazy val spark: SparkSession = TestSpark.spark
   import spark.implicits._
 
-  private def physical(df: org.apache.spark.sql.DataFrame): String =
-    df.queryExecution.executedPlan.toString
-
   private val configs: Seq[(String, Map[String, String])] = Seq(
     "default" -> Map.empty,
     "aqe+2000parts" -> Map(
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.shuffle.partitions" -> "2000"))
 
-  private def withCfg[T](cfg: Map[String, String])(f: => T): T = {
-    val prev = cfg.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    cfg.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   for ((cfgName, cfg) <- configs) {
 
-    s"argmax via max(struct) [$cfgName]" should "plan as a hash aggregate with no window or sort" in withCfg(cfg) {
+    // planned on a per-call session clone carrying `cfg`
+    def physical(df: org.apache.spark.sql.DataFrame): String =
+      bridge.isolated(df, cfg).queryExecution.executedPlan.toString
+
+    s"argmax via max(struct) [$cfgName]" should "plan as a hash aggregate with no window or sort" in {
       val df = Seq((1L, 10.0, 100L), (1L, 20.0, 101L), (2L, 5.0, 102L))
         .toDF("k", "price", "id")
         .groupBy("k").agg(max(struct(col("price"), col("id"))).as("m"))
@@ -56,13 +48,13 @@ class PlanShapeSpec extends AnyFlatSpec with Matchers {
       plan should not include regex("(?i)sortexec")
     }
 
-    s"Curation.percentileCut [$cfgName]" should "broadcast the per-group cuts" in withCfg(cfg) {
+    s"Curation.percentileCut [$cfgName]" should "broadcast the per-group cuts" in {
       val df = (1 to 100).map(i => (s"g${i % 3}", i.toLong)).toDF("src", "v")
       val plan = physical(Curation.percentileCut(df, "src", "v", 0.9))
       plan should include("BroadcastHashJoin")
     }
 
-    s"Packing.chunkByTokens [$cfgName]" should "plan as a narrow generate with no key shuffle" in withCfg(cfg) {
+    s"Packing.chunkByTokens [$cfgName]" should "plan as a narrow generate with no key shuffle" in {
       val docs = Seq((1L, "a b c d e f g h")).toDF("doc_id", "text")
       val plan = physical(Packing.chunkByTokens(docs, chunkTokens = 4, overlap = 1))
       plan should include("Generate")
@@ -72,13 +64,13 @@ class PlanShapeSpec extends AnyFlatSpec with Matchers {
       plan should not include "rangepartitioning"
     }
 
-    s"TextAnalysis.bigramLogProb [$cfgName]" should "broadcast the unigram model" in withCfg(cfg) {
+    s"TextAnalysis.bigramLogProb [$cfgName]" should "broadcast the unigram model" in {
       val docs = Seq((1L, "a b a b"), (2L, "b a")).toDF("doc_id", "text")
       val plan = physical(TextAnalysis.bigramLogProb(docs))
       plan should include("BroadcastHashJoin")
     }
 
-    s"Shuffling.weightedInterleave [$cfgName]" should "compute global rank without a global sort" in withCfg(cfg) {
+    s"Shuffling.weightedInterleave [$cfgName]" should "compute global rank without a global sort" in {
       val srcs = Seq(
         ("a", spark.range(0, 100).toDF("id"), 3),
         ("b", spark.range(100, 200).toDF("id"), 1))
@@ -94,7 +86,7 @@ class PlanShapeSpec extends AnyFlatSpec with Matchers {
       plan should not include "windowspecdefinition(__src"
     }
 
-    s"Shuffling.deterministicShuffle [$cfgName]" should "rank shards in range-partitioned cells, not one task per shard" in withCfg(cfg) {
+    s"Shuffling.deterministicShuffle [$cfgName]" should "rank shards in range-partitioned cells, not one task per shard" in {
       val df = spark.range(0, 5000).toDF("id")
       val plan = physical(Shuffling.deterministicShuffle(df, col("id"), 64, 7L))
       plan should not include "SinglePartition"
@@ -105,14 +97,14 @@ class PlanShapeSpec extends AnyFlatSpec with Matchers {
       plan should not include "windowspecdefinition(shard"
     }
 
-    s"Shuffling.orderedIndex [$cfgName]" should "rank without a single-partition window" in withCfg(cfg) {
+    s"Shuffling.orderedIndex [$cfgName]" should "rank without a single-partition window" in {
       val df = spark.range(0, 5000).toDF("k")
       val plan = physical(Shuffling.orderedIndex(df, "k"))
       plan should not include "SinglePartition"
       plan should include("Window")
     }
 
-    s"Sweep.concurrency [$cfgName]" should "run its only single-partition window over the super-bucket aggregate" in withCfg(cfg) {
+    s"Sweep.concurrency [$cfgName]" should "run its only single-partition window over the super-bucket aggregate" in {
       val iv = Seq((0L, 10L), (5L, 15L), (10L, 20L)).toDF("s", "e")
       val plan = physical(Sweep.concurrency(iv, "s", "e", bucketUs = 8L))
       // one global scan, over one-row-per-SUPER-bucket (the sweep_sb
@@ -126,21 +118,21 @@ class PlanShapeSpec extends AnyFlatSpec with Matchers {
       firstAgg should include("sweep_sb")
     }
 
-    s"Filters.filterReport [$cfgName]" should "broadcast the filter dimension" in withCfg(cfg) {
+    s"Filters.filterReport [$cfgName]" should "broadcast the filter dimension" in {
       val docs = Seq((1L, 10), (2L, 200)).toDF("id", "len")
       val plan = physical(Filters.filterReport(docs,
         Seq("short" -> (col("len") >= 100))))
       plan should include("BroadcastHashJoin")
     }
 
-    s"HeavyHitters recount [$cfgName]" should "broadcast the candidate set" in withCfg(cfg) {
+    s"HeavyHitters recount [$cfgName]" should "broadcast the candidate set" in {
       val items = spark.range(0, 1000)
         .select(concat(lit("w"), col("id") % 7).as("item"))
       val plan = physical(HeavyHitters.exactOverThreshold(items, "item", 10L))
       plan should include("BroadcastHashJoin")
     }
 
-    s"Dedup.hashedShingles [$cfgName]" should "carry the shingle as an 8-byte token, not a string" in withCfg(cfg) {
+    s"Dedup.hashedShingles [$cfgName]" should "carry the shingle as an 8-byte token, not a string" in {
       val docs = Seq((1L, "a b c d e"), (2L, "a b c d f")).toDF("doc_id", "text")
       Dedup.hashedShingles(docs).schema("shingle").dataType shouldBe
         org.apache.spark.sql.types.LongType
@@ -149,7 +141,7 @@ class PlanShapeSpec extends AnyFlatSpec with Matchers {
       joined.collect().length shouldBe 1 // (1,2) pair still scores
     }
 
-    s"Sketches.countMinSketch [$cfgName]" should "be one combinable aggregation, no join" in withCfg(cfg) {
+    s"Sketches.countMinSketch [$cfgName]" should "be one combinable aggregation, no join" in {
       val df = Seq.tabulate(100)(i => ("k" + i % 7)).toDF("k")
       val plan = physical(Sketches.countMinSketch(df, col("k")))
       plan should include("HashAggregate")
@@ -157,14 +149,14 @@ class PlanShapeSpec extends AnyFlatSpec with Matchers {
       plan should not include regex("(?i)sortexec")
     }
 
-    s"TextAnalysis.dupNgramFraction [$cfgName]" should "join only the per-shingle count relation (no cartesian)" in withCfg(cfg) {
+    s"TextAnalysis.dupNgramFraction [$cfgName]" should "join only the per-shingle count relation (no cartesian)" in {
       val docs = Seq((1L, "a b c d e"), (2L, "a b c d f")).toDF("doc_id", "text")
       val plan = physical(TextAnalysis.dupNgramFraction(docs))
       plan should not include "CartesianProduct"
       plan should not include "BroadcastNestedLoopJoin"
     }
 
-    s"a comprehension over cross + Column equality guard [$cfgName]" should "be rewritten to an equi-join by Catalyst" in withCfg(cfg) {
+    s"a comprehension over cross + Column equality guard [$cfgName]" should "be rewritten to an equi-join by Catalyst" in {
       // the reference's comprehension→join derivation (Combination.scala:
       // 723-777), here performed by the optimizer on the Column form: the
       // declared plan is cross-then-filter, the executed plan is a join
@@ -187,14 +179,14 @@ class PlanShapeSpec extends AnyFlatSpec with Matchers {
       sugared.collect().sorted shouldBe Seq(("b", 9.0), ("c", 7.0))
     }
 
-    s"Dedup.simhashNearDups (banded) [$cfgName]" should "self-join on probe keys (no cartesian, no window bound)" in withCfg(cfg) {
+    s"Dedup.simhashNearDups (banded) [$cfgName]" should "self-join on probe keys (no cartesian, no window bound)" in {
       val docs = Seq((1L, "a b c d e f"), (9999999L, "a b c d e f")).toDF("doc_id", "text")
       val plan = physical(Dedup.simhashNearDups(docs, maxHamming = 4))
       plan should not include "CartesianProduct"
       plan should not include "BroadcastNestedLoopJoin"
     }
 
-    s"Curation.incrementalNearDups [$cfgName]" should "generate candidates by equi-join (no cartesian, no nested loop)" in withCfg(cfg) {
+    s"Curation.incrementalNearDups [$cfgName]" should "generate candidates by equi-join (no cartesian, no nested loop)" in {
       val corpus = Seq((1L, "a b c d e f"), (2L, "q r s t u v")).toDF("doc_id", "text")
       val fresh = Seq((11L, "a b c d e g")).toDF("doc_id", "text")
       val idx = Dedup.lshBands(corpus)
@@ -204,7 +196,7 @@ class PlanShapeSpec extends AnyFlatSpec with Matchers {
       plan should not include "BroadcastNestedLoopJoin"
     }
 
-    s"SetSim.jaccardSelfJoin [$cfgName]" should "generate and verify candidates by equi-join only" in withCfg(cfg) {
+    s"SetSim.jaccardSelfJoin [$cfgName]" should "generate and verify candidates by equi-join only" in {
       val docs = Seq((1L, "a b c d e f"), (2L, "a b c d e g"), (3L, "q r s t u v"))
         .toDF("doc_id", "text")
       val plan = physical(SetSim.jaccardSelfJoin(docs))
@@ -213,7 +205,7 @@ class PlanShapeSpec extends AnyFlatSpec with Matchers {
     }
 
     s"Similarity per-query top-k (cosine/bucketed/IVF/hardNegatives) [$cfgName]" should
-        "rank via the bounded-heap TopKPerKey operator — no Window, no sort of the candidate set" in withCfg(cfg) {
+        "rank via the bounded-heap TopKPerKey operator — no Window, no sort of the candidate set" in {
       val emb = Seq.tabulate(40)(i =>
         (i.toLong, Array.tabulate(8)(j => ((i * 31 + j * 7) % 13 - 6).toFloat), i % 3))
         .toDF("vec_id", "embedding", "label")
@@ -231,7 +223,7 @@ class PlanShapeSpec extends AnyFlatSpec with Matchers {
       }
     }
 
-    s"Pq.adcTopK (with and without rerank) [$cfgName]" should "rank via TopKPerKey, not a Window over the ADC candidates" in withCfg(cfg) {
+    s"Pq.adcTopK (with and without rerank) [$cfgName]" should "rank via TopKPerKey, not a Window over the ADC candidates" in {
       val emb = Seq.tabulate(40)(i =>
         (i.toLong, Array.tabulate(8)(j => ((i * 17 + j * 5) % 11 - 5).toFloat)))
         .toDF("vec_id", "embedding")
@@ -248,7 +240,7 @@ class PlanShapeSpec extends AnyFlatSpec with Matchers {
       }
     }
 
-    s"Retrieval.bm25Scores [$cfgName]" should "broadcast the query side; no cartesian on the corpus" in withCfg(cfg) {
+    s"Retrieval.bm25Scores [$cfgName]" should "broadcast the query side; no cartesian on the corpus" in {
       val docs = Seq((1L, "a b c"), (2L, "b c d")).toDF("doc_id", "text")
       val qs = Seq(("q1", "b")).toDF("query_id", "qtext")
       val plan = physical(Retrieval.bm25Scores(docs, qs))

@@ -12,6 +12,18 @@ import graft.TestSpark
 import graft.testlib.Dirs
 import graft.testlib.JobCount.countJobs
 
+/** A local file system under the `norename` scheme that refuses to rename
+  * a directory out of an upsert's temp dir while `refuse` is set. */
+class NoRenameFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getScheme: String = "norename"
+  override def getUri: java.net.URI = java.net.URI.create("norename:///")
+  override def rename(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Boolean =
+    if (NoRenameFs.refuse && src.getParent.getName.startsWith(".upsert_tmp_")) false
+    else super.rename(src, dst)
+}
+
+object NoRenameFs { @volatile var refuse = false }
+
 /** Persisted keyed state: point updates merge correctly AND physically
   * touch only the buckets the delta's keys hash to — the at-rest analogue
   * of the reference's IndexedRDD-backed MutableBag
@@ -256,5 +268,67 @@ class StateStoreSpec extends AnyFlatSpec with Matchers {
     StateStore.create(rows.where(col("k") <= 10L), "k", 8, dir)
     Dirs.entries(dir) shouldBe Set("_schema.json", new File(Dirs.build(dir)).getName)
     StateStore.read(spark, dir).count() shouldBe 10L
+  }
+
+  it should "throw and keep the temp dir when a bucket rename is refused" in {
+    spark.sparkContext.hadoopConfiguration.set("fs.norename.impl", classOf[NoRenameFs].getName)
+    val dir = "norename://" + tmp()
+    StateStore.create((1L to 100L).map(k => (k, k * 1.0)).toDF("k", "v"), "k", 8, dir)
+    NoRenameFs.refuse = true
+    val e =
+      try intercept[java.io.IOException](
+        StateStore.upsert(spark, dir, Seq((1L, -1.0)).toDF("k", "v")))
+      finally NoRenameFs.refuse = false
+    val b = StateStore.bucketOfLocal("1", 8)
+    e.getMessage should include(s"bucket $b ")
+    // the old bucket dir is gone; its merged rows are still in the temp dir
+    val kept = e.getMessage.split("kept in ").last
+    kept should include(".upsert_tmp_")
+    val rows = spark.read.parquet(s"$kept/bucket=$b").collect()
+      .map(r => (r.getLong(0), r.getDouble(1))).toMap
+    rows(1L) shouldBe -1.0
+    rows.size should be > 1
+  }
+
+  it should "keep two stores equal to their replays under concurrent upserts in one session" in {
+    val dirs = Seq(tmp(), tmp())
+    dirs.foreach(d => StateStore.create((1L to 50L).map(k => (k, 0.0)).toDF("k", "v"), "k", 8, d))
+    val replays = dirs.map(_ => scala.collection.mutable.Map((1L to 50L).map(_ -> 0.0): _*))
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
+    val threads = dirs.zip(replays).zipWithIndex.map { case ((d, replay), t) =>
+      new Thread(() =>
+        try (1 to 6).foreach { round =>
+          val delta = (1L to 60L).filter(k => (k + round + t) % 3 == 0)
+            .map(k => (k, round * 10.0 + t))
+          StateStore.upsert(spark, d, delta.toDF("k", "v"))
+          replay ++= delta
+        } catch { case e: Throwable => failures.add(e); () })
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    failures.isEmpty shouldBe true
+    dirs.zip(replays).foreach { case (d, replay) =>
+      StateStore.read(spark, d).collect()
+        .map(r => (r.getLong(0), r.getDouble(1))).toMap shouldBe replay.toMap
+    }
+  }
+
+  it should "show the merged write to the caller's query-execution listeners" in {
+    val dir = tmp()
+    StateStore.create((1L to 100L).map(k => (k, k * 1.0)).toDF("k", "v"), "k", 8, dir)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit = {
+        seen.add(qe.analyzed.toString); ()
+      }
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try {
+      StateStore.upsert(spark, dir, (1L to 5L).map(k => (k, 0.0)).toDF("k", "v"))
+      org.apache.spark.GraftTestListenerBus.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(l)
+    import scala.jdk.CollectionConverters._
+    seen.asScala.exists(_.contains(".upsert_tmp_")) shouldBe true
   }
 }

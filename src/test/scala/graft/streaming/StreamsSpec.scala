@@ -238,6 +238,40 @@ class StreamsSpec extends AnyFlatSpec with Matchers {
     out shouldBe Array(("a", 2L, 3.0), ("b", 1L, 5.0))
   }
 
+  it should "drain with the requested state partitions and report to the caller's streaming listeners" in {
+    import org.apache.spark.sql.functions.{count, lit}
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import scala.jdk.CollectionConverters._
+    val dir = java.nio.file.Files.createTempDirectory("graft_avnow_listen").toString
+    (1 to 20).map(i => (s"k${i % 3}", i)).toDF("k", "v").write.mode("overwrite").parquet(dir)
+    val agg = Streams.readParquetStream(spark, dir, spark.read.parquet(dir).schema)
+      .groupBy("k").agg(count(lit(1)).as("cnt"))
+    val name = s"avnow_listen_${System.nanoTime}"
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[java.util.UUID]
+    val parts = new java.util.concurrent.ConcurrentLinkedQueue[Long]
+    val terminated = new java.util.concurrent.ConcurrentLinkedQueue[java.util.UUID]
+    val l = new StreamingQueryListener {
+      def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+        if (e.name == name) { started.add(e.id); () }
+      def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        if (e.progress.name == name)
+          e.progress.stateOperators.foreach(o => parts.add(o.numShufflePartitions))
+      def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = {
+        terminated.add(e.id); ()
+      }
+    }
+    spark.streams.addListener(l)
+    val out =
+      try Streams.runToCompletion(agg, name, statePartitions = Some(8)).collect()
+      finally spark.streams.removeListener(l)
+    out.map(r => (r.getString(0), r.getLong(1))).sorted shouldBe
+      Array(("k0", 6L), ("k1", 7L), ("k2", 7L))
+    // every event reached the caller's listener before the call returned
+    started.asScala.toSeq should have size 1
+    terminated.asScala.toSeq should contain(started.peek())
+    parts.asScala.toSet shouldBe Set(8L)
+  }
+
   "checkpointed file-source restart" should "process each input exactly once across runs" in {
     val in = java.nio.file.Files.createTempDirectory("graft_eo_in").toString
     val out = java.nio.file.Files.createTempDirectory("graft_eo_out").toString
