@@ -70,13 +70,13 @@ object encoders extends Serializable {
     override def decode(i: java.lang.Integer): Char = i.intValue.toChar
   }
 
+  private val boxedCharTag = ClassTag(classOf[java.lang.Character]).asInstanceOf[ClassTag[Char]]
+
   /** `Encoder[Option[Char]]`, stored as a nullable INT column. */
   implicit val charOptionEncoder: Encoder[Option[Char]] =
     ExpressionEncoder(AgnosticEncoders.OptionEncoder(
       AgnosticEncoders.TransformingEncoder[Char, java.lang.Integer](
-        ClassTag(classOf[java.lang.Character]).asInstanceOf[ClassTag[Char]],
-        AgnosticEncoders.BoxedIntEncoder,
-        () => new CharBoxedCodec)))
+        boxedCharTag, AgnosticEncoders.BoxedIntEncoder, () => new CharBoxedCodec)))
 
   private final class EnumCodec[E <: Enumeration](e: E)
       extends Codec[E#Value, String] {
@@ -96,11 +96,10 @@ object encoders extends Serializable {
 
   /** [[charEncoder]] as a tuple field, which Spark rebuilds from the agnostic
     * encoder: the boxed class tag, as the primitive one fails to compile. */
+  private val charField: Encoder[Char] = ExpressionEncoder(AgnosticEncoders
+    .TransformingEncoder[Char, Int](boxedCharTag, AgnosticEncoders.PrimitiveIntEncoder, () => new CharCodec))
   private def field[A](e: Encoder[A]): Encoder[A] =
-    if (e ne charEncoder) e
-    else ExpressionEncoder(AgnosticEncoders.TransformingEncoder[Char, Int](
-      ClassTag(classOf[java.lang.Character]).asInstanceOf[ClassTag[Char]],
-      AgnosticEncoders.PrimitiveIntEncoder, () => new CharCodec)).asInstanceOf[Encoder[A]]
+    (if (e eq charEncoder) charField else e).asInstanceOf[Encoder[A]]
 
   /** Explicit tuple composition for encoders from this object (Spark's
     * implicit product derivation is TypeTag-based and cannot pick these up).

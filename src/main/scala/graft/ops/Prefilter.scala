@@ -43,11 +43,12 @@ object Prefilter {
     // runtime-bloom-filter caps (Math.min against maxNumItems = 4M /
     // maxNumBits = 64Mi by default — verified in the 4.1.2 bytecode);
     // at the 100-TB sizes this op exists for, the clamp would quietly
-    // blow the fpp contract to ~50%, so the build runs with caps equal to
-    // the request, on a per-call clone (`bridge.isolated`).
-    val caps = Map(
-      "spark.sql.optimizer.runtime.bloomFilter.maxNumItems" -> expectedItems.toString,
-      "spark.sql.optimizer.runtime.bloomFilter.maxNumBits" -> numBits.toString)
+    // blow the fpp contract to ~50%, so the build raises (never lowers) the
+    // caps to cover the request, on a per-call clone (`bridge.isolated`).
+    val caps = Map("maxNumItems" -> expectedItems, "maxNumBits" -> numBits).map { case (cap, request) =>
+      val key = s"spark.sql.optimizer.runtime.bloomFilter.$cap" // conf.get gives the default if unset
+      key -> math.max(keys.sparkSession.conf.get(key).toLong, request).toString
+    }
     // one aggregation job; the serialized filter (numBits/8 bytes) comes
     // back as a scalar and is re-embedded as a LITERAL in every probe —
     // the driver holds the sketch, never data

@@ -243,13 +243,12 @@ object Streams {
     // A stateful query materializes one state store per shuffle partition
     // per stateful operator PER MICRO-BATCH; for bounded drains the batch
     // session's partition count is usually oversized — `statePartitions`
-    // right-sizes it for this query. `appendConf` comma-appends to
-    // comma-list confs (e.g. optimizer.excludedRules).
+    // right-sizes it for this query. `appendConf` comma-appends to comma-list
+    // confs (e.g. optimizer.excludedRules). Both go on a per-call clone (`bridge.isolated`).
     val sess = agg.sparkSession
     val overrides = statePartitions.map("spark.sql.shuffle.partitions" -> _.toString).toMap ++
       appendConf.map { case (k, v) =>
         k -> (sess.conf.getOption(k).filter(_.nonEmpty).map(_ + ",").getOrElse("") + v) }
-    // the drain runs on a per-call clone carrying them (`bridge.isolated`)
     val drain = bridge.isolated(agg, overrides)
     val clone = drain.sparkSession
     bridge.withCallerStreamListeners(sess, clone) {

@@ -111,10 +111,9 @@ object bridge {
     ofRows(spark, org.apache.spark.sql.execution.LogicalRDD(attrs, merged)(spark))
   }
 
-  /** `df` rebound to a fresh clone of its session with `overrides` set on
-    * the clone only, so no other query on the caller's session sees them.
-    * The clone shares the CacheManager and copies the caller's conf, temp
-    * views and query listeners as they are now: one per call, never kept. */
+  /** `df` rebound to a fresh clone of its session with `overrides` set on the clone only, so no
+    * other query on the caller's session sees them. The clone shares the CacheManager and copies
+    * the caller's conf, temp views and query listeners as they are now: one per call, never kept. */
   def isolated(df: org.apache.spark.sql.Dataset[_],
       overrides: Map[String, String]): org.apache.spark.sql.DataFrame = {
     val clone = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
@@ -128,8 +127,8 @@ object bridge {
 
   /** Run `body`, which drains streaming queries on `clone` (an [[isolated]]
     * session of `caller`), with the caller's streaming listeners attached.
-    * On return they have seen every event of those queries, and the
-    * clone's listener bus is off the SparkContext's bus. */
+    * On return they have seen every event of those queries (unless the
+    * SparkContext stopped), and the clone's listener bus is off its bus. */
   def withCallerStreamListeners[A](caller: org.apache.spark.sql.SparkSession,
       clone: org.apache.spark.sql.SparkSession)(body: => A): A = {
     val started = new java.util.concurrent.atomic.AtomicInteger
@@ -144,7 +143,9 @@ object bridge {
     try body
     finally {
       clone.streams.active.foreach(_.stop())
-      ended.tryAcquire(started.get, 60, java.util.concurrent.TimeUnit.SECONDS)
+      // the stopped queries' events are queued: wait however far behind the listeners are
+      while (!ended.tryAcquire(started.get, 10, java.util.concurrent.TimeUnit.SECONDS) &&
+        !clone.sparkContext.isStopped) ()
       val bus = clone.sparkContext.listenerBus
       bus.findListenersByClass[StreamingQueryListenerBus]()
         .filter(_.listeners.contains(marker)).foreach(bus.removeListener)

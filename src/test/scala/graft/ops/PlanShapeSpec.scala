@@ -22,8 +22,8 @@ import graft.TestSpark
   * counts). */
 class PlanShapeSpec extends AnyFlatSpec with Matchers {
 
-  implicit lazy val spark: SparkSession = TestSpark.spark
-  import spark.implicits._
+  private def physical(df: org.apache.spark.sql.DataFrame): String =
+    df.queryExecution.executedPlan.toString
 
   private val configs: Seq[(String, Map[String, String])] = Seq(
     "default" -> Map.empty,
@@ -33,9 +33,11 @@ class PlanShapeSpec extends AnyFlatSpec with Matchers {
 
   for ((cfgName, cfg) <- configs) {
 
-    // planned on a per-call session clone carrying `cfg`
-    def physical(df: org.apache.spark.sql.DataFrame): String =
-      bridge.isolated(df, cfg).queryExecution.executedPlan.toString
+    // every case builds, plans and runs its frames on one session clone
+    // carrying `cfg`; the shared test session's conf is never written
+    implicit lazy val spark: SparkSession =
+      bridge.isolated(TestSpark.spark.emptyDataFrame, cfg).sparkSession
+    import spark.implicits._
 
     s"argmax via max(struct) [$cfgName]" should "plan as a hash aggregate with no window or sort" in {
       val df = Seq((1L, 10.0, 100L), (1L, 20.0, 101L), (2L, 5.0, 102L))
