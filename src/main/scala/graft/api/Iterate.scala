@@ -93,16 +93,12 @@ object Iterate {
     var curDig: Seq[Any] = if (minRounds <= 1) digest(cur) else null
     var i = 0
     var done = false
-    val debug = sys.env.contains("SPARK_GRAFT_DEBUG_ITER")
     while (!done && i < maxIter) {
-      val t0 = System.nanoTime()
       var next = step(cur)
       next = if ((i + 1) % checkpointEvery == 0) truncate(next)
              else next.persist(StorageLevel.MEMORY_AND_DISK)
       val nextDig = digest(next)
       done = i + 1 >= minRounds && curDig != null && curDig == nextDig
-      if (debug) System.err.println(
-        f"[iterate] round ${i + 1}: ${(System.nanoTime() - t0) / 1e9}%.2f s digest=$nextDig")
       if (!(cur eq init)) free(cur)
       cur = next
       curDig = nextDig

@@ -6,13 +6,16 @@ import org.apache.spark.sql.graft.bridge
 
 /** Lloyd's kMeans over an `array<float>` embedding column (reference
   * emma-lib ml/clustering/kMeans.scala:26-93 — loops over iterations,
-  * per-point nearest centroid, groupBy+fold centroid update). Original
-  * Spark-first implementation:
+  * per-point nearest centroid, groupBy+fold centroid update), and the one
+  * quantizer trainer, [[KMeans.train]], behind [[KMeans.centroids]],
+  * [[graft.ops.Pq.train]] and [[graft.ops.PqIndex.build]]:
   *
   *  - centroids are a driver-side array, broadcast into a Column literal each
-  *    iteration (k·dim doubles — tiny), so assignment is a narrow map;
-  *  - the centroid update is one map-side-combinable aggregation per
-  *    iteration (`posexplode` + groupBy(cluster, dim) → avg);
+  *    iteration (k·dim doubles — tiny), so assignment is a narrow map with
+  *    the shared probe expression [[KMeans.nearestCentroids]];
+  *  - the centroid update of every book being trained is ONE
+  *    map-side-combinable aggregation per iteration (`posexplode` +
+  *    groupBy(book, slice, cluster, pos) → avg);
   *  - deterministic init: the k lowest-id vectors (seedable but reproducible
   *    across engines, unlike random init).
   *
@@ -21,10 +24,10 @@ import org.apache.spark.sql.graft.bridge
   */
 object KMeans {
 
-  /** Cap on rows × dim for the driver-side training paths (here and
-    * [[graft.ops.Pq.train]]): ~32M doubles ≈ 256 MB unboxed, a safe
-    * driver collect even after Row/Seq boxing. Row count alone is the
-    * wrong gate — 65k rows of dim-1536 embeddings are GBs. */
+  /** Cap on rows × dim for the driver-side training path of [[train]]:
+    * ~32M doubles ≈ 256 MB unboxed, a safe driver collect even after
+    * Row/Seq boxing. Row count alone is the wrong gate — 65k rows of
+    * dim-1536 embeddings are GBs. */
   val defaultLocalCellBudget: Long = 32L * 1024 * 1024
 
   /** Squared euclidean distance from a centroid vector Column to `v`. */
@@ -54,25 +57,11 @@ object KMeans {
     typedLit(centroids.toSeq)
       .cast("array<struct<cid:int,cv:array<double>>>")
 
-  /** Nearest-centroid id for a double-array column: argmin over the (small)
-    * centroid array literal. */
-  private def nearestExpr(cLit: Column, v: Column): Column =
-    aggregate(cLit,
-      struct(lit(Double.MaxValue).as("d"), lit(-1).as("cid")),
-      (acc, c) => {
-        val d = aggregate(
-          zip_with(v, c.getField("cv"), (x, y) => (x - y) * (x - y)),
-          lit(0.0), (s, x) => s + x)
-        when(d < acc.getField("d"), struct(d.as("d"), c.getField("cid").as("cid")))
-          .otherwise(acc)
-      }).getField("cid")
-
   /** The Lloyd loop run DRIVER-SIDE over collected points in id order —
-    * same init (k lowest ids), same strict-< argmin in cid order, same
+    * same init (k lowest ids), same argmin (ties to the lower cid), same
     * mean update, same empty-cluster and 1e-9 convergence rules as the
     * distributed loop. Centroid values may differ from the distributed
-    * path in the last ulps (FP summation order — the documented
-    * `centroids` caveat applies to BOTH paths); each path is
+    * path in the last ulps (FP summation order); each path is
     * deterministic. */
   private[graft] def lloydLocal(ptsSorted: Array[Seq[Double]], k: Int,
       maxIter: Int): Array[(Int, Seq[Double])] = {
@@ -106,102 +95,128 @@ object KMeans {
     cents
   }
 
-  /** Train the centroids (Lloyd iterations, deterministic init).
+  /** One quantizer to train: each vector splits into `m` equal slices,
+    * each quantized by its own `k` centroids — the coarse quantizer is
+    * `Book(1, nlist)`, a product quantizer `Book(m, ksub)`. */
+  private[graft] final case class Book(m: Int, k: Int)
+
+  /** THE quantizer trainer: every book trains on one prepared training set,
+    * one `(cid, centroid)` array per slice, in cid order.
     *
-    * When the training relation is small (`<= localThreshold` rows — the
-    * NORMAL case: quantizer quality saturates at modest sample sizes, and
-    * the 100-TB guidance is to train on a `hashSample`), the loop runs
-    * driver-side on the collected points: each distributed iteration costs
-    * a full job PLUS a fresh whole-stage-codegen compile (the centroid
-    * literals change every round, so no generated-code cache hit —
-    * measured as the dominant term of every index-build gate). Above the
-    * threshold the distributed loop runs as before. */
+    * Preparation runs once for all books: spread, project to doubles,
+    * persist, count (the dimension comes from the same job), then above the
+    * train-set cap — `trainCap`, else the largest `max(256·k, 65536)` of the
+    * books; quantizer quality saturates at a few hundred points per cell —
+    * a DETERMINISTIC id-keyed hash sample ([[graft.ops.Sampling.hashSample]]).
+    * Callers assign or encode the full relation separately; sub-cap
+    * relations train on every row.
+    *
+    * When the training set is small (`<= localThreshold` rows AND
+    * `<= localCellBudget` rows × dim — the normal case; row count alone
+    * would collect a wide-embedding corpus onto the driver) it is collected
+    * in id order and each slice runs [[lloydLocal]]: a distributed iteration
+    * costs a job plus a fresh codegen compile (the centroid literals change
+    * every round), the dominant term of every index-build gate. Otherwise
+    * one distributed loop trains every book at once. */
+  private[graft] def train(vectors: DataFrame, books: Seq[Book], maxIter: Int,
+      idCol: String, vecCol: String, localThreshold: Long = 65536,
+      localCellBudget: Long = defaultLocalCellBudget,
+      trainCap: Long = 0): Seq[Array[Array[(Int, Seq[Double])]]] = {
+    val pts0 = graft.ops.Par.spread(vectors).select(col(idCol).as("id"),
+      transform(col(vecCol), _.cast("double")).as("v")).persist()
+    var pts = pts0
+    try {
+      val stats = pts0.agg(count(lit(1)), max(size(col("v")))).head()
+      val (n0, d) = (stats.getLong(0), if (stats.isNullAt(1)) 0 else stats.getInt(1))
+      books.foreach(b => require(d % b.m == 0, s"dim $d not divisible into ${b.m} subspaces"))
+      val cap = if (trainCap > 0) trainCap else books.map(b => math.max(256L * b.k, 65536L)).max
+      val n =
+        if (n0 > cap) {
+          pts = graft.ops.Sampling.hashSample(pts0, col("id"), cap.toDouble / n0).persist()
+          val ns = pts.count()
+          pts0.unpersist()
+          ns
+        } else n0
+      if (n <= localThreshold && n * d <= localCellBudget) {
+        // engine-sorted by id: the seed is the k lowest ids, and the
+        // update's summation order is id order — deterministic across runs
+        // AND across input partitionings (stronger than the distributed path)
+        val sorted = pts.orderBy("id").collect().map(_.getSeq[Double](1))
+        pts.unpersist()
+        books.map { b =>
+          val dsub = d / b.m
+          Array.tabulate(b.m)(s =>
+            lloydLocal(sorted.map(_.slice(s * dsub, s * dsub + dsub)), b.k, maxIter))
+        }
+      } else lloydDistributed(pts, books, d, maxIter)
+    } finally { pts0.unpersist(); pts.unpersist() }
+  }
+
+  /** The distributed Lloyd loop over every book at once: each iteration
+    * assigns all slices of all still-moving books in one projection and
+    * updates all their centroids in ONE map-side-combinable aggregation
+    * keyed (book, slice, cluster, pos); the means assemble into vectors on
+    * the driver (collecting k·dim scalars is cheaper than a second shuffle
+    * to re-nest them). A book stops at the same 1e-9 rule as
+    * [[lloydLocal]] and leaves the projection, so each book ends where its
+    * own loop would have. */
+  private def lloydDistributed(pts: DataFrame, books: Seq[Book], d: Int,
+      maxIter: Int): Seq[Array[Array[(Int, Seq[Double])]]] = {
+    val seed = pts.orderBy("id").limit(books.map(_.k).max).collect()
+      .map(_.getSeq[Double](1))
+    val cents = books.map { b =>
+      val dsub = d / b.m
+      Array.tabulate(b.m)(s => seed.take(b.k).zipWithIndex.map { case (v, i) =>
+        (i, v.slice(s * dsub, s * dsub + dsub)) })
+    }.toArray
+    // AQE off for the loop only, on a per-call clone (`bridge.isolated`)
+    val loopPts = bridge.isolated(pts, bridge.aqeOff)
+    var moving: Seq[Int] = books.indices
+    var iter = 0
+    while (iter < maxIter && moving.nonEmpty) {
+      val parts = for (bi <- moving; s <- 0 until books(bi).m) yield {
+        val dsub = d / books(bi).m
+        val sub = slice(col("v"), s * dsub + 1, dsub)
+        struct(lit(bi).as("b"), lit(s).as("s"),
+          nearestCentroids(cents(bi)(s), sub, 1)(0).as("cluster"), sub.as("sv"))
+      }
+      val means = loopPts.select(explode(array(parts: _*)).as("e"))
+        .select(col("e.b"), col("e.s"), col("e.cluster"), posexplode(col("e.sv")))
+        .groupBy("b", "s", "cluster", "pos").agg(avg("col"))
+        .collect()
+        .groupBy(r => (r.getInt(0), r.getInt(1), r.getInt(2)))
+        .map { case (key, rs) => key -> rs.sortBy(_.getInt(3)).map(_.getDouble(4)).toSeq }
+      moving = moving.filter { bi =>
+        // a cluster that loses all points keeps its previous centroid (it
+        // may re-acquire points later) — dropping it would silently shrink
+        // k and could fake convergence
+        val next = cents(bi).zipWithIndex.map { case (book, s) =>
+          book.map { case (cid, old) => (cid, means.getOrElse((bi, s, cid), old)) } }
+        val moved = next.zip(cents(bi)).exists { case (nb, ob) =>
+          nb.zip(ob).exists { case ((_, nv), (_, ov)) =>
+            nv.zip(ov).map { case (a, b) => math.abs(a - b) }.max > 1e-9 } }
+        cents(bi) = next
+        moved
+      }
+      iter += 1
+    }
+    cents.toSeq
+  }
+
+  /** Train the centroids: [[train]] with one single-slice book. */
   def centroids(vectors: DataFrame, k: Int = 4, maxIter: Int = 10,
       idCol: String = "vec_id", vecCol: String = "embedding",
       localThreshold: Long = 65536,
       localCellBudget: Long = KMeans.defaultLocalCellBudget,
-      trainCap: Long = 0): Array[(Int, Seq[Double])] = {
-    val pts0 = graft.ops.Par.spread(vectors).select(col(idCol).as("id"),
-      transform(col(vecCol), _.cast("double")).as("v")).persist()
-
-    // gate on rows AND total cells (rows × dim): row count alone would
-    // collect wide-embedding corpora (65k × dim-1536 ≈ GBs boxed) onto a
-    // driver that never previously materialized the corpus
-    val n0 = pts0.count()
-    // TRAIN-SET CAP: nobody trains a coarse quantizer on every vector of a
-    // 100-TB corpus — quantizer quality saturates at a few hundred points
-    // per cell. Above the cap (default max(256·k, 65536)) training runs on
-    // a DETERMINISTIC id-keyed hash sample; ASSIGNMENT still covers the
-    // full relation (callers assign separately). Sub-cap relations —
-    // every sf0.01/sf0.1 gate — are bit-identical to uncapped training.
-    val cap = if (trainCap > 0) trainCap else math.max(256L * k, 65536L)
-    val (pts, n) =
-      if (n0 > cap) {
-        val s = graft.ops.Sampling
-          .hashSample(pts0, col("id"), cap.toDouble / n0).persist()
-        val ns = s.count()
-        pts0.unpersist()
-        (s, ns)
-      } else (pts0, n0)
-    val dim =
-      if (n == 0) 0L
-      else pts.select(org.apache.spark.sql.functions.size(col("v")))
-        .head().getInt(0).toLong
-    if (n <= localThreshold && n * dim <= localCellBudget) {
-      // engine-sorted by id: the seed is the same k lowest ids, and the
-      // update's summation order is id order — deterministic across runs
-      // AND across input partitionings (stronger than the distributed path)
-      val sorted = pts.orderBy("id").collect().map(_.getSeq[Double](1))
-      pts.unpersist()
-      return lloydLocal(sorted, k, maxIter)
-    }
-
-    var cents: Array[(Int, Seq[Double])] = pts
-      .orderBy("id").limit(k).collect()
-      .zipWithIndex
-      .map { case (r, i) => (i, r.getSeq[Double](1)) }
-
-    // AQE off for the loop only, on a per-call clone (`bridge.isolated`)
-    val loopPts = bridge.isolated(pts, bridge.aqeOff)
-    var iter = 0
-    var moved = true
-    while (iter < maxIter && moved) {
-      val assigned = loopPts.select(col("v"),
-        nearestExpr(centroidLit(cents), col("v")).as("cluster"))
-      // new centroids: mean per (cluster, dim) — ONE shuffled aggregation per
-      // iteration; the k·dim result rows assemble into vectors on the driver
-      // (collecting k·dim scalars is strictly cheaper than a second shuffle
-      // to re-nest them)
-      val upd = assigned
-        .select(col("cluster"), posexplode(col("v")))
-        .groupBy("cluster", "pos").agg(avg("col").as("m"))
-        .collect()
-        .map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
-        .groupBy(_._1)
-        .map { case (cid, rows) => (cid, rows.sortBy(_._2).map(_._3).toSeq) }
-        .toArray
-        .sortBy(_._1)
-      // a cluster that loses all points keeps its previous centroid (it may
-      // re-acquire points later) — dropping it would silently shrink k and
-      // could fake convergence
-      val updByCid = upd.toMap
-      val merged = cents.map { case (cid, old) => (cid, updByCid.getOrElse(cid, old)) }
-      moved = merged.zip(cents).exists { case ((_, v), (_, old)) =>
-        v.zip(old).map { case (a, b) => math.abs(a - b) }.max > 1e-9
-      }
-      cents = merged
-      iter += 1
-    }
-    pts.unpersist()
-    cents
-  }
+      trainCap: Long = 0): Array[(Int, Seq[Double])] =
+    train(vectors, Seq(Book(1, k)), maxIter, idCol, vecCol, localThreshold,
+      localCellBudget, trainCap).head.head
 
   /** Assign each vector to its nearest centroid: (idCol, cluster). */
   def assign(vectors: DataFrame, cents: Array[(Int, Seq[Double])],
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
     graft.ops.Par.spread(vectors).select(col(idCol),
-      nearestExpr(centroidLit(cents),
-        transform(col(vecCol), _.cast("double"))).as("cluster"))
+      nearestCentroids(cents, col(vecCol), 1)(0).as("cluster"))
 
   /** Train + assign in one call. */
   def fit(vectors: DataFrame, k: Int = 4, maxIter: Int = 10,

@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.bridge
+import org.apache.spark.sql.types.StructType
 
 /** The persisted IVF (inverted-file) index, written once for both payloads
   * ([[AnnIndex]]: raw vectors, [[PqIndex]]: PQ codes): a coarse quantizer
@@ -36,7 +37,7 @@ private[ops] object IvfCore {
     * books; each a (cid, centroid) array in cid order. */
   type Quantizers = Map[Int, Array[(Int, Seq[Double])]]
 
-  private val QuantSchema = "s INT, cid INT, dim INT, x DOUBLE"
+  val QuantSchema: StructType = StructType.fromDDL("s INT, cid INT, dim INT, x DOUBLE")
   private val DeletedSchema = "did BIGINT"
 
   /** The quantizers of each directory's last saved or loaded build:
@@ -61,8 +62,9 @@ private[ops] object IvfCore {
     }
   }
 
-  /** Write quantizers as the long-form `(s, cid, dim, x)` relation at
-    * `path` — the one flattener for index and bare-codebook saves. */
+  /** Write quantizers as the long-form `(s, cid, dim, x)` relation at the
+    * fresh build path `path` — the one flattener for index and
+    * bare-codebook saves. */
   def writeQuantizers(spark: SparkSession, quant: Quantizers, path: String): Unit = {
     import spark.implicits._
     quant.toSeq.sortBy(_._1).flatMap { case (s, book) =>
@@ -70,7 +72,7 @@ private[ops] object IvfCore {
         v.zipWithIndex.map { case (x, i) => (s, cid, i, x) } } }
       .toDF("s", "cid", "dim", "x")
       .coalesce(1) // droplet-sized relation: one file, one commit
-      .write.mode("overwrite").parquet(path)
+      .write.parquet(path)
   }
 
   /** Decode the long-form quantizer relation at `path`, from one

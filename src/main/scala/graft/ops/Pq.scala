@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.bridge
 
 /** Product quantization (PQ) for the vector store — the MEMORY/IO scale
   * path for embedding search: each d-dim vector compresses to `m` small
@@ -20,11 +19,11 @@ import org.apache.spark.sql.graft.bridge
   *
   * Everything is Catalyst higher-order functions (no UDF, codegen'd); the
   * codebooks ride into the plan as literals (m·ksub·d/m = ksub·d doubles —
-  * droplet-sized). Training reuses the deterministic Lloyd trainer
-  * ([[graft.lib.KMeans.centroids]], lowest-id init); as with
-  * KMeans.centroids, the centroid means are distributed double averages,
-  * so codebooks are deterministic for a fixed partitioning but not
-  * bit-portable across engines — the 4-decimal-rounded ADC scores and the
+  * droplet-sized). Training is the deterministic Lloyd trainer
+  * ([[graft.lib.KMeans.train]], lowest-id init); on its distributed path
+  * the centroid means are distributed double averages, so codebooks are
+  * deterministic for a fixed partitioning but not bit-portable across
+  * engines — the 4-decimal-rounded ADC scores and the
   * GIVEN-a-codebook encode (a pure argmin Column expression) are what
   * reproduce exactly anywhere.
   *
@@ -38,13 +37,9 @@ object Pq {
     * subspace `s`, each centroid `dsub` doubles. */
   case class Codebooks(m: Int, dsub: Int, books: Array[Array[(Int, Seq[Double])]])
 
-  /** Train one codebook per subspace with a FUSED multi-subspace Lloyd:
-    * every iteration computes all m assignments in one projection and all
-    * m·ksub centroid updates in ONE map-side-combinable aggregation keyed
-    * (subspace, cluster, dim) — m× fewer jobs and shuffles than m
-    * independent kMeans loops, same deterministic semantics (lowest-id
-    * init, ties to the lower cid, empty clusters keep their centroid).
-    * At 100 TB pass a [[Sampling.hashSample]] of the corpus — quantizer
+  /** Train one `ksub`-centroid codebook per subspace — the quantizer
+    * trainer [[graft.lib.KMeans.train]] with one `(m, ksub)` book. At
+    * 100 TB pass a [[Sampling.hashSample]] of the corpus — quantizer
     * quality saturates at modest training sizes. `d` must divide evenly
     * into `m` subspaces. */
   def train(corpus: DataFrame, m: Int, ksub: Int = 16, maxIter: Int = 10,
@@ -53,84 +48,13 @@ object Pq {
       localCellBudget: Long = graft.lib.KMeans.defaultLocalCellBudget,
       trainCap: Long = 0): Codebooks = {
     require(m > 0 && ksub > 1, s"need m > 0, ksub > 1: m=$m ksub=$ksub")
-    val d = corpus.select(size(col(vecCol))).head().getInt(0)
-    require(d % m == 0, s"dim $d not divisible into $m subspaces")
-    val dsub = d / m
-    val pts0 = Par.spread(corpus).select(col(idCol).as("id"),
-      transform(col(vecCol), _.cast("double")).as("v")).persist()
-
-    // small training relation (the normal case — quantizer quality
-    // saturates at modest sample sizes, and at 100 TB callers pass a
-    // hashSample): run m INDEPENDENT local Lloyd loops over the collected
-    // slices — each distributed iteration costs a job plus a fresh codegen
-    // compile (centroid literals change per round), the dominant term of
-    // every index-build gate. Same semantics per subspace as the fused
-    // loop; see KMeans.lloydLocal for the ulp caveat.
-    // gate on rows AND total cells (rows × dim): row count alone would
-    // collect wide-embedding corpora (65k × dim-1536 ≈ GBs boxed) onto a
-    // driver that never previously materialized the corpus
-    val n0 = pts0.count()
-    // TRAIN-SET CAP (same rationale as KMeans.centroids): above
-    // max(256·ksub, 65536) rows (or the explicit trainCap) the
-    // subquantizers train on a DETERMINISTIC id-keyed hash sample;
-    // encoding still covers the full relation. Sub-cap relations — every
-    // sf0.01/sf0.1 gate — are bit-identical.
-    val cap = if (trainCap > 0) trainCap else math.max(256L * ksub, 65536L)
-    val (pts, n) =
-      if (n0 > cap) {
-        val s = Sampling.hashSample(pts0, col("id"), cap.toDouble / n0).persist()
-        val ns = s.count()
-        pts0.unpersist()
-        (s, ns)
-      } else (pts0, n0)
-    if (n <= localThreshold && n * d <= localCellBudget) {
-      val sorted = pts.orderBy("id").collect().map(_.getSeq[Double](1))
-      pts.unpersist()
-      val localBooks = Array.tabulate(m) { s =>
-        graft.lib.KMeans.lloydLocal(
-          sorted.map(_.slice(s * dsub, s * dsub + dsub)), ksub, maxIter)
-      }
-      return Codebooks(m, dsub, localBooks)
-    }
-
-    val seed = pts.orderBy("id").limit(ksub).collect()
-      .map(_.getSeq[Double](1))
-    var books: Array[Array[(Int, Seq[Double])]] = Array.tabulate(m)(s =>
-      seed.zipWithIndex.map { case (v, i) =>
-        (i, v.slice(s * dsub, s * dsub + dsub)) })
-    // AQE off for the loop only, on a per-call clone (`bridge.isolated`)
-    val loopPts = bridge.isolated(pts, bridge.aqeOff)
-    var iter = 0
-    var moved = true
-    try while (iter < maxIter && moved) {
-      val perSub = array((0 until m).map { s =>
-        val sub = slice(col("v"), s * dsub + 1, dsub)
-        struct(lit(s).as("s"),
-          graft.lib.KMeans.nearestCentroids(books(s), sub, 1)(0).as("cluster"),
-          sub.as("sv"))
-      }: _*)
-      val upd = loopPts.select(explode(perSub).as("e"))
-        .select(col("e.s").as("s"), col("e.cluster").as("cluster"),
-          posexplode(col("e.sv")))
-        .groupBy("s", "cluster", "pos").agg(avg("col").as("mn"))
-        .collect().map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getDouble(3)))
-      val byS = upd.groupBy(_._1)
-      val merged = Array.tabulate(m) { s =>
-        val byCid = byS.getOrElse(s, Array.empty[(Int, Int, Int, Double)])
-          .groupBy(_._2)
-        books(s).map { case (cid, old) =>
-          (cid, byCid.get(cid).map(_.sortBy(_._3).map(_._4).toSeq).getOrElse(old))
-        }
-      }
-      moved = merged.zip(books).exists { case (nb, ob) =>
-        nb.zip(ob).exists { case ((_, nv), (_, ov)) =>
-          nv.zip(ov).map { case (a, b) => math.abs(a - b) }.max > 1e-9 }
-      }
-      books = merged
-      iter += 1
-    } finally pts.unpersist() // exception-safe: a failed iteration must not pin the cache
-    Codebooks(m, dsub, books)
+    codebooks(graft.lib.KMeans.train(corpus, Seq(graft.lib.KMeans.Book(m, ksub)),
+      maxIter, idCol, vecCol, localThreshold, localCellBudget, trainCap).head)
   }
+
+  /** Codebooks from trained per-subspace books. */
+  private[ops] def codebooks(books: Array[Array[(Int, Seq[Double])]]): Codebooks =
+    Codebooks(books.length, books.head.head._2.length, books)
 
   private def dot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
@@ -169,27 +93,31 @@ object Pq {
   /** Persist trained codebooks as the long-form quantizer relation
     * `(s, cid, dim, x)` at `dir` — the `quant` layout of a saved
     * [[PqIndex]] without its coarse rows — so a bare-PQ (no IVF) deployment
-    * can reuse one trained model across sessions. Doubles roundtrip parquet
+    * can reuse one trained model across sessions. The save commits a new
+    * build through [[Record.commit]], so a save that fails part-way leaves
+    * the previous codebooks loadable. Doubles roundtrip parquet
     * bit-exactly, so encode-after-reload is code-identical to
     * encode-before-save. */
   def saveCodebooks(spark: org.apache.spark.sql.SparkSession, cb: Codebooks,
       dir: String): Unit =
-    IvfCore.writeQuantizers(spark, quantizersOf(cb), dir)
+    Record.commit(spark, dir, IvfCore.QuantSchema) { build =>
+      IvfCore.writeQuantizers(spark, quantizersOf(cb), s"$build/quant")
+    }
 
   /** Reload codebooks written by [[saveCodebooks]]. */
   def loadCodebooks(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Codebooks =
-    codebooksOf(IvfCore.readQuantizers(spark, dir))
+      dir: String): Codebooks = {
+    val r = Record.open(spark, dir, "re-save the codebooks with Pq.saveCodebooks")
+    codebooksOf(IvfCore.readQuantizers(spark, s"${r.dir(dir)}/quant"))
+  }
 
   /** Codebooks as quantizers keyed by subspace `s >= 0`. */
   private[ops] def quantizersOf(cb: Codebooks): IvfCore.Quantizers =
     cb.books.indices.map(s => s -> cb.books(s)).toMap
 
   /** Codebooks from decoded `s → (cid, centroid)*` subquantizers. */
-  private[ops] def codebooksOf(bySub: IvfCore.Quantizers): Codebooks = {
-    val books = bySub.toArray.sortBy(_._1).map(_._2)
-    Codebooks(books.length, books.head.head._2.length, books)
-  }
+  private[ops] def codebooksOf(bySub: IvfCore.Quantizers): Codebooks =
+    codebooks(bySub.toArray.sortBy(_._1).map(_._2))
 
   /** Codebook literal for the query-side LUT: cbLit(s)(cid) = centroid.
     * One typedLit Literal, not m·ksub·dsub nested lit nodes that every

@@ -302,11 +302,20 @@ object Shuffling {
   def itemIndex(items: DataFrame, itemCol: String): DataFrame =
     orderedIndex(items.select(itemCol), itemCol, "__idx")
 
+  /** Persist an [[itemIndex]] relation at `path` as a new build committed
+    * through [[Record.commit]]: a save that fails part-way leaves the
+    * previous index loadable. */
   def saveItemIndex(index: DataFrame, path: String): Unit =
-    index.write.mode("overwrite").parquet(path)
+    Record.commit(index.sparkSession, path, index.schema) { build =>
+      index.write.parquet(s"$build/items")
+    }
 
-  def loadItemIndex(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+  /** Reload an index written by [[saveItemIndex]], read with its recorded
+    * schema (no footer-inference job). */
+  def loadItemIndex(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
+    val r = Record.open(spark, path, "rebuild the index and re-save it with Shuffling.saveItemIndex")
+    spark.read.schema(r.schema).parquet(s"${r.dir(path)}/items")
+  }
 
   /** [[negativeSample]] against a PREBUILT [[itemIndex]] relation: no
     * re-ranking per call — the only per-call work on the index side is one

@@ -6,7 +6,10 @@
 # Exports <ref> with `git archive` into a temp dir and runs
 # `perfbench/run.py` on it and on this checkout, one pair per seed, in
 # alternating order (ref first on odd pairs, this checkout first on even
-# ones), with the run length BENCHMARK.json sets. Then prints, per
+# ones), with the run length BENCHMARK.json sets. Before the pairs, each
+# side makes one discarded warm-up run on the first seed, so pair 1 does
+# not pay a cold machine (file cache, first build); the warm-up runs count
+# in no median and no win. Then prints, per
 # end-to-end metric, each side's median and quartiles, the parent's IQR
 # (distance between its quartiles), the median ratio and the number of
 # pairs the change won (ties count for neither side), and the failed calls
@@ -32,14 +35,22 @@ git archive "$REF" | tar -x -C "$BASE"
 OUT="${AB_OUT:-$BASE/runs.jsonl}"
 : > "$OUT"
 
+side_dir() { if [ "$1" = ref ]; then echo "$BASE"; else pwd; fi; }
+run() { (cd "$(side_dir "$1")" && python3 perfbench/run.py --workload "$WL" \
+  --seed "$2" --seconds "$RUN_S" --trace 0 | tail -n 1); }
+
+for side in ref cur; do
+  run "$side" "$1" > /dev/null
+  echo "[ab] warm-up seed $1 $side done (discarded)" >&2
+done
+
 pair=0
 for seed in "$@"; do
   pair=$((pair + 1))
   if (( pair % 2 == 1 )); then order="ref cur"; else order="cur ref"; fi
   for side in $order; do
-    if [ "$side" = ref ]; then dir="$BASE"; else dir="$(pwd)"; fi
-    line=$(cd "$dir" && python3 perfbench/run.py --workload "$WL" --seed "$seed" \
-      --seconds "$RUN_S" --trace 0 | tail -n 1)
+    dir="$(side_dir "$side")"
+    line=$(run "$side" "$seed")
     art=$(ls -t "$dir"/.bench_build/results/"$WL"-seed"$seed"-trace0-*.json | head -n 1)
     by_name=$(python3 -c 'import json, statistics, sys
 calls = json.load(open(sys.argv[1]))["result"]["call_ms_by_name"]
@@ -67,7 +78,8 @@ def quartiles(xs):
     return q1, q2, q3
 
 
-print(f"workload {wl}: {ref} (parent) vs this checkout, {len(seeds)} pairs, seeds {seeds}")
+print(f"workload {wl}: {ref} (parent) vs this checkout, {len(seeds)} pairs, seeds {seeds}, "
+      f"after one discarded warm-up run per side")
 for m in bench["end_to_end"]:
     name, lower = m["name"], m["better"] == "lower"
     pairs = [(by[("ref", s)]["metrics"][name]["value"], by[("cur", s)]["metrics"][name]["value"])
