@@ -138,10 +138,14 @@ object KMeans {
           ns
         } else n0
       if (n <= localThreshold && n * d <= localCellBudget) {
-        // engine-sorted by id: the seed is the k lowest ids, and the
-        // update's summation order is id order — deterministic across runs
-        // AND across input partitionings (stronger than the distributed path)
-        val sorted = pts.orderBy("id").collect().map(_.getSeq[Double](1))
+        // sorted by id on the driver, in Spark's order for the id's type
+        // (the order `orderBy("id")` gives, without its sample and sort
+        // jobs): the seed is the k lowest ids, and the update's summation
+        // order is id order — deterministic across runs AND across input
+        // partitionings (stronger than the distributed path)
+        val sorted = bridge.collectRows(pts)
+          .sorted(bridge.rowOrdering(Seq(pts.schema("id").dataType)))
+          .map(r => r.getArray(1).toDoubleArray().toSeq)
         pts.unpersist()
         books.map { b =>
           val dsub = d / b.m

@@ -1,7 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Distributed BPE (byte-pair-encoding) vocabulary training.
   *
@@ -19,7 +21,9 @@ import org.apache.spark.sql.functions._
   * function — no UDF). Training stops early when no pair occurs twice.
   *
   * The learned artifact is the ranked merge table `(rank, left, right,
-  * pair_count)` — apply it with [[encode]].
+  * pair_count)` — apply it with [[encode]]. A saved tokenizer is
+  * model-sized: [[saveTokenizer]] and [[loadTokenizer]] write and read its
+  * one relation on the driver ([[DriverParquet]]) and run no Spark job.
   */
 object Bpe {
 
@@ -435,31 +439,33 @@ object Bpe {
     org.apache.spark.sql.types.StructType.fromDDL("merge BOOLEAN, i INT, a STRING, b STRING")
 
   /** Persist a trained tokenizer as a new [[Record]] build under `dir`:
-    * ONE relation, `tokenizer`, in one write job (rank order and ids are
-    * explicit columns, so the load is layout-independent); the previous
-    * build is reaped after the record is published, so a failed save
-    * leaves it readable. One writer per directory at a time. */
+    * ONE relation, `tokenizer`, one file written on the driver — no Spark
+    * job (rank order and ids are explicit columns, so the load is
+    * layout-independent); the previous build is reaped after the record is
+    * published, so a failed save leaves it readable. One writer per
+    * directory at a time. */
   def saveTokenizer(spark: org.apache.spark.sql.SparkSession, dir: String,
       mergeList: Seq[(String, String)], vocabulary: Seq[(String, Int)]): Unit = {
-    val rows = mergeList.zipWithIndex.map { case ((l, r), i) => Row(true, i, l, r) } ++
-      vocabulary.map { case (t, id) => Row(false, id, t, null) }
+    def str(s: String) = UTF8String.fromString(s)
+    val rows = mergeList.iterator.zipWithIndex.map { case ((l, r), i) =>
+      InternalRow(true, i, str(l), str(r)) } ++
+      vocabulary.iterator.map { case (t, id) => InternalRow(false, id, str(t), null) }
     Record.commit(spark, dir, TokenizerSchema) { build =>
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), TokenizerSchema)
-        .coalesce(1) // droplet-sized relation: one file, one commit
-        .write.parquet(s"$build/tokenizer")
+      DriverParquet(spark).write(TokenizerSchema, rows, s"$build/tokenizer")
     }
     ()
   }
 
   /** Reload a saved tokenizer: `(mergeList in rank order, vocabulary in id
-    * order)`, bit-identical to the saved pair. ONE scan with the recorded
-    * schema; the rows are ordered on the driver, not by a distributed sort. */
+    * order)`, bit-identical to the saved pair. ONE driver read with the
+    * recorded schema — no Spark job; the rows are ordered on the driver. */
   def loadTokenizer(spark: org.apache.spark.sql.SparkSession, dir: String)
       : (Seq[(String, String)], Seq[(String, Int)]) = {
     val r = Record.open(spark, dir, "re-save the tokenizer with Bpe.saveTokenizer")
-    val (mrows, vrows) = spark.read.schema(r.schema).parquet(s"${r.dir(dir)}/tokenizer")
-      .collect().partition(_.getBoolean(0))
-    (mrows.sortBy(_.getInt(1)).map(r => (r.getString(2), r.getString(3))).toSeq,
-      vrows.sortBy(_.getInt(1)).map(r => (r.getString(2), r.getInt(1))).toSeq)
+    val (mrows, vrows) = DriverParquet(spark).readDir(r.schema, s"${r.dir(dir)}/tokenizer")
+      .partition(_.getBoolean(0))
+    def str(r: InternalRow, i: Int) = r.getUTF8String(i).toString
+    (mrows.sortBy(_.getInt(1)).map(r => (str(r, 2), str(r, 3))).toSeq,
+      vrows.sortBy(_.getInt(1)).map(r => (str(r, 2), r.getInt(1))).toSeq)
   }
 }

@@ -1,7 +1,7 @@
 package graft.ops
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.types.StructType
@@ -16,21 +16,24 @@ import org.apache.spark.sql.types.StructType
   *  - `quant` — every quantizer as ONE long-form relation `(s, cid, dim, x)`:
   *    the coarse quantizer at `s = -1`, PQ subquantizer `s` at `s >= 0`;
   *  - the cell-partitioned table (`assigned` or `codes`);
-  *  - `deleted` — tombstoned ids, anti-joined away at load.
+  *  - `deleted` — tombstoned ids, dropped from the table at load.
   * A save (and a compaction, which is a save of the loaded index) commits
   * a new build and reaps the old one, so a failed save leaves the previous
   * index readable; appends and tombstones add files inside the published
   * build (one writer per index at a time).
   *
-  * Every read here is at most ONE planned scan, and a load right after a
-  * save costs no Spark job. A `spark.read.parquet(dir)` with no schema runs
-  * a footer-inference job first (≈100 ms of job floor for a droplet-sized
-  * relation), so `deleted` is read with the schema the code fixes and the
-  * table (whose `did` takes the corpus id's type) with the recorded one.
-  * The quantizers never change within a build, so `quant` is scanned only
-  * when the driver does not already hold them for the recorded build:
-  * [[Lifecycle.save]] writes them through to a per-directory cache, and a
-  * re-save by any process publishes a new build that misses it. */
+  * Model-sized relations never cost a Spark job: `quant` and `deleted`
+  * are written and read on the driver ([[DriverParquet]]), and an append
+  * whose batch fits the session's `spark.sql.autoBroadcastJoinThreshold`
+  * is encoded and written there too (the same expressions, evaluated over
+  * a local relation); the tombstone read at load stays on the driver while
+  * `deleted` fits the threshold. The cell-partitioned table is data-sized:
+  * it is read with its recorded schema (no footer-inference job) by Spark,
+  * and written by Spark on save. The quantizers never change within a
+  * build, so `quant` is read only when the driver does not already hold
+  * them for the recorded build: [[Lifecycle.save]] writes them through to
+  * a per-directory cache, and a re-save by any process publishes a new
+  * build that misses it. */
 private[ops] object IvfCore {
 
   /** Quantizers by subspace: `-1` the coarse quantizer, `s >= 0` the PQ
@@ -38,20 +41,15 @@ private[ops] object IvfCore {
   type Quantizers = Map[Int, Array[(Int, Seq[Double])]]
 
   val QuantSchema: StructType = StructType.fromDDL("s INT, cid INT, dim INT, x DOUBLE")
-  private val DeletedSchema = "did BIGINT"
+  private val DeletedSchema = StructType.fromDDL("did BIGINT")
 
   /** The quantizers of each directory's last saved or loaded build:
     * dir → (build id, quantizers), at most one entry per directory. */
   private val quantCache =
     new java.util.concurrent.ConcurrentHashMap[String, (String, Quantizers)]()
 
-  private def exists(spark: SparkSession, path: String): Boolean = {
-    val p = new Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
   /** The quantizers of the build `r` of the index at `dir`: from the cache
-    * when it holds that build, else one scan of `quant`. */
+    * when it holds that build, else one driver read of `quant`. */
   private def quantizersOf(spark: SparkSession, dir: String, r: Record): Quantizers = {
     val hit = quantCache.get(dir)
     if (hit != null && hit._1 == r.build) hit._2
@@ -64,21 +62,16 @@ private[ops] object IvfCore {
 
   /** Write quantizers as the long-form `(s, cid, dim, x)` relation at the
     * fresh build path `path` — the one flattener for index and
-    * bare-codebook saves. */
-  def writeQuantizers(spark: SparkSession, quant: Quantizers, path: String): Unit = {
-    import spark.implicits._
-    quant.toSeq.sortBy(_._1).flatMap { case (s, book) =>
-      book.toSeq.flatMap { case (cid, v) =>
-        v.zipWithIndex.map { case (x, i) => (s, cid, i, x) } } }
-      .toDF("s", "cid", "dim", "x")
-      .coalesce(1) // droplet-sized relation: one file, one commit
-      .write.parquet(path)
-  }
+    * bare-codebook saves: one file, written on the driver. */
+  def writeQuantizers(spark: SparkSession, quant: Quantizers, path: String): Unit =
+    DriverParquet(spark).write(QuantSchema, quant.toSeq.sortBy(_._1).iterator.flatMap {
+      case (s, book) => book.iterator.flatMap { case (cid, v) =>
+        v.iterator.zipWithIndex.map { case (x, i) => InternalRow(s, cid, i, x) } } }, path)
 
-  /** Decode the long-form quantizer relation at `path`, from one
-    * known-schema scan. */
+  /** Decode the long-form quantizer relation at `path`, read on the
+    * driver. */
   def readQuantizers(spark: SparkSession, path: String): Quantizers =
-    spark.read.schema(QuantSchema).parquet(path).collect()
+    DriverParquet(spark).readDir(QuantSchema, path)
       .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getDouble(3)))
       .groupBy(_._1).map { case (s, rs) =>
         s -> rs.groupBy(_._2).toArray.sortBy(_._1)
@@ -162,26 +155,30 @@ private[ops] object IvfCore {
       Record.open(spark, dir, "rebuild and re-save the index with " +
         s"${getClass.getSimpleName.stripSuffix("$")}.save")
 
-    /** The published build directory of the index at `dir` and the index
-      * it holds: the quantizers of the recorded build (a scan of `quant`
-      * only when the driver does not hold them), the table read with its
-      * recorded schema, and tombstoned ids ([[deleteSaved]]) dropped with a
-      * broadcast anti-join — the table files themselves are never
-      * rewritten. */
-    private def opened(spark: SparkSession, dir: String): (String, Index) = {
+    /** Reload a saved index: the quantizers of the recorded build (a read
+      * of `quant` only when the driver does not hold them), the table read
+      * with its recorded schema, and tombstoned ids ([[deleteSaved]])
+      * dropped — the table files themselves are never rewritten. When
+      * `deleted` fits the broadcast threshold its ids are read on the
+      * driver and filtered out with `NOT did IN (ids)` (an `InSet`); above
+      * it, a broadcast anti-join drops them. */
+    def load(spark: SparkSession, dir: String): Index = {
       val r = record(spark, dir)
       val build = r.dir(dir)
       val t = spark.read.schema(r.schema).parquet(s"$build/$table")
+      val io = DriverParquet(spark)
+      val tombs = io.files(s"$build/deleted")
       val live =
-        if (exists(spark, s"$build/deleted"))
+        if (tombs.isEmpty) t
+        else if (io.fits(tombs.map(f => BigInt(f.getLen)).sum)) {
+          val ids = io.read(DeletedSchema, tombs).map(_.getLong(0)).distinct
+          // a null did matches no tombstone and stays, as in the anti-join
+          t.where(!coalesce(col("did").isin(ids.toSeq: _*), lit(false)))
+        } else
           t.join(broadcast(spark.read.schema(DeletedSchema).parquet(s"$build/deleted")),
             Seq("did"), "left_anti")
-        else t
-      (build, index(quantizersOf(spark, dir, r), live))
+      index(quantizersOf(spark, dir, r), live)
     }
-
-    /** Reload a saved index: its quantizers and its live rows. */
-    def load(spark: SparkSession, dir: String): Index = opened(spark, dir)._2
 
     /** Assign a new batch against the EXISTING quantizers — the ingest
       * path. One narrow map over the batch; nothing of the corpus is
@@ -196,34 +193,43 @@ private[ops] object IvfCore {
       * quantizers and APPEND its rows to the table — only the touched cell
       * partitions gain files; existing data is never rewritten. Batch ids
       * take the index's stored id type (a lossless widening is cast;
-      * anything else fails before a file is written). */
+      * anything else fails before a file is written). A batch whose
+      * planned size fits the broadcast threshold is collected once and
+      * encoded and written on the driver, one file per touched cell. */
     def appendSaved(spark: SparkSession, dir: String, newVecs: DataFrame,
         idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-      val (build, idx) = opened(spark, dir)
-      val quant = quantizers(idx)
-      // ONE shuffle: each row moves to its cell's write task (one appended
-      // file per touched cell/task) and is encoded there, in parallel
-      // across the cells — no spreading shuffle ahead of the encode
-      Record.conform(encode(quant, cells(quant, newVecs, idCol, vecCol)
-            .repartition(col("cell"))), "did",
-          rows(idx).schema("did").dataType, "ids", s"the index at $dir")
-        .write.mode("append").partitionBy("cell").parquet(s"$build/$table")
+      val r = record(spark, dir)
+      val quant = quantizersOf(spark, dir, r)
+      val path = s"${r.dir(dir)}/$table"
+      def typed(batch: DataFrame): DataFrame = Record.conform(cells(quant, batch, idCol, vecCol),
+        "did", r.schema("did").dataType, "ids", s"the index at $dir")
+      val batch = newVecs.select(col(idCol), col(vecCol))
+      val planned = typed(batch) // a lossy id type is refused before anything runs
+      val io = DriverParquet(spark)
+      if (io.fits(batch.queryExecution.optimizedPlan.stats.sizeInBytes)) {
+        // the encode folds into the local relation: evaluated on the driver
+        val encoded = encode(quant, typed(bridge.collectLocal(batch)._2))
+        io.writePartitioned(encoded.schema, bridge.collectRows(encoded).toSeq, "cell", path)
+      } else
+        // ONE shuffle: each row moves to its cell's write task (one appended
+        // file per touched cell/task) and is encoded there, in parallel
+        // across the cells — no spreading shuffle ahead of the encode
+        encode(quant, planned.repartition(col("cell")))
+          .write.mode("append").partitionBy("cell").parquet(path)
     }
 
-    /** Tombstone vectors in a SAVED index: the ids append to the build's
-      * `deleted` relation that [[load]] anti-joins away (broadcast —
-      * tombstone sets are tiny next to the corpus); no table file is
-      * rewritten, and probes exclude the ids immediately. Reclaim the space
-      * with [[compactSaved]]. */
-    def deleteSaved(spark: SparkSession, dir: String, ids: Seq[Long]): Unit = {
-      import spark.implicits._
-      ids.toDF("did").coalesce(1)
-        .write.mode("append").parquet(s"${record(spark, dir).dir(dir)}/deleted")
-    }
+    /** Tombstone vectors in a SAVED index: the ids append, as one file
+      * written on the driver, to the build's `deleted` relation that
+      * [[load]] drops from the table; no table file is rewritten, and
+      * probes exclude the ids immediately. Reclaim the space with
+      * [[compactSaved]]. */
+    def deleteSaved(spark: SparkSession, dir: String, ids: Seq[Long]): Unit =
+      DriverParquet(spark).write(DeletedSchema, ids.iterator.map(InternalRow(_)),
+        s"${record(spark, dir).dir(dir)}/deleted")
 
-    /** Compaction: the live rows (tombstones anti-joined away) saved as a
+    /** Compaction: the live rows (tombstones dropped) saved as a
       * new build — run when the tombstone set has grown enough that the
-      * per-probe anti-join (or the dead bytes on disk) is worth reclaiming.
+      * per-probe tombstone filter (or the dead bytes on disk) is worth reclaiming.
       * The new build is written beside the one it reads, and the held
       * quantizers are written through, so the next load runs no job. */
     def compactSaved(spark: SparkSession, dir: String): Unit = save(load(spark, dir), dir)

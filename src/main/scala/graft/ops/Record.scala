@@ -8,8 +8,9 @@ import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType,
   ShortType, StructType}
 
 /** The published record of a persisted store ([[StateStore]], the IVF
-  * indexes of [[IvfCore]], the [[Bpe]] tokenizer) and the one way they all
-  * commit. Under the store directory `<dir>`:
+  * indexes of [[IvfCore]], [[Pq]] codebooks, the [[Bpe]] tokenizer, the
+  * [[Unigram]] model, the [[Shuffling]] item index) and the one way they
+  * all commit. Under the store directory `<dir>`:
   *  - `build-<id>/` holds the relations one save wrote (a fresh id per save);
   *  - `_schema.json`, the record, names the build, the main relation's
   *    schema and the store's params:

@@ -2,10 +2,11 @@ package graft.ops
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.bridge
-import org.apache.spark.sql.types.{IntegerType, StructType}
+import org.apache.spark.sql.types.StructType
 
 /** Persisted keyed state with IndexedRDD-class point updates.
   *
@@ -32,6 +33,16 @@ import org.apache.spark.sql.types.{IntegerType, StructType}
   * Contract: the state relation is UNIQUE per key, and so is each delta
   * (one decision per key per update). Lookups get the same pruning: a
   * point read opens only the buckets that can hold the probed keys.
+  *
+  * Size rule: when the touched buckets' files fit the caller's
+  * `spark.sql.autoBroadcastJoinThreshold` (the size Spark already moves
+  * through the driver for a broadcast), a lookup or an update reads them
+  * on the driver ([[DriverParquet]]) and applies the same Catalyst filter
+  * to a local relation, and an update writes its merged buckets from the
+  * driver: no Spark job at all for a local delta. Such a lookup is EAGER —
+  * it returns the rows as of the call. Above the threshold (or at `-1`)
+  * the touched buckets are a pruned Spark scan and the merge one Spark
+  * write, as described above.
   *
   * On disk: the store's [[Record]] (key column, `nBuckets`, data schema)
   * and its build directory, holding `data/bucket=<b>/`. [[create]]
@@ -71,8 +82,11 @@ object StateStore {
   private def metaOf(r: Record): Meta =
     Meta(r.params("key_col"), r.params("n_buckets").toInt)
 
+  /** The partition column of the data files. */
+  private val BucketSchema = StructType.fromDDL("bucket INT")
+
   /** The schema of the data files' scan: the recorded columns + `bucket`. */
-  private def scanSchema(r: Record): StructType = r.schema.add("bucket", IntegerType)
+  private def scanSchema(r: Record): StructType = StructType(r.schema ++ BucketSchema)
 
   /** Materialize a new store at `path`: data Hive-partitioned by bucket
     * in a new build, then the record. Replaces any existing store. */
@@ -101,24 +115,28 @@ object StateStore {
     spark.read.schema(scanSchema(r)).parquet(dataOf(r, path)).drop("bucket")
   }
 
-  /** The touched-bucket read: lists and scans ONLY the named bucket
-    * directories (basePath keeps `bucket` a partition column), so BOTH
-    * the driver-side file listing and the executor-side scan are
-    * O(touched), independent of how many buckets the store has grown to —
-    * a plain `.where(bucket IN ...)` over the store root would still
-    * prune the SCAN but pay an O(nBuckets) listing first. The recorded
-    * schema spares the footer-inference job. Returns None when none of the
-    * buckets exist yet (a delta of pure inserts into virgin buckets). */
-  private def prunedBuckets(spark: SparkSession, path: String, r: Record,
+  /** The touched buckets' rows, `(recorded columns…, bucket)`: ONE listing
+    * per named bucket directory, so the listing (and the read) is
+    * O(touched), independent of how many buckets the store has grown to.
+    * When their files fit the broadcast threshold they are read on the
+    * driver into a local relation; otherwise the frame is a Spark scan of
+    * ONLY those directories (basePath keeps `bucket` a partition column) —
+    * a plain `.where(bucket IN ...)` over the store root would still prune
+    * the SCAN but pay an O(nBuckets) listing first. The recorded schema
+    * spares the footer-inference job. None when none of the buckets hold
+    * files yet (a delta of pure inserts into virgin buckets). */
+  private def touched(spark: SparkSession, io: DriverParquet, path: String, r: Record,
       buckets: Seq[Int]): Option[DataFrame] = {
-    val f = fs(spark, new Path(path))
     val root = dataOf(r, path)
-    val dirs = buckets.sorted.map(b => s"$root/bucket=$b")
-      .filter(d => f.exists(new Path(d)))
-    if (dirs.isEmpty) None
+    val listed = buckets.sorted.map(b => b -> io.files(s"$root/bucket=$b")).filter(_._2.nonEmpty)
+    if (listed.isEmpty) None
+    else if (io.fits(listed.flatMap(_._2).map(f => BigInt(f.getLen)).sum))
+      Some(bridge.localRelation(spark, bridge.asNullable(scanSchema(r)),
+        io.read(r.schema, BucketSchema,
+          listed.flatMap { case (b, fs) => fs.map(_ -> InternalRow(b)) }).toSeq))
     else {
       val pruned = spark.read.schema(scanSchema(r)).option("basePath", root)
-        .parquet(dirs: _*)
+        .parquet(listed.map { case (b, _) => s"$root/bucket=$b" }: _*)
         .where(col("bucket").isin(buckets.map(Integer.valueOf): _*))
       lastPruned = Some(pruned)
       Some(pruned)
@@ -128,13 +146,15 @@ object StateStore {
   /** Point lookup: rows for `keys`, reading ONLY the buckets that can hold
     * them. `keys` is a driver-side point set by contract (that is what a
     * point lookup IS); each key buckets through the same portable hash the
-    * writer used, so the directory set is exact. */
+    * writer used, so the directory set is exact. When the touched buckets
+    * fit the broadcast threshold the result is EAGER: it holds the rows as
+    * of the call, read on the driver, and collecting it runs no job. */
   def lookup(spark: SparkSession, path: String, keys: Seq[Any]): DataFrame = {
     require(keys.nonEmpty, "lookup needs at least one key")
     val r = record(spark, path)
     val m = metaOf(r)
     val buckets = keys.map(k => bucketOfLocal(k.toString, m.nBuckets)).distinct
-    prunedBuckets(spark, path, r, buckets) match {
+    touched(spark, DriverParquet(spark), path, r, buckets) match {
       case Some(df) =>
         df.where(col(m.keyCol).cast("string").isin(keys.map(_.toString): _*))
           .drop("bucket")
@@ -159,7 +179,9 @@ object StateStore {
     * written). The delta is collected to the driver once (tiny by
     * contract — this is the POINT-update path; bulk rewrites should rebuild
     * with [[create]]), and its rows give the touched buckets and the
-    * replaced keys. */
+    * replaced keys. When the touched buckets fit the broadcast threshold
+    * the merge runs on the driver and each non-empty merged bucket is
+    * written as one file from there: no job for a local delta. */
   def upsert(spark: SparkSession, path: String, delta: DataFrame,
       deleteCol: Option[String] = None): Unit = {
     val r = record(spark, path)
@@ -189,27 +211,34 @@ object StateStore {
       case Some(c) => local.where(!col(c)).drop(c)
       case None    => local
     }
-    val merged = prunedBuckets(spark, path, r, buckets) match {
-      case Some(pruned) => pruned.where(!col(m.keyCol).isin(keys: _*)).unionByName(upserts)
-      case None => upserts // pure inserts into buckets that don't exist yet
-    }
-    // ONE job: the merged touched buckets write to a TEMP dir (reading the
-    // OLD bucket files — no read-your-own-write, so no materializing
-    // checkpoint job), clustered by bucket so each touched bucket gets one
-    // file per write task (store file population stays O(buckets), not
-    // O(buckets × batches)). The driver then swaps the touched bucket
-    // DIRECTORIES in: a touched bucket absent from the temp output had
-    // every key tombstoned and is simply deleted — which retires the
-    // extra "which buckets still have rows" job the previous
+    val io = DriverParquet(spark)
+    val old = touched(spark, io, path, r, buckets)
+    def kept(o: DataFrame) = o.where(!col(m.keyCol).isin(keys: _*))
+    // the merged touched buckets write to a TEMP dir (reading the OLD
+    // bucket files — no read-your-own-write, so no materializing
+    // checkpoint job), one file per touched bucket (store file population
+    // stays O(buckets), not O(buckets × batches)). The driver then swaps
+    // the touched bucket DIRECTORIES in: a touched bucket absent from the
+    // temp output had every key tombstoned and is simply deleted — which
+    // retires the extra "which buckets still have rows" job the previous
     // dynamic-partition-overwrite design needed. Per-bucket dir swap has
     // the same non-atomicity across buckets the dynamic overwrite had; its
     // temp dir lives in the build, so a re-create reaps a crash's leftovers.
     val root = dataOf(r, path)
     val tmp = s"${r.dir(path)}/.upsert_tmp_${java.util.UUID.randomUUID().toString.take(8)}"
-    // AQE off for this write only, on a per-call clone (`bridge.isolated`)
-    bridge.isolated(merged, bridge.aqeOff)
-      .repartition(buckets.size, col("bucket")).write.mode("overwrite")
-      .partitionBy("bucket").parquet(tmp)
+    old match {
+      case Some(o) if !o.isLocal =>
+        // ONE job, AQE off for this write only, on a per-call clone
+        // (`bridge.isolated`), clustered by bucket
+        bridge.isolated(kept(o).unionByName(upserts), bridge.aqeOff)
+          .repartition(buckets.size, col("bucket")).write.mode("overwrite")
+          .partitionBy("bucket").parquet(tmp)
+      case _ =>
+        // both sides fold to local relations: merged on the driver, no job
+        val merged = old.fold(Array.empty[InternalRow])(o => bridge.collectRows(kept(o))) ++
+          bridge.collectRows(upserts)
+        io.writePartitioned(upserts.schema, merged.toSeq, "bucket", tmp)
+    }
     val f = fs(spark, new Path(root))
     buckets.foreach { b =>
       val src = new Path(s"$tmp/bucket=$b")

@@ -1,7 +1,10 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Unigram-LM tokenizer (the SentencePiece algorithm family) — the other
   * production tokenizer besides [[Bpe]]: pieces carry probabilities, and a
@@ -23,6 +26,11 @@ import org.apache.spark.sql.functions._
   * identical model; encode is a pure function of (model, text). Single
   * characters are always retained, so every word segments (unseen
   * characters at encode time take a large fixed penalty as singletons).
+  *
+  * A saved model is model-sized: [[save]] commits its one `pieces`
+  * relation through a [[Record]] (a failed save leaves the previous model
+  * loadable), and both [[save]] and [[load]] write and read it on the
+  * driver ([[DriverParquet]]) — no Spark job.
   */
 object Unigram {
 
@@ -201,17 +209,28 @@ object Unigram {
       }.toDF("doc_id", "pos", "pieces")
   }
 
-  /** Persist / reload the model as one parquet relation. */
+  /** The saved relation: pieces in id order with their micro log-probs. */
+  private val PiecesSchema = StructType.fromDDL("piece STRING, id INT, logp_micros BIGINT")
+
+  /** Persist the model as a new [[Record]] build under `dir`: one
+    * `pieces` relation, one file written on the driver; the previous build
+    * is reaped after the record is published. One writer per directory at
+    * a time. */
   def save(spark: SparkSession, dir: String, model: Model): Unit = {
-    import spark.implicits._
-    model.pieces.toDF("piece", "id", "logp_micros")
-      .write.mode("overwrite").parquet(s"$dir/pieces")
+    Record.commit(spark, dir, PiecesSchema) { build =>
+      DriverParquet(spark).write(PiecesSchema, model.pieces.iterator.map { case (p, id, lp) =>
+        InternalRow(UTF8String.fromString(p), id, lp) }, s"$build/pieces")
+    }
+    ()
   }
 
-  /** The saved schema is fixed, so the read skips footer inference, and
-    * the pieces are ordered on the driver: one scan, no sort job. */
-  def load(spark: SparkSession, dir: String): Model =
-    Model(spark.read.schema("piece STRING, id INT, logp_micros BIGINT")
-      .parquet(s"$dir/pieces").collect()
-      .map(r => (r.getString(0), r.getInt(1), r.getLong(2))).sortBy(_._2).toSeq)
+  /** Reload a model saved by [[save]]: one driver read with the recorded
+    * schema, the pieces ordered on the driver — no Spark job. A directory
+    * without a current record (a model saved in the older `pieces/`-only
+    * layout) is refused, naming the save to re-run. */
+  def load(spark: SparkSession, dir: String): Model = {
+    val r = Record.open(spark, dir, "re-save the model with Unigram.save")
+    Model(DriverParquet(spark).readDir(r.schema, s"${r.dir(dir)}/pieces")
+      .map(r => (r.getUTF8String(0).toString, r.getInt(1), r.getLong(2))).sortBy(_._2).toSeq)
+  }
 }

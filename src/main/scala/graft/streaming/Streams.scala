@@ -508,9 +508,10 @@ object Streams {
         // branches below (a double scan of a micro-batch is cheaper than
         // the materializing job), and an empty batch short-circuits inside
         // upsert after its one collect — per batch the whole maintenance
-        // costs upsert's two jobs: the collect of the scored batch (its
-        // rows give the touched buckets and replaced keys) and the merged
-        // write (see StateStore.upsert)
+        // costs ONE job, the collect of the scored batch (its rows give the
+        // touched buckets and replaced keys), while the touched buckets fit
+        // the broadcast threshold and are merged and written on the driver;
+        // above it the merged write is a second job (see StateStore.upsert)
         locally {
           val df = batch.toDF()
           val spark = batch.sparkSession

@@ -1,10 +1,12 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryListenerBus
 import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.types.StructType
 
 /** Bridge into `private[sql]` Column↔Expression conversion — the standard
   * technique for libraries that add native Catalyst expressions (the public
@@ -159,20 +161,50 @@ object bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
-  /** Collect a frame as the physical rows its plan produces and re-plan
-    * them as a local relation of the same schema (fresh attributes). The
-    * driver keeps only those compact rows — no external `Row` copy with
-    * boxed fields. Runs as one SQL execution, as `collect()` does. */
-  def collectLocal(df: org.apache.spark.sql.DataFrame)
-      : (Array[org.apache.spark.sql.catalyst.InternalRow], org.apache.spark.sql.DataFrame) = {
+  /** Collect a frame as the physical rows its plan produces: the driver
+    * keeps only those compact rows — no external `Row` copy with boxed
+    * fields. Runs as one SQL execution, as `collect()` does; a plan the
+    * optimizer folds into a local relation runs no job. */
+  def collectRows(df: org.apache.spark.sql.DataFrame): Array[InternalRow] = {
     val qe = df.queryExecution
-    val rows = org.apache.spark.sql.execution.SQLExecution
+    org.apache.spark.sql.execution.SQLExecution
       .withNewExecutionId(qe, Some("collect"))(qe.executedPlan.executeCollect())
-    val attrs = org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(df.schema)
-    (rows, ofRows(df.sparkSession,
-      org.apache.spark.sql.catalyst.plans.logical.LocalRelation(attrs,
-        scala.collection.immutable.ArraySeq.unsafeWrapArray(rows))))
   }
+
+  /** [[collectRows]], with the rows re-planned as a local relation of the
+    * same schema (fresh attributes). */
+  def collectLocal(df: org.apache.spark.sql.DataFrame)
+      : (Array[InternalRow], org.apache.spark.sql.DataFrame) = {
+    val rows = collectRows(df)
+    (rows, localRelation(df.sparkSession, df.schema, rows.toSeq))
+  }
+
+  /** A frame over driver-held `rows` of `schema`: a local relation, so
+    * filters and projections over it fold on the driver
+    * (`ConvertToLocalRelation`) and its `collect()` runs no job. */
+  def localRelation(spark: org.apache.spark.sql.SparkSession, schema: StructType,
+      rows: Seq[InternalRow]): org.apache.spark.sql.DataFrame =
+    ofRows(spark, org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
+      org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema), rows))
+
+  /** `schema` with every field nullable, as a file scan reads it. */
+  def asNullable(schema: StructType): StructType = schema.asNullable
+
+  /** The session's Hadoop configuration, as its file scans and writes get
+    * it: a fresh copy of the context's with every SQL conf entry set. */
+  def hadoopConf(spark: org.apache.spark.sql.SparkSession): org.apache.hadoop.conf.Configuration =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.newHadoopConf()
+
+  /** `spark.sql.autoBroadcastJoinThreshold` in bytes, as the planner reads
+    * it: the largest relation it moves through the driver; negative: none. */
+  def broadcastThreshold(spark: org.apache.spark.sql.SparkSession): Long =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.conf
+      .autoBroadcastJoinThreshold
+
+  /** Spark's ascending order (nulls first, the order `orderBy` sorts by) of
+    * rows on their leading fields, of types `types`. */
+  def rowOrdering(types: Seq[org.apache.spark.sql.types.DataType]): Ordering[InternalRow] =
+    org.apache.spark.sql.catalyst.expressions.InterpretedOrdering.forSchema(types)
 
   def logicalPlan(df: org.apache.spark.sql.Dataset[_]): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.queryExecution.analyzed

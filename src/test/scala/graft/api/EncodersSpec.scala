@@ -6,6 +6,7 @@ import org.scalatest.flatspec.AnyFlatSpec
 import org.scalatest.matchers.should.Matchers
 
 import graft.TestSpark
+import graft.testlib.FailOnCodegenError
 
 object EncodersSpec {
   object Priority extends Enumeration {
@@ -14,8 +15,11 @@ object EncodersSpec {
 }
 
 /** Char / Enumeration encoders — the element types the reference documents as
-  * unsupported on its Spark backend (emma DataBagSpec.scala:426). */
-class EncodersSpec extends AnyFlatSpec with Matchers {
+  * unsupported on its Spark backend (emma DataBagSpec.scala:426). Every case
+  * fails if Spark's code generator logs an ERROR while it runs: generated
+  * code that does not compile falls back to interpreted evaluation and
+  * would otherwise pass unseen. */
+class EncodersSpec extends AnyFlatSpec with Matchers with FailOnCodegenError {
   import EncodersSpec.Priority
 
   implicit lazy val spark: SparkSession = TestSpark.spark

@@ -56,10 +56,14 @@ class KMeansTrainSpec extends AnyFlatSpec with Matchers {
   it should "build a local-sized index within its job ceiling" in {
     val c = corpus()
     c.count() // the input's own first-use jobs are not the build's
-    // the preparation aggregate (count and dimension) and the id-sorted
-    // collect, each a few AQE stage jobs
-    countJobs(AnnIndex.buildIvf(c, nlist = 4, maxIter = 5))._2.jobs should be <= 7
-    countJobs(PqIndex.build(c, nlist = 4, m = 4, ksub = 8, maxIter = 5))._2.jobs should be <= 7
+    // the preparation aggregate (count and dimension), a few AQE stage
+    // jobs, and one collect; the rows are sorted by id on the driver (was
+    // 7 each, with the distributed sort's sample and stage jobs)
+    val ann = countJobs(AnnIndex.buildIvf(c, nlist = 4, maxIter = 5))._2.jobs
+    val pq = countJobs(PqIndex.build(c, nlist = 4, m = 4, ksub = 8, maxIter = 5))._2.jobs
+    info(s"jobs: AnnIndex.buildIvf $ann, PqIndex.build $pq")
+    ann should be <= 5
+    pq should be <= 5
   }
 
   it should "train every book in one aggregation job per distributed iteration" in {

@@ -263,13 +263,15 @@ class BpeSpec extends AnyFlatSpec with Matchers {
       val (lms, lvoc) = Bpe.loadTokenizer(spark, dir)
       lms shouldBe ms
       lvoc shouldBe voc
-      // known schemas + driver-side ordering: one union scan (was 8 jobs:
-      // two footer inferences, two distributed sorts)
+      // one relation read on the driver with the recorded schema: no job
+      // (was 1 scan job, and 8 jobs before that: two footer inferences,
+      // two distributed sorts)
       val (_, n) = countJobs(Bpe.loadTokenizer(spark, dir))
-      n.jobs should be <= 1
-      // one relation, one write job (was 2: one per relation)
+      n.jobs shouldBe 0
+      // one relation written on the driver: no job (was 1 write job, and 2
+      // before that: one per relation)
       val (_, saved) = countJobs(Bpe.saveTokenizer(spark, dir, ms, voc))
-      saved.jobs should be <= 1
+      saved.jobs shouldBe 0
       // a shorter tokenizer saved over this one loads exactly
       ms.length shouldBe 6
       val ms3 = ms.take(3)

@@ -10,7 +10,7 @@ import org.scalatest.flatspec.AnyFlatSpec
 import org.scalatest.matchers.should.Matchers
 
 import graft.TestSpark
-import graft.testlib.Dirs
+import graft.testlib.{Dirs, OpenLogFs}
 import graft.testlib.JobCount.countJobs
 
 /** The persisted IVF index lifecycle ([[IvfCore.Lifecycle]]), run once per
@@ -27,6 +27,14 @@ abstract class IvfIndexSpec[L <: IvfCore.Lifecycle](name: String, val lc: L)
     extends AnyFlatSpec with Matchers {
 
   implicit lazy val spark: SparkSession = TestSpark.spark
+
+  /** A session on which appends and tombstone reads take the Spark path
+    * (broadcast threshold -1); the shared session runs them on the driver. */
+  private lazy val sparkOff: SparkSession = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    s
+  }
 
   /** Four tight clusters; cluster = id % 4. */
   protected def corpus(): DataFrame
@@ -173,9 +181,9 @@ abstract class IvfIndexSpec[L <: IvfCore.Lifecycle](name: String, val lc: L)
       lc.save(idx, dir)
       def dataFiles() = tableFiles(dir).map(f => f.getPath -> f.lastModified()).toMap
       val before = dataFiles()
-      // one shuffle to the cells' write tasks and the write itself (the
-      // quantizers come from the driver's cache of this build)
-      countJobs(lc.appendSaved(spark, dir, batch))._2.jobs should be <= 2
+      // a local batch is encoded and written on the driver (the
+      // quantizers come from the driver's cache of this build): no job
+      countJobs(lc.appendSaved(spark, dir, batch))._2.jobs shouldBe 0
       // the data files already saved are untouched (same path, same
       // mtime): an append only adds files to the touched cells
       val after = dataFiles()
@@ -236,23 +244,34 @@ abstract class IvfIndexSpec[L <: IvfCore.Lifecycle](name: String, val lc: L)
   s"$name load + probe" should "stay within its job ceiling" in {
     val c = corpus()
     withDir("graft_ivf_jobs") { dir =>
-      lc.save(build(c), dir)
+      val idx = build(c)
+      lc.save(idx, s"$dir/warm") // warm call: plan/codegen caches out of the measurement
+      // the quantizers are written on the driver: the table's write is
+      // the only Spark work — one job fewer than the quantizer write job
+      // it replaced (4 before)
+      countJobs(lc.save(idx, s"$dir/index"))._2.jobs should be <= 3
+      val index = s"$dir/index"
       // right after a save the driver holds the recorded build's
-      // quantizers, and the table and tombstones are read with known
-      // schemas: a load is file opens and listings, no job — was 1 (the
-      // quantizer scan), and 4 before the schema record
-      countJobs(lc.load(spark, dir))._2.jobs shouldBe 0
-      lc.deleteSaved(spark, dir, Seq(5L))
+      // quantizers, and the table is read with its recorded schema: a load
+      // is file opens and listings, no job — was 1 (the quantizer scan),
+      // and 4 before the schema record
+      countJobs(lc.load(spark, index))._2.jobs shouldBe 0
+      // a tombstone is one file written on the driver (was 1 job)
+      countJobs(lc.deleteSaved(spark, index, Seq(5L)))._2.jobs shouldBe 0
       val qs = c.where(col("vec_id") < 6)
-      def loadProbe() = probe(lc.load(spark, dir), qs, 3, 2).select("qid", "did").collect()
-      loadProbe() // warm call: plan/codegen caches out of the measurement
-      // load + probe adds one query-side collect and the scoring jobs —
-      // was 7, and 11 (raw vectors) and 13 (PQ codes) before that
+      def loadProbe() = probe(lc.load(spark, index), qs, 3, 2).select("qid", "did").collect()
+      loadProbe() // warm call
+      // load + probe adds one query-side collect and the scoring jobs; the
+      // tombstones are read on the driver and filtered by id, not
+      // broadcast for an anti-join — was 6, 7 before that, and 11 (raw
+      // vectors) and 13 (PQ codes) before that
       val (_, both) = countJobs(loadProbe())
-      both.jobs should be <= 6
-      // compaction writes the held quantizers through to its new build
-      lc.compactSaved(spark, dir)
-      countJobs(lc.load(spark, dir))._2.jobs shouldBe 0
+      both.jobs should be <= 5
+      // compaction is a save of the loaded index (was 4 jobs); it writes
+      // the held quantizers through to its new build
+      lc.compactSaved(spark, s"$dir/warm")
+      countJobs(lc.compactSaved(spark, index))._2.jobs should be <= 3
+      countJobs(lc.load(spark, index))._2.jobs shouldBe 0
     }
   }
 
@@ -281,6 +300,42 @@ abstract class IvfIndexSpec[L <: IvfCore.Lifecycle](name: String, val lc: L)
       // and no record at all
       Files.delete(record)
       refused()
+    }
+  }
+
+  s"$name appends and tombstones" should "give the same index on the driver and on Spark, touching only the batch's cells" in {
+    OpenLogFs.install(spark)
+    val c = corpus()
+    withDir("graft_ivf_paths") { root =>
+      // the batch is a small Parquet scan, as an ingest batch would be
+      c.where(col("vec_id") >= 60).write.parquet(s"$root/batch")
+      val idx = build(c.where(col("vec_id") < 60))
+      def run(s: SparkSession, dir: String) = {
+        lc.save(idx, dir)
+        val before = tableFiles(dir).map(_.getPath).toSet
+        val batch = s.read.parquet(s"$root/batch") // its schema inference is not the append's
+        val (_, appended) = countJobs(lc.appendSaved(s, s"openlog://$dir", batch))
+        val added = tableFiles(dir).filterNot(f => before(f.getPath))
+          .map(_.getParentFile.getName).toSeq
+        val (_, deleted) = countJobs(lc.deleteSaved(s, dir, Seq(3L, 61L, 62L)))
+        val (loaded, opened) = OpenLogFs.during(lc.load(s, s"openlog://$dir"))
+        (rowHashes(loaded), added, appended.jobs, deleted.jobs,
+          opened.filter(_.endsWith(".parquet")))
+      }
+      val (driver, onSpark) = (run(spark, s"$root/driver"), run(sparkOff, s"$root/spark"))
+      driver._1 shouldBe onSpark._1
+      driver._1.map(_._1).toSet shouldBe (0L until c.count()).toSet -- Seq(3L, 61L, 62L)
+      // one file per touched cell, and no file elsewhere
+      val touched = driver._1.filter(_._1 >= 60).map(r => s"cell=${r._2}")
+      driver._2.sorted shouldBe touched.distinct.sorted
+      // the batch scan's collect is the append's only job; a tombstone is
+      // one file written on the driver
+      driver._3 should be <= 1
+      driver._4 shouldBe 0
+      onSpark._3 should be <= 2
+      // the driver's load reads only the tombstone file (quantizers cached)
+      driver._5.size shouldBe 1
+      all(driver._5.toSeq) should include (s"/${new File(Dirs.build(s"$root/driver")).getName}/deleted/")
     }
   }
 

@@ -2,9 +2,9 @@ package graft.ops
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.hadoop.fs.Path
-import org.apache.hadoop.mapreduce.{JobContext, TaskAttemptContext}
-import org.apache.parquet.hadoop.ParquetOutputCommitter
+import org.apache.hadoop.fs.{FSDataOutputStream, LocalFileSystem, Path}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.StructType
 import org.scalatest.flatspec.AnyFlatSpec
@@ -14,12 +14,16 @@ import graft.TestSpark
 import graft.testlib.Dirs
 import graft.testlib.JobCount.countJobs
 
-/** A parquet write that throws once its output path is set up: past the
-  * point where an overwrite-mode write has already deleted its target. */
-class FailingParquetCommitter(out: Path, ctx: TaskAttemptContext)
-    extends ParquetOutputCommitter(out, ctx) {
-  override def setupJob(job: JobContext): Unit =
-    throw new java.io.IOException("injected write fault")
+/** A local file system whose creation of a Parquet data file throws: a
+  * write fails mid-way, after its output directory is set up (past the
+  * point where an overwrite-mode write has already deleted its target),
+  * whether Spark's tasks or the driver ([[DriverParquet]]) write the file. */
+class FailingParquetFs extends LocalFileSystem {
+  override def create(f: Path, permission: FsPermission, overwrite: Boolean,
+      bufferSize: Int, replication: Short, blockSize: Long,
+      progress: Progressable): FSDataOutputStream =
+    if (f.getName.endsWith(".parquet")) throw new java.io.IOException("injected write fault")
+    else super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
 }
 
 /** The one commit of every persisted store: a fresh build directory, the
@@ -70,11 +74,13 @@ class RecordSpec extends AnyFlatSpec with Matchers {
     refused(dir)
   }
 
-  /** A session whose parquet writes fail ([[FailingParquetCommitter]]). */
+  /** A session whose Parquet writes fail ([[FailingParquetFs]] serves its
+    * `file:` paths; the session's Hadoop configuration is what both Spark's
+    * writes and the driver's are set up with). */
   private def failingWrites(): SparkSession = {
     val s = spark.newSession()
-    s.conf.set("spark.sql.parquet.output.committer.class",
-      classOf[FailingParquetCommitter].getName)
+    s.conf.set("fs.file.impl", classOf[FailingParquetFs].getName)
+    s.conf.set("fs.file.impl.disable.cache", "true")
     s
   }
 
@@ -113,5 +119,25 @@ class RecordSpec extends AnyFlatSpec with Matchers {
     spark.range(1).write.mode("overwrite").parquet(dir)
     intercept[IllegalStateException](Shuffling.loadItemIndex(spark, dir))
       .getMessage should include ("Shuffling.saveItemIndex")
+  }
+
+  "Unigram.save" should "leave the old model loadable when its write throws, and load with no job" in {
+    val dir = tmp()
+    val model = Unigram.Model(Seq(("a", 0, -5L), ("b", 1, -7L), ("ab", 2, -9L)))
+    Unigram.save(spark, dir, model)
+    intercept[Exception](Unigram.save(failingWrites(), dir,
+      Unigram.Model(Seq(("z", 0, -1L)))))
+    val (loaded, n) = countJobs(Unigram.load(spark, dir))
+    loaded shouldBe model
+    n.jobs shouldBe 0
+  }
+
+  it should "refuse a model directory it did not commit, naming the save to re-run" in {
+    import spark.implicits._
+    val dir = tmp()
+    // the layout before the record: the pieces relation alone
+    Seq(("a", 0, -5L)).toDF("piece", "id", "logp_micros").write.parquet(s"$dir/pieces")
+    intercept[IllegalStateException](Unigram.load(spark, dir))
+      .getMessage should include ("Unigram.save")
   }
 }

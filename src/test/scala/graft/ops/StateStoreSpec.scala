@@ -9,7 +9,7 @@ import org.scalatest.flatspec.AnyFlatSpec
 import org.scalatest.matchers.should.Matchers
 
 import graft.TestSpark
-import graft.testlib.Dirs
+import graft.testlib.{Dirs, OpenLogFs}
 import graft.testlib.JobCount.countJobs
 
 /** A local file system under the `norename` scheme that refuses to rename
@@ -27,11 +27,20 @@ object NoRenameFs { @volatile var refuse = false }
 /** Persisted keyed state: point updates merge correctly AND physically
   * touch only the buckets the delta's keys hash to — the at-rest analogue
   * of the reference's IndexedRDD-backed MutableBag
-  * (emma-spark SparkMutableBag.scala:22,39-50). */
+  * (emma-spark SparkMutableBag.scala:22,39-50). The shared session runs
+  * small stores on the driver; `sparkOff`, with the broadcast threshold at
+  * -1, runs every operation on Spark. */
 class StateStoreSpec extends AnyFlatSpec with Matchers {
 
   implicit lazy val spark: SparkSession = TestSpark.spark
   import spark.implicits._
+
+  /** A session on which every store operation takes the Spark path. */
+  private lazy val sparkOff: SparkSession = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    s
+  }
 
   private def tmp(): String =
     java.nio.file.Files.createTempDirectory("graft_statespec").toString
@@ -85,34 +94,80 @@ class StateStoreSpec extends AnyFlatSpec with Matchers {
       .toMap
 
   it should "read and rewrite ONLY the touched buckets" in {
-    val dir = tmp()
-    StateStore.create((1L to 1000L).map(k => (k, k * 1.0)).toDF("k", "v"),
-      "k", 16, dir)
-    val before = snapshot(dir)
-    before.keys.size should be > 8 // enough buckets that pruning is visible
-    val touched = s"bucket=${StateStore.bucketOfLocal("17", 16)}"
-    StateStore.upsert(spark, dir,
-      Seq((17L, -1.0, false)).toDF("k", "v", "del"), Some("del"))
-    // the state read carried a planning-time partition filter on the bucket
-    StateStore.lastPrunedPlan should include regex
-      ("""PartitionFilters: \[(isnotnull\(bucket#\d+\), )?\(?bucket#\d+ (= |IN \()""")
-    val after = snapshot(dir)
-    // untouched bucket directories: identical files, untouched mtimes
-    for (b <- before.keys if b != touched) after(b) shouldBe before(b)
-    after(touched) should not be before(touched)
-    StateStore.read(spark, dir).where(col("k") === 17L)
-      .collect().head.getDouble(1) shouldBe -1.0
+    for (s <- Seq(spark, sparkOff)) {
+      val dir = tmp()
+      StateStore.create((1L to 1000L).map(k => (k, k * 1.0)).toDF("k", "v"),
+        "k", 16, dir)
+      val before = snapshot(dir)
+      before.keys.size should be > 8 // enough buckets that pruning is visible
+      val touched = s"bucket=${StateStore.bucketOfLocal("17", 16)}"
+      StateStore.upsert(s, dir,
+        Seq((17L, -1.0, false)).toDF("k", "v", "del"), Some("del"))
+      // on Spark, the state read carried a planning-time partition filter
+      // on the bucket
+      if (s eq sparkOff) StateStore.lastPrunedPlan should include regex
+        ("""PartitionFilters: \[(isnotnull\(bucket#\d+\), )?\(?bucket#\d+ (= |IN \()""")
+      val after = snapshot(dir)
+      // untouched bucket directories: identical files, untouched mtimes
+      for (b <- before.keys if b != touched) after(b) shouldBe before(b)
+      after(touched) should not be before(touched)
+      StateStore.read(spark, dir).where(col("k") === 17L)
+        .collect().head.getDouble(1) shouldBe -1.0
+    }
   }
 
   it should "prune lookups to the probed keys' buckets" in {
     val dir = tmp()
     StateStore.create((1L to 500L).map(k => (k, k * 2.0)).toDF("k", "v"),
       "k", 32, dir)
-    StateStore.lookup(spark, dir, Seq(3L, 77L)).collect()
-      .map(r => (r.getLong(0), r.getDouble(1))).toSet shouldBe
-      Set((3L, 6.0), (77L, 154.0))
+    for (s <- Seq(spark, sparkOff))
+      StateStore.lookup(s, dir, Seq(3L, 77L)).collect()
+        .map(r => (r.getLong(0), r.getDouble(1))).toSet shouldBe
+        Set((3L, 6.0), (77L, 154.0))
     StateStore.lastPrunedPlan should include regex
       ("""PartitionFilters: \[(isnotnull\(bucket#\d+\), )?\(?bucket#\d+ (= |IN \()""")
+  }
+
+  it should "give the same results and stores on the driver and on Spark, reading only touched buckets" in {
+    OpenLogFs.install(spark)
+    val keys = 1L to 200L
+    val doomed = keys.filter(k => StateStore.bucketOfLocal(k.toString, 8) == 3)
+    // replaces, a delete and an insert; a delta that tombstones every key
+    // of bucket 3; an insert into the emptied bucket
+    val deltas = Seq(
+      Seq((5L, 50.0, false), (6L, 0.0, true), (300L, 3.0, false)),
+      doomed.map(k => (k, 0.0, true)),
+      Seq((doomed.head, 9.0, false), (7L, 70.0, false)))
+    val probes = Seq(5L, 6L, 7L, 300L, doomed.head, doomed.last)
+    def bucketOf(f: String) = f.split('/').find(_.startsWith("bucket=")).map(_.stripPrefix("bucket="))
+    def run(s: SparkSession): (Seq[Set[(Long, Double)]], Set[(Long, Double)], Set[String]) = {
+      val dir = tmp()
+      val store = s"openlog://$dir"
+      StateStore.create(keys.map(k => (k, k * 1.0)).toDF("k", "v"), "k", 8, store)
+      val lookups = deltas.zipWithIndex.map { case (d, i) =>
+        val (_, upsertOpened) = OpenLogFs.during(
+          StateStore.upsert(s, store, d.toDF("k", "v", "del"), Some("del")))
+        // the fully tombstoned bucket's directory is gone
+        if (i == 1) snapshot(dir).keySet should not contain "bucket=3"
+        val (got, lookupOpened) = OpenLogFs.during(StateStore.lookup(s, store, probes).collect()
+          .map(r => (r.getLong(0), r.getDouble(1))).toSet)
+        if (s eq spark) {
+          // the driver path opens only the touched buckets' data files
+          val touched = d.map(r => StateStore.bucketOfLocal(r._1.toString, 8).toString).toSet
+          (upsertOpened.filter(_.endsWith(".parquet")).flatMap(bucketOf) -- touched) shouldBe empty
+          val probed = probes.map(k => StateStore.bucketOfLocal(k.toString, 8).toString).toSet
+          val read = lookupOpened.filter(_.endsWith(".parquet"))
+          read should not be empty
+          (read.flatMap(bucketOf) -- probed) shouldBe empty
+        }
+        got
+      }
+      (lookups, StateStore.read(spark, dir).collect().map(r => (r.getLong(0), r.getDouble(1))).toSet,
+        snapshot(dir).keySet)
+    }
+    val (driver, onSpark) = (run(spark), run(sparkOff))
+    driver shouldBe onSpark
+    driver._1(1).map(_._1) shouldBe Set(5L, 7L, 300L) -- doomed
   }
 
   it should "clear a bucket whose every key was tombstoned" in {
@@ -157,34 +212,49 @@ class StateStoreSpec extends AnyFlatSpec with Matchers {
 
   it should "run a warm point update in at most 1 job" in {
     // the per-micro-batch floor of the streaming maintenance paths: the
-    // record is a file open, the scan uses its schema (no footer
-    // inference), a local delta is read on the driver without a job, and
-    // its rows give the touched buckets and replaced keys (no bucket
-    // probe, no delta cache, no anti-join build) — what remains is the ONE
-    // pinned-partitioning write. Was 6 jobs, and 11 before that.
-    val dir = tmp()
-    StateStore.create((1L to 500L).map(k => (k, k * 1.0)).toDF("k", "v"),
-      "k", 16, dir)
-    // warm call: plan/codegen caches out of the measurement
-    StateStore.upsert(spark, dir, (1L to 30L).map(k => (k, 2.0)).toDF("k", "v"))
-    val (_, n) = countJobs {
-      StateStore.upsert(spark, dir, (5L to 40L).map(k => (k, 3.0)).toDF("k", "v"))
+    // record is a file open, a local delta is read on the driver without a
+    // job, and its rows give the touched buckets and replaced keys (no
+    // bucket probe, no delta cache, no anti-join build). The touched
+    // buckets fit the broadcast threshold, so they are read, merged and
+    // written on the driver: no job (was 1, 6 and 11 before that). On
+    // Spark, what remains is the ONE pinned-partitioning write.
+    for ((s, ceiling) <- Seq(spark -> 0, sparkOff -> 1)) {
+      val dir = tmp()
+      StateStore.create((1L to 500L).map(k => (k, k * 1.0)).toDF("k", "v"),
+        "k", 16, dir)
+      // warm call: plan/codegen caches out of the measurement
+      StateStore.upsert(s, dir, (1L to 30L).map(k => (k, 2.0)).toDF("k", "v"))
+      val (_, n) = countJobs {
+        StateStore.upsert(s, dir, (5L to 40L).map(k => (k, 3.0)).toDF("k", "v"))
+      }
+      n.jobs should be <= ceiling
+      StateStore.read(spark, dir).collect()
+        .map(r => (r.getLong(0), r.getDouble(1))).toMap.apply(20L) shouldBe 3.0
     }
-    n.jobs should be <= 1
-    StateStore.read(spark, dir).collect()
-      .map(r => (r.getLong(0), r.getDouble(1))).toMap.apply(20L) shouldBe 3.0
   }
 
   it should "run a warm point lookup in at most 1 job" in {
     val dir = tmp()
     StateStore.create((1L to 500L).map(k => (k, k * 2.0)).toDF("k", "v"),
       "k", 16, dir)
-    StateStore.lookup(spark, dir, Seq(1L, 2L)).collect() // warm call
-    // the record is a file open and the scan carries its schema: the
-    // collect is the only job
-    val (got, n) = countJobs(StateStore.lookup(spark, dir, Seq(7L, 300L)).collect())
-    n.jobs should be <= 1
-    got.map(r => (r.getLong(0), r.getDouble(1))).toSet shouldBe Set((7L, 14.0), (300L, 600.0))
+    // on the driver the lookup's frame is a local relation: its collect
+    // runs no job; on Spark the record is a file open and the scan carries
+    // its schema, so the collect is the only job
+    for ((s, ceiling) <- Seq(spark -> 0, sparkOff -> 1)) {
+      StateStore.lookup(s, dir, Seq(1L, 2L)).collect() // warm call
+      val (got, n) = countJobs(StateStore.lookup(s, dir, Seq(7L, 300L)).collect())
+      n.jobs should be <= ceiling
+      got.map(r => (r.getLong(0), r.getDouble(1))).toSet shouldBe Set((7L, 14.0), (300L, 600.0))
+    }
+  }
+
+  it should "return the rows as of the call from a driver-side lookup" in {
+    val dir = tmp()
+    StateStore.create((1L to 50L).map(k => (k, k * 1.0)).toDF("k", "v"), "k", 4, dir)
+    val early = StateStore.lookup(spark, dir, Seq(9L))
+    StateStore.upsert(spark, dir, Seq((9L, -9.0)).toDF("k", "v"))
+    early.collect().map(_.getDouble(1)) shouldBe Array(9.0)
+    StateStore.lookup(spark, dir, Seq(9L)).collect().map(_.getDouble(1)) shouldBe Array(-9.0)
   }
 
   it should "see a store re-created by another process under the same path" in {
@@ -323,11 +393,11 @@ class StateStoreSpec extends AnyFlatSpec with Matchers {
       }
       def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
     }
-    spark.listenerManager.register(l)
+    sparkOff.listenerManager.register(l)
     try {
-      StateStore.upsert(spark, dir, (1L to 5L).map(k => (k, 0.0)).toDF("k", "v"))
+      StateStore.upsert(sparkOff, dir, (1L to 5L).map(k => (k, 0.0)).toDF("k", "v"))
       org.apache.spark.GraftTestListenerBus.drain(spark.sparkContext)
-    } finally spark.listenerManager.unregister(l)
+    } finally sparkOff.listenerManager.unregister(l)
     import scala.jdk.CollectionConverters._
     seen.asScala.exists(_.contains(".upsert_tmp_")) shouldBe true
   }

@@ -399,8 +399,10 @@ class StreamsSpec extends AnyFlatSpec with Matchers {
     }
     StateStore.read(spark, s"$base/store").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap shouldBe replay.toMap
-    // per one-file micro-batch: the collect of the scored batch and the
-    // merged write (the second run is warm)
-    jobs(1) should be <= 2
+    // per one-file micro-batch: the collect of the scored batch; the
+    // touched buckets are merged and written on the driver (the merged
+    // write was a second job; the second run is warm)
+    info(s"jobs per batch: ${jobs.mkString(", ")}")
+    jobs(1) should be <= 1
   }
 }
