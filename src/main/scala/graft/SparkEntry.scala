@@ -64,6 +64,14 @@ object SparkEntry {
     }
   }
 
+  /** `df` on a per-call session clone whose broadcast threshold fits `n`
+    * of its rows on the driver (Spark's per-row estimate): pins a gate's
+    * driver-or-cluster boundary (`bridge.fits`) at a row count. */
+  private def fittingRows(df: DataFrame, n: Long): DataFrame =
+    org.apache.spark.sql.graft.bridge.isolated(df,
+      org.apache.spark.sql.graft.bridge.driverBytes(
+        n * org.apache.spark.sql.graft.bridge.rowBytes(df).toLong))
+
   /** One BOUNDED per-(sf dir, tag, live JVM) staging base — subdirs of
     * DEAD JVMs are reaped here, so the population stays bounded by the
     * number of live graft JVMs — NOT cleared on re-entry: gates stage IMMUTABLE derived source files once per JVM behind `_done`
@@ -1776,10 +1784,12 @@ object SparkEntry {
       val slice = corpus.where(col("doc_id") % 10 === 0)
       val parity50 = !BenchMode.witnesses ||
         chk(Bpe.encode(slice, m50)) == chk(Bpe.encodeFast(slice, m50))
-      // localThreshold=0 forces the DISTRIBUTED loop: the twin witness must
-      // exercise a different code path than trainLocal, or it's vacuous
+      // the broadcast threshold at -1 (on a per-call clone) forces the
+      // DISTRIBUTED loop: the twin witness must exercise a different code
+      // path than trainLocal, or it's vacuous
       val twinOk = !BenchMode.witnesses || {
-        val (mDist, _) = Bpe.train(corpus, numMerges = 8, localThreshold = 0)
+        val (mDist, _) = Bpe.train(org.apache.spark.sql.graft.bridge.isolated(corpus,
+          org.apache.spark.sql.graft.bridge.driverBytes(-1)), numMerges = 8)
         mDist.orderBy("rank").collect()
           .map(r => (r.getString(1), r.getString(2))).toSeq == ms.take(8)
       }
@@ -3822,9 +3832,11 @@ object SparkEntry {
           expr("CAST(floor(c_acctbal*100 + 0.5) AS BIGINT)").as("cents"))
         .as[(Long, Long)])
       val pb = graft.api.PointBag(state, parts = 32)
-      val delta = DataBag.from(tbl(s, d, "orders")
+      // the delta's session fits 10,000 of its rows on the driver, so every
+      // scale's orders (15,000 rows at sf0.01) take the zip path
+      val delta = DataBag.from(fittingRows(tbl(s, d, "orders")
         .select(col("o_custkey"),
-          expr("CAST(floor(o_totalprice*100 + 0.5) AS BIGINT)").as("m"))
+          expr("CAST(floor(o_totalprice*100 + 0.5) AS BIGINT)").as("m")), 10000)
         .as[(Long, Long)])
       pb.updateBag(delta)((_, old, m) => Some(old.getOrElse(0L) + m))
       pb.bag().ds.toDF("c_custkey", "cents")
@@ -4133,9 +4145,12 @@ object SparkEntry {
           .parquet(srcBase.resolve("src").toString)
         java.nio.file.Files.createFile(srcBase.resolve("_done"))
       }
-      val stream = s.readStream.schema(deltas.schema)
+      // the batches' session fits 10,000 of their rows on the driver: a
+      // half of sf0.01's orders (7,500 rows) takes point rounds, of
+      // sf0.1's (75,000) the zip path
+      val stream = fittingRows(s.readStream.schema(deltas.schema)
         .option("maxFilesPerTrigger", "1")
-        .parquet(srcBase.resolve("src").toString)
+        .parquet(srcBase.resolve("src").toString), 10000)
       graft.streaming.Streams.streamPointBagMaintenance[Long, Long, Long](
         stream, pb,
         df => df.select(col("o_custkey"), col("m")).as[(Long, Long)])(

@@ -47,33 +47,50 @@ object Iterate {
   private def truncate[A](ds: Dataset[A]): Dataset[A] =
     bridge.dropOriginStatsTyped(ds.localCheckpoint(true))
 
-  /** `minRounds`: skip the (potentially expensive) convergence check for the
-    * first rounds an algorithm is known to need — e.g. alternating-star CC
-    * never converges in round 1, so checking there only burns jobs. */
-  def fixpoint[A](init: Dataset[A], maxIter: Int = 100, checkpointEvery: Int = 1,
-      minRounds: Int = 1)(
-      step: Dataset[A] => Dataset[A])(
-      converged: (Dataset[A], Dataset[A]) => Boolean): Dataset[A] = {
+  /** The one fixpoint loop behind the three public forms. Persists `init`
+    * and measures it when `measureInit`; each round steps, truncates the
+    * result every `checkpointEvery` rounds (else persists it), measures it
+    * with `measure` and stops when `converged(previous, next, round)` holds
+    * — a previous measure exists only when `init` was measured or from
+    * round 2 on. The state a round replaces is freed, except the caller's
+    * `init`; a persist the loop put on `init` is undone once it has moved
+    * past it. */
+  private def loop[A, S](init: Dataset[A], maxIter: Int, checkpointEvery: Int,
+      measureInit: Boolean)(step: Dataset[A] => Dataset[A])(measure: Dataset[A] => S)(
+      converged: (S, S, Int) => Boolean): Dataset[A] = {
     // If the caller already persisted init, they own its storage; only a
     // persist WE added may be undone once the loop has moved past init.
     val initSelfPersisted = init.storageLevel == StorageLevel.NONE
     var cur = init.persist(StorageLevel.MEMORY_AND_DISK)
+    var last: Option[S] = if (measureInit) Some(measure(cur)) else None
     var i = 0
     var done = false
     while (!done && i < maxIter) {
       var next = step(cur)
       next = if ((i + 1) % checkpointEvery == 0) truncate(next)
              else next.persist(StorageLevel.MEMORY_AND_DISK)
-      done = i + 1 >= minRounds && converged(cur, next)
+      val m = measure(next)
+      done = last.exists(converged(_, m, i + 1))
       // Never free the caller's init mid-loop (persist() returned the same
       // object): the caller may still be using it.
       if (!(cur eq init)) free(cur)
       cur = next
+      last = Some(m)
       i += 1
     }
     if (!(cur eq init) && initSelfPersisted) init.unpersist()
     cur
   }
+
+  /** `minRounds`: skip the (potentially expensive) convergence check for the
+    * first rounds an algorithm is known to need — e.g. alternating-star CC
+    * never converges in round 1, so checking there only burns jobs. */
+  def fixpoint[A](init: Dataset[A], maxIter: Int = 100, checkpointEvery: Int = 1,
+      minRounds: Int = 1)(
+      step: Dataset[A] => Dataset[A])(
+      converged: (Dataset[A], Dataset[A]) => Boolean): Dataset[A] =
+    loop(init, maxIter, checkpointEvery, measureInit = true)(step)(identity)(
+      (cur, next, round) => round >= minRounds && converged(cur, next))
 
   /** Fixpoint converging when a caller-supplied DIGEST of the state stops
     * changing. The digest (e.g. `(count, bit_xor(hash(cols)))`) is ONE small
@@ -82,51 +99,22 @@ object Iterate {
     * (two extra shuffles per round, which dominates iterative algorithms once
     * the state is small). Digest equality is probabilistic in principle
     * (a 64-bit hash-set collision, ~2⁻⁶⁴ per round) and exact in practice.
+    * The digest of `init` is taken only when convergence can trigger in
+    * round 1 (`minRounds <= 1`).
     */
   def fixpointDigest[A](init: Dataset[A], maxIter: Int = 100,
       checkpointEvery: Int = 1, minRounds: Int = 1)(
       step: Dataset[A] => Dataset[A])(
-      digest: Dataset[A] => Seq[Any]): Dataset[A] = {
-    val initSelfPersisted = init.storageLevel == StorageLevel.NONE
-    var cur = init.persist(StorageLevel.MEMORY_AND_DISK)
-    // Only pay for the init digest if convergence can trigger in round 1.
-    var curDig: Seq[Any] = if (minRounds <= 1) digest(cur) else null
-    var i = 0
-    var done = false
-    while (!done && i < maxIter) {
-      var next = step(cur)
-      next = if ((i + 1) % checkpointEvery == 0) truncate(next)
-             else next.persist(StorageLevel.MEMORY_AND_DISK)
-      val nextDig = digest(next)
-      done = i + 1 >= minRounds && curDig != null && curDig == nextDig
-      if (!(cur eq init)) free(cur)
-      cur = next
-      curDig = nextDig
-      i += 1
-    }
-    if (!(cur eq init) && initSelfPersisted) init.unpersist()
-    cur
-  }
+      digest: Dataset[A] => Seq[Any]): Dataset[A] =
+    loop(init, maxIter, checkpointEvery, measureInit = minRounds <= 1)(step)(digest)(
+      (prev, next, round) => round >= minRounds && prev == next)
 
   /** Fixpoint on bags, converging when the size stops changing (the shape of
-    * the reference's transitiveClosure loop, lib/graphs/transitiveClosure.scala:22-44). */
+    * the reference's transitiveClosure loop, lib/graphs/transitiveClosure.scala:22-44).
+    * Truncates every round. */
   def fixpointBySize[A](init: DataBag[A], maxIter: Int = 100)(
-      step: DataBag[A] => DataBag[A]): DataBag[A] = {
-    val initSelfPersisted = init.ds.storageLevel == StorageLevel.NONE
-    var cur = init.cache()
-    var n = cur.size
-    var i = 0
-    var done = false
-    while (!done && i < maxIter) {
-      val next = DataBag.from(truncate(step(cur).ds))
-      val m = next.size
-      done = m == n
-      if (!(cur.ds eq init.ds)) free(cur.ds)
-      cur = next
-      n = m
-      i += 1
-    }
-    if (!(cur.ds eq init.ds) && initSelfPersisted) init.ds.unpersist()
-    cur
-  }
+      step: DataBag[A] => DataBag[A]): DataBag[A] =
+    DataBag.from(loop(init.ds, maxIter, checkpointEvery = 1, measureInit = true)(
+      ds => step(DataBag.from(ds)).ds)(ds => DataBag.from(ds).size)(
+      (n, m, _) => n == m))
 }

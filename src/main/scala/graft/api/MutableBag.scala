@@ -38,19 +38,6 @@ final class MutableBag[K, V] private (
 
   private implicit val kvEnc: Encoder[(K, V)] = Encoders.tuple(encK, encV)
 
-  /** The most recent [[update]]'s cogroup dataset — a debug / spec hook
-    * (its executedPlan proves the state side planned without an
-    * Exchange). OPT-IN via [[capturePlans]]: holding the cogroup dataset
-    * pins the PREVIOUS round's state lineage (its checkpoint blocks
-    * can't be reclaimed until the hook is overwritten), so production
-    * rounds must not pay that extra live state copy; a spec flips the
-    * flag and then reads the plan lazily (no extra planning pass until
-    * read). */
-  private[graft] var capturePlans: Boolean = false
-  private[graft] var lastUpdate: Option[Dataset[_]] = None
-  private[graft] def lastUpdatePlan: String =
-    lastUpdate.map(_.queryExecution.executedPlan.toString).getOrElse("")
-
   def update[M](ms: DataBag[Group[K, M]])(f: (K, Option[V], M) => Option[V])(
       implicit encM: Encoder[M]): DataBag[(K, V)] = {
     val kmEnc: Encoder[(K, M)] = Encoders.tuple(encK, encM)
@@ -80,7 +67,6 @@ final class MutableBag[K, V] private (
           else olds.iterator.map(v => (k, v, false))
         }
     }(kvdEnc)
-    lastUpdate = if (capturePlans) Some(combined) else None
 
     // checkpoint (not just persist) AND drop origin stats: callers feed the
     // returned delta into the NEXT round's messages, so an un-truncated

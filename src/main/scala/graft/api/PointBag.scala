@@ -3,6 +3,7 @@ package graft.api
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.{PartitionPruningRDD, RDD}
 import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.graft.bridge
 
 import scala.reflect.ClassTag
 
@@ -137,30 +138,28 @@ final class PointBag[K, V] private (
     * the state side never shuffles (its blocks stay put; the ONLY
     * ShuffledRDD in the new state's lineage is the delta's), closing the
     * reference's IndexedRDD `multiputRDD` gap (SparkMutableBag.scala:39-50)
-    * for deltas too large for the driver. Deltas at or below
-    * `localThreshold` rows short-circuit to the driver-routed [[update]]
-    * (probed with one `limit(threshold+1)` job — no count), whose
-    * follow-up reads prune to the touched partitions.
+    * for deltas too large for the driver. A delta that fits the driver —
+    * the bounded collect `bridge.collectIfFits` under the messages'
+    * session's broadcast threshold — short-circuits to the driver-routed
+    * [[update]] (one `limit(cap + 1)` job, no count), whose follow-up
+    * reads prune to the touched partitions. At `-1` no collect runs and
+    * the delta goes straight to the zip-partitions path.
     *
     * Message application order within one key follows the delta's
     * post-shuffle partition order, which is NOT deterministic across runs
     * — pre-aggregate per key upstream or use an order-insensitive `f`
     * (same contract as [[MutableBag.update]]'s grouped messages). */
-  def updateBag[M](msgs: DataBag[(K, M)], localThreshold: Int = 10000)(
-      f: (K, Option[V], M) => Option[V]): Unit = {
-    // the probe evaluates the delta pipeline once; a LARGE delta then
-    // re-evaluates it for the shuffle. When the caller already knows the
-    // delta is big (or it is expensive to compute twice), pass
-    // localThreshold < 0 to skip the probe and go straight to the
-    // zip-partitions path — or persist the delta upstream.
-    if (localThreshold >= 0) {
-      val probe = msgs.ds.limit(localThreshold + 1).collect()
-      if (probe.length <= localThreshold) {
+  def updateBag[M](msgs: DataBag[(K, M)])(f: (K, Option[V], M) => Option[V]): Unit = {
+    // the bounded collect evaluates the delta pipeline once; a LARGE delta
+    // then re-evaluates it for the shuffle — persist an expensive delta
+    // upstream
+    bridge.collectIfFits(msgs.ds) match {
+      case Some(probe) =>
         // no read-back: updateBag returns Unit, so the small path costs
-        // ZERO jobs beyond this probe (the state advances lazily)
+        // ZERO jobs beyond the collect (the state advances lazily)
         if (probe.nonEmpty) { val _ = applyMsgs(probe.toSeq)(f) }
         return
-      }
+      case None =>
     }
     implicit val kTag: ClassTag[K] = ClassTag.AnyRef.asInstanceOf[ClassTag[K]]
     implicit val mTag: ClassTag[M] = ClassTag.AnyRef.asInstanceOf[ClassTag[M]]

@@ -63,9 +63,6 @@ object RuntimeQuotation {
   }
   private val counter = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** Last jar handed to addJar — debug/spec hook. */
-  private[graft] var lastJar: Option[Path] = None
-
   /** Number of ACTUAL scalac runs (cache misses) — spec/telemetry hook. */
   private[graft] val compilations = new java.util.concurrent.atomic.AtomicInteger(0)
 
@@ -250,9 +247,7 @@ object RuntimeQuotation {
         .filter(_.severity == c.reporter.ERROR)
         .map(i => s"${i.pos.showError(i.msg)}").mkString("\n"))
 
-    val jar = jarOf(snippetDir, n)
-    lastJar = Some(jar)
-    Compiled(cls, snippetDir, jar,
+    Compiled(cls, snippetDir, jarOf(snippetDir, n),
       new java.util.WeakHashMap[SparkSession, java.lang.Boolean])
   }
 
@@ -273,7 +268,6 @@ object RuntimeQuotation {
     * needs no extra locking). */
   private def register(entry: Compiled, spark: SparkSession): Unit = {
     if (entry.registered.put(spark, java.lang.Boolean.TRUE) == null) {
-      lastJar = Some(entry.jar)
       val isolated = spark.conf
         .get("spark.sql.artifact.isolation.enabled", "true").toBoolean
       if (isolated) spark.addArtifact(entry.jar.toString)

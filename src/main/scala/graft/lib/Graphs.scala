@@ -2,6 +2,7 @@ package graft.lib
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.bridge
 
 import graft.api.{DataBag, Group, Iterate, MutableBag}
 
@@ -180,7 +181,7 @@ object Graphs {
         .select(col("vertex"),
           (base + expr("(85 * coalesce(s, cast(0 as bigint))) div 100")).as("r"))
         .localCheckpoint(true)
-      org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(rank)
+      bridge.freeLocalCheckpoint(rank)
       rank = next
     }
     rank.select(col("vertex"), col("r").as("rank_scaled"))
@@ -190,14 +191,15 @@ object Graphs {
     * reference's formulation (ConnectedComponents.scala:27-53): seed state
     * with vertex→vertex, then push min labels along edges until no update.
     *
-    * Adaptive tail: once the per-round delta falls under
-    * `broadcastThreshold` vertices, rounds switch from the cogroup update
-    * (two shuffles) to [[MutableBag.updateBroadcast]] point updates (zero
-    * shuffles) — on long-diameter graphs most rounds are small-delta tail,
-    * so the fixpoint's shuffle count is bounded by the few wide rounds. */
+    * Adaptive tail: once the per-round delta fits the driver (its counted
+    * rows times Spark's per-row estimate, under the session's broadcast
+    * threshold: `bridge.fits`; `-1`: never), rounds switch from the cogroup
+    * update (two shuffles) to [[MutableBag.updateBroadcast]] point updates
+    * (zero shuffles) — on long-diameter graphs most rounds are small-delta
+    * tail, so the fixpoint's shuffle count is bounded by the few wide
+    * rounds. */
   def connectedComponentsMutable(
-      edges: Dataset[(Long, Long)], spark: SparkSession,
-      broadcastThreshold: Long = 10000L): Dataset[(Long, Long)] = {
+      edges: Dataset[(Long, Long)], spark: SparkSession): Dataset[(Long, Long)] = {
     import spark.implicits._
     val und = DataBag.from(edges.union(edges.map(e => (e._2, e._1))).distinct().cache())
     val vertices = und.map(_._1).distinct
@@ -216,7 +218,7 @@ object Graphs {
         .map { case ((_, lbl), (_, dst)) => (dst, lbl) }
         .foldGroup[Long, Long](_._1, graft.api.alg.Fold(Long.MaxValue, _._2, math.min))
       delta =
-        if (n <= broadcastThreshold) state.updateBroadcast(msgs)(f)
+        if (bridge.fits(spark, BigInt(n) * bridge.rowBytes(delta.ds))) state.updateBroadcast(msgs)(f)
         else state.update(msgs)(f)
       n = delta.size
     }
@@ -250,7 +252,7 @@ object Graphs {
       val next = dist.union(relaxed)
         .groupBy("vertex").agg(min("d").as("d"))
         .localCheckpoint()
-      org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(dist)
+      bridge.freeLocalCheckpoint(dist)
       dist = next
     }
     e.unpersist()
@@ -273,7 +275,6 @@ object Graphs {
     */
   def bfsHops(edges: DataFrame, sources: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
-    val bridge = org.apache.spark.sql.graft.bridge
     val e = edges.select(col("src"), col("dst")).distinct()
       .repartition(col("src")).persist()
     e.count() // materialize once before the loop

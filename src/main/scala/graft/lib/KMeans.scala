@@ -24,12 +24,6 @@ import org.apache.spark.sql.graft.bridge
   */
 object KMeans {
 
-  /** Cap on rows × dim for the driver-side training path of [[train]]:
-    * ~32M doubles ≈ 256 MB unboxed, a safe driver collect even after
-    * Row/Seq boxing. Row count alone is the wrong gate — 65k rows of
-    * dim-1536 embeddings are GBs. */
-  val defaultLocalCellBudget: Long = 32L * 1024 * 1024
-
   /** Squared euclidean distance from a centroid vector Column to `v`. */
   private[graft] def distToCentroid(c: Column, v: Column): Column =
     aggregate(zip_with(v, c, (x, y) => (x.cast("double") - y) * (x.cast("double") - y)),
@@ -111,16 +105,16 @@ object KMeans {
     * Callers assign or encode the full relation separately; sub-cap
     * relations train on every row.
     *
-    * When the training set is small (`<= localThreshold` rows AND
-    * `<= localCellBudget` rows × dim — the normal case; row count alone
-    * would collect a wide-embedding corpus onto the driver) it is collected
-    * in id order and each slice runs [[lloydLocal]]: a distributed iteration
+    * When the training set's doubles (rows × dim × 8 bytes, from the
+    * preparation aggregate) fit the driver by the session's broadcast
+    * threshold (`bridge.fits`; `-1`: never) — the normal case; a row count
+    * alone would collect a wide-embedding corpus — it is collected in id
+    * order and each slice runs [[lloydLocal]]: a distributed iteration
     * costs a job plus a fresh codegen compile (the centroid literals change
     * every round), the dominant term of every index-build gate. Otherwise
     * one distributed loop trains every book at once. */
   private[graft] def train(vectors: DataFrame, books: Seq[Book], maxIter: Int,
-      idCol: String, vecCol: String, localThreshold: Long = 65536,
-      localCellBudget: Long = defaultLocalCellBudget,
+      idCol: String, vecCol: String,
       trainCap: Long = 0): Seq[Array[Array[(Int, Seq[Double])]]] = {
     val pts0 = graft.ops.Par.spread(vectors).select(col(idCol).as("id"),
       transform(col(vecCol), _.cast("double")).as("v")).persist()
@@ -137,7 +131,7 @@ object KMeans {
           pts0.unpersist()
           ns
         } else n0
-      if (n <= localThreshold && n * d <= localCellBudget) {
+      if (bridge.fits(pts.sparkSession, BigInt(n) * d * 8)) {
         // sorted by id on the driver, in Spark's order for the id's type
         // (the order `orderBy("id")` gives, without its sample and sort
         // jobs): the seed is the k lowest ids, and the update's summation
@@ -207,14 +201,12 @@ object KMeans {
     cents.toSeq
   }
 
-  /** Train the centroids: [[train]] with one single-slice book. */
+  /** Train the centroids: [[train]] with one single-slice book (driver-side
+    * when the training set fits the broadcast threshold; `-1`: never). */
   def centroids(vectors: DataFrame, k: Int = 4, maxIter: Int = 10,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      localThreshold: Long = 65536,
-      localCellBudget: Long = KMeans.defaultLocalCellBudget,
       trainCap: Long = 0): Array[(Int, Seq[Double])] =
-    train(vectors, Seq(Book(1, k)), maxIter, idCol, vecCol, localThreshold,
-      localCellBudget, trainCap).head.head
+    train(vectors, Seq(Book(1, k)), maxIter, idCol, vecCol, trainCap).head.head
 
   /** Assign each vector to its nearest centroid: (idCol, cluster). */
   def assign(vectors: DataFrame, cents: Array[(Int, Seq[Double])],

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.bridge
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Distributed BPE (byte-pair-encoding) vocabulary training.
@@ -50,42 +51,41 @@ object Bpe {
   /** Train `numMerges` merges. Returns the ranked merge table and the final
     * merged word relation `(syms, cnt)` (for inspection / token counts).
     *
-    * When the word histogram is small (`<= localThreshold` distinct words
-    * — the normal case: training cost is a function of the VOCABULARY, not
-    * the corpus, after the one count pass), the merge loop runs
-    * driver-side over the collected histogram via [[trainLocal]]'s
-    * incremental-heap core: the distributed loop pays ~2 jobs per merge
-    * round (pair-count aggregation + checkpoint of the merged words),
-    * which dominates every tokenizer gate. Pair counts are exact integers
-    * and tie-breaks use UTF-8 byte order, so the merge table is
-    * BIT-IDENTICAL to the distributed loop's (BpeSpec pins the parity).
-    * Above the threshold the distributed loop runs as before. */
-  def train(docs: DataFrame, textCol: String = "text", numMerges: Int = 50,
-      localThreshold: Long = 65536): (DataFrame, DataFrame) = {
+    * When the word histogram fits the driver — the bounded collect
+    * `bridge.collectIfFits` under the session's broadcast threshold (`-1`:
+    * never); the normal case: training cost is a function of the
+    * VOCABULARY, not the corpus — the merge loop runs driver-side over the
+    * collected histogram via [[trainLocal]]'s incremental-heap core: the
+    * distributed loop pays ~2 jobs per merge round (pair-count aggregation
+    * + checkpoint of the merged words), which dominates every tokenizer
+    * gate. Pair counts are exact integers and tie-breaks use UTF-8 byte
+    * order, so the merge table is BIT-IDENTICAL to the distributed loop's
+    * (BpeSpec pins the parity). Otherwise the distributed loop runs. */
+  def train(docs: DataFrame, textCol: String = "text",
+      numMerges: Int = 50): (DataFrame, DataFrame) = {
     require(numMerges >= 1, s"numMerges must be >= 1: $numMerges")
     val spark = docs.sparkSession
-    val bridge = org.apache.spark.sql.graft.bridge
     var words = bridge.dropOriginStats(
       wordSymbols(docs, textCol).localCheckpoint())
 
-    val vocabRows = words.count()
-    if (vocabRows <= localThreshold) {
-      import spark.implicits._
-      val hist = words.collect()
-        .map(r => (r.getSeq[String](0).toArray, r.getLong(1)))
-      bridge.freeLocalCheckpoint(words)
-      val (merges, outWords, outCnts) =
-        trainLocalHist(hist.map(_._1), hist.map(_._2), numMerges)
-      return (merges.toDF("rank", "left", "right", "pair_count"),
-        outWords.zip(outCnts).toSeq.map { case (s, c) => (s.toSeq, c) }
-          .toDF("syms", "cnt"))
+    bridge.collectIfFits(words) match {
+      case Some(collected) =>
+        import spark.implicits._
+        val hist = collected.map(r => (r.getSeq[String](0).toArray, r.getLong(1)))
+        bridge.freeLocalCheckpoint(words)
+        val (merges, outWords, outCnts) =
+          trainLocalHist(hist.map(_._1), hist.map(_._2), numMerges)
+        return (merges.toDF("rank", "left", "right", "pair_count"),
+          outWords.zip(outCnts).toSeq.map { case (s, c) => (s.toSeq, c) }
+            .toDF("syms", "cnt"))
+      case None =>
     }
     // the loop schedules several jobs PER MERGE over the vocabulary
-    // relation — size its partitioning from the (already counted) vocab so
-    // a small-vocab run (the forced-distributed twin, a near-threshold
-    // corpus) doesn't pay max-parallelism scheduling on every round; big
-    // vocabularies keep one task per ~8k words up to the session's
-    // parallelism
+    // relation — size its partitioning from the vocab so a small-vocab run
+    // (the forced-distributed twin, a near-threshold corpus) doesn't pay
+    // max-parallelism scheduling on every round; big vocabularies keep one
+    // task per ~8k words up to the session's parallelism
+    val vocabRows = words.count()
     val loopParts = math.max(1L, math.min(
       spark.sparkContext.defaultParallelism.toLong, vocabRows / 8192L)).toInt
     val coalesced = bridge.dropOriginStats(

@@ -16,7 +16,7 @@ import org.apache.spark.sql.types.{IntegerType, StructType}
 /** Parquet relations read and written ON THE DRIVER, through Spark's own
   * `ParquetFileFormat`: no Spark job, no commit protocol. A store
   * operation on a relation that fits the caller's
-  * `spark.sql.autoBroadcastJoinThreshold` ([[fits]] — the size Spark
+  * `spark.sql.autoBroadcastJoinThreshold` (`bridge.fits` — the size Spark
   * already moves through the driver for a broadcast; `-1` keeps every
   * operation on Spark) runs here instead of paying a job's fixed latency.
   *
@@ -33,13 +33,6 @@ import org.apache.spark.sql.types.{IntegerType, StructType}
 private[ops] final class DriverParquet(spark: SparkSession) {
 
   private val conf = bridge.hadoopConf(spark)
-
-  /** Whether relations of `bytes` bytes fit the session's broadcast
-    * threshold. */
-  def fits(bytes: BigInt): Boolean = {
-    val t = bridge.broadcastThreshold(spark)
-    t >= 0 && bytes <= t
-  }
 
   /** The data files directly under `dir`, in name order (names starting
     * `_` or `.` are not data, as in Spark's file index); none when `dir`

@@ -170,7 +170,7 @@ private[ops] object IvfCore {
       val tombs = io.files(s"$build/deleted")
       val live =
         if (tombs.isEmpty) t
-        else if (io.fits(tombs.map(f => BigInt(f.getLen)).sum)) {
+        else if (bridge.fits(spark, tombs.map(f => BigInt(f.getLen)).sum)) {
           val ids = io.read(DeletedSchema, tombs).map(_.getLong(0)).distinct
           // a null did matches no tombstone and stays, as in the anti-join
           t.where(!coalesce(col("did").isin(ids.toSeq: _*), lit(false)))
@@ -206,7 +206,7 @@ private[ops] object IvfCore {
       val batch = newVecs.select(col(idCol), col(vecCol))
       val planned = typed(batch) // a lossy id type is refused before anything runs
       val io = DriverParquet(spark)
-      if (io.fits(batch.queryExecution.optimizedPlan.stats.sizeInBytes)) {
+      if (bridge.fits(spark, batch.queryExecution.optimizedPlan.stats.sizeInBytes)) {
         // the encode folds into the local relation: evaluated on the driver
         val encoded = encode(quant, typed(bridge.collectLocal(batch)._2))
         io.writePartitioned(encoded.schema, bridge.collectRows(encoded).toSeq, "cell", path)

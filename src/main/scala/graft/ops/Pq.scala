@@ -38,18 +38,17 @@ object Pq {
   case class Codebooks(m: Int, dsub: Int, books: Array[Array[(Int, Seq[Double])]])
 
   /** Train one `ksub`-centroid codebook per subspace — the quantizer
-    * trainer [[graft.lib.KMeans.train]] with one `(m, ksub)` book. At
-    * 100 TB pass a [[Sampling.hashSample]] of the corpus — quantizer
-    * quality saturates at modest training sizes. `d` must divide evenly
-    * into `m` subspaces. */
+    * trainer [[graft.lib.KMeans.train]] with one `(m, ksub)` book, which
+    * trains on the driver when the training set fits the session's
+    * broadcast threshold (`-1`: never). At 100 TB pass a
+    * [[Sampling.hashSample]] of the corpus — quantizer quality saturates at
+    * modest training sizes. `d` must divide evenly into `m` subspaces. */
   def train(corpus: DataFrame, m: Int, ksub: Int = 16, maxIter: Int = 10,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      localThreshold: Long = 65536,
-      localCellBudget: Long = graft.lib.KMeans.defaultLocalCellBudget,
       trainCap: Long = 0): Codebooks = {
     require(m > 0 && ksub > 1, s"need m > 0, ksub > 1: m=$m ksub=$ksub")
     codebooks(graft.lib.KMeans.train(corpus, Seq(graft.lib.KMeans.Book(m, ksub)),
-      maxIter, idCol, vecCol, localThreshold, localCellBudget, trainCap).head)
+      maxIter, idCol, vecCol, trainCap).head)
   }
 
   /** Codebooks from trained per-subspace books. */

@@ -68,47 +68,28 @@ object Quality {
     * y ∈ {0,1}; 1 = keep-quality). Returns (weights, bias).
     *
     * The labeled set is small by construction (curated/sampled) — 8
-    * doubles + a label per row — so up to `localThreshold` rows it is
-    * featurized in ONE Spark job, collected, and trained driver-side with
-    * the arithmetic-identical [[graft.lib.ML.gdLocal]] loop: `iters`
-    * scheduling round-trips collapse to one (measured ~10× on the q214
-    * gate). Above the threshold (or with `localThreshold = 0`) training
-    * falls back to the distributed GD, coalesced to `parts` partitions so
-    * each of the `iters` tiny aggregates costs `parts` tasks. */
+    * doubles + a label per row — so when it fits the driver (the bounded
+    * collect `bridge.collectIfFits` under the session's broadcast
+    * threshold; `-1`: never) it is featurized in ONE Spark job, collected,
+    * and trained driver-side with the arithmetic-identical
+    * [[graft.lib.ML.gdLocal]] loop: `iters` scheduling round-trips collapse
+    * to one (measured ~10× on the q214 gate). Otherwise training falls
+    * back to the distributed GD, coalesced to `parts` partitions so each of
+    * the `iters` tiny aggregates costs `parts` tasks. */
   def train(docs: DataFrame, labels: DataFrame, idCol: String,
       textCol: String, lr: Double = 0.5, iters: Int = 40,
-      l2: Double = 0.0, parts: Int = 8,
-      localThreshold: Int = 200000,
-      sizeHint: Long = -1L): (Array[Double], Double) = {
-    // persist the featurized join: the size probe and whichever training
-    // path runs share ONE featurize+join execution instead of two
+      l2: Double = 0.0, parts: Int = 8): (Array[Double], Double) = {
+    // persist the featurized join: the bounded collect and whichever
+    // training path runs share ONE featurize+join execution instead of two
     val data = features(docs, idCol, textCol)
       .join(labels.select(col("id"), col("y").cast("double").as("y")), "id")
       .persist()
     try {
-      // path choice WITHOUT a dedicated count job: a caller-supplied
-      // sizeHint decides directly; otherwise collect AT MOST threshold+1
-      // rows — when the data fits, that single job IS the training set
-      // (rows come back in partition order, same as a full collect), and
-      // one extra row proves it doesn't, falling back to distributed GD
-      val probe: Option[Array[org.apache.spark.sql.Row]] =
-        if (localThreshold <= 0) None
-        else if (sizeHint >= 0) {
-          if (sizeHint <= localThreshold) {
-            // trust the hint for the PATH choice but not for driver safety:
-            // cap the collect at threshold+1 so a stale/undersized hint on
-            // big data cannot pull the whole featurized join to the driver
-            // — the extra row disproves the hint and we fall back to GD
-            val rows = data.select(col("x"), col("y"))
-              .limit(localThreshold + 1).collect()
-            if (rows.length <= localThreshold) Some(rows) else None
-          } else None
-        } else {
-          val rows = data.select(col("x"), col("y"))
-            .limit(localThreshold + 1).collect()
-          if (rows.length <= localThreshold) Some(rows) else None
-        }
-      probe match {
+      // path choice WITHOUT a dedicated count job: when the data fits, the
+      // bounded collect IS the training set (rows come back in partition
+      // order, same as a full collect); one row past its cap proves it
+      // doesn't, falling back to distributed GD
+      org.apache.spark.sql.graft.bridge.collectIfFits(data.select(col("x"), col("y"))) match {
         case Some(collected) =>
           val rows = collected
             .map(r => (r.getSeq[Double](0).toArray, r.getDouble(1)))

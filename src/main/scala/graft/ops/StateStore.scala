@@ -62,15 +62,6 @@ object StateStore {
     pmod(conv(substring(md5(key.cast("string")), 1, 8), 16, 10).cast("long"),
       lit(nBuckets.toLong)).cast("int")
 
-  /** The most recent pruned state read ([[upsert]] / [[lookup]]). */
-  @volatile private var lastPruned: Option[DataFrame] = None
-
-  /** The spec hook: executed-plan string of the most recent pruned state
-    * read — proves the scan carried a planning-time partition filter over
-    * the touched buckets only. Planned when asked, not on every read. */
-  private[graft] def lastPrunedPlan: String =
-    lastPruned.fold("")(_.queryExecution.executedPlan.toString)
-
   private def fs(spark: SparkSession, p: Path) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
@@ -130,17 +121,14 @@ object StateStore {
     val root = dataOf(r, path)
     val listed = buckets.sorted.map(b => b -> io.files(s"$root/bucket=$b")).filter(_._2.nonEmpty)
     if (listed.isEmpty) None
-    else if (io.fits(listed.flatMap(_._2).map(f => BigInt(f.getLen)).sum))
+    else if (bridge.fits(spark, listed.flatMap(_._2).map(f => BigInt(f.getLen)).sum))
       Some(bridge.localRelation(spark, bridge.asNullable(scanSchema(r)),
         io.read(r.schema, BucketSchema,
           listed.flatMap { case (b, fs) => fs.map(_ -> InternalRow(b)) }).toSeq))
-    else {
-      val pruned = spark.read.schema(scanSchema(r)).option("basePath", root)
+    else
+      Some(spark.read.schema(scanSchema(r)).option("basePath", root)
         .parquet(listed.map { case (b, _) => s"$root/bucket=$b" }: _*)
-        .where(col("bucket").isin(buckets.map(Integer.valueOf): _*))
-      lastPruned = Some(pruned)
-      Some(pruned)
-    }
+        .where(col("bucket").isin(buckets.map(Integer.valueOf): _*)))
   }
 
   /** Point lookup: rows for `keys`, reading ONLY the buckets that can hold

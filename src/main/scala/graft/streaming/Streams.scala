@@ -302,18 +302,12 @@ object Streams {
         .where(col("__rn") === 1).drop("__rn")
     }
     var state: DataFrame = null
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val merged = latest(if (state == null) batch else state.unionByName(batch))
-          .localCheckpoint()
-        if (state != null)
-          org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(state)
-        state = merged
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drainEach(stream) { batch =>
+      val merged = latest(if (state == null) batch else state.unionByName(batch))
+        .localCheckpoint()
+      if (state != null) bridge.freeLocalCheckpoint(state)
+      state = merged
+    }
     if (state != null) state
     else // zero micro-batches: an empty frame with the STREAM's schema
       stream.sparkSession.createDataFrame(
@@ -347,14 +341,7 @@ object Streams {
       // shared memory-sink temp view) when two probes run on one session
       queryName: String = s"graft_dedup_probe_${java.util.UUID.randomUUID().toString.take(8)}",
       statePartitions: Option[Int] = Some(8),
-      fanout: Int = -1,
-      // static sides at or under this many rows broadcast into the
-      // stream-side joins (streaming plans run without AQE and checkpointed
-      // frames carry no size stats). Row-count is a proxy for bytes — both
-      // relations here are narrow fixed-width rows (8-byte hashes + ids,
-      // ≈ tens of bytes/row), so the default bounds the build at tens of
-      // MB; callers with wider static relations should lower it
-      broadcastMaxRows: Long = 1000000L): DataFrame = {
+      fanout: Int = -1): DataFrame = {
     import graft.ops.Dedup
     val numHashes = bands * rowsPerBand
     // a micro-batch arrives with the SOURCE's partitioning — often one file,
@@ -391,13 +378,14 @@ object Streams {
     // broadcast at query-BUILD time from actual row counts (the manual twin
     // of AQE's runtime join re-plan; the caller's static sides are already
     // materialized, so each count is one cheap job, once per query — not
-    // per batch). Above the threshold the shuffle path stays: at production
-    // scale the index/shingle relations are pre-bucketed and exceed any
-    // broadcastable size.
-    // the count is one cheap job over the caller's already-checkpointed
-    // static side, once per query (not per batch)
+    // per batch): a static side broadcasts when its rows times Spark's
+    // per-row estimate fit the session's broadcast threshold (`bridge.fits`;
+    // at `-1` none does and nothing is counted). Above it the shuffle path
+    // stays: at production scale the index/shingle relations are
+    // pre-bucketed and exceed any broadcastable size.
     def maybeBroadcast(df: DataFrame): DataFrame =
-      if (df.count() <= broadcastMaxRows) broadcast(df) else df
+      if (bridge.fits(df.sparkSession, BigInt(df.count()) * bridge.rowBytes(df))) broadcast(df)
+      else df
     val idxSide = maybeBroadcast(corpusIndex.withColumnsRenamed(Map("doc_id" -> "id2")))
     val shSide = maybeBroadcast(corpusSh.withColumnsRenamed(Map("doc_id" -> "id2")))
     // stream-static candidate join on the uniform band key, then verify:
@@ -446,17 +434,12 @@ object Streams {
   def streamMoments(stream: DataFrame, vecCol: String = "embedding",
       unit: Double = 1e6): Option[graft.ops.Pca.Moments] = {
     val acc = new java.util.concurrent.atomic.AtomicReference[Option[graft.ops.Pca.Moments]](None)
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          val m = graft.ops.Pca.moments(batch.toDF(), vecCol, unit)
-          acc.updateAndGet(o => Some(o.map(_.merge(m)).getOrElse(m)))
-        }
-        ()
+    drainEach(stream) { batch =>
+      if (!batch.isEmpty) {
+        val m = graft.ops.Pca.moments(batch, vecCol, unit)
+        acc.updateAndGet(o => Some(o.map(_.merge(m)).getOrElse(m)))
       }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
     acc.get()
   }
 
@@ -470,20 +453,15 @@ object Streams {
   def streamFilterReport(stream: DataFrame,
       filters: Seq[(String, org.apache.spark.sql.Column)]): Map[String, Long] = {
     val acc = scala.collection.mutable.Map.empty[String, Long]
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          val part = graft.ops.Filters.filterReport(batch.toDF(), filters).collect()
-          acc.synchronized {
-            part.foreach(r =>
-              acc.update(r.getString(0), acc.getOrElse(r.getString(0), 0L) + r.getLong(1)))
-          }
+    drainEach(stream) { batch =>
+      if (!batch.isEmpty) {
+        val part = graft.ops.Filters.filterReport(batch, filters).collect()
+        acc.synchronized {
+          part.foreach(r =>
+            acc.update(r.getString(0), acc.getOrElse(r.getString(0), 0L) + r.getLong(1)))
         }
-        ()
       }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
     acc.synchronized(acc.toMap)
   }
 
@@ -501,41 +479,32 @@ object Streams {
   def streamSignalMaintenance(stream: DataFrame, storePath: String,
       deleteCol: String)(signals: DataFrame => DataFrame): Unit = {
     val keyCol = graft.ops.StateStore.meta(stream.sparkSession, storePath).keyCol
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        // no pre-checkpoint and no isEmpty probe: the batch frame is a
-        // static relation over this trigger's files, reused by the two
-        // branches below (a double scan of a micro-batch is cheaper than
-        // the materializing job), and an empty batch short-circuits inside
-        // upsert after its one collect — per batch the whole maintenance
-        // costs ONE job, the collect of the scored batch (its rows give the
-        // touched buckets and replaced keys), while the touched buckets fit
-        // the broadcast threshold and are merged and written on the driver;
-        // above it the merged write is a second job (see StateStore.upsert)
-        locally {
-          val df = batch.toDF()
-          val spark = batch.sparkSession
-          val delFlag = coalesce(col(deleteCol), lit(false))
-          // tombstones are framework-derived from the batch itself — they
-          // must NOT route through the user's `signals` transform (a scorer
-          // that skips empty/deleted docs would silently drop the delete);
-          // `signals` only ever sees live rows and must keep the key column
-          val scored = signals(df.where(!delFlag))
-            .withColumn(deleteCol, lit(false))
-          val sigCols = scored.columns.filter(c => c != keyCol && c != deleteCol)
-          val tombs = df.where(delFlag).select(
-            col(keyCol) +:
-              sigCols.map(c =>
-                lit(null).cast(scored.schema(c).dataType).as(c)) :+
-              lit(true).as(deleteCol): _*)
-          graft.ops.StateStore.upsert(spark, storePath,
-            scored.unionByName(tombs), Some(deleteCol))
-        }
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drainEach(stream) { df =>
+      // no pre-checkpoint and no isEmpty probe: the batch frame is a static
+      // relation over this trigger's files, reused by the two branches
+      // below (a double scan of a micro-batch is cheaper than the
+      // materializing job), and an empty batch short-circuits inside upsert
+      // after its one collect — per batch the whole maintenance costs ONE
+      // job, the collect of the scored batch (its rows give the touched
+      // buckets and replaced keys), while the touched buckets fit the
+      // broadcast threshold and are merged and written on the driver; above
+      // it the merged write is a second job (see StateStore.upsert)
+      val delFlag = coalesce(col(deleteCol), lit(false))
+      // tombstones are framework-derived from the batch itself — they must
+      // NOT route through the user's `signals` transform (a scorer that
+      // skips empty/deleted docs would silently drop the delete); `signals`
+      // only ever sees live rows and must keep the key column
+      val scored = signals(df.where(!delFlag))
+        .withColumn(deleteCol, lit(false))
+      val sigCols = scored.columns.filter(c => c != keyCol && c != deleteCol)
+      val tombs = df.where(delFlag).select(
+        col(keyCol) +:
+          sigCols.map(c =>
+            lit(null).cast(scored.schema(c).dataType).as(c)) :+
+          lit(true).as(deleteCol): _*)
+      graft.ops.StateStore.upsert(df.sparkSession, storePath,
+        scored.unionByName(tombs), Some(deleteCol))
+    }
   }
 
   /** Maintain an in-flight [[graft.api.PointBag]] from a stream of keyed
@@ -550,16 +519,21 @@ object Streams {
       pb: graft.api.PointBag[K, V],
       toDelta: DataFrame => Dataset[(K, M)])(
       f: (K, Option[V], M) => Option[V]): Unit = {
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        // no isEmpty pre-check: updateBag's limit-probe IS the emptiness
-        // check (an empty probe applies nothing), so each micro-batch costs
-        // exactly one job — the probe — until the state is next read
-        pb.updateBag(graft.api.DataBag.from(toDelta(batch.toDF())))(f)
-        ()
-      }
+    drainEach(stream) { batch =>
+      // no isEmpty pre-check: updateBag's bounded collect IS the emptiness
+      // check (an empty collect applies nothing), so each micro-batch costs
+      // exactly one job — the collect — until the state is next read
+      pb.updateBag(graft.api.DataBag.from(toDelta(batch)))(f)
+    }
+  }
+
+  /** Drain `stream` to its end (`Trigger.AvailableNow`), running `perBatch`
+    * on each micro-batch: the one `foreachBatch` drain of the maintainers
+    * above. */
+  private def drainEach(stream: DataFrame)(perBatch: DataFrame => Unit): Unit =
+    stream.writeStream
+      .foreachBatch((batch: DataFrame, _: Long) => perBatch(batch))
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
-    q.awaitTermination()
-  }
+      .awaitTermination()
 }

@@ -127,6 +127,12 @@ object bridge {
   /** AQE off: each shuffle runs in its action's job, not in a map-stage job. */
   val aqeOff: Map[String, String] = Map("spark.sql.adaptive.enabled" -> "false")
 
+  /** The broadcast threshold at `bytes`: at most that much goes to the
+    * driver, by every driver fast path ([[fits]]) and by the planner's
+    * broadcasts; at `-1`, nothing. */
+  def driverBytes(bytes: Long): Map[String, String] =
+    Map("spark.sql.autoBroadcastJoinThreshold" -> bytes.toString)
+
   /** Run `body`, which drains streaming queries on `clone` (an [[isolated]]
     * session of `caller`), with the caller's streaming listeners attached.
     * On return they have seen every event of those queries (unless the
@@ -196,10 +202,55 @@ object bridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.newHadoopConf()
 
   /** `spark.sql.autoBroadcastJoinThreshold` in bytes, as the planner reads
-    * it: the largest relation it moves through the driver; negative: none. */
-  def broadcastThreshold(spark: org.apache.spark.sql.SparkSession): Long =
+    * it: the largest relation it moves through the driver; negative: none.
+    * Read here only: by [[fits]] and [[collectIfFits]]. */
+  private def broadcastThreshold(spark: org.apache.spark.sql.SparkSession): Long =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.conf
       .autoBroadcastJoinThreshold
+
+  /** THE driver-or-cluster rule: whether `bytes` of data belong on the
+    * driver — at most the session's broadcast threshold, the size Spark
+    * itself moves through the driver for a broadcast. At `-1` nothing does,
+    * and `bytes` is never evaluated (it may cost a job). Every local fast
+    * path of the library asks this rule, directly or through
+    * [[collectIfFits]], so the one Spark setting moves all of them. */
+  def fits(spark: org.apache.spark.sql.SparkSession, bytes: => BigInt): Boolean = {
+    val t = broadcastThreshold(spark)
+    t >= 0 && bytes <= t
+  }
+
+  /** Spark's size estimate of one row of `ds` (`EstimationUtils.getSizePerRow`
+    * over its output, as `LocalRelation` statistics use): the row overhead
+    * plus each column type's default size. */
+  def rowBytes(ds: org.apache.spark.sql.Dataset[_]): BigInt =
+    org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+      .getSizePerRow(ds.queryExecution.analyzed.output)
+
+  /** The rows of `ds` when they fit the driver by [[fits]], else None — the
+    * bounded collect. ONE `limit(cap + 1)` collect, `cap` being the
+    * threshold over [[rowBytes]]; the rows are kept only when at most `cap`
+    * came back and their bytes fit. A frame whose estimate undercounts its
+    * rows (arrays, maps) may bring `cap + 1` rows to the driver before they
+    * are refused. At `-1` it runs no job. */
+  def collectIfFits[A](ds: org.apache.spark.sql.Dataset[A]): Option[Array[A]] = {
+    val t = broadcastThreshold(ds.sparkSession)
+    if (t < 0) None
+    else {
+      val cap = (t / rowBytes(ds)).min(Int.MaxValue - 1).toInt
+      val rows = collectRows(ds.limit(cap + 1).toDF())
+      def bytes = rows.iterator.map {
+        case u: org.apache.spark.sql.catalyst.expressions.UnsafeRow => BigInt(u.getSizeInBytes)
+        case _ => rowBytes(ds)
+      }.sum
+      if (rows.length > cap || !fits(ds.sparkSession, bytes)) None
+      else {
+        val cds = ds.asInstanceOf[org.apache.spark.sql.classic.Dataset[A]]
+        val fromRow = cds.exprEnc.resolveAndBind(cds.logicalPlan.output,
+          cds.sparkSession.sessionState.analyzer).createDeserializer()
+        Some(rows.map(fromRow)(scala.reflect.ClassTag(cds.exprEnc.clsTag.runtimeClass)))
+      }
+    }
+  }
 
   /** Spark's ascending order (nulls first, the order `orderBy` sorts by) of
     * rows on their leading fields, of types `types`. */

@@ -713,9 +713,11 @@ object DriveDemo {
       pb.delete(Seq(3L))
       println(s"pointbag: delta=$d1 get=${pb.multiget(Seq(7L, 3L, 700L))} " +
         s"n=${pb.bag().ds.count()}")
-      // round-10: distributed-delta round (state never shuffles)
-      pb.updateBag(DataBag.from(spark.range(60).as[Long].map(i => (i, 1L))),
-        localThreshold = 10)((_, old, m) => Some(old.getOrElse(0L) + m))
+      // round-10: distributed-delta round (state never shuffles): ten rows
+      // of the delta fit the driver on its session clone
+      val delta60 = spark.range(60).as[Long].map(i => (i, 1L)).toDF()
+      pb.updateBag(DataBag.from(graft.testlib.Threshold.rows(10)(delta60).as[(Long, Long)]))(
+        (_, old, m) => Some(old.getOrElse(0L) + m))
       println(s"pointbag updateBag: k5=${pb.multiget(Seq(5L)).get(5L)}")
       // round-10: depth-3 dependent comprehension + plain-fold fusion
       import graft.api.comprehensions.onSpark

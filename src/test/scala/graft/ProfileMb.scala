@@ -28,10 +28,13 @@ object ProfileMb {
       .where(col("src") =!= col("dst"))
       .as[(Long, Long)]
     val edges = path.toDS().union(ballast)
-    for (rep <- 1 to 2; threshold <- Seq(0L, 1000000L)) {
-      val mode = if (threshold == 0L) "cogroup" else "broadcast-tail"
+    // broadcast threshold -1: every round cogroups; 24 MB: every delta of
+    // this graph fits, so the tail rounds broadcast
+    for (rep <- 1 to 2; bytes <- Seq(-1L, 24L << 20)) {
+      val mode = if (bytes < 0) "cogroup" else "broadcast-tail"
       time(s"ccMutable $mode rep=$rep") {
-        val cc = graft.lib.Graphs.connectedComponentsMutable(edges, spark, threshold)
+        val e = graft.testlib.Threshold.at(bytes)(edges.toDF()).as[(Long, Long)]
+        val cc = graft.lib.Graphs.connectedComponentsMutable(e, e.sparkSession)
         val k = cc.toDF("v", "l").agg(countDistinct("l")).head().getLong(0)
         require(k >= 2, s"expected >=2 components, got $k")
       }

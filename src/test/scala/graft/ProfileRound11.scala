@@ -53,14 +53,14 @@ object ProfileRound11 {
     val s1 = time("setsim 1x")(ops.SetSim.jaccardSelfJoin(docs1).count())
     val sN = time(s"setsim ${n}x")(ops.SetSim.jaccardSelfJoin(docsN).count())
 
-    // distributed merge loop forced at BOTH scales (localThreshold = 0) so
-    // the ratio compares the same path
+    // distributed merge loop forced at BOTH scales (broadcast threshold -1)
+    // so the ratio compares the same path
     val b1 = time("bpe 1x") {
-      val (m, w) = ops.Bpe.train(docs1, numMerges = 10, localThreshold = 0)
+      val (m, w) = ops.Bpe.train(graft.testlib.Threshold.at(-1)(docs1), numMerges = 10)
       m.count() + w.count()
     }
     val bN = time(s"bpe ${n}x") {
-      val (m, w) = ops.Bpe.train(docsN, numMerges = 10, localThreshold = 0)
+      val (m, w) = ops.Bpe.train(graft.testlib.Threshold.at(-1)(docsN), numMerges = 10)
       m.count() + w.count()
     }
 
@@ -90,9 +90,9 @@ object ProfileRound11 {
       val st = graft.api.DataBag.from(spark.range(v).as[Long].map(i => (i, i)))
       val pb = graft.api.PointBag(st, parts = 32, compactEvery = 100)
       for (r <- 1 to 5) {
-        val delta = graft.api.DataBag.from(
-          spark.range(v / 10).as[Long].map(i => (i * 10 + r, 1L)))
-        pb.updateBag(delta, localThreshold = -1)((_, vo, m) =>
+        val delta = graft.api.DataBag.from(graft.testlib.Threshold.at(-1)(
+          spark.range(v / 10).as[Long].map(i => (i * 10 + r, 1L)).toDF()).as[(Long, Long)])
+        pb.updateBag(delta)((_, vo, m) =>
           Some(vo.getOrElse(0L) + m))
       }
       pb.compact()

@@ -13,6 +13,7 @@ import org.scalatest.matchers.should.Matchers
 import graft.lib.{KMeans, ML}
 import graft.ops.{Pq, Prefilter, StateStore}
 import graft.streaming.Streams
+import graft.testlib.Threshold
 
 /** No library call writes the caller's session conf. Each path that runs
   * under a conf override runs while a second thread reads the overridden
@@ -30,25 +31,26 @@ class SessionIsolationSpec extends AnyFlatSpec with Matchers {
     "spark.sql.optimizer.runtime.bloomFilter.maxNumItems",
     "spark.sql.optimizer.runtime.bloomFilter.maxNumBits")
 
-  private def confNow(): Seq[Option[String]] = keys.map(spark.conf.getOption)
+  private def confNow(s: SparkSession): Seq[Option[String]] = keys.map(s.conf.getOption)
 
   /** A shuffled query's physical plan (adaptive or not, partition count)
     * with expression and plan ids stripped. */
-  private def planNow(): String =
-    spark.range(100).groupBy((col("id") % 7).as("g")).count()
+  private def planNow(s: SparkSession): String =
+    s.range(100).groupBy((col("id") % 7).as("g")).count()
       .queryExecution.executedPlan.toString.replaceAll("#\\d+|plan_id=\\d+", "")
 
-  /** Run `body` while a second thread reads `keys` in a tight loop and
-    * plans a query every few reads; return what that thread saw. */
-  private def watched(body: => Any): (Set[Seq[Option[String]]], Set[String]) = {
+  /** Run `body` while a second thread reads `keys` of `caller` in a tight
+    * loop and plans a query on it every few reads; return what that thread
+    * saw. */
+  private def watched(caller: SparkSession)(body: => Any): (Set[Seq[Option[String]]], Set[String]) = {
     val confs = ConcurrentHashMap.newKeySet[Seq[Option[String]]]()
     val plans = ConcurrentHashMap.newKeySet[String]()
     val stop = new AtomicBoolean
     val watcher = new Thread(() => {
       var i = 0
       while (!stop.get) {
-        confs.add(confNow())
-        if (i % 64 == 0) plans.add(planNow())
+        confs.add(confNow(caller))
+        if (i % 64 == 0) plans.add(planNow(caller))
         i += 1
       }
     })
@@ -58,12 +60,13 @@ class SessionIsolationSpec extends AnyFlatSpec with Matchers {
     (confs.asScala.toSet, plans.asScala.toSet)
   }
 
-  private def neverChanges(body: => Any): Unit = {
-    val (conf0, plan0) = (confNow(), planNow())
-    val (confs, plans) = watched(body)
+  /** `body`, a call on frames of `caller`, never changes `caller`'s conf. */
+  private def neverChanges(body: => Any, caller: SparkSession = spark): Unit = {
+    val (conf0, plan0) = (confNow(caller), planNow(caller))
+    val (confs, plans) = watched(caller)(body)
     confs shouldBe Set(conf0)
     plans shouldBe Set(plan0)
-    confNow() shouldBe conf0
+    confNow(caller) shouldBe conf0
   }
 
   private def tmp(): String =
@@ -79,12 +82,16 @@ class SessionIsolationSpec extends AnyFlatSpec with Matchers {
     neverChanges(StateStore.upsert(spark, dir, (1L to 20L).map(k => (k, 0.5)).toDF("k", "v")))
   }
 
+  // the distributed loop (AQE off on its own clone), on a caller whose
+  // broadcast threshold is -1
   "Pq.train" should "never change the caller's session conf" in {
-    neverChanges(Pq.train(vecs, m = 2, ksub = 2, maxIter = 3, localThreshold = 0))
+    val off = Threshold.at(-1)(vecs)
+    neverChanges(Pq.train(off, m = 2, ksub = 2, maxIter = 3), off.sparkSession)
   }
 
   "KMeans.centroids" should "never change the caller's session conf" in {
-    neverChanges(KMeans.centroids(vecs, k = 2, maxIter = 3, localThreshold = 0))
+    val off = Threshold.at(-1)(vecs)
+    neverChanges(KMeans.centroids(off, k = 2, maxIter = 3), off.sparkSession)
   }
 
   "ML.gd" should "never change the caller's session conf" in {
@@ -111,18 +118,36 @@ class SessionIsolationSpec extends AnyFlatSpec with Matchers {
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")).collect())
   }
 
+  /** Every trimmed line of `src/main`'s Scala files, with its file name. */
+  private lazy val mainLines: Seq[(String, String)] = {
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+    try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq.flatMap { f =>
+      java.nio.file.Files.readAllLines(f).asScala.map(l => (f.getFileName.toString, l.trim))
+    } finally walk.close()
+  }
+
   "src/main" should "write no session conf outside the clone bridge.isolated makes" in {
     // the one allowed write: `isolated` sets the overrides on the clone it
     // has just made
     val allowed = ("bridge.scala", "overrides.foreach { case (k, v) => clone.conf.set(k, v) }")
-    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
-    val hits =
-      try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq.flatMap { f =>
-        java.nio.file.Files.readAllLines(f).asScala.collect {
-          case line if Seq("conf.set(", "conf.unset(", "setConf").exists(line.contains) =>
-            (f.getFileName.toString, line.trim)
-        }
-      } finally walk.close()
-    hits shouldBe Seq(allowed)
+    mainLines.filter { case (_, line) =>
+      Seq("conf.set(", "conf.unset(", "setConf").exists(line.contains)
+    } shouldBe Seq(allowed)
+  }
+
+  it should "decide driver or cluster by the broadcast threshold in bridge alone" in {
+    val code = mainLines.filterNot { case (_, l) => l.startsWith("*") || l.startsWith("//") ||
+      l.startsWith("/**") }
+    // the threshold is read once, by bridge's `broadcastThreshold`, only
+    // bridge's rule (`fits`, `collectIfFits`) calls it, and only bridge
+    // names the setting
+    code.filter(_._2.replaceAll("\"[^\"]*\"", "\"\"").contains("autoBroadcastJoinThreshold")) shouldBe
+      Seq(("bridge.scala", ".autoBroadcastJoinThreshold"))
+    code.filter(_._2.contains("autoBroadcastJoinThreshold")).map(_._1).distinct shouldBe
+      Seq("bridge.scala")
+    code.filter(_._2.contains("broadcastThreshold(")).map(_._1).distinct shouldBe Seq("bridge.scala")
+    // no per-call threshold parameter comes back
+    val knob = """\b(localThreshold|localCellBudget|sizeHint|broadcastMaxRows|broadcastThreshold)\s*:""".r
+    code.filter { case (_, l) => knob.findFirstIn(l).isDefined } shouldBe empty
   }
 }

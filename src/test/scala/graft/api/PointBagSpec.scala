@@ -2,6 +2,7 @@ package graft.api
 
 import graft.TestSpark
 import graft.testlib.JobCount.countJobs
+import graft.testlib.Threshold
 import org.apache.spark.sql.SparkSession
 import org.scalatest.flatspec.AnyFlatSpec
 import org.scalatest.matchers.should.Matchers
@@ -90,11 +91,11 @@ class PointBagSpec extends AnyFlatSpec with Matchers {
 
   it should "apply a distributed delta with NO state-side shuffle (updateBag)" in {
     val pb = freshBag(200, parts = 8, compactEvery = 1000)
-    // above-threshold delta: forces the zip-partitions path (threshold 10)
-    val msgs = DataBag.from(spark.createDataset(
-      (0L until 100L).map(k => (k % 50, 1.0)))) // 2 msgs per key 0..49
+    // above-threshold delta: forces the zip-partitions path (10 rows fit)
+    val msgs = DataBag.from(Threshold.rows(10)(spark.createDataset(
+      (0L until 100L).map(k => (k % 50, 1.0))).toDF()).as[(Long, Double)]) // 2 msgs per key 0..49
     val shufflesBefore = "ShuffledRDD".r.findAllIn(pb.stateDebugString).length
-    pb.updateBag(msgs, localThreshold = 10)((_, o, m) => Some(o.getOrElse(0.0) + m))
+    pb.updateBag(msgs)((_, o, m) => Some(o.getOrElse(0.0) + m))
     // the round adds exactly ONE shuffle to the lineage — the DELTA's
     // partitionBy; the state side chains narrowly from its checkpoint
     "ShuffledRDD".r.findAllIn(pb.stateDebugString).length shouldBe (shufflesBefore + 1)
@@ -107,13 +108,13 @@ class PointBagSpec extends AnyFlatSpec with Matchers {
     countJobs(pb.multiget(Seq(3L, 11L)))._2.tasks shouldBe 1
   }
 
-  it should "skip the probe entirely with localThreshold < 0" in {
+  it should "skip the probe entirely with the broadcast threshold at -1" in {
     val pb = freshBag(40, parts = 8, compactEvery = 1000)
-    // a tiny delta still takes the zip path when the caller opts out of
-    // the probe — no limit-collect job fires before the (lazy) round
+    // a tiny delta still takes the zip path on a session whose threshold
+    // is -1 — no bounded-collect job fires before the (lazy) round
+    val msgs = DataBag.from(Threshold.at(-1)(Seq((1L, 5.0)).toDF()).as[(Long, Double)])
     val (_, n) = countJobs(
-      pb.updateBag(DataBag.from(spark.createDataset(Seq((1L, 5.0)))),
-        localThreshold = -1)((_, o, m) => Some(o.getOrElse(0.0) + m)))
+      pb.updateBag(msgs)((_, o, m) => Some(o.getOrElse(0.0) + m)))
     n.jobs shouldBe 0 // round applied lazily, no probe job
     pb.bag().collect().toMap.apply(1L) shouldBe 6.0
   }

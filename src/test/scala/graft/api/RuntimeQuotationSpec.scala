@@ -401,7 +401,11 @@ object RuntimeQuotationExitProbe {
     val spark = SparkSession.builder().master("local[1]")
       .config("spark.ui.enabled", "false").getOrCreate()
     println(RuntimeQuotation.compile[Long]("40L + 2L")(spark))
-    println(RuntimeQuotation.lastJar.get)
+    // the snippet jars under the compiler's class directories
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    for (d <- tmp.listFiles() if d.getName.startsWith("graft_rtq_classes");
+         s <- d.listFiles() if s.isDirectory; j <- s.listFiles() if j.getName.endsWith(".jar"))
+      println(j.getPath)
     spark.stop()
   }
 }

@@ -1,14 +1,16 @@
 package graft.api
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.LoneElement
 import org.scalatest.flatspec.AnyFlatSpec
 import org.scalatest.matchers.should.Matchers
 
 import graft.TestSpark
+import graft.testlib.PlanCapture.capturePlans
 
 /** MutableBag update semantics (reference api/MutableBag.scala:26-51) and
   * Iterate fixpoint behavior. */
-class StateSpec extends AnyFlatSpec with Matchers {
+class StateSpec extends AnyFlatSpec with Matchers with LoneElement {
 
   implicit lazy val spark: SparkSession = TestSpark.spark
   import spark.implicits._
@@ -86,14 +88,15 @@ class StateSpec extends AnyFlatSpec with Matchers {
 
   "MutableBag state" should "cogroup with zero Exchange on the state side, every round" in {
     val st = MutableBag[Long, Long](DataBag((1L to 100L).map(i => (i, i))))
-    st.capturePlans = true // opt-in: production rounds don't pin the cogroup
     for (r <- 1 to 3) {
-      val delta = st.update(DataBag(Seq(
-        Group(5L, 1000L + r), Group(200L + r, r.toLong))))((_, _, m) => Some(m))
+      // the round's cogroup runs in its state checkpoint
+      val (delta, plans) = capturePlans(st.update(DataBag(Seq(
+        Group(5L, 1000L + r), Group(200L + r, r.toLong))))((_, _, m) => Some(m)))
       delta.collect().length shouldBe 2
       // after execution an adaptive plan prints Final AND Initial sections
       // (each containing the exchange once) — count within one section
-      val plan = st.lastUpdatePlan.split("== Initial Plan ==").head
+      val plan = plans.filter(_.contains("CoGroup")).loneElement
+        .split("== Initial Plan ==").head
       plan should include("CoGroup")
       // exactly ONE Exchange: the message side. The state side reads its
       // asserted hash partitioning straight from the checkpoint — if a

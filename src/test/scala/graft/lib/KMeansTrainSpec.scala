@@ -6,6 +6,7 @@ import org.scalatest.matchers.should.Matchers
 
 import graft.TestSpark
 import graft.ops.{AnnIndex, Pq, PqIndex}
+import graft.testlib.Threshold
 import graft.testlib.JobCount.countJobs
 
 /** The one quantizer trainer, [[KMeans.train]]: its local path is exactly
@@ -68,9 +69,8 @@ class KMeansTrainSpec extends AnyFlatSpec with Matchers {
 
   it should "train every book in one aggregation job per distributed iteration" in {
     val c = corpus()
-    def jobs(maxIter: Int): Int = countJobs(KMeans.train(c,
-      Seq(KMeans.Book(1, 4), KMeans.Book(4, 8)), maxIter, "vec_id", "embedding",
-      localThreshold = 0))._2.jobs
+    def jobs(maxIter: Int): Int = countJobs(KMeans.train(Threshold.at(-1)(c),
+      Seq(KMeans.Book(1, 4), KMeans.Book(4, 8)), maxIter, "vec_id", "embedding"))._2.jobs
     // on noise-laden data neither book converges in 3 rounds: two more
     // rounds cost one job each for both books, where one loop per book
     // would cost two
@@ -84,9 +84,8 @@ class KMeansTrainSpec extends AnyFlatSpec with Matchers {
     // book keeps moving
     bits(KMeans.lloydLocal(pts, 4, 5)) shouldBe bits(KMeans.lloydLocal(pts, 4, 20))
     sliceBooks(pts, 4, 8, 5) should not be sliceBooks(pts, 4, 8, 20)
-    val Seq(Array(coarse), pq) = KMeans.train(c,
-      Seq(KMeans.Book(1, 4), KMeans.Book(4, 8)), 20, "vec_id", "embedding",
-      localThreshold = 0)
+    val Seq(Array(coarse), pq) = KMeans.train(Threshold.at(-1)(c),
+      Seq(KMeans.Book(1, 4), KMeans.Book(4, 8)), 20, "vec_id", "embedding")
     def close(a: Array[(Int, Seq[Double])], b: Array[(Int, Seq[Double])]): Unit = {
       a.map(_._1) shouldBe b.map(_._1)
       a.zip(b).foreach { case ((_, av), (_, bv)) =>

@@ -6,6 +6,7 @@ import org.scalatest.matchers.should.Matchers
 
 import graft.TestSpark
 import graft.api.DataBag
+import graft.testlib.Threshold
 
 /** Differential tests: typed DataBag pipelines vs columnar formulations, and
   * kMeans on separable blobs. */
@@ -42,7 +43,8 @@ class PipelinesSpec extends AnyFlatSpec with Matchers {
         (i.toLong, Array.fill(8)(rnd.nextFloat() * 2 - 1)))
       .toDF("vec_id", "embedding")
     val local = KMeans.centroids(pts, k = 5, maxIter = 6) // under threshold
-    val dist = KMeans.centroids(pts, k = 5, maxIter = 6, localThreshold = 0)
+    val off = Threshold.at(-1)(pts) // threshold -1: distributed
+    val dist = KMeans.centroids(off, k = 5, maxIter = 6)
     local.map(_._1) shouldBe dist.map(_._1)
     // centroid parity to FP-summation-order tolerance (the documented caveat)
     local.zip(dist).foreach { case ((_, lv), (_, dv)) =>
@@ -54,8 +56,7 @@ class PipelinesSpec extends AnyFlatSpec with Matchers {
       KMeans.assign(pts, dist).collect().map(r => (r.getLong(0), r.getInt(1))).sorted
     // PQ codebooks: same parity through the subspace trainer
     val cbL = graft.ops.Pq.train(pts, m = 2, ksub = 4, maxIter = 5)
-    val cbD = graft.ops.Pq.train(pts, m = 2, ksub = 4, maxIter = 5,
-      localThreshold = 0)
+    val cbD = graft.ops.Pq.train(off, m = 2, ksub = 4, maxIter = 5)
     cbL.m shouldBe cbD.m
     cbL.books.zip(cbD.books).foreach { case (bl, bd) =>
       bl.zip(bd).foreach { case ((cl, vl), (cd, vd)) =>
@@ -63,16 +64,17 @@ class PipelinesSpec extends AnyFlatSpec with Matchers {
         vl.zip(vd).foreach { case (a, b) => math.abs(a - b) should be < 1e-9 }
       }
     }
-    // the CELL budget (rows × dim) also gates the local path — wide
-    // embeddings must route distributed even under the row threshold
-    // (the driver-OOM guard); result parity to the same tolerance
-    val viaCell = KMeans.centroids(pts, k = 5, maxIter = 6, localCellBudget = 1)
+    // the local path is gated on rows × dim × 8 bytes, not on rows — wide
+    // embeddings must route distributed (the driver-OOM guard): one byte
+    // under the training set's 300 × 8 doubles is distributed; result
+    // parity to the same tolerance
+    val narrow = Threshold.at(300 * 8 * 8 - 1)(pts)
+    val viaCell = KMeans.centroids(narrow, k = 5, maxIter = 6)
     viaCell.map(_._1) shouldBe dist.map(_._1)
     viaCell.zip(dist).foreach { case ((_, cv), (_, dv)) =>
       cv.zip(dv).foreach { case (a, b) => math.abs(a - b) should be < 1e-9 }
     }
-    val cbCell = graft.ops.Pq.train(pts, m = 2, ksub = 4, maxIter = 5,
-      localCellBudget = 1)
+    val cbCell = graft.ops.Pq.train(narrow, m = 2, ksub = 4, maxIter = 5)
     cbCell.books.zip(cbD.books).foreach { case (bl, bd) =>
       bl.zip(bd).foreach { case ((cl, vl), (cd, vd)) =>
         cl shouldBe cd

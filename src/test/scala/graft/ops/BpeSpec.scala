@@ -6,6 +6,7 @@ import org.scalatest.matchers.should.Matchers
 
 import graft.TestSpark
 import graft.testlib.JobCount.countJobs
+import graft.testlib.Threshold
 
 /** BPE trainer vs a textbook sequential Scala implementation: the merge
   * sequence (with lexicographic tie-break) must agree exactly. */
@@ -63,7 +64,7 @@ class BpeSpec extends AnyFlatSpec with Matchers {
       val docs = corpus.zipWithIndex.map { case (t, i) => (i.toLong, t) }
         .toDF("doc_id", "text")
       val (mL, wL) = Bpe.train(docs, numMerges = 10) // under threshold → local
-      val (mD, wD) = Bpe.train(docs, numMerges = 10, localThreshold = 0)
+      val (mD, wD) = Bpe.train(Threshold.at(-1)(docs), numMerges = 10) // threshold -1 → distributed
       mL.orderBy("rank").collect().map(_.toSeq) shouldBe
         mD.orderBy("rank").collect().map(_.toSeq)
       wL.collect().map(r => (r.getSeq[String](0), r.getLong(1))).sortBy(_.toString) shouldBe

@@ -6,6 +6,7 @@ import org.scalatest.flatspec.AnyFlatSpec
 import org.scalatest.matchers.should.Matchers
 
 import graft.TestSpark
+import graft.testlib.Threshold
 import graft.testlib.JobCount.countJobs
 
 /** Model-based quality filter: bounded features, separable end-to-end
@@ -67,13 +68,13 @@ class QualitySpec extends AnyFlatSpec with Matchers {
   }
 
   it should "train local ≡ distributed (same arithmetic, last-ulp-only drift)" in {
-    // localThreshold = 0 forces the distributed GD; default takes the
-    // driver-side twin. Same rate schedule, same formulas — only gradient
+    // the broadcast threshold at -1 forces the distributed GD; default
+    // takes the driver-side twin. Same rate schedule, same formulas — only gradient
     // SUMMATION order differs (row order vs partial-aggregate tree), so
     // weights agree to ~1e-9 and every downstream decision is identical.
     val local = Quality.train(docs, labels, "doc_id", "text", iters = 30)
-    val dist = Quality.train(docs, labels, "doc_id", "text", iters = 30,
-      localThreshold = 0)
+    val (docsOff, labelsOff) = Threshold.at(-1, docs, labels)
+    val dist = Quality.train(docsOff, labelsOff, "doc_id", "text", iters = 30)
     local._1.zip(dist._1).foreach { case (a, b) =>
       math.abs(a - b) should be < 1e-9 * math.max(1.0, math.abs(b))
     }
@@ -86,33 +87,23 @@ class QualitySpec extends AnyFlatSpec with Matchers {
   }
 
   it should "probe the local path in ONE data job (no dedicated count)" in {
-    val (model, default) = countJobs(
+    val (_, default) = countJobs(
       Quality.train(docs, labels, "doc_id", "text", iters = 20))
-    // the limit-probe collect IS the training collect: the labels-side
+    // the bounded collect IS the training collect: the labels-side
     // broadcast build plus executeTake's incremental partition sweep
     // (at most two rounds here) — ONE data pass total, where a
     // dedicated count() added a second full pass
     default.jobs should be <= 3
-    // a caller-supplied exact size hint must not add any job either, and
-    // trains the identical model
-    val (hinted, withHint) = countJobs(
-      Quality.train(docs, labels, "doc_id", "text", iters = 20,
-        sizeHint = docs.count()))
-    // the caller's count() plus the hint path's single full collect —
-    // loose bound, the hard claim is the model identity below
-    withHint.jobs should be <= (default.jobs + 2)
-    hinted._1.toSeq shouldBe model._1.toSeq
-    hinted._2 shouldBe model._2
   }
 
   it should "fall back to distributed GD when the probe exceeds the threshold" in {
-    // localThreshold = 3 < |docs|: the limit-probe returns threshold+1
-    // rows, proving the data doesn't fit — identical to the forced
-    // distributed path (deterministic GD ⇒ exact equality)
-    val viaProbe = Quality.train(docs, labels, "doc_id", "text", iters = 15,
-      localThreshold = 3)
-    val forced = Quality.train(docs, labels, "doc_id", "text", iters = 15,
-      localThreshold = 0)
+    // a threshold of three (x, y) rows (24 bytes each by Spark's estimate)
+    // < |docs|: the bounded collect returns cap+1 rows, proving the data
+    // doesn't fit — the same distributed GD as the forced path (threshold -1)
+    val (docs3, labels3) = Threshold.at(3 * 24, docs, labels)
+    val viaProbe = Quality.train(docs3, labels3, "doc_id", "text", iters = 15)
+    val (docsOff, labelsOff) = Threshold.at(-1, docs, labels)
+    val forced = Quality.train(docsOff, labelsOff, "doc_id", "text", iters = 15)
     // same distributed GD; only the probe's partial cache materialization
     // differs, which can reorder gradient SUMMATION (plan-variant FP
     // drift, same bound as the local-vs-distributed pin above)

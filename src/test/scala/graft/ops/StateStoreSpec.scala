@@ -11,6 +11,7 @@ import org.scalatest.matchers.should.Matchers
 import graft.TestSpark
 import graft.testlib.{Dirs, OpenLogFs}
 import graft.testlib.JobCount.countJobs
+import graft.testlib.PlanCapture.capturePlans
 
 /** A local file system under the `norename` scheme that refuses to rename
   * a directory out of an upsert's temp dir while `refuse` is set. */
@@ -101,11 +102,11 @@ class StateStoreSpec extends AnyFlatSpec with Matchers {
       val before = snapshot(dir)
       before.keys.size should be > 8 // enough buckets that pruning is visible
       val touched = s"bucket=${StateStore.bucketOfLocal("17", 16)}"
-      StateStore.upsert(s, dir,
-        Seq((17L, -1.0, false)).toDF("k", "v", "del"), Some("del"))
+      val (_, plans) = capturePlans(StateStore.upsert(s, dir,
+        Seq((17L, -1.0, false)).toDF("k", "v", "del"), Some("del")))(s)
       // on Spark, the state read carried a planning-time partition filter
       // on the bucket
-      if (s eq sparkOff) StateStore.lastPrunedPlan should include regex
+      if (s eq sparkOff) plans.mkString("\n") should include regex
         ("""PartitionFilters: \[(isnotnull\(bucket#\d+\), )?\(?bucket#\d+ (= |IN \()""")
       val after = snapshot(dir)
       // untouched bucket directories: identical files, untouched mtimes
@@ -120,11 +121,13 @@ class StateStoreSpec extends AnyFlatSpec with Matchers {
     val dir = tmp()
     StateStore.create((1L to 500L).map(k => (k, k * 2.0)).toDF("k", "v"),
       "k", 32, dir)
-    for (s <- Seq(spark, sparkOff))
-      StateStore.lookup(s, dir, Seq(3L, 77L)).collect()
-        .map(r => (r.getLong(0), r.getDouble(1))).toSet shouldBe
+    val plans = for (s <- Seq(spark, sparkOff)) yield {
+      val (rows, plans) = capturePlans(StateStore.lookup(s, dir, Seq(3L, 77L)).collect())(s)
+      rows.map(r => (r.getLong(0), r.getDouble(1))).toSet shouldBe
         Set((3L, 6.0), (77L, 154.0))
-    StateStore.lastPrunedPlan should include regex
+      plans
+    }
+    plans.last.mkString("\n") should include regex
       ("""PartitionFilters: \[(isnotnull\(bucket#\d+\), )?\(?bucket#\d+ (= |IN \()""")
   }
 
